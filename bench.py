@@ -35,15 +35,22 @@ from distributed_map_reduce_spark.session import get_spark  # noqa: E402
 DIGEST_FETCH = {"temporal_scd2_history"}
 
 
+def digest(df) -> tuple[int, int | None]:
+    """Force the ENTIRE plan — a hash over a struct of every output
+    column, so nothing can be pruned — and fetch one row: (row count,
+    order-insensitive digest; None for an empty result)."""
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        # bit_xor, not sum: summing 64-bit hashes overflows under ANSI
+        F.bit_xor(F.xxhash64(F.struct(*df.columns))).alias("digest"),
+    ).collect()[0]
+    return row["n"], row["digest"]
+
+
 def _execute(df, name: str) -> int:
     """Run the query to completion; return the result row count."""
     if name in DIGEST_FETCH:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            # bit_xor, not sum: summing 64-bit hashes overflows under ANSI
-            F.bit_xor(F.xxhash64(F.struct(*df.columns))).alias("digest"),
-        ).collect()[0]
-        return row["n"]
+        return digest(df)[0]
     return len(df.collect())
 
 
@@ -71,7 +78,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     rows: dict[str, int] = {}
     for _ in range(3):
-        # r3→r4 drift isolation (tools/bench_isolated.py, BENCH_NOTES.md):
+        # r3→r4 drift isolation (`tools/measure.py --isolate`, BENCH_NOTES.md):
         # per-query fresh-JVM runs matched r2 exactly on every ≥0.7s query,
         # proving the r3 +35% was accumulated shared-JVM pressure from the
         # grown suite (22 warmups + 66 timed runs), not plan changes. A GC

@@ -94,337 +94,12 @@ def _load_all() -> None:
 
 
 # The driver's CORRECTNESS gate oracle-checks only the FIRST 50 queries in
-# registration order (verified round 1: the 50 CORRECTNESS_r01 keys were
-# exactly all_queries() entries 1-50). This explicit window pins which 50
-# get the hard signal each round, independent of module import order.
-# Rounds 1+2 proved 83 distinct queries green (union of CORRECTNESS_r01 +
-# r02 pass rows — the full SURVEY §2 parity core, TPC-H headliners, UDFs,
-# dedup/ANN tier, text/multimodal families).
-#
-# ROUND 3 = (a) the 11 round-2 red/no_oracle rows whose causes were fixed
-# this round, (b) the bench headliners that never had a driver row,
-# (c) queries whose semantics changed this round (ADVICE fixes), then
-# (d) never-checked families in user-impact order.
-#
-# ROUND 4 = 49 never-driver-tested oracle-bearing queries + 1 justified
-# repeat (events_session_window: its oracle's session_id cumsum tie order
-# was pinned to (ts, event_id) this round per VERDICT r03 #1 — semantics
-# changed, so it needs a fresh row). Per VERDICT r03 #6, NO no_oracle
-# registrations occupy window slots (agg_approx_distinct,
-# text_compression_ratio, text_bpe_train_merges, agg_hll_rollup,
-# udf_arrow_optimized stay on the local rows-only check). Priority order:
-# the flagship LLM-pipeline components the judge named (#5), then the
-# bench headliners that never had a driver row, then whole never-checked
-# families (graph, similarity/dedup tail, TPC-H tail, sources/sinks,
-# pipeline serving, scale-window ops touched by this round's ADVICE
-# fixes). ~105 oracle-bearing queries remain for rounds 5-6 (stats
-# family, profiling, remaining events_*, scalar surface, sampling tail,
-# plus the late-r4 additions: watermark-flush streaming, IVF/PQ/Lloyd,
-# signature near-dup, MR patterns, DPP, exact-median/CUSUM/Theil-Sen/
-# bootstrap, k-anonymity, vocab coverage, mixture materialization,
-# streaming IVM + Python stream source, EXECUTE IMMEDIATE/collation,
-# binaryFile manifest, M4, and the session-2 batch: clustering
-# coefficient / random walks / Heaps' law / aspect+modality bucketing /
-# MLM masking / weighted percentiles / correlation matrix / z-test +
-# SRM + power + CUPED / KV prefix+TTL / erasure cascade / zonemap
-# skipping / business-day lag / matrix multiply / KWIC / RLHF pairs /
-# context-window + padding audits / PMI collocations / transpose +
-# LISTAGG + IDENTIFIER + lateral aliases / Python writer sink /
-# streaming CDC apply — all local-gate green, none driver-tested yet;
-# plus the late session-2 wave: MRR waterfall, Mann-Kendall, rolling
-# regression/Bollinger/drawdown windows, grouping-id, caption filter,
-# join fan-out, label disagreement, nearest-centroid eval, conversation
-# assembly, RFM migration, URL canonical dedup, HITS, Kaplan-Meier,
-# RLS view, CAS verb, bitemporal as-of, Gram matrix, clock-skew audit).
-#
-# ROUND 5 = 50 never-driver-tested oracle-bearing queries (r4 went 50/50
-# green, cumulative 183 distinct driver-green, ~215 oracled queries still
-# waiting). Priority: (a) the 5 queries whose semantics changed this
-# round (ADVICE r4 fixes: URL canonical dangling-'&', drawdown/z-test/
-# SRM/power degenerate guards), (b) the one bench headliner without a
-# driver row plus the Arrow Gram kernel flagship, (c) the streaming
-# flush/IVM/CDC family (largest never-tested family with real streaming
-# twins), then (d) one-to-three flagships from every remaining family so
-# each family has at least one fresh hard signal (stats tests, scalable
-# agg rewrites, temporal/as-of, SQL-surface verbs, text/ANN/multimodal/
-# privacy/pipeline/profiling/kv/mr/graph). No no_oracle rows (VERDICT r3
-# #6). ~165 oracled queries remain for rounds 6-8.
-#
-# ROUND 6 = drain the verification backlog (VERDICT r5 #1: registry
-# growth frozen this round — zero new registrations; 309 never-tested
-# oracled queries at round start). 48 never-driver-tested queries + 2
-# rule-(a) repeats: mr_wordcount_documents (its combiner semantics
-# changed in the r5 sf1 fixes and VERDICT r5 #5 demands a fresh row)
-# and temporal_gap_fill (this round's NEW second-scale gate — the full
-# registry run at sf0.1 — caught five latent cross-engine divergences
-# invisible at sf0.01: 4dp/6dp decimal-midpoint rounding splits in
-# temporal_gap_fill / events_sliding_window / stream_sliding_flush /
-# window_distribution and a -0.0 render in text_heaps_law; all five
-# fixed with integer-level rounding or sign normalization, and only
-# temporal_gap_fill's sf0.01 output changed — 5 hourly buckets — so
-# only it needs a fresh row; the others' existing rows remain valid,
-# verified by old-vs-new output diffs at sf0.01). Rule (a) slots
-# first: the nine queries
-# whose code changed THIS round (ADVICE r5 fixes: MMD means, clamped
-# cumsum exact div, Erlang-C running product, soundex tail, ablation
-# dead column; the dp-quantile scalable-sweep rewrite) or in r5's sf1
-# fixes (edit-distance sorted-neighborhood, chow bigint, binaryfile
-# slab). The four adaptive-banding ports (similarity_knn_join,
-# dedup_embedding_cosine, pipeline_label_disagreement,
-# multimodal_signature_neardup) are NOT re-windowed: their formulas
-# floor to the historical static knob at fixture scale, so sf0.01
-# outputs — and their existing driver-green rows — are unchanged, and
-# the reworked oracles are hash-verified by the local gate. Then the
-# never-tested families VERDICT named: the full eval_* family (9), the
-# full sketch_* family (7), a 17-query spread of the stats long tail,
-# and one flagship from each remaining untested family. Backlog after
-# this window: 309 - 48 = 261.
-# ROUND 7 = 50 never-driver-tested oracle-bearing queries (r6 went
-# 50/50 green; cumulative 280 distinct driver-green, backlog 262 at
-# round start). Rule-(a)-adjacent slots first: twelve queries whose
-# CODE was rewritten during round 6 (Arrow-gram PCA feed, the four
-# checkpointed graph rewrites' never-rowed members, self-BLEU HOF
-# hoist, closed-form proration, ordered-set mode tie-break, the
-# integer-cents folds' never-rowed members, heaps-law -0.0 render,
-# sliding-flush midpoint rounding) but which never received a driver
-# row — changed code outranks merely-untested code. This round's own
-# ADVICE r6 fixes change no sf0.01 output (adaptive-dim probe:
-# hash-verified unchanged on all four users; mllib slab columns:
-# oracle-less rows-only query), so they take no slots. Then the
-# never-tested families by depth: an 18-query spread of the stats
-# tail (incl. the two displaced from r6: jensen_shannon,
-# gini_concentration), pipeline 5, events 4, text 3, agg 3,
-# temporal 2, profile 2, multimodal 1. Backlog after this window:
-# 262 - 50 = 212.
-_R6_WINDOW: tuple[str, ...] = (
-    # --- rule (a): semantics changed this round (ADVICE r5 fixes +
-    #     scalable-sweep rewrite) or in the r5 sf1 fixes ---
-    "similarity_mmd_drift",
-    "window_clamped_cumsum",
-    "stats_erlang_c_staffing",
-    "er_soundex_blocking",
-    "privacy_dp_quantile_expmech",
-    "pipeline_quality_ablation_grid",
-    "dedup_edit_distance_block",
-    "stats_chow_test",
-    "source_binaryfile_manifest",
-    "mr_wordcount_documents",  # repeat: VERDICT r5 #5 (r5 combiner fix)
-    # repeat: the round-6 sf0.1 second-scale gate caught a 4dp-midpoint
-    # divergence in its raw-double avg; the integer-cents fix changes 5
-    # sf0.01 hourly buckets, so the r1 green row no longer covers it.
-    "temporal_gap_fill",
-    # --- eval family (complete, never tested) ---
-    "eval_rank_metrics_ndcg",
-    "eval_rouge_ngram",
-    "eval_calibration_brier",
-    "eval_auc_roc",
-    "eval_pass_at_k",
-    "eval_bradley_terry",
-    "eval_best_of_n_scaling",
-    "eval_youden_threshold",
-    "eval_em_f1_scoring",
-    # --- sketch family (complete, never tested) ---
-    "sketch_kmv_distinct",
-    "sketch_countmin_heavy_hitters",
-    "sketch_linear_counting",
-    "sketch_kmv_set_ops",
-    "sketch_ams_f2",
-    "sketch_bloom_filter_audit",
-    "sketch_hll_registers",
-    # --- stats long-tail spread (r5-wave, local-gate-only until now) ---
-    "stats_anova_oneway",
-    "stats_benjamini_hochberg",
-    "stats_permutation_test",
-    "stats_ols_two_feature",
-    "stats_kaplan_meier",
-    "stats_spearman_corr",
-    "stats_kendall_tau",
-    "stats_wilcoxon_signed_rank",
-    "stats_wasserstein_1d",
-    "stats_diff_in_diff",
-    "stats_mixture_em_gaussian",
-    "stats_bootstrap_poisson",
-    "stats_markov_absorption",
-    "stats_fleiss_kappa",
-    "stats_weibull_fit",
-    # rule (a), late round-6: the FOURTH-scale gate (full differential
-    # run at sf1, tools/sf1_gate_r6.log) caught seven raw-double-sum /
-    # round(sum(double)) divergences invisible at sf0.01..sf0.1; all
-    # seven migrated to exact integer-cents folds. Five outputs are
-    # bit-identical at sf0.01 (old driver rows stay valid); these two
-    # CHANGED at sf0.01 (per-row-cents discount semantics; exact-cents
-    # input series), so they take window slots — udf_runtime_registered
-    # had a green r2 row that no longer covers it, holt was never
-    # tested. Displaced to the backlog: stats_jensen_shannon,
-    # stats_gini_concentration (the stats spread keeps 15 fresh rows).
-    "udf_runtime_registered",
-    "temporal_holt_smoothing",
-    # --- one flagship per remaining untested family ---
-    "temporal_m4_downsample",
-    "events_retention_cohorts",
-    "pipeline_greedy_packing",
-    "graph_clustering_coefficient",
-    "privacy_erasure_cascade",
-    "profile_key_discovery",
-)
-
-_R7_WINDOW: tuple[str, ...] = (
-    # --- round-7-rewritten code that never received a driver row (rule a) ---
-    "stats_ols_residual_diagnostics",  # exact-cents daily y (r7 sf1 gate)
-    "source_parquet_footer_stats",     # per-chunk uncompressed sum (r7 sf1 gate)
-    # --- round-6-rewritten code that never received a driver row ---
-    "similarity_power_iteration_pca",  # Arrow-gram feed + stepped checkpoint
-    "graph_modularity_score",          # checkpointed candidate pairs
-    "graph_adamic_adar",               # checkpointed candidate pairs
-    "graph_degree_assortativity",      # checkpointed candidate pairs
-    "text_self_bleu_diversity",        # bigram HOF hoist
-    "temporal_calendar_proration",     # closed-form per-month rewrite
-    "agg_ordered_set_aggs",            # explicit mode tie-break (sf0.001 gate)
-    "agg_grouping_id",                 # integer-cents fold (sf1 gate)
-    "privacy_pseudonymize_consistent", # integer-cents fold (sf1 gate)
-    "temporal_kalman_local_level",     # exact-cents input series (sf1 gate)
-    "text_heaps_law",                  # -0.0 sign normalization (sf0.1 gate)
-    "stream_sliding_flush_final",      # 4dp midpoint rounding (sf0.1 gate)
-    # --- stats long-tail spread (incl. the two displaced from r6) ---
-    "stats_jensen_shannon",
-    "stats_gini_concentration",
-    "stats_autocorrelation",
-    "stats_correlation_matrix",
-    "stats_cohens_kappa",
-    "stats_cramers_v",
-    "stats_shannon_entropy",
-    "stats_mutual_information",
-    "stats_kruskal_wallis",
-    "stats_levene_test",
-    "stats_jarque_bera",
-    "stats_ljung_box",
-    "stats_mann_kendall",
-    "stats_logrank_test",
-    "stats_wilson_interval",
-    "stats_winsorize",
-    "stats_pareto_abc",
-    # --- pipeline serving tail ---
-    "pipeline_chunk_documents",
-    "pipeline_incremental_dedup",
-    "pipeline_instruction_dedup",
-    "pipeline_quality_decile_gate",
-    "pipeline_domain_mix",
-    # --- events tail ---
-    "events_sessionize_ids",
-    "events_funnel_time_bound",
-    "events_top_paths",
-    "events_dau_mau_stickiness",
-    # --- text tail ---
-    "text_bm25_topk",
-    "text_zipf_fit",
-    "text_token_fertility",
-    # --- agg tail ---
-    "agg_weighted_median",
-    "agg_decimal_exact",
-    # --- temporal tail ---
-    "temporal_interval_coalesce",
-    "temporal_seasonal_decompose",
-    # --- profile / multimodal flagships ---
-    "profile_partition_skew",
-    "profile_dataset_card",
-    "multimodal_shard_manifest",
-)
-
-# ROUND 10 = 3 rule-(a) re-rows + 47 never-driver-tested oracle-bearing
-# queries (r9 went 50/50 green; cumulative 425 distinct driver-tested,
-# backlog 118 at window time + 1 new registration = 119). The re-rows,
-# all r10 sf10 stride catches: agg_conditional's filtered sum and
-# sql_transpose_frame's price sum moved to exact integer cents (the
-# round(sum(double)) class at 100x magnitude), and
-# pipeline_dedup_report's near-dup feed moved from the clones²
-# minhash_lsh_pairs emitter (OOMed a verify hash build at sf10) to the
-# corpus-linear star edges the cleaning pass itself uses — oracle +
-# Spark changed in the same commits, so the prior rows are stale by
-# rule (a). The rest of the r10 semantic surface is NEW
-# (graph_pagerank_capped) or plan-only (the CC edge-consistency probe,
-# the prefix-filter partitioned tier and its chunk grid are
-# hash-identical — oracle re-checks green, tier equivalence pinned by
-# test — so prior rows stay valid). Fresh picks drain the deepest
-# families to zero: stats 17 (family emptied), temporal 6 (emptied),
-# agg 5 (emptied), events 5 (emptied), pipeline 5 (emptied), privacy 5
-# (emptied), similarity 5 (emptied), plus graph_pagerank_capped
-# (VERDICT r9 order #4: the executable cap tier needs a green driver
-# row). dedup_duplicate_ngram_spans, similarity_random_projection_audit
-# and similarity_nearest_centroid_eval were displaced by the mid-round
-# re-rows (back to the backlog; the similarity family drains 3 of 5).
-# Backlog after this window: 119 - 47 = 72 -> finishable in r11-r12.
-_DRIVER_WINDOW_R10: tuple[str, ...] = (
-    # --- rule-(a) re-rows (exact-cents semantic changes this round) ---
-    "agg_conditional",
-    "sql_transpose_frame",
-    "pipeline_dedup_report",
-    # --- new registration this round (VERDICT r9 #4) ---
-    "graph_pagerank_capped",
-    # --- stats: deepest family, drained to zero ---
-    "stats_event_study_leads_lags",
-    "stats_event_transitions",
-    "stats_experiment_duration",
-    "stats_extreme_value_gumbel",
-    "stats_hurst_rs",
-    "stats_krippendorff_alpha",
-    "stats_meta_analysis_pooled",
-    "stats_negbinom_overdispersion",
-    "stats_nelson_aalen",
-    "stats_obf_group_sequential",
-    "stats_pettitt_changepoint",
-    "stats_price_elasticity",
-    "stats_rate_anomaly_poisson",
-    "stats_ratio_delta_method",
-    "stats_retention_decay_fit",
-    "stats_theil_index",
-    "stats_tost_equivalence",
-    # --- temporal: drained to zero ---
-    "temporal_accumulating_snapshot",
-    "temporal_croston_intermittent",
-    "temporal_open_interval_count",
-    "temporal_piecewise_trend",
-    "temporal_sax_symbols",
-    "temporal_seasonal_backtest",
-    # --- agg: drained to zero ---
-    "agg_aging_buckets",
-    "agg_bitmap_hierarchical_rollup",
-    "agg_bitwise_bool",
-    "agg_listagg_within_group",
-    "agg_string_concat_groups",
-    # --- events: drained to zero ---
-    "events_attribution_position",
-    "events_littles_law_audit",
-    "events_markov_removal_attribution",
-    "events_segment_enrichment",
-    "events_self_excitation",
-    # --- pipeline: drained to zero ---
-    "pipeline_context_window_report",
-    "pipeline_curriculum_order",
-    "pipeline_mixture_temperature",
-    "pipeline_quality_rejection_sample",
-    "pipeline_target_encoding",
-    # --- privacy: drained to zero ---
-    "privacy_contribution_capping",
-    "privacy_l_diversity",
-    "privacy_subject_access_export",
-    "privacy_synthetic_marginals",
-    "privacy_t_closeness",
-    # --- similarity: drained to zero ---
-    "similarity_collapse_audit",
-    "similarity_kcenter_coreset",
-    "similarity_mmr_rerank",
-)
-
-# ROUND 11 = 50 never-driver-tested oracle-bearing queries, ZERO re-rows
-# (r10 went 50/50 green; cumulative 472 distinct driver-tested, backlog
-# 72 at window time — computed from CORRECTNESS_r01..r10 vs the oracled
-# registry). This is an OPTIMIZATION round: every optimization this round
-# is digest-identical by construction (oracle re-checks green at
-# sf0.01/sf0.1 for each touched query), so no slot is spent on re-rows
-# and the window drains the backlog families whole: text 5, stream 5,
-# sql 4, window 4, multimodal 4, sample 4, profile 4, kv 4, source 4,
-# scalar 3, mr 3, layout 3, udtf 2, string 1. Backlog after this window:
-# 72 - 50 = 22 -> the registry closes out in round 12 (VERDICT r10 #7).
+# registration order, so this window pins which 50 get the hard signal,
+# independent of module import order. all_queries() puts the window first
+# and every other query after it in registration order. Fill the window
+# with oracle-bearing queries that have no CORRECTNESS row yet, plus re-rows
+# for queries whose output changed; tools/verification_debt.py computes
+# the backlog from the CORRECTNESS_r*.json ledgers and checks the window.
 _DRIVER_WINDOW: tuple[str, ...] = (
     # --- stream: drained to zero ---
     "stream_chained_time_windows",

@@ -5,25 +5,25 @@ The existing streaming twins (`streaming.jobs`) prove convergence in
 tests using complete/update sinks; these queries instead run the
 APPEND-mode topologies a real deployment uses (bounded state, emit-once
 per finalized window) and still produce a deterministic, oracle-checkable
-batch answer. The trick is the flush sentinel: after the real events
-file, the file source delivers two tiny sentinel files whose event time
-sits far in the future. Processing sentinel #1 advances the watermark
-past every real window; the batch that processes sentinel #2 therefore
-EMITS every real window (append mode emits a window only in a batch
-*after* the watermark passes its end). Sentinel rows themselves are
-filtered out of the result — their own windows never close, which is
-exactly the append-mode contract.
+batch answer. The trick is the flush sentinel: next to the real events
+file, the landing directory holds one tiny sentinel file whose event
+time sits far in the future. Processing it advances the watermark past
+every real window; the engine's no-data micro-batch that follows
+therefore EMITS every real window (append mode emits a window only in
+a batch *after* the watermark passes its end). Sentinel rows themselves
+are filtered out of the result — their own windows never close, which
+is exactly the append-mode contract.
 
 This mirrors operational practice: Kafka pipelines emit broker-side
 heartbeats / idle-timeout punctuations so watermarks advance past the
 last business event and the tail windows drain. Here the "heartbeat" is
-a second parquet file in the landing directory.
+one extra parquet file in the landing directory.
 
 Scale posture: identical to the production topology — state is bounded
 by the watermark delay, every aggregation is partial (map-side) before
 the keyed state store, the static dim join is a broadcast that adds no
 state, and nothing ever holds the unbounded stream. The sentinel costs
-two 1-row files regardless of data scale.
+one tiny file regardless of data scale.
 
 Reference parity: the reference engine has no streaming surface at all
 (SURVEY §2.3); this extends the repo's streaming tier, whose batch twins
@@ -50,16 +50,16 @@ def flushed_events_dir(
     spark: SparkSession, sf_dir: str, sentinel_type: str = FLUSH_TYPE
 ) -> tuple[str, object]:
     """A file-stream landing dir containing the real events parquet plus
-    two sentinel parquet files 10 and 20 days after max(ts) — one row
-    per entry of ``sentinel_type`` (pass a tuple when several filtered
-    branches of the same source must each see their watermark advance,
-    e.g. both sides of a stream-stream join).
+    one sentinel parquet file 10 days after max(ts) — one row per entry
+    of ``sentinel_type`` (pass a tuple when several filtered branches of
+    the same source must each see their watermark advance, e.g. both
+    sides of a stream-stream join).
 
-    Returns (dir, schema). Sentinel mtimes are pinned AFTER the real
-    file's so the source (oldest-first listing order) processes
-    real → s1 → s2; a sentinel processed before the real data would
-    instantly advance the watermark and drop every real event as late,
-    so the ordering is asserted, not assumed.
+    Returns (dir, schema). The sentinel's mtime is pinned AFTER the real
+    file's so the source (oldest-first listing order) lists real → sentinel;
+    a sentinel processed before the real data would instantly advance
+    the watermark and drop every real event as late, so the ordering is
+    asserted, not assumed.
     """
     d = events_stream_dir(sf_dir)
     real = os.path.join(d, "events.parquet")
@@ -67,33 +67,31 @@ def flushed_events_dir(
     schema = batch.schema
     max_ts = batch.agg(F.max("ts").alias("m")).collect()[0]["m"]
     real_mtime = os.stat(real).st_mtime  # stat follows the symlink
-    base = max(time.time(), real_mtime + 60.0)
     types = (
         [sentinel_type] if isinstance(sentinel_type, str) else list(sentinel_type)
     )
-    for i, days in enumerate((10, 20), start=1):
-        one = batch.limit(1)
-        sent = None
-        for j, typ in enumerate(types):
-            row = one.select(
-                F.lit(-(i * len(types) + j)).cast("bigint").alias("event_id"),
-                (F.lit(max_ts) + F.expr(f"INTERVAL {days} DAYS")).cast(
-                    schema["ts"].dataType.simpleString()
-                ).alias("ts"),
-                F.lit(-1).cast("bigint").alias("user_id"),
-                F.lit(typ).alias("event_type"),
-                F.lit(0.0).alias("value"),
-                F.lit(None).cast("string").alias("props"),
-            )
-            sent = row if sent is None else sent.unionByName(row)
-        tmp = tempfile.mkdtemp(prefix="dmrs_sentinel_")
-        sent.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
-        dst = os.path.join(d, f"zz_sentinel_{i}.parquet")
-        shutil.move(os.path.join(tmp, part), dst)
-        shutil.rmtree(tmp, ignore_errors=True)
-        os.utime(dst, times=(base + i, base + i))
-        assert os.stat(dst).st_mtime > real_mtime, "sentinel must list after real file"
+    sent = None
+    for j, typ in enumerate(types):
+        row = spark.range(1).select(
+            F.lit(-(len(types) + j)).cast("bigint").alias("event_id"),
+            (F.lit(max_ts) + F.expr("INTERVAL 10 DAYS")).cast(
+                schema["ts"].dataType.simpleString()
+            ).alias("ts"),
+            F.lit(-1).cast("bigint").alias("user_id"),
+            F.lit(typ).alias("event_type"),
+            F.lit(0.0).alias("value"),
+            F.lit(None).cast("string").alias("props"),
+        )
+        sent = row if sent is None else sent.unionByName(row)
+    tmp = tempfile.mkdtemp(prefix="dmrs_sentinel_")
+    sent.coalesce(1).write.mode("overwrite").parquet(tmp)
+    part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
+    dst = os.path.join(d, "zz_sentinel.parquet")
+    shutil.move(os.path.join(tmp, part), dst)
+    shutil.rmtree(tmp, ignore_errors=True)
+    mtime = max(time.time(), real_mtime + 60.0)
+    os.utime(dst, times=(mtime, mtime))
+    assert os.stat(dst).st_mtime > real_mtime, "sentinel must list after real file"
     return d, schema
 
 
@@ -102,25 +100,18 @@ def read_flushed_events(
 ) -> DataFrame:
     """Streaming read over real events + flush sentinels.
 
-    r10 OPTIMIZATION (guide §1.2 — don't pay for passes you don't
-    need): the r5 form forced one file per micro-batch
-    (``maxFilesPerTrigger=1`` → real, s1, s2, final = four epochs).
-    Per-batch cost of the stateful operators is FLAT in input size
-    (state-store open/scan/commit across every shuffle partition:
-    measured ~9-11s per batch on the interval joins at sf0.1, even for
-    a 4-row sentinel batch), so three of the four batches were almost
-    pure overhead. All files now land in ONE batch — every real row is
+    All files land in ONE micro-batch (no ``maxFilesPerTrigger``): the
+    per-batch cost of the stateful operators is flat in input size
+    (state-store open/scan/commit across every shuffle partition), so a
+    batch per file would be almost pure overhead. Every real row is
     processed with the initial watermark (nothing can be dropped as
     late; late-filtering uses the watermark fixed at batch start), the
-    sentinels advance the watermark AFTER that batch, and the engine's
+    sentinel advances the watermark AFTER that batch, and the engine's
     no-data micro-batch (``noDataMicroBatches.enabled``, pinned true in
     session._RUNTIME_CONFS) runs the final eviction pass that emits
-    every closed window/join row. Two epochs total; emission CONTENT is
-    batching-independent (append mode emits exactly the rows whose
-    window the watermark passed) — digest-identical on all flush
-    queries, measured 108s → 15s on the full-outer interval join.
-    Sentinel #2 is retained: it is free in the single batch and keeps
-    the landing-dir layout (and the mtime-order assertion) unchanged.
+    every closed window/join row. Emission CONTENT is batching-
+    independent: append mode emits exactly the rows whose window the
+    watermark passed.
     """
     d, schema = flushed_events_dir(spark, sf_dir, sentinel_type)
     stream = spark.readStream.schema(schema).parquet(d)
