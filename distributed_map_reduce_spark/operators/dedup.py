@@ -83,38 +83,49 @@ def spark_partitions(df: DataFrame) -> int:
 
 
 # ---------------------------------------------------------------------------
-# Building blocks (importable; tests exercise them on planted fixtures)
+# Building blocks (importable; tests exercise them on planted fixtures).
+# Each MinHash-LSH stage has ONE implementation, shared by the three
+# verified feeds (minhash_lsh_pairs, minhash_lsh_pairs_capped,
+# minhash_star_pairs): shingle → 60-bit hash → signature → band →
+# bucket candidates → exact-Jaccard verify.
 # ---------------------------------------------------------------------------
 def tokens_col(text: Column) -> Column:
     return F.filter(F.split(F.lower(text), r"\s+"), lambda w: w != "")
 
 
-def shingles_from_tokens(toks: Column, k: int = SHINGLE_K) -> Column:
-    """Distinct word k-shingles from an already-materialized token array.
-    ``toks`` MUST be a plain column reference in hot paths: the k
-    element_at calls inside the lambda re-evaluate whatever expression
-    ``toks`` is per element, so an inlined split() turns O(n) into
-    O(n·k·|text|). 1-based `element_at` mirrors DuckDB. Inputs shorter
-    than k produce an EMPTY shingle set — the guard is explicit because
-    Spark's sequence(1, 0) DESCENDS ([1, 0]) and element_at(toks, 0)
-    throws."""
+def _shingle_list(toks: Column, k: int = SHINGLE_K) -> Column:
+    """Word k-shingles (duplicates kept) of a token array. ``toks`` MUST
+    be a plain column reference in hot paths: the k element_at calls
+    inside the lambda re-evaluate whatever expression ``toks`` is per
+    element, so an inlined split() turns O(n) into O(n·k·|text|).
+    1-based `element_at` mirrors DuckDB. Inputs shorter than k produce
+    an EMPTY list — the guard is explicit because Spark's sequence(1, 0)
+    DESCENDS ([1, 0]) and element_at(toks, 0) throws."""
     idx = F.when(
         F.size(toks) >= k, F.sequence(F.lit(1), F.size(toks) - (k - 1))
     ).otherwise(F.array().cast("array<int>"))
-    return F.array_distinct(
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(toks, i + j) for j in range(k)]
-            ),
-        )
+    return F.transform(
+        idx, lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(k)])
     )
+
+
+def shingles_from_tokens(toks: Column, k: int = SHINGLE_K) -> Column:
+    """Distinct word k-shingles from an already-materialized token array."""
+    return F.array_distinct(_shingle_list(toks, k))
 
 
 def shingles_col(text: Column, k: int = SHINGLE_K) -> Column:
     """Convenience form for small inputs/tests; hot paths project
-    tokens_col into its own column first (see minhash_lsh_pairs)."""
+    tokens_col into its own column first (see :func:`_exploded_shingles`)."""
     return shingles_from_tokens(tokens_col(text), k)
+
+
+def shingle_hash(s: Column) -> Column:
+    """60-bit md5 prefix of a string: one md5 per shingle gives the base
+    integer of every MinHash function and the verify join key (the span
+    and group-pattern keys below use the same hash). DuckDB twin:
+    CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)."""
+    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint")
 
 
 # Universal-hash MinHash: ONE md5 per shingle gives a base integer; the
@@ -130,92 +141,64 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))
 
 
-def shingle_rows(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Distinct (doc_id, shingle) ROWS — the fully-relational base of the
-    MinHash pipeline (``array_distinct`` on 48-element string arrays costs
-    ~2 ms/row; ``dropDuplicates`` is a vectorized exchange)."""
+def _exploded_shingles(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id, s) rows, one per shingle position (duplicates kept)."""
     # Spread the md5-heavy scan across cores: a single small local parquet
     # file otherwise plans as one input partition (a real cluster scan is
     # already wide).
     toks = docs.repartition(spark_partitions(docs)).select(
         F.col(id_col).alias("doc_id"), tokens_col(F.col(text_col)).alias("toks")
     )
-    k = SHINGLE_K
-    # sequence(1, 0) descends in Spark — short docs need an explicit
-    # empty index array (same guard as shingles_from_tokens)
-    idx = F.when(
-        F.size("toks") >= k, F.sequence(F.lit(1), F.size("toks") - (k - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    shingle = F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.element_at("toks", i + j) for j in range(k)])
-    )
-    return toks.select("doc_id", F.explode(shingle).alias("s")).dropDuplicates(["doc_id", "s"])
+    return toks.select("doc_id", F.explode(_shingle_list(F.col("toks"))).alias("s"))
+
+
+def shingle_rows(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """Distinct (doc_id, shingle) ROWS — the fully-relational base of the
+    string-keyed consumers (``array_distinct`` on 48-element string
+    arrays costs ~2 ms/row; ``dropDuplicates`` is a vectorized exchange)."""
+    return _exploded_shingles(docs, id_col, text_col).dropDuplicates(["doc_id", "s"])
 
 
 def shingle_hash_rows_raw(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """RAW (doc_id, h) rows — one 60-bit md5 prefix per exploded word
-    shingle, duplicates NOT yet removed (a doc repeating a shingle emits
-    it twice). Consumers that reduce per doc anyway (signature mins are
-    duplicate-insensitive; ``collect_set`` dedups inside the same
-    aggregation) take this form and skip the (doc_id, h) dedup exchange
-    entirely (r11, guide §2.4); the relational join-count verify needs
+    """RAW (doc_id, h) rows — one :func:`shingle_hash` per exploded word
+    shingle, duplicates NOT yet removed. Consumers that reduce per doc
+    anyway (signature mins are duplicate-insensitive; ``collect_set``
+    dedups inside the same aggregation) take this form and skip the
+    (doc_id, h) dedup exchange; the relational join-count verify needs
     distinct ROWS and goes through :func:`shingle_hash_rows`."""
-    toks = docs.repartition(spark_partitions(docs)).select(
-        F.col(id_col).alias("doc_id"), tokens_col(F.col(text_col)).alias("toks")
-    )
-    k = SHINGLE_K
-    idx = F.when(
-        F.size("toks") >= k, F.sequence(F.lit(1), F.size("toks") - (k - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    shingle = F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.element_at("toks", i + j) for j in range(k)])
-    )
-    return toks.select("doc_id", F.explode(shingle).alias("s")).select(
-        "doc_id",
-        F.conv(F.substring(F.md5("s"), 1, 15), 16, 10).cast("bigint").alias("h"),
+    return _exploded_shingles(docs, id_col, text_col).select(
+        "doc_id", shingle_hash(F.col("s")).alias("h")
     )
 
 
 def shingle_hash_rows(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Distinct (doc_id, h) rows, h = the 60-bit md5 prefix of the word
-    shingle — the hot-path twin of :func:`shingle_rows` (r9). MinHash
-    banding needs only h % P and exact-Jaccard verification already
-    intersects these SAME 60-bit prefixes (see :func:`verify_jaccard`),
-    so hashing once at the explode and deduplicating on (doc_id, h)
-    lets banding, both verify joins, and the size aggregate all reuse
-    ONE integer-keyed exchange — the string form paid a second md5 pass
-    plus a second full (doc_id, h) dedup exchange inside verify.
-    Output-identical to the string pipeline: the per-doc distinct-h set
-    is what every downstream consumer reduces over either way (min for
-    signatures, count for sizes, equi-join for intersections)."""
+    """Distinct (doc_id, h) rows. MinHash banding needs only h % P and
+    the exact-Jaccard verify intersects these SAME 60-bit prefixes, so
+    banding, both verify joins and the size aggregate all reuse ONE
+    integer-keyed exchange. Output-identical to string rows: the per-doc
+    distinct-h set is what every downstream consumer reduces over
+    (min for signatures, count for sizes, equi-join for intersections)."""
     return shingle_hash_rows_raw(docs, id_col, text_col).dropDuplicates(
         ["doc_id", "h"]
     )
 
 
-def banded_keys(sh_rows: DataFrame) -> DataFrame:
-    """(doc_id, band_id, band_key) LSH bucket rows: one hash-aggregate with
-    k vectorized ``min`` columns (universal hashing over the per-shingle
-    md5 int); band keys concatenate signature columns. Accepts either
-    string shingle rows (doc_id, s) or pre-hashed rows (doc_id, h) from
-    :func:`shingle_hash_rows` — the signature min is over the same
-    integer multiset either way."""
-    b_col = (
-        (F.col("h") % MINHASH_P)
-        if "h" in sh_rows.columns
-        else (F.conv(F.substring(F.md5("s"), 1, 15), 16, 10).cast("bigint") % MINHASH_P)
-    )
-    base = sh_rows.select("doc_id", b_col.alias("b"))
-    sig = base.groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(HASH_A[s]) * F.col("b") + F.lit(HASH_B[s])) % MINHASH_P).alias(f"h{s}")
-            for s in range(N_HASHES)
-        ]
-    )
+def _signature(b: Column) -> list[Column]:
+    """The N_HASHES signature aggregates h{s} = min((a_s·b + b_s) mod P)
+    over a doc's shingle base integers ``b`` (= hash mod P)."""
+    return [
+        F.min((F.lit(HASH_A[s]) * b + F.lit(HASH_B[s])) % MINHASH_P).alias(f"h{s}")
+        for s in range(N_HASHES)
+    ]
+
+
+def _bands(sig: DataFrame) -> DataFrame:
+    """(doc_id, band_id, band_key) LSH bucket rows from the signature
+    columns h0..h{k-1}: each band key concatenates r = k/bands of them."""
     r = N_HASHES // N_BANDS
     return sig.select(
         "doc_id",
@@ -230,14 +213,20 @@ def banded_keys(sh_rows: DataFrame) -> DataFrame:
     )
 
 
-def band_candidates(sh_rows: DataFrame) -> DataFrame:
-    """MinHash-band candidate pairs (doc_a < doc_b), ids only: candidates
-    share a (band_id, band_key) bucket. This is THE candidate generator
-    for every exact PAIR verifier in this module — bucket-bounded, never
-    block-quadratic in candidate generation, but PAIR-quadratic inside a
-    bucket by construction (a 100-clone family yields C(100,2) bucket
-    pairs). Cluster-level consumers use :func:`star_candidates`."""
-    banded = banded_keys(sh_rows)
+def banded_keys(sh_rows: DataFrame) -> DataFrame:
+    """(doc_id, band_id, band_key) rows from distinct (doc_id, h) hash
+    rows (:func:`shingle_hash_rows`): one hash-aggregate with k
+    vectorized ``min`` columns, then the band explode."""
+    base = sh_rows.select("doc_id", (F.col("h") % MINHASH_P).alias("b"))
+    return _bands(base.groupBy("doc_id").agg(*_signature(F.col("b"))))
+
+
+def band_candidates(banded: DataFrame) -> DataFrame:
+    """MinHash-band candidate pairs (doc_a < doc_b), ids only: the
+    (band_id, band_key) bucket self-join. Bucket-bounded, never
+    block-quadratic, but PAIR-quadratic inside a bucket by construction
+    (a 100-clone family yields C(100,2) bucket pairs) — which is why the
+    capped feed sizes buckets first and the star feed emits hub edges."""
     return (
         banded.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
         .join(banded.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key"),
@@ -248,87 +237,25 @@ def band_candidates(sh_rows: DataFrame) -> DataFrame:
     )
 
 
-LSH_BUCKET_CAP = 16  # band_candidates_capped: drop buckets larger than this
-
-
-def band_candidates_capped(sh_rows: DataFrame, cap: int = LSH_BUCKET_CAP) -> DataFrame:
-    """Pair candidates from SIZE-CAPPED LSH buckets: buckets with more
-    than ``cap`` members are dropped entirely before the pair join, so
-    candidate volume is bounded by Σ C(min(n, cap), 2) ≤ buckets·C(cap,2)
-    — LINEAR in the corpus, whatever the clone structure. This is the
-    executable form of the module's degree-cap triage for pair-exact
-    graph consumers (graph.py edge-feed policy): an over-cap bucket is a
-    template/boilerplate family whose pairwise structure is C(n,2) BY
-    CONSTRUCTION — the capped variant surrenders exactly those hubs
-    (they are what `dedup_minhash_clusters` handles linearly via star
-    edges) and keeps every pair among ordinary documents. Bucket sizing
-    is one unordered window over the banded rows — the same single
-    exchange `star_candidates` pays for its hub min."""
-    from pyspark.sql import Window
-
-    banded = banded_keys(sh_rows)
-    bn = F.count(F.lit(1)).over(Window.partitionBy("band_id", "band_key"))
-    kept = banded.withColumn("bn", bn).filter(F.col("bn") <= cap)
-    return (
-        kept.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
-        .join(
-            kept.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key"),
-            ["band_id", "band_key"],
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+LSH_BUCKET_CAP = 16  # minhash_lsh_pairs_capped: drop buckets larger than this
 
 
 def _per_doc_minhash(sh_raw: DataFrame) -> DataFrame:
-    """(doc_id, h0..h{k-1}, hs, n): the 12 signature mins, the doc's
+    """(doc_id, h0..h{k-1}, hs, n): the signature mins, the doc's
     distinct shingle-hash array, and its size from ONE doc-keyed
-    aggregation, pinned behind an explicit repartition("doc_id") so the
+    aggregation over RAW hash rows (``min`` is duplicate-insensitive and
+    ``collect_set`` IS the per-doc distinct set, so no upstream dedup
+    exchange), pinned behind an explicit repartition("doc_id") so the
     band explode and both array-verify join sides reuse a single
     materialization (exchange reuse only happens at Exchange nodes).
-    Shared by the LINEAR-candidate generators (star, capped) — see
-    :func:`minhash_star_pairs` for why the pair-quadratic generator must
-    NOT use the array verify.
-
-    r11 (guide §2.4 — remove shuffles outright): takes RAW hash rows
-    (:func:`shingle_hash_rows_raw`) and dedups INSIDE this aggregation —
-    ``min`` is duplicate-insensitive, ``collect_set`` IS the per-doc
-    distinct set, and ``n = size(hs)`` — so the upstream (doc_id, h)
-    dropDuplicates exchange (a second full shuffle of the shingle table)
-    disappears. Same signature mins → same band keys → same candidates;
-    same distinct array (order irrelevant to array_intersect) → same
-    verified pairs; digest-verified at sf0.01/sf0.1."""
-    b = F.col("h") % MINHASH_P
+    Shared by the LINEAR-candidate feeds (star, capped) — see
+    :func:`_verify_jaccard_arrays` for why the pair-quadratic feed must
+    NOT use the array verify."""
     return (
         sh_raw.groupBy("doc_id")
-        .agg(
-            *[
-                F.min((F.lit(HASH_A[s]) * b + F.lit(HASH_B[s])) % MINHASH_P).alias(f"h{s}")
-                for s in range(N_HASHES)
-            ],
-            F.collect_set("h").alias("hs"),
-        )
+        .agg(*_signature(F.col("h") % MINHASH_P), F.collect_set("h").alias("hs"))
         .withColumn("n", F.size("hs").cast("bigint"))
         .repartition("doc_id")
-    )
-
-
-def _banded_from_per_doc(per_doc: DataFrame) -> DataFrame:
-    """(doc_id, band_id, band_key) from the per-doc signature columns —
-    the same band keys :func:`banded_keys` derives, read off the shared
-    per-doc materialization instead of a second signature aggregate."""
-    r = N_HASHES // N_BANDS
-    return per_doc.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.concat_ws("|", *[F.col(f"h{bb * r + j}") for j in range(r)])
-                    for bb in range(N_BANDS)
-                ]
-            )
-        ).alias("band_id", "band_key"),
     )
 
 
@@ -336,20 +263,22 @@ def _verify_jaccard_arrays(cand: DataFrame, per_doc: DataFrame, tau: float) -> D
     """Exact-Jaccard verification for LINEAR candidate sets: attach each
     side's distinct-hash array with an edge-sized join and compute
     |A∩B| as size(array_intersect(..)) in the projection. Equal to the
-    relational join-count (both arrays are distinct by construction);
-    digest-verified against it at sf0.01/sf0.1/sf1/sf10. ONLY safe when
-    the candidate set is linear in the corpus (star / capped feeds) —
-    pair-quadratic candidates would carry arrays across the second
-    join's exchange (the module's NOTHING-PAIR-SIZED rule)."""
+    relational join-count of :func:`verify_jaccard` (both arrays are
+    distinct by construction), and cheaper: the shingle table crosses
+    one exchange (the signature aggregate) instead of three. ONLY safe
+    when the candidate set is linear in the corpus (star / capped
+    feeds) — pair-quadratic candidates would carry arrays across the
+    second join's exchange, breaking the module's NOTHING-PAIR-SIZED
+    rule (no pair-sized intermediate ever shuffles wide payloads)."""
     arr_a = per_doc.select(
         F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"), F.col("n").alias("n_a")
     )
     arr_b = per_doc.select(
         F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"), F.col("n").alias("n_b")
     )
-    # shuffle_hash keeps the plan shape scale-invariant (r9 sf30 lesson:
-    # AQE's compressed-bytes estimate can flip a corpus-sized side into
-    # a broadcast build that OOMs the driver).
+    # shuffle_hash keeps the plan shape scale-invariant: AQE's
+    # compressed-bytes estimate can flip a corpus-sized side into a
+    # broadcast build that OOMs the driver.
     joined = (
         cand.hint("shuffle_hash")
         .join(arr_a, "doc_a")
@@ -376,61 +305,20 @@ def minhash_lsh_pairs_capped(
     cap: int = LSH_BUCKET_CAP,
 ) -> DataFrame:
     """Verified near-dup pairs from size-capped LSH buckets — the
-    scale-bounded twin of :func:`minhash_lsh_pairs` (r10, VERDICT r9
-    missing #3): same shingle/sign/band/verify algebra, but mega-buckets
-    are dropped before the pair join, so the output (and every shuffle)
-    stays linear on clone-heavy corpora where the uncapped pair list
-    grows as clones².
-
-    r10 OPTIMIZATION: because the cap bounds candidates at
-    Σ C(min(n, cap), 2) — linear — this generator qualifies for the same
-    array verify as the star path (see :func:`minhash_star_pairs`): one
-    per-doc aggregation feeds band keys, bucket sizing, and both verify
-    sides; the shingle table crosses one exchange instead of three.
-    Output-identical (same band keys → same kept buckets → same pairs;
-    distinct-array intersection == the join count), digest-verified at
-    sf0.01/sf0.1/sf1. r11: feeds from RAW hash rows — the per-doc
-    aggregation dedups (see :func:`_per_doc_minhash`), one exchange
-    fewer."""
-    from pyspark.sql import Window
-
+    scale-bounded twin of :func:`minhash_lsh_pairs`. Buckets with more
+    than ``cap`` members are dropped before the pair join, so candidates
+    are bounded by Σ C(min(n, cap), 2) — LINEAR in the corpus whatever
+    the clone structure. An over-cap bucket is a template/boilerplate
+    family whose pairwise structure is C(n,2) BY CONSTRUCTION; the
+    capped feed surrenders exactly those hubs (`dedup_minhash_clusters`
+    handles them linearly via star edges) and keeps every pair among
+    ordinary documents. Bucket sizing is one unordered window over the
+    banded rows. Because candidates are linear, verification uses the
+    array form (:func:`_verify_jaccard_arrays`)."""
     per_doc = _per_doc_minhash(shingle_hash_rows_raw(docs, id_col, text_col))
-    banded = _banded_from_per_doc(per_doc)
     bn = F.count(F.lit(1)).over(Window.partitionBy("band_id", "band_key"))
-    kept = banded.withColumn("bn", bn).filter(F.col("bn") <= cap)
-    cand = (
-        kept.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
-        .join(
-            kept.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key"),
-            ["band_id", "band_key"],
-        )
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    return _verify_jaccard_arrays(cand, per_doc, tau)
-
-
-def star_candidates(sh_rows: DataFrame) -> DataFrame:
-    """LINEAR-output LSH candidates: per (band_id, band_key) bucket emit a
-    STAR from the bucket's min doc_id instead of all C(n,2) pairs —
-    Σ(n−1) edges connect exactly the same buckets, so connected
-    components over (verified) star edges replace the pair-quadratic
-    bucket join for cluster-level dedup (VERDICT r7 #1: 27.2M pairs →
-    ~0.5M edges on the sf10 clone-family fixture). Hub resolution is one
-    UNORDERED window min per bucket (whole-partition frame — no sort):
-    one exchange of the banded rows, where the r8 agg+join-back form
-    paid two exchanges plus a join stage for the same answer."""
-    from pyspark.sql import Window
-
-    banded = banded_keys(sh_rows)
-    hub = F.min("doc_id").over(Window.partitionBy("band_id", "band_key"))
-    return (
-        banded.withColumn("hub", hub)
-        .filter(F.col("doc_id") != F.col("hub"))
-        .select(F.col("hub").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-        .distinct()
-    )
+    kept = _bands(per_doc).withColumn("bn", bn).filter(F.col("bn") <= cap)
+    return _verify_jaccard_arrays(band_candidates(kept), per_doc, tau)
 
 
 def minhash_lsh_pairs(
@@ -444,63 +332,44 @@ def minhash_lsh_pairs(
 
     Fully relational shape — no wide array columns anywhere:
 
-    1. :func:`shingle_rows` explodes to distinct (doc_id, shingle) rows,
-    2. :func:`band_candidates` signs + bands them; candidates are ids-only,
-    3. verify = join-count: |A∩B| from an equi-join on shingle,
-       |A∪B| = |A|+|B|−|A∩B| — never materializes a pair of arrays.
+    1. :func:`shingle_hash_rows` explodes to distinct (doc_id, h) rows,
+    2. :func:`banded_keys` signs + bands them and :func:`band_candidates`
+       self-joins the buckets; candidates are ids-only,
+    3. :func:`verify_jaccard` = join-count: |A∩B| from an equi-join on
+       h, |A∪B| = |A|+|B|−|A∩B| — never materializes a pair of arrays.
 
-    At 100 TB every stage is a narrow project or one keyed exchange with
-    map-side combine; the checkpointed row tables are what a production
-    pipeline writes out as the LSH index."""
-    # sh_rows is consumed by the signature agg, both verify joins, and
-    # the size agg. No persist/checkpoint barrier: all four consumers
-    # share the dropDuplicates exchange, which Spark dedupes to one
-    # physical computation (ReusedExchange) — and unlike persist/
-    # localCheckpoint, nothing accumulates driver-side across calls
-    # (persist taxes every later CacheManager lookup; checkpoint blocks
-    # pile up until a cleaner storm stalls some later job).
+    The candidate set is pair-quadratic on clone-heavy corpora, so this
+    feed keeps the relational verify (NOTHING-PAIR-SIZED rule, see
+    :func:`_verify_jaccard_arrays`)."""
+    # sh_h is consumed by the signature agg, both verify joins, and the
+    # size agg. No persist/checkpoint barrier: all four consumers share
+    # the dropDuplicates exchange, which Spark dedupes to one physical
+    # computation (ReusedExchange) — and unlike persist/localCheckpoint,
+    # nothing accumulates driver-side across calls.
     sh_h = shingle_hash_rows(docs, id_col, text_col)
-    return verify_jaccard(band_candidates(sh_h), sh_h, tau)
+    return verify_jaccard(band_candidates(banded_keys(sh_h)), sh_h, tau)
 
 
-def verify_jaccard(cand: DataFrame, sh_rows: DataFrame, tau: float) -> DataFrame:
+def verify_jaccard(cand: DataFrame, sh_h: DataFrame, tau: float) -> DataFrame:
     """Exact-Jaccard verification of an ids-only candidate set against
-    the (doc_id, shingle) row table: |A∩B| from an equi-join on shingle,
-    |A∪B| = |A|+|B|−|A∩B| — never materializes a pair of arrays.
+    distinct (doc_id, h) rows (:func:`shingle_hash_rows`): |A∩B| from an
+    equi-join on h, |A∪B| = |A|+|B|−|A∩B| — never materializes a pair of
+    arrays.
 
-    The join runs on a 60-bit md5 prefix of the shingle instead of the
-    ~50-byte shingle string (r8: the verify join was the hottest shuffle
-    of the sf10 dedup headliner — hashed keys cut its width ~4×). The
-    DuckDB twin (_verified_sql) intersects the SAME md5-prefix lists, so
-    a 60-bit collision — ~3e-4 expected per 26M-shingle fixture —
-    changes both engines identically and the hash-equality gate holds
-    unconditionally; at driver scale (57k shingles) collision odds are
-    ~1e-9 and outputs are bit-identical to the string-keyed form.
-
-    Accepts pre-hashed (doc_id, h) rows from :func:`shingle_hash_rows`
-    as-is (already distinct — no second dedup exchange); string rows
-    get hashed + deduplicated here."""
-    sh_h = (
-        sh_rows
-        if "h" in sh_rows.columns
-        else sh_rows.select(
-            "doc_id",
-            F.conv(F.substring(F.md5("s"), 1, 15), 16, 10).cast("bigint").alias("h"),
-        ).dropDuplicates(["doc_id", "h"])
-    )
+    The join runs on the 60-bit :func:`shingle_hash` instead of the
+    ~50-byte shingle string (hashed keys cut the hottest shuffle ~4×).
+    The DuckDB twin (_verified_sql) intersects the SAME md5-prefix
+    lists, so a 60-bit collision changes both engines identically and
+    the hash-equality gate holds unconditionally."""
     sizes = sh_h.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    # shuffle_hash hints on BOTH verify joins (r9, caught by the sf30
-    # probe): every join side here is corpus-sized by construction
-    # (candidates ~ O(docs); the shingle-hash table ~ O(docs·shingles);
-    # the first join's output ~ O(candidates · shingles/doc), ~95M rows
-    # at sf30), so broadcast is never the right strategy past toy scale
-    # — but AQE sizes broadcast builds by COMPRESSED shuffle bytes and
-    # at sf30 flipped a sub-64MB-compressed side into a 1 GiB+
-    # deserialized build that blew driver/executor memory (hinting only
-    # the second join re-OOMed: the first join's broadcast still
-    # anchors the over-eager plan). Pinning both keeps the plan shape
-    # scale-invariant; the sf0.1 cost is ~1s of small shuffles on the
-    # headliner — the price of a plan that survives every decade.
+    # shuffle_hash hints on BOTH verify joins: every join side here is
+    # corpus-sized by construction (candidates ~ O(docs); the hash table
+    # ~ O(docs·shingles); the first join's output ~ O(candidates ·
+    # shingles/doc)), so broadcast is never right past toy scale — but
+    # AQE sizes broadcast builds by COMPRESSED shuffle bytes and can
+    # flip a small-compressed side into a 1 GiB+ deserialized build that
+    # blows driver/executor memory. Pinning both keeps the plan shape
+    # scale-invariant.
     inter = (
         cand.hint("shuffle_hash")
         .join(sh_h.select(F.col("doc_id").alias("doc_a"), "h"), "doc_a")
@@ -528,51 +397,26 @@ def minhash_star_pairs(
 ) -> DataFrame:
     """shingle → sign → band → bucket STAR → verify: the linear-output
     edge generator for cluster-level dedup. Returns verified
-    (doc_a=hub, doc_b, jaccard) with jaccard ≥ tau; Σ_buckets (n−1)
-    edges instead of Σ C(n,2) pairs. Recall note: two docs sharing a
-    bucket connect only if both their hub edges verify — a bucket pair
-    whose members each clear τ against the hub stays connected, but a
-    (b,c) pair in a bucket whose hub a matches neither is surrendered
-    (the full-pair generator would keep it). On clone-family corpora the
-    hub is itself a family member, so family recall is unchanged.
-
-    r10 OPTIMIZATION (guide §2.3/§2.4 — shuffle fewer bytes, remove
-    shuffles): because star edges are LINEAR in the corpus, verification
-    switches from the row-relational join-count (which shuffled the full
-    (doc_id, h) table twice — once per pair side — then paid an
-    aggregation exchange and two more size joins) to per-doc hash ARRAYS:
-    ONE groupBy(doc_id) emits the 12 signature mins, the doc's distinct-h
-    array, and its size together; candidates attach the two arrays with
-    two edge-sized joins and compute |A∩B| as
-    ``size(array_intersect(hs_a, hs_b))`` in the projection. Both sides
-    of ``array_intersect`` are distinct by construction (dropDuplicates
-    upstream), so its distinct-intersection semantics equal the join
-    count — measured digest-identical at sf0.01/sf0.1/sf1. Plan effect at
-    sf0.1: 8 exchanges → 4; the 260k-row shingle table crosses ONE
-    exchange (the signature agg it always paid) instead of three; the
-    pair-side shuffles carry only the 258 candidate edges. This stays
-    scale-safe precisely because the star feed bounds pairs at Σ(n−1):
-    the pair-quadratic generator `minhash_lsh_pairs` keeps the
-    relational verify, whose fanned intermediate never carries arrays
-    across an exchange (the module's NOTHING-PAIR-SIZED rule).
-
-    r11 (guide §2.4): the (doc_id, h) dropDuplicates exchange is gone
-    too — the per-doc aggregation consumes RAW hash rows and dedups via
-    collect_set (see :func:`_per_doc_minhash`), so the shingle table now
-    crosses NO standalone dedup exchange before the signature agg."""
-    from pyspark.sql import Window
-
+    (doc_a=hub, doc_b, jaccard) with jaccard ≥ tau; per bucket the hub
+    is its min doc_id, giving Σ_buckets (n−1) edges instead of Σ C(n,2)
+    pairs. Hub resolution is one UNORDERED window min per bucket
+    (whole-partition frame — no sort). Recall note: two docs sharing a
+    bucket connect only if both their hub edges verify — a (b,c) pair in
+    a bucket whose hub a matches neither is surrendered (the full-pair
+    generator would keep it). On clone-family corpora the hub is itself
+    a family member, so family recall is unchanged. Star edges are
+    linear, so verification uses the array form
+    (:func:`_verify_jaccard_arrays`)."""
     per_doc = _per_doc_minhash(shingle_hash_rows_raw(docs, id_col, text_col))
-    banded = _banded_from_per_doc(per_doc)
     hub = F.min("doc_id").over(Window.partitionBy("band_id", "band_key"))
     cand = (
-        banded.withColumn("hub", hub)
+        _bands(per_doc)
+        .withColumn("hub", hub)
         .filter(F.col("doc_id") != F.col("hub"))
         .select(F.col("hub").alias("doc_a"), F.col("doc_id").alias("doc_b"))
         .distinct()
     )
     return _verify_jaccard_arrays(cand, per_doc, tau)
-
 
 def simhash_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """32-bit SimHash per document, the scale-shaped way: explode tokens,
@@ -650,10 +494,11 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Shared WITH-clause body: shingle → sign → band rows (through `banded`).
-# Extended below into the pair-candidate form (_MINHASH_CAND_SQL) and the
-# linear star-edge form (_MINHASH_STAR_SQL), mirroring shingle_rows /
-# band_candidates / star_candidates exactly.
+# Shared WITH-clause body: shingle → sign → band rows (through `banded`),
+# the DuckDB twin of _exploded_shingles / _signature / _bands. Extended
+# below into the pair-candidate form (_MINHASH_CAND_SQL, the twin of
+# band_candidates), the capped form and the linear star-edge form
+# (_MINHASH_STAR_SQL), mirroring the three minhash_* feeds.
 _MINHASH_BAND_SQL = f"""toks AS (
   SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> w <> '') AS t
   FROM documents
@@ -685,9 +530,9 @@ _MINHASH_CAND_SQL = f"""{_MINHASH_BAND_SQL}, cand AS (
   WHERE a.doc_id < b.doc_id
 )"""
 
-# Capped-bucket candidates: mirror of band_candidates_capped — bucket
+# Capped-bucket candidates: mirror of minhash_lsh_pairs_capped — bucket
 # sizes from the same banded rows, over-cap buckets dropped before the
-# pair join (the scale-bounded pair feed; see minhash_lsh_pairs_capped).
+# pair join (the scale-bounded pair feed).
 _MINHASH_CAND_CAPPED_SQL = f"""{_MINHASH_BAND_SQL}, bsz AS (
   SELECT band_id, band_key, count(*) AS bn
   FROM banded GROUP BY band_id, band_key
@@ -817,12 +662,14 @@ WHERE len(list_intersect(a.words, b.words)) * 1.0
 )
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-set Jaccard as a VERIFY stage over MinHash-band
-    candidate pairs. Round 1 blocked on (lang, len-bucket), whose
-    dominant-language x common-length block is quadratic at 100 TB
-    (VERDICT r01); the band bucket bounds the candidate count by
-    construction, and recall is tunable via N_BANDS/N_HASHES."""
+    candidate pairs. Blocking on (lang, len-bucket) instead would make
+    the dominant-language x common-length block quadratic at 100 TB;
+    the band bucket bounds the candidate count by construction, and
+    recall is tunable via N_BANDS/N_HASHES. Candidates come from hashed
+    shingle rows: the per-doc distinct-hash set is what the signature
+    reduces over, so they equal the string-row candidates."""
     docs = load_table(spark, sf_dir, "documents")
-    cand = band_candidates(shingle_rows(docs))
+    cand = band_candidates(banded_keys(shingle_hash_rows(docs)))
     d = docs.select("doc_id", F.array_distinct(tokens_col(F.col("text"))).alias("words"))
     jac = jaccard(F.col("w_a"), F.col("w_b"))
     return (
@@ -1020,24 +867,19 @@ def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     their absolute error — the calibration report that justifies
     N_HASHES/N_BANDS before a 100 TB dedup run commits to thresholds.
 
-    Signatures and exact sets both join in by doc id on the ids-only
-    candidate list; cost is candidate-bounded like every verify stage.
+    One doc-keyed aggregate yields each doc's signature and exact
+    shingle set; the band candidates derive from that same signature,
+    and both sides join in by doc id on the ids-only candidate list —
+    cost is candidate-bounded like every verify stage.
     """
     docs = load_table(spark, sf_dir, "documents")
-    sh_rows = shingle_rows(docs)
-    cand = band_candidates(sh_rows)
-    base = sh_rows.select(
-        "doc_id",
-        "s",
-        (F.conv(F.substring(F.md5("s"), 1, 15), 16, 10).cast("bigint") % MINHASH_P).alias("b"),
+    base = shingle_rows(docs).select(
+        "doc_id", "s", (shingle_hash(F.col("s")) % MINHASH_P).alias("b")
     )
     sig = base.groupBy("doc_id").agg(
-        F.collect_set("s").alias("shingles"),
-        *[
-            F.min((F.lit(HASH_A[s]) * F.col("b") + F.lit(HASH_B[s])) % MINHASH_P).alias(f"h{s}")
-            for s in range(N_HASHES)
-        ],
+        F.collect_set("s").alias("shingles"), *_signature(F.col("b"))
     )
+    cand = band_candidates(_bands(sig))
     sa = sig.select(
         F.col("doc_id").alias("doc_a"),
         F.col("shingles").alias("sh_a"),
@@ -1363,10 +1205,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         stok_t.crossJoin(F.broadcast(kdf))
         .groupBy("sid", (F.col("tid") % (F.col("k") + 1)).alias("gid"))
         .agg(
-            F.expr(
-                "CAST(conv(substring(md5(concat_ws(',',"
-                " sort_array(collect_list(tid)))), 1, 15), 16, 10) AS BIGINT)"
-            ).alias("g60")
+            shingle_hash(F.concat_ws(",", F.sort_array(F.collect_list("tid")))).alias("g60")
         )
     )
     grid = (
@@ -1595,19 +1434,9 @@ def dedup_duplicate_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = F.sequence(F.lit(1), F.size("t") - (SPAN_K - 1))
     gram = F.transform(
         idx,
-        lambda i: F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        " ", *[F.element_at("t", i + j) for j in range(SPAN_K)]
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("bigint"),
+        lambda i: shingle_hash(
+            F.concat_ws(" ", *[F.element_at("t", i + j) for j in range(SPAN_K)])
+        ),
     )
     grams = base.select("doc_id", F.explode(gram).alias("g"))
     df_ = grams.groupBy("g").agg(F.countDistinct("doc_id").alias("n_docs"))

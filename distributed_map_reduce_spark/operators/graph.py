@@ -12,33 +12,38 @@ round, never data.
 The DuckDB oracle replays the semantics with a recursive CTE
 (min reachable id per node) — slower asymptotics, same fixpoint.
 
-EDGE-FEED POLICY (r9, VERDICT r8 #1). Two generators feed this module:
+EDGE-FEED POLICY. Three verified MinHash-LSH feeds from operators.dedup
+supply the edges; they share every shingle/signature/band/bucket stage
+and differ only in how bucket members become candidates:
 
 - `minhash_star_pairs` — Σ(n−1) verified star edges per LSH bucket,
   linear even on clone² corpora. Every consumer whose output depends
   only on CONNECTIVITY — or on per-doc bucket-hub membership — uses
   it: `dedup_cc_clusters`, `dedup_cluster_keeper`,
-  `dedup_minhash_clusters`, and (r10) `pipeline_dedup_report`, whose
+  `dedup_minhash_clusters`, and `pipeline_dedup_report`, whose
   near-dup flag is membership, not pairwise structure.
 - `minhash_lsh_pairs` — the full verified pair list. Consumers whose
   SEMANTICS are pair-exact keep it: degrees (`graph_degree_histogram`,
   `graph_degree_assortativity`), edge-metric walks (`graph_pagerank`,
-  `graph_bfs_depth`, `graph_reachability_recursive`,
-  `graph_random_walk_sampling`), neighborhood overlap
-  (`graph_jaccard_neighbors`, `graph_adamic_adar`,
-  `graph_triangle_count`, `graph_clustering_coefficient`,
+  `graph_bfs_depth`, `graph_reachability_recursive`), neighborhood
+  overlap (`graph_jaccard_neighbors`, `graph_adamic_adar`,
   `graph_kcore`, `graph_modularity_score`), and vote-weighted
   propagation (`graph_label_spread`). These inherit the pair
   generator's documented output bound: on clone-heavy corpora the pair
   set grows as clones², so at 100 TB they run after a degree cap /
   hub drop (`graph_degree_histogram` is the triage view), never as the
   corpus-wide cleaning pass — that pass is `dedup_minhash_clusters`.
-- `minhash_lsh_pairs_capped` (r10) — the EXECUTABLE form of that
-  triage: LSH buckets above LSH_BUCKET_CAP members are dropped before
-  the pair join, so candidates stay linear (Σ C(min(n, cap), 2)) on any
-  clone structure. `graph_pagerank_capped` demonstrates the tier end to
-  end; any pair-exact consumer above can swap feeds the same way when
-  the corpus is clone-heavy.
+  Consumers that read the pair frame more than once take it through
+  `_checkpointed_lsh_pairs`.
+- `minhash_lsh_pairs_capped` — the EXECUTABLE form of that triage: LSH
+  buckets above LSH_BUCKET_CAP members are dropped before the pair
+  join, so candidates stay linear (Σ C(min(n, cap), 2)) on any clone
+  structure. `graph_pagerank_capped` demonstrates the tier end to end;
+  any pair-exact consumer above can swap feeds the same way when the
+  corpus is clone-heavy.
+
+Every near-dup graph operator symmetrizes its edge list through
+`undirected`.
 """
 
 from __future__ import annotations
@@ -61,13 +66,28 @@ from .dedup import (
 MAX_ROUNDS = 20
 
 
+def undirected(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
+    """Both directions of an undirected edge list as (a, b) rows: each
+    input pair (src, dst) contributes (src, dst) and (dst, src)."""
+    return edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
+        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
+    )
+
+
+def _checkpointed_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_a, doc_b) verified MinHash-LSH pairs, localCheckpointed: the
+    caller's plan references the pair frame repeatedly (wedge/degree
+    joins, recursion steps, driver counts), and without the checkpoint
+    each reference re-runs the whole MinHash-LSH pipeline."""
+    docs = load_table(spark, sf_dir, "documents")
+    return minhash_lsh_pairs(docs).select("doc_a", "doc_b").localCheckpoint(eager=True)
+
+
 def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Label propagation: node → min node-id reachable (= component id).
     ``edges`` is undirected input (one row per pair, either order).
     Returns (node, component)."""
-    both = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    )
+    both = undirected(edges, src, dst)
     # Materialize the edge list once — otherwise every round's join AND
     # convergence check lazily recompute the upstream pipeline (here:
     # the whole MinHash-LSH derivation) from scratch. Iterative loops
@@ -256,9 +276,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     # and the rank init — without this every reference re-evaluates the
     # caller's whole candidate-pair pipeline (MinHash-LSH for the
     # registered near-dup graph queries).
-    both = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    ).localCheckpoint(eager=True)
+    both = undirected(edges, src, dst).localCheckpoint(eager=True)
     deg = both.groupBy("a").agg(F.count(F.lit(1)).alias("outdeg"))
     wedges = both.join(deg, "a").localCheckpoint(eager=True)
     n = deg.count()
@@ -391,9 +409,7 @@ def bfs_depths(edges: DataFrame, seeds: DataFrame, max_depth: int,
     not graph-sized, the textbook Pregel BFS. Terminates early when the
     frontier empties (one counter action per round on the driver).
     """
-    both = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    ).localCheckpoint(eager=True)
+    both = undirected(edges, src, dst).localCheckpoint(eager=True)
     visited = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct().withColumn(
         "depth", F.lit(0)
     ).localCheckpoint(eager=True)
@@ -446,15 +462,7 @@ def graph_bfs_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle's recursive CTE re-derives min-depth semantics; the Spark
     side is frontier BFS (per-hop cost = frontier size, not graph size).
     """
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = (
-        minhash_lsh_pairs(docs)
-        .select("doc_a", "doc_b")
-        # localCheckpoint: the plan references the candidate-pair frame
-        # repeatedly (wedge/degree joins or recursion steps); without it
-        # each reference re-runs the whole MinHash-LSH pipeline.
-        .localCheckpoint(eager=True)
-    )
+    pairs = _checkpointed_lsh_pairs(spark, sf_dir)
     both_nodes = pairs.select(F.col("doc_a").alias("n")).unionByName(
         pairs.select(F.col("doc_b").alias("n"))
     ).distinct()
@@ -684,15 +692,7 @@ def graph_reachability_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduplicate per level; the row count IS the path count.) The cubic
     growth is the documented reason the frontier loop, not this CTE, is
     the open-ended-traversal tool."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = (
-        minhash_lsh_pairs(docs)
-        .select("doc_a", "doc_b")
-        # localCheckpoint: the plan references the candidate-pair frame
-        # repeatedly (wedge/degree joins or recursion steps); without it
-        # each reference re-runs the whole MinHash-LSH pipeline.
-        .localCheckpoint(eager=True)
-    )
+    pairs = _checkpointed_lsh_pairs(spark, sf_dir)
     pairs.createOrReplaceTempView("_rec_pairs")
     prior = spark.conf.get("spark.sql.cteRecursionRowLimit", None)
     spark.conf.set("spark.sql.cteRecursionRowLimit", "100000000")
@@ -780,9 +780,7 @@ def graph_label_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     `connected_components`."""
     docs = load_table(spark, sf_dir, "documents")
     pairs = minhash_lsh_pairs(docs).select("doc_a", "doc_b")
-    edges = pairs.select(
-        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-    ).unionByName(pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
+    edges = undirected(pairs, "doc_a", "doc_b")
     nodes = edges.select(F.col("a").alias("node")).distinct()
     labels = nodes.join(docs, nodes.node == docs.doc_id).select(
         "node",
@@ -852,18 +850,8 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     caps band-bucket width upstream; at 100 TB the standard guard
     drops hubs above a degree cap first (`graph_degree_histogram` is
     the triage view). Counts exact, one rounded division."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = (
-        minhash_lsh_pairs(docs)
-        .select("doc_a", "doc_b")
-        # localCheckpoint: the plan references the candidate-pair frame
-        # repeatedly (wedge/degree joins or recursion steps); without it
-        # each reference re-runs the whole MinHash-LSH pipeline.
-        .localCheckpoint(eager=True)
-    )
-    edges = pairs.select(
-        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-    ).unionByName(pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
+    pairs = _checkpointed_lsh_pairs(spark, sf_dir)
+    edges = undirected(pairs, "doc_a", "doc_b")
     deg = edges.groupBy(F.col("a").alias("node")).agg(F.count(F.lit(1)).alias("d"))
     e1 = edges.select(F.col("a").alias("u"), F.col("b").alias("w1"))
     e2 = edges.select(F.col("a").alias("v"), F.col("b").alias("w2"))
@@ -934,10 +922,7 @@ def kcore(edges: DataFrame, k: int = KCORE_K, src: str = "src", dst: str = "dst"
     by the peeling depth, which for near-dup graphs is shallow — the
     loop RAISES past ``max_rounds`` rather than silently returning a
     non-core (the same convergence discipline as connected_components)."""
-    both = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
-        edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-    )
-    cur = both.localCheckpoint(eager=True)
+    cur = undirected(edges, src, dst).localCheckpoint(eager=True)
     n_edges = cur.count()
     for _ in range(max_rounds):
         deg = cur.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
@@ -1293,18 +1278,8 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     a common neighbor anyway). Float posture: each term is 1/ln of an
     exact integer, summed per pair then rounded 6dp — term counts per
     pair are tiny, both engines sum the same few doubles."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = (
-        minhash_lsh_pairs(docs)
-        .select("doc_a", "doc_b")
-        # localCheckpoint: the plan references the candidate-pair frame
-        # repeatedly (wedge/degree joins or recursion steps); without it
-        # each reference re-runs the whole MinHash-LSH pipeline.
-        .localCheckpoint(eager=True)
-    )
-    edges = pairs.select(
-        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-    ).unionByName(pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
+    pairs = _checkpointed_lsh_pairs(spark, sf_dir)
+    edges = undirected(pairs, "doc_a", "doc_b")
     deg = edges.groupBy(F.col("a").alias("node")).agg(F.count(F.lit(1)).alias("d"))
     e1 = edges.select(F.col("a").alias("u"), F.col("b").alias("z1"))
     e2 = edges.select(F.col("a").alias("v"), F.col("b").alias("z2"))
@@ -1444,18 +1419,8 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     against its own degree table (the exact shape of
     [[graph_clustering_coefficient]]'s wedge step); corr() is one
     mergeable co-moment aggregate on both engines, 4dp posture."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = (
-        minhash_lsh_pairs(docs)
-        .select("doc_a", "doc_b")
-        # localCheckpoint: the plan references the candidate-pair frame
-        # repeatedly (wedge/degree joins or recursion steps); without it
-        # each reference re-runs the whole MinHash-LSH pipeline.
-        .localCheckpoint(eager=True)
-    )
-    edges = pairs.select(
-        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-    ).unionByName(pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
+    pairs = _checkpointed_lsh_pairs(spark, sf_dir)
+    edges = undirected(pairs, "doc_a", "doc_b")
     deg = edges.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
     )
@@ -1523,20 +1488,13 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins: edges x community (intra count), community x degree sums;
     output is community-cardinality then 1 row.
 
-    The candidate-pair frame is localCheckpointed (house idiom, see
-    graph_connected_components above): the plan reads it five ways
+    The candidate-pair frame is localCheckpointed
+    (`_checkpointed_lsh_pairs`): the plan reads it five ways
     (comm, deg, the 2m count, and the intra join twice), and without
     the checkpoint each driver action re-ran the full MinHash-LSH
     pipeline — 3x the dominant cost (sf1: 29.3s -> ~11s)."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = (
-        minhash_lsh_pairs(docs)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
-    edges = pairs.select(
-        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-    ).unionByName(pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
+    pairs = _checkpointed_lsh_pairs(spark, sf_dir)
+    edges = undirected(pairs, "doc_a", "doc_b")
     comm = edges.groupBy(F.col("a").alias("node")).agg(
         F.min(F.least(F.col("a"), F.col("b"))).cast("bigint").alias("c")
     )
@@ -1686,9 +1644,7 @@ def graph_closeness_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("p")
     ).select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-    sym = adj.select(F.col("w1").alias("a"), F.col("w2").alias("b")).unionByName(
-        adj.select(F.col("w2").alias("a"), F.col("w1").alias("b"))
-    )
+    sym = undirected(adj, "w1", "w2")
     va = vocab.select(F.col("w").alias("a"))
     vb = vocab.select(F.col("w").alias("b"))
     edges = (

@@ -56,15 +56,14 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
-def tune_session(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSession:
+def tune_session(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable tuning to an existing session (idempotent)."""
     for k, v in _RUNTIME_CONFS.items():
         spark.conf.set(k, v)
     # Local mode: shuffle partitions ~ cores. On a real cluster AQE
     # coalesces down from a higher initial number; 2x cores is a safe
     # initial that AQE can only improve.
-    n = shuffle_partitions or 2 * default_parallelism()
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", str(2 * default_parallelism()))
     return spark
 
 

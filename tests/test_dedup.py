@@ -4,18 +4,20 @@ real dups, so correctness-of-mechanism is proven here)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from distributed_map_reduce_spark.operators.dedup import (
-    band_candidates,
+    SHINGLE_K,
     minhash_lsh_pairs,
+    minhash_lsh_pairs_capped,
     minhash_star_pairs,
     shingle_rows,
     simhash_df,
     shingles_col,
     jaccard,
-    star_candidates,
 )
+from distributed_map_reduce_spark.operators.graph import connected_components
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the cat watches "
@@ -74,9 +76,9 @@ def test_star_pairs_family_recall(spark):
         parent[find(a)] = find(b)
     assert len({find(d) for d in (1, 2, 4, 5, 6)}) == 1
     assert not any(3 in e for e in edges)  # unrelated never joins
-    # star candidates never exceed pair candidates
-    sh = shingle_rows(docs)
-    assert star_candidates(sh).count() <= band_candidates(sh).count()
+    # every verified star edge is also a verified bucket pair
+    pairs = {(r["doc_a"], r["doc_b"]) for r in minhash_lsh_pairs(docs).collect()}
+    assert edges <= pairs
 
 
 def test_simhash_hamming_close_for_dups(spark):
@@ -100,8 +102,6 @@ def test_shingles_and_jaccard(spark):
 def test_connected_components_clusters(spark):
     """CC over a hand-built graph: two components + an isolated pair;
     every node labeled with its component's min id."""
-    from distributed_map_reduce_spark.operators.graph import connected_components
-
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 20)],
         "src long, dst long",
@@ -114,8 +114,6 @@ def test_connected_components_long_chain(spark):
     """A 60-node path graph has diameter 59 > MAX_ROUNDS=20: plain
     min-label propagation would silently return wrong labels at the
     round cap (ADVICE r01); pointer jumping converges in O(log n)."""
-    from distributed_map_reduce_spark.operators.graph import connected_components
-
     n = 60
     edges = spark.createDataFrame(
         [(f"d{i:03d}", f"d{i + 1:03d}") for i in range(n - 1)], "src string, dst string"
@@ -153,10 +151,7 @@ def test_capped_lsh_drops_mega_buckets_keeps_ordinary_pairs(spark):
     families (here a 20-clone template family with cap-sized buckets)
     while ordinary near-dup pairs survive untouched — the linear-bounded
     pair feed for the pair-exact graph tier."""
-    from distributed_map_reduce_spark.operators.dedup import (
-        LSH_BUCKET_CAP,
-        minhash_lsh_pairs_capped,
-    )
+    from distributed_map_reduce_spark.operators.dedup import LSH_BUCKET_CAP
 
     family = [(i, BASE) for i in range(1, LSH_BUCKET_CAP + 5)]  # 20 clones
     ordinary = [(100, NEAR_DUP.replace("quick", "swift")),
@@ -166,3 +161,28 @@ def test_capped_lsh_drops_mega_buckets_keeps_ordinary_pairs(spark):
     capped = {(r["doc_a"], r["doc_b"]) for r in minhash_lsh_pairs_capped(docs).collect()}
     assert (100, 101) in capped                      # ordinary pair kept
     assert not any(a <= 20 and b <= 20 for a, b in capped)  # clone family dropped
+    # capping only removes candidates: every capped pair is an uncapped pair
+    full = {(r["doc_a"], r["doc_b"]) for r in minhash_lsh_pairs(docs).collect()}
+    assert capped <= full
+
+
+@pytest.mark.parametrize(
+    "texts",
+    [[""], ["  \t  "], ["word"], [" ".join(["word"] * (SHINGLE_K - 1))], []],
+    ids=["empty", "whitespace", "one_token", "k_minus_1_tokens", "zero_rows"],
+)
+def test_degenerate_docs_have_no_shingles_or_pairs(spark, texts):
+    """Documents shorter than one k-shingle (and a zero-row corpus) give
+    empty shingle sets and empty pair/cluster outputs — never an error
+    or a bogus pair. Each text appears twice, so any spurious shingle
+    would surface as an exact-duplicate pair."""
+    docs = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts + texts)], "doc_id long, text string"
+    )
+    assert all(r["s"] == [] for r in docs.select(shingles_col(F.col("text")).alias("s")).collect())
+    assert shingle_rows(docs).count() == 0
+    assert minhash_lsh_pairs(docs).count() == 0
+    assert minhash_lsh_pairs_capped(docs).count() == 0
+    star = minhash_star_pairs(docs)
+    assert star.count() == 0
+    assert connected_components(star, "doc_a", "doc_b").count() == 0
