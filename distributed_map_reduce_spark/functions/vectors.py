@@ -8,12 +8,21 @@ bit-stable after rounding.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
 def as_double(vec: Column) -> Column:
     return vec.cast("array<double>")
+
+
+def const_vector(ws: Iterable[float]) -> Column:
+    """A literal ``array<double>`` of the numbers ``ws``, built as ONE
+    SQL expression: ``F.array(*[F.lit(w) ...])`` costs several py4j
+    round-trips per element. Both fold to the same constant."""
+    return F.expr("array(" + ", ".join(f"{float(w)!r}D" for w in ws) + ")")
 
 
 def dot(a: Column, b: Column) -> Column:

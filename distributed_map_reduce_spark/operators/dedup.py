@@ -84,10 +84,12 @@ def spark_partitions(df: DataFrame) -> int:
 
 # ---------------------------------------------------------------------------
 # Building blocks (importable; tests exercise them on planted fixtures).
-# Each MinHash-LSH stage has ONE implementation, shared by the three
-# verified feeds (minhash_lsh_pairs, minhash_lsh_pairs_capped,
-# minhash_star_pairs): shingle → 60-bit hash → signature → band →
-# bucket candidates → exact-Jaccard verify.
+# The three verified feeds (minhash_lsh_pairs, minhash_lsh_pairs_capped,
+# minhash_star_pairs) share one shingle expression, one 60-bit hash, one
+# set of MinHash functions and one band explode: shingle → 60-bit hash →
+# signature → band → bucket candidates → exact-Jaccard verify. The pair
+# feed runs them over relational (doc_id, h) rows, the two linear feeds
+# over one row-local per-doc hash array.
 # ---------------------------------------------------------------------------
 def tokens_col(text: Column) -> Column:
     return F.filter(F.split(F.lower(text), r"\s+"), lambda w: w != "")
@@ -116,7 +118,7 @@ def shingles_from_tokens(toks: Column, k: int = SHINGLE_K) -> Column:
 
 def shingles_col(text: Column, k: int = SHINGLE_K) -> Column:
     """Convenience form for small inputs/tests; hot paths project
-    tokens_col into its own column first (see :func:`_exploded_shingles`)."""
+    tokens_col into its own column first (see :func:`_doc_tokens`)."""
     return shingles_from_tokens(tokens_col(text), k)
 
 
@@ -141,14 +143,18 @@ def jaccard(a: Column, b: Column) -> Column:
     return F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))
 
 
-def _exploded_shingles(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(doc_id, s) rows, one per shingle position (duplicates kept)."""
-    # Spread the md5-heavy scan across cores: a single small local parquet
-    # file otherwise plans as one input partition (a real cluster scan is
-    # already wide).
-    toks = docs.repartition(spark_partitions(docs)).select(
+def _doc_tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id, toks) rows spread across cores for the md5-heavy map: a
+    single small local parquet file otherwise plans as one input
+    partition (a real cluster scan is already wide)."""
+    return docs.repartition(spark_partitions(docs)).select(
         F.col(id_col).alias("doc_id"), tokens_col(F.col(text_col)).alias("toks")
     )
+
+
+def _exploded_shingles(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id, s) rows, one per shingle position (duplicates kept)."""
+    toks = _doc_tokens(docs, id_col, text_col)
     return toks.select("doc_id", F.explode(_shingle_list(F.col("toks"))).alias("s"))
 
 
@@ -159,49 +165,43 @@ def shingle_rows(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     return _exploded_shingles(docs, id_col, text_col).dropDuplicates(["doc_id", "s"])
 
 
-def shingle_hash_rows_raw(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """RAW (doc_id, h) rows — one :func:`shingle_hash` per exploded word
-    shingle, duplicates NOT yet removed. Consumers that reduce per doc
-    anyway (signature mins are duplicate-insensitive; ``collect_set``
-    dedups inside the same aggregation) take this form and skip the
-    (doc_id, h) dedup exchange; the relational join-count verify needs
-    distinct ROWS and goes through :func:`shingle_hash_rows`."""
-    return _exploded_shingles(docs, id_col, text_col).select(
-        "doc_id", shingle_hash(F.col("s")).alias("h")
-    )
-
-
 def shingle_hash_rows(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Distinct (doc_id, h) rows. MinHash banding needs only h % P and
-    the exact-Jaccard verify intersects these SAME 60-bit prefixes, so
-    banding, both verify joins and the size aggregate all reuse ONE
-    integer-keyed exchange. Output-identical to string rows: the per-doc
-    distinct-h set is what every downstream consumer reduces over
-    (min for signatures, count for sizes, equi-join for intersections)."""
-    return shingle_hash_rows_raw(docs, id_col, text_col).dropDuplicates(
-        ["doc_id", "h"]
+    """Distinct (doc_id, h) rows, one :func:`shingle_hash` per distinct
+    word shingle. MinHash banding needs only h % P and the exact-Jaccard
+    verify intersects these SAME 60-bit prefixes, so banding, both
+    verify joins and the size aggregate all reuse ONE integer-keyed
+    exchange. Output-identical to string rows: the per-doc distinct-h
+    set is what every downstream consumer reduces over (min for
+    signatures, count for sizes, equi-join for intersections)."""
+    return (
+        _exploded_shingles(docs, id_col, text_col)
+        .select("doc_id", shingle_hash(F.col("s")).alias("h"))
+        .dropDuplicates(["doc_id", "h"])
     )
 
 
+def _minhash(s: int, b: Column) -> Column:
+    """MinHash function s of a shingle base integer ``b`` (= hash mod P):
+    (a_s·b + b_s) mod P."""
+    return (F.lit(HASH_A[s]) * b + F.lit(HASH_B[s])) % MINHASH_P
+
+
 def _signature(b: Column) -> list[Column]:
-    """The N_HASHES signature aggregates h{s} = min((a_s·b + b_s) mod P)
-    over a doc's shingle base integers ``b`` (= hash mod P)."""
-    return [
-        F.min((F.lit(HASH_A[s]) * b + F.lit(HASH_B[s])) % MINHASH_P).alias(f"h{s}")
-        for s in range(N_HASHES)
-    ]
+    """The N_HASHES signature aggregates h{s} = min over a doc's rows of
+    :func:`_minhash` (s, b)."""
+    return [F.min(_minhash(s, b)).alias(f"h{s}") for s in range(N_HASHES)]
 
 
-def _bands(sig: DataFrame) -> DataFrame:
-    """(doc_id, band_id, band_key) LSH bucket rows from the signature
-    columns h0..h{k-1}: each band key concatenates r = k/bands of them."""
+def _bands(sig: DataFrame, *carry: str) -> DataFrame:
+    """(doc_id, *carry, band_id, band_key) LSH bucket rows from the
+    signature columns h0..h{k-1}: each band key concatenates r = k/bands
+    of them."""
     r = N_HASHES // N_BANDS
     return sig.select(
         "doc_id",
+        *carry,
         F.posexplode(
             F.array(
                 *[
@@ -221,79 +221,78 @@ def banded_keys(sh_rows: DataFrame) -> DataFrame:
     return _bands(base.groupBy("doc_id").agg(*_signature(F.col("b"))))
 
 
-def band_candidates(banded: DataFrame) -> DataFrame:
-    """MinHash-band candidate pairs (doc_a < doc_b), ids only: the
-    (band_id, band_key) bucket self-join. Bucket-bounded, never
-    block-quadratic, but PAIR-quadratic inside a bucket by construction
-    (a 100-clone family yields C(100,2) bucket pairs) — which is why the
-    capped feed sizes buckets first and the star feed emits hub edges."""
+def _bucket_pairs(banded: DataFrame, *carry: str) -> DataFrame:
+    """The (band_id, band_key) bucket self-join: one row per shared
+    bucket and member pair doc_a < doc_b, each carried column ``c`` as
+    ``c_a`` / ``c_b``. Bucket-bounded, never block-quadratic, but
+    PAIR-quadratic inside a bucket by construction (a 100-clone family
+    yields C(100,2) bucket pairs) — which is why the capped feed sizes
+    buckets first and the star feed emits hub edges."""
+
+    def side(s: str) -> DataFrame:
+        return banded.select(
+            F.col("doc_id").alias(f"doc_{s}"), "band_id", "band_key",
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+
     return (
-        banded.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
-        .join(banded.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key"),
-              ["band_id", "band_key"])
+        side("a").join(side("b"), ["band_id", "band_key"])
         .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
     )
+
+
+def band_candidates(banded: DataFrame) -> DataFrame:
+    """MinHash-band candidate pairs (doc_a < doc_b), ids only."""
+    return _bucket_pairs(banded).select("doc_a", "doc_b").distinct()
 
 
 LSH_BUCKET_CAP = 16  # minhash_lsh_pairs_capped: drop buckets larger than this
 
 
-def _per_doc_minhash(sh_raw: DataFrame) -> DataFrame:
-    """(doc_id, h0..h{k-1}, hs, n): the signature mins, the doc's
-    distinct shingle-hash array, and its size from ONE doc-keyed
-    aggregation over RAW hash rows (``min`` is duplicate-insensitive and
-    ``collect_set`` IS the per-doc distinct set, so no upstream dedup
-    exchange), pinned behind an explicit repartition("doc_id") so the
-    band explode and both array-verify join sides reuse a single
-    materialization (exchange reuse only happens at Exchange nodes).
-    Shared by the LINEAR-candidate feeds (star, capped) — see
-    :func:`_verify_jaccard_arrays` for why the pair-quadratic feed must
-    NOT use the array verify."""
-    return (
-        sh_raw.groupBy("doc_id")
-        .agg(*_signature(F.col("h") % MINHASH_P), F.collect_set("h").alias("hs"))
-        .withColumn("n", F.size("hs").cast("bigint"))
-        .repartition("doc_id")
+def _per_doc_minhash(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(doc_id, hs, h0..h{k-1}) per document: ``hs`` is the distinct
+    :func:`shingle_hash` array of its word shingles and h{s} the
+    signature min of :func:`_minhash` over it. Row-local — no aggregate,
+    no key exchange — so each consumer reads the one scan → tokenize →
+    md5 pipeline once. Documents shorter than one shingle are dropped
+    (they can never pair). Precondition: ``id_col`` is the documents'
+    key; a repeated id would be two documents here.
+
+    The short-document filter is on the token count on purpose: a filter
+    on ``hs`` is pushed below the repartition and inlines the token
+    split into the shingle lambda (see :func:`_shingle_list`)."""
+    toks = _doc_tokens(docs, id_col, text_col).filter(F.size("toks") >= SHINGLE_K)
+    hs = F.array_distinct(F.transform(_shingle_list(F.col("toks")), shingle_hash))
+    per_doc = toks.select("doc_id", hs.alias("hs"))
+    return per_doc.select(
+        "doc_id",
+        "hs",
+        *[
+            F.array_min(F.transform("hs", lambda h: _minhash(s, h % MINHASH_P))).alias(f"h{s}")
+            for s in range(N_HASHES)
+        ],
     )
 
 
-def _verify_jaccard_arrays(cand: DataFrame, per_doc: DataFrame, tau: float) -> DataFrame:
-    """Exact-Jaccard verification for LINEAR candidate sets: attach each
-    side's distinct-hash array with an edge-sized join and compute
-    |A∩B| as size(array_intersect(..)) in the projection. Equal to the
-    relational join-count of :func:`verify_jaccard` (both arrays are
-    distinct by construction), and cheaper: the shingle table crosses
-    one exchange (the signature aggregate) instead of three. ONLY safe
-    when the candidate set is linear in the corpus (star / capped
-    feeds) — pair-quadratic candidates would carry arrays across the
-    second join's exchange, breaking the module's NOTHING-PAIR-SIZED
-    rule (no pair-sized intermediate ever shuffles wide payloads)."""
-    arr_a = per_doc.select(
-        F.col("doc_id").alias("doc_a"), F.col("hs").alias("hs_a"), F.col("n").alias("n_a")
-    )
-    arr_b = per_doc.select(
-        F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"), F.col("n").alias("n_b")
-    )
-    # shuffle_hash keeps the plan shape scale-invariant: AQE's
-    # compressed-bytes estimate can flip a corpus-sized side into a
-    # broadcast build that OOMs the driver.
-    joined = (
-        cand.hint("shuffle_hash")
-        .join(arr_a, "doc_a")
-        .hint("shuffle_hash")
-        .join(arr_b, "doc_b")
-    )
+def _verified(pairs: DataFrame, tau: float) -> DataFrame:
+    """(doc_a, doc_b, jaccard ≥ tau), one row per pair, from rows that
+    carry both documents' distinct hash arrays ``hs_a`` / ``hs_b``:
+    |A∩B| = size(array_intersect) and |A∪B| = |A|+|B|−|A∩B|, computed
+    in the projection. Equal to the relational join-count of
+    :func:`verify_jaccard`. The ``distinct`` comes last, over ids and
+    the score only, so no exchange after the verify carries arrays."""
     n_inter = F.size(F.array_intersect("hs_a", "hs_b"))
     return (
-        joined.withColumn("n_inter", n_inter)
-        .withColumn(
-            "jaccard",
-            F.round(F.col("n_inter") / (F.col("n_a") + F.col("n_b") - F.col("n_inter")), 4),
+        pairs.withColumn("n_inter", n_inter)
+        .select(
+            "doc_a",
+            "doc_b",
+            F.round(
+                F.col("n_inter") / (F.size("hs_a") + F.size("hs_b") - F.col("n_inter")), 4
+            ).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= tau)
-        .select("doc_a", "doc_b", "jaccard")
+        .distinct()
     )
 
 
@@ -312,13 +311,21 @@ def minhash_lsh_pairs_capped(
     family whose pairwise structure is C(n,2) BY CONSTRUCTION; the
     capped feed surrenders exactly those hubs (`dedup_minhash_clusters`
     handles them linearly via star edges) and keeps every pair among
-    ordinary documents. Bucket sizing is one unordered window over the
-    banded rows. Because candidates are linear, verification uses the
-    array form (:func:`_verify_jaccard_arrays`)."""
-    per_doc = _per_doc_minhash(shingle_hash_rows_raw(docs, id_col, text_col))
+    ordinary documents. ``id_col`` must be the documents' key
+    (:func:`_per_doc_minhash`).
+
+    Plan: the row-local :func:`_per_doc_minhash` frame, band rows that
+    carry each doc's hash array, one unordered window sizing each
+    bucket, and the bucket self-join, verified in its projection
+    (:func:`_verified`). No verify join. Only band rows (4 × corpus)
+    carry arrays across an exchange; the pair-sized join output is
+    reduced to (ids, score) before the final ``distinct`` — because the
+    capped candidates are linear, this keeps the NOTHING-PAIR-SIZED rule
+    (no pair-sized intermediate shuffles wide payloads)."""
+    per_doc = _per_doc_minhash(docs, id_col, text_col)
     bn = F.count(F.lit(1)).over(Window.partitionBy("band_id", "band_key"))
-    kept = _bands(per_doc).withColumn("bn", bn).filter(F.col("bn") <= cap)
-    return _verify_jaccard_arrays(band_candidates(kept), per_doc, tau)
+    kept = _bands(per_doc, "hs").withColumn("bn", bn).filter(F.col("bn") <= cap)
+    return _verified(_bucket_pairs(kept, "hs"), tau)
 
 
 def minhash_lsh_pairs(
@@ -339,8 +346,9 @@ def minhash_lsh_pairs(
        h, |A∪B| = |A|+|B|−|A∩B| — never materializes a pair of arrays.
 
     The candidate set is pair-quadratic on clone-heavy corpora, so this
-    feed keeps the relational verify (NOTHING-PAIR-SIZED rule, see
-    :func:`_verify_jaccard_arrays`)."""
+    feed must not carry hash arrays into its bucket join the way the
+    linear star and capped feeds do (NOTHING-PAIR-SIZED rule: no
+    pair-sized intermediate ever shuffles wide payloads)."""
     # sh_h is consumed by the signature agg, both verify joins, and the
     # size agg. No persist/checkpoint barrier: all four consumers share
     # the dropDuplicates exchange, which Spark dedupes to one physical
@@ -399,24 +407,31 @@ def minhash_star_pairs(
     edge generator for cluster-level dedup. Returns verified
     (doc_a=hub, doc_b, jaccard) with jaccard ≥ tau; per bucket the hub
     is its min doc_id, giving Σ_buckets (n−1) edges instead of Σ C(n,2)
-    pairs. Hub resolution is one UNORDERED window min per bucket
-    (whole-partition frame — no sort). Recall note: two docs sharing a
-    bucket connect only if both their hub edges verify — a (b,c) pair in
-    a bucket whose hub a matches neither is surrendered (the full-pair
-    generator would keep it). On clone-family corpora the hub is itself
-    a family member, so family recall is unchanged. Star edges are
-    linear, so verification uses the array form
-    (:func:`_verify_jaccard_arrays`)."""
-    per_doc = _per_doc_minhash(shingle_hash_rows_raw(docs, id_col, text_col))
-    hub = F.min("doc_id").over(Window.partitionBy("band_id", "band_key"))
-    cand = (
-        _bands(per_doc)
-        .withColumn("hub", hub)
-        .filter(F.col("doc_id") != F.col("hub"))
-        .select(F.col("hub").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-        .distinct()
+    pairs. ``id_col`` must be the documents' key
+    (:func:`_per_doc_minhash`).
+
+    Plan: band rows of the row-local :func:`_per_doc_minhash` frame
+    carry each doc's hash array; ONE unordered window per bucket
+    (whole-bucket frame, no ORDER BY) resolves the hub as ``min(doc_id)``
+    and the hub's array as ``min_by(hs, doc_id)``, so every band row
+    verifies against its hub in the projection (:func:`_verified`). No
+    join. Star edges are linear, so only band rows (4 × corpus) carry
+    arrays across an exchange.
+
+    Recall note: two docs sharing a bucket connect only if both their
+    hub edges verify — a (b,c) pair in a bucket whose hub a matches
+    neither is surrendered (the full-pair generator would keep it). On
+    clone-family corpora the hub is itself a family member, so family
+    recall is unchanged."""
+    bucket = Window.partitionBy("band_id", "band_key")
+    rows = _bands(_per_doc_minhash(docs, id_col, text_col), "hs").select(
+        F.min("doc_id").over(bucket).alias("doc_a"),
+        F.min_by("hs", "doc_id").over(bucket).alias("hs_a"),
+        F.col("doc_id").alias("doc_b"),
+        F.col("hs").alias("hs_b"),
     )
-    return _verify_jaccard_arrays(cand, per_doc, tau)
+    return _verified(rows.filter(F.col("doc_a") != F.col("doc_b")), tau)
+
 
 def simhash_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """32-bit SimHash per document, the scale-shaped way: explode tokens,

@@ -13,8 +13,13 @@ The DuckDB oracle replays the semantics with a recursive CTE
 (min reachable id per node) — slower asymptotics, same fixpoint.
 
 EDGE-FEED POLICY. Three verified MinHash-LSH feeds from operators.dedup
-supply the edges; they share every shingle/signature/band/bucket stage
-and differ only in how bucket members become candidates:
+supply the edges. They share the shingle hash, the MinHash functions
+and the band explode, and differ in how bucket members become
+candidates and how candidates verify. The two LINEAR feeds (star,
+capped) read one row-local per-doc frame (hash array + signature) and
+verify in the bucket pass itself, with no join. The pair-exact feed
+verifies with relational (doc_id, h) joins, so no pair-sized row
+carries an array:
 
 - `minhash_star_pairs` — Σ(n−1) verified star edges per LSH bucket,
   linear even on clone² corpora. Every consumer whose output depends

@@ -24,7 +24,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..functions.vectors import as_double, cosine, dot
+from ..functions.vectors import as_double, const_vector, cosine, dot
 from ..registry import register
 from ..sources import load_table
 
@@ -41,7 +41,7 @@ def hyperplane(p: int, dim: int = DIM) -> list[int]:
 
 
 def _plane_lit(p: int):
-    return F.array(*[F.lit(float(w)) for w in hyperplane(p)])
+    return const_vector(hyperplane(p))
 
 
 def lsh_bucket(vec) -> F.Column:
@@ -136,8 +136,7 @@ def adaptive_bucketed(e: DataFrame, floor: int = N_PLANES,
     npl = adaptive_n_planes(int(stats["n"]), floor=floor, target=target)
     bits = [
         F.when(
-            dot(F.col("v"), F.array(*[F.lit(float(w)) for w in hyperplane(p, dim)]))
-            >= 0,
+            dot(F.col("v"), const_vector(hyperplane(p, dim))) >= 0,
             F.lit(1),
         ).otherwise(F.lit(0))
         * (2**p)
@@ -1196,7 +1195,7 @@ def _rp_plane(j: int, dim: int = DIM) -> list[int]:
 
 
 def _rp_plane_lit(j: int):
-    return F.array(*[F.lit(float(w)) for w in _rp_plane(j)])
+    return const_vector(_rp_plane(j))
 
 
 def _rp_plane_sql(j: int) -> str:
@@ -1758,7 +1757,7 @@ def ann_lsh_adaptive_planes(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_planes = max(4, math.ceil(math.log2(n / 64.0))) if n > 0 else 4
 
     bits = [
-        F.when(dot(F.col("v"), F.array(*[F.lit(float(w)) for w in hyperplane(p, dim)])) >= 0,
+        F.when(dot(F.col("v"), const_vector(hyperplane(p, dim))) >= 0,
                F.lit(1)).otherwise(F.lit(0)) * (2 ** p)
         for p in range(n_planes)
     ]

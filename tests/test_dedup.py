@@ -168,14 +168,14 @@ def test_capped_lsh_drops_mega_buckets_keeps_ordinary_pairs(spark):
 
 @pytest.mark.parametrize(
     "texts",
-    [[""], ["  \t  "], ["word"], [" ".join(["word"] * (SHINGLE_K - 1))], []],
-    ids=["empty", "whitespace", "one_token", "k_minus_1_tokens", "zero_rows"],
+    [[""], ["  \t  "], ["word"], [" ".join(["word"] * (SHINGLE_K - 1))], [], [None]],
+    ids=["empty", "whitespace", "one_token", "k_minus_1_tokens", "zero_rows", "null_text"],
 )
 def test_degenerate_docs_have_no_shingles_or_pairs(spark, texts):
-    """Documents shorter than one k-shingle (and a zero-row corpus) give
-    empty shingle sets and empty pair/cluster outputs — never an error
-    or a bogus pair. Each text appears twice, so any spurious shingle
-    would surface as an exact-duplicate pair."""
+    """Documents shorter than one k-shingle, a null text, and a zero-row
+    corpus give empty shingle sets and empty pair/cluster outputs —
+    never an error or a bogus pair. Each text appears twice, so any
+    spurious shingle would surface as an exact-duplicate pair."""
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts + texts)], "doc_id long, text string"
     )

@@ -10,12 +10,15 @@ import io
 from distributed_map_reduce_spark.registry import all_queries
 
 
-def _plan(spark, sf_dir, name: str) -> str:
-    df = all_queries()[name].fn(spark, sf_dir)
+def _explain(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def _plan(spark, sf_dir, name: str) -> str:
+    return _explain(all_queries()[name].fn(spark, sf_dir))
 
 
 def _final_plan(spark, sf_dir, name: str) -> str:
@@ -468,6 +471,41 @@ def test_multi_reference_graph_plans_are_checkpoint_backed(spark, sf_dir):
         plan = _plan(spark, sf_dir, name)
         assert "Scan parquet" not in plan, name
         assert "Scan ExistingRDD" in plan, name
+
+
+def test_minhash_linear_feeds_hash_the_corpus_once(spark, sf_dir):
+    """The star and capped MinHash feeds read ONE row-local per-doc frame
+    (shingle-hash array + signature) and verify in the projection: the
+    pre-adaptive plan holds one md5 projection per bucket self-join side
+    (exactly one in the join-free star), and no join attaches hash arrays
+    back to the pairs (the regression: the md5 subtree inlined once per
+    verify join)."""
+    import re
+
+    from distributed_map_reduce_spark.operators.dedup import (
+        minhash_lsh_pairs_capped,
+        minhash_star_pairs,
+    )
+    from distributed_map_reduce_spark.sources import load_table
+
+    def nodes(df) -> list[str]:
+        # formatted explain details: one "(N) Operator" block per node
+        blocks = re.split(r"\n(?=\(\d+\) )", _explain(df))
+        return [b for b in blocks if re.match(r"\(\d+\) ", b)]
+
+    def md5_projections(ns) -> int:
+        return sum(1 for n in ns if " Project" in n.splitlines()[0] and "md5(" in n)
+
+    def joins(ns) -> int:
+        return sum(1 for n in ns if "Join" in n.splitlines()[0])
+
+    docs = load_table(spark, sf_dir, "documents")
+    star = nodes(minhash_star_pairs(docs))
+    assert md5_projections(star) == 1
+    assert joins(star) == 0
+    capped = nodes(minhash_lsh_pairs_capped(docs))
+    assert joins(capped) == 1  # the bucket self-join
+    assert md5_projections(capped) <= 2
 
 
 def test_bootstrap_poisson_wide_agg_no_row_inflation(spark, sf_dir):
