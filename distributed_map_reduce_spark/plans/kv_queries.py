@@ -269,11 +269,21 @@ def kv_placement_owners(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "kv_cdc_tombstone_apply",
-    bench=True,
-    tags=("kv", "cdc"),
-    oracle="""
+def change_feed(events: DataFrame) -> DataFrame:
+    """The events table as an ordered KV change stream: key = user_id,
+    op = delete for an 'error' event else put, value rounded to 4dp,
+    seq = event_id (unique, so the latest op per key is unambiguous)."""
+    return events.select(
+        F.col("user_id").cast("string").alias("key"),
+        F.when(F.col("event_type") == "error", "delete").otherwise("put").alias("op"),
+        F.round("value", 4).alias("value"),
+        F.col("event_id").alias("seq"),
+    )
+
+
+# Final store state after the change feed: shared by the batch apply and
+# its micro-batch twin `stream_cdc_apply_changes`.
+CDC_APPLY_ORACLE = """
 WITH ops AS (
   SELECT CAST(user_id AS VARCHAR) AS key,
          CASE WHEN event_type = 'error' THEN 'delete' ELSE 'put' END AS op,
@@ -282,7 +292,14 @@ WITH ops AS (
   FROM events
 )
 SELECT key, value FROM ops WHERE rn = 1 AND op <> 'delete'
-""",
+"""
+
+
+@register(
+    "kv_cdc_tombstone_apply",
+    bench=True,
+    tags=("kv", "cdc"),
+    oracle=CDC_APPLY_ORACLE,
 )
 def kv_cdc_tombstone_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC apply with tombstones: replay an ordered change stream
@@ -299,12 +316,7 @@ def kv_cdc_tombstone_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     from pyspark.sql import Window
 
-    ops = ev.select(
-        F.col("user_id").cast("string").alias("key"),
-        F.when(F.col("event_type") == "error", "delete").otherwise("put").alias("op"),
-        F.round("value", 4).alias("value"),
-        F.col("event_id").alias("seq"),
-    )
+    ops = change_feed(ev)
     w = Window.partitionBy("key").orderBy(F.col("seq").desc())
     return (
         ops.withColumn("rn", F.row_number().over(w))
@@ -642,12 +654,7 @@ def kv_snapshot_read_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon = ev.agg(
         F.floor(F.max("event_id") / 2).cast("bigint").alias("s")
     )
-    ops = ev.select(
-        F.col("user_id").cast("string").alias("key"),
-        F.when(F.col("event_type") == "error", "delete").otherwise("put").alias("op"),
-        F.round("value", 4).alias("value"),
-        F.col("event_id").alias("seq"),
-    )
+    ops = change_feed(ev)
     asof = ops.crossJoin(F.broadcast(horizon)).filter(F.col("seq") <= F.col("s"))
     w = Window.partitionBy("key").orderBy(F.col("seq").desc())
     return (

@@ -46,7 +46,7 @@ _RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.streaming.noDataMicroBatches.enabled": "true",
     # Tolerate a TIMESTAMP(NANOS) events.parquet (some writer versions emit
     # it; Spark's reader rejects it otherwise): surface nanos as epoch-long,
-    # normalized to µs in sources.catalog.load_table / streaming.jobs.
+    # normalized to µs by sources.catalog.normalize_events_ts.
     # Current testdata writes TIMESTAMP(µs) — this is drift insurance.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }

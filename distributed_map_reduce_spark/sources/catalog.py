@@ -17,6 +17,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -34,25 +36,26 @@ TABLES: tuple[str, ...] = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def normalize_events_ts(events: DataFrame) -> DataFrame:
+    """Normalize events.ts to a session-TZ (UTC) µs timestamp whatever the
+    parquet writer produced: TIMESTAMP(NANOS) arrives as an epoch-nanos
+    long (spark.sql.legacy.parquet.nanosAsLong), TIMESTAMP(MICROS,
+    isAdjustedToUTC=false) as timestamp_ntz. The one policy for the batch
+    table and the event stream (watermarks also need this type)."""
+    ts_type = events.schema["ts"].dataType
+    if isinstance(ts_type, T.LongType):
+        # integer `div` (not `/`): float division of epoch-nanos loses µs
+        return events.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    if not isinstance(ts_type, T.TimestampType):
+        return events.withColumn("ts", F.col("ts").cast("timestamp"))
+    return events
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events":
-        # Normalize events.ts to a session-TZ (UTC) µs timestamp whatever
-        # the parquet writer produced: TIMESTAMP(NANOS) arrives as an
-        # epoch-nanos long (spark.sql.legacy.parquet.nanosAsLong),
-        # TIMESTAMP(MICROS, isAdjustedToUTC=false) as timestamp_ntz.
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        ts_type = df.schema["ts"].dataType
-        if isinstance(ts_type, T.LongType):
-            # integer `div` (not `/`): float division of epoch-nanos loses µs
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        elif not isinstance(ts_type, T.TimestampType):
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    return normalize_events_ts(df) if name == "events" else df
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -1,12 +1,18 @@
-"""Event-time windowing over the `events` table.
+"""Event-time windowing over the `events` table, and the one builder per
+event-time topology.
 
-The reference has no streaming (SURVEY.md §1.5) — these are extension
-operators defined from Spark's event-time model. Each operator here
-runs the window semantics in batch so it gets a DuckDB oracle; the true
-streaming twins — `readStream` + watermark + the identical windowed
-aggregations — live in `streaming.jobs` and are exercised by
-tests/test_streaming.py with a memory sink (rows-only per the driver
-contract, since sinks aren't SQL-expressible).
+The reference has no streaming (SURVEY.md §1.5); these are extension
+operators defined from Spark's event-time model. Each topology below —
+5-min tumbling counts, 10/5 sliding cents-average, sessions, segment
+enrichment, the click→purchase interval join — is built by exactly one
+function, and every caller runs it: the batch twin registered here (over
+`load_table`, so it gets a DuckDB oracle), the complete-mode stream
+tests/test_streaming.py drains, and the append-mode flush query in
+`streaming.watermark_flush`. A builder carries its streaming watermark;
+in a batch plan Catalyst's EliminateEventTimeWatermark drops it, so the
+batch twin runs the plan it would run without one. A streaming query
+that equals its batch twin therefore compares one definition on two
+engines, not two copies.
 
 Scale posture: windowed aggregation shuffles once on (window, key);
 session windows merge per key; watermarks bound state at 100 TB/day
@@ -16,11 +22,200 @@ DuckDB's NS→TIMESTAMP cast.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
 from ..sources import load_table
+
+
+def tumbling_counts(events: DataFrame) -> DataFrame:
+    """Events and rounded value per (5-minute window, event type),
+    10-minute watermark."""
+    return (
+        events.withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
+        .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "total_value")
+    )
+
+
+def sliding_cents_avg(events: DataFrame) -> DataFrame:
+    """Sliding windows (10 min length, 5 min slide, 10-minute watermark):
+    events and average value per (window, event type).
+
+    avg_value follows the integer-cents discipline (the sf0.1 gate caught
+    a 4dp-midpoint divergence without it): values quantize to exact
+    integer cents per row, the ONLY float op is one identical
+    bigint-ratio division on both engines, and the final round-to-integer's
+    true midpoints are dyadic-exact doubles both engines round away from
+    zero — so no summation order or decimal re-quantization can flip the
+    last digit."""
+    avg4 = (
+        F.round((F.sum("cents") * 100).cast("double") / F.count(F.lit(1))) / 10000.0
+    )
+    return (
+        events.withColumn("cents", F.round(F.col("value") * 100).cast("bigint"))
+        .withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n_events"), avg4.alias("avg_value"))
+        .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "avg_value")
+    )
+
+
+def purchase_gap() -> Column:
+    """Per-row session gap: a purchase holds its session open 60 min,
+    every other event 15."""
+    return F.when(F.col("event_type") == "purchase", F.lit("60 minutes")).otherwise(
+        F.lit("15 minutes")
+    )
+
+
+def sessions(events: DataFrame, gap: str | Column) -> DataFrame:
+    """Session windows per user (`gap` a duration or a per-row gap
+    column), 10-minute watermark: session start, events and rounded value.
+    Streaming state is the merged session ranges per user, GC'd as the
+    watermark passes each session's close. Spark's session end is
+    EXCLUSIVE: a gap of exactly `gap` starts a new session."""
+    return (
+        events.withWatermark("ts", "10 minutes")
+        .groupBy("user_id", F.session_window("ts", gap).alias("w"))
+        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("session_value"))
+        .select(
+            "user_id",
+            F.col("w.start").alias("session_start"),
+            "n_events",
+            "session_value",
+        )
+    )
+
+
+def click_purchase_join(events: DataFrame, how: str = "inner") -> DataFrame:
+    """Clicks joined to same-user purchases within the following hour.
+    Equi-key on user plus a time band: Spark plans the user_id exchange
+    and applies the band as a post-join filter. Both sides carry a
+    2-hour watermark so a stream can GC join state: each side holds rows
+    for at most (1h band + 2h watermark). An outer join emits an
+    unmatched row only once the watermark proves no partner can still
+    arrive.
+
+    Inner output: click_id, purchase_id, user_id, click_ts, purchase_ts,
+    purchase_value. Outer output puts user_id (the click's, else the
+    purchase's) second: click_id, user_id, click_ts, purchase_id, ...
+    """
+    c = (
+        events.filter(F.col("event_type") == "click")
+        .withWatermark("ts", "2 hours")
+        .select(
+            F.col("event_id").alias("click_id"),
+            F.col("user_id").alias("c_user"),
+            F.col("ts").alias("click_ts"),
+        )
+    )
+    p = (
+        events.filter(F.col("event_type") == "purchase")
+        .withWatermark("ts", "2 hours")
+        .select(
+            F.col("event_id").alias("purchase_id"),
+            F.col("user_id").alias("user_id"),
+            F.col("ts").alias("purchase_ts"),
+            F.round("value", 2).alias("purchase_value"),
+        )
+    )
+    joined = c.join(
+        p,
+        (F.col("c_user") == F.col("user_id"))
+        & (F.col("purchase_ts") > F.col("click_ts"))
+        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
+        how,
+    )
+    if how == "inner":
+        return joined.select(
+            "click_id", "purchase_id", "user_id", "click_ts", "purchase_ts", "purchase_value"
+        )
+    return joined.select(
+        "click_id",
+        F.coalesce("c_user", "user_id").alias("user_id"),
+        "click_ts",
+        "purchase_id",
+        "purchase_ts",
+        "purchase_value",
+    )
+
+
+def enriched_segment_windows(events: DataFrame, customer: DataFrame) -> DataFrame:
+    """Stream-static enrichment: purchases joined to the customer market
+    segment (broadcast dim keyed by user_id), revenue per (15-minute
+    window, segment), 30-minute watermark.
+
+    The static side needs NO watermark — Spark broadcasts/rescans it per
+    micro-batch and the join adds no streaming state; only the windowed
+    aggregate keeps state. This is the canonical 'enrich events with a
+    slowly-changing dim' topology; at scale the dim side is a broadcast
+    (or a Delta/parquet snapshot re-read per trigger for freshness).
+    """
+    dim = customer.select(
+        F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
+    )
+    return (
+        events.filter(F.col("event_type") == "purchase")
+        .withWatermark("ts", "30 minutes")
+        .join(F.broadcast(dim), "user_id")  # stream-static: no state added
+        .groupBy(F.window("ts", "15 minutes").alias("w"), "segment")
+        .agg(
+            F.count(F.lit(1)).alias("n_purchases"),
+            F.round(F.sum("value"), 2).alias("segment_revenue"),
+        )
+        .select(
+            F.col("w.start").alias("window_start"),
+            "segment",
+            "n_purchases",
+            "segment_revenue",
+        )
+    )
+
+
+# Oracles each batch twin shares with its streaming twin.
+SLIDING_ORACLE = """
+WITH buckets AS (
+  SELECT unnest([time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP)),
+                 time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP)) - INTERVAL 5 MINUTE]) AS window_start,
+         event_type, CAST(round(value * 100) AS BIGINT) AS cents
+  FROM events
+)
+SELECT window_start, event_type, count(*) AS n_events,
+       round(CAST(sum(cents) * 100 AS DOUBLE) / count(*)) / 10000.0 AS avg_value
+FROM buckets
+GROUP BY 1, 2
+"""
+
+SESSION_ORACLE = """
+WITH ordered AS (
+  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value,
+         CASE WHEN CAST(ts AS TIMESTAMP) - lag(CAST(ts AS TIMESTAMP))
+                   OVER (PARTITION BY user_id ORDER BY ts, event_id) >= INTERVAL 30 MINUTE
+              THEN 1 ELSE 0 END AS new_session
+  FROM events
+), sessions AS (
+  SELECT user_id, ts, value,
+         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
+                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
+  FROM ordered
+)
+SELECT user_id, min(ts) AS session_start, count(*) AS n_events, round(sum(value), 2) AS session_value
+FROM sessions
+GROUP BY user_id, session_id
+"""
+
+SEGMENT_ORACLE = """
+SELECT time_bucket(INTERVAL '15 minutes', CAST(e.ts AS TIMESTAMP)) AS window_start,
+       c.c_mktsegment AS segment,
+       count(*) AS n_purchases,
+       round(sum(e.value), 2) AS segment_revenue
+FROM events e JOIN customer c ON e.user_id = c.c_custkey
+WHERE e.event_type = 'purchase'
+GROUP BY 1, 2
+"""
 
 
 @register(
@@ -38,94 +233,30 @@ GROUP BY 1, 2
 )
 def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 5-minute event-time windows per event type."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "total_value")
-    )
+    return tumbling_counts(load_table(spark, sf_dir, "events"))
 
 
-@register(
-    "events_sliding_window",
-    tags=("streaming", "window"),
-    oracle="""
-WITH buckets AS (
-  SELECT unnest([time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP)),
-                 time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP)) - INTERVAL 5 MINUTE]) AS window_start,
-         event_type, CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events
-)
-SELECT window_start, event_type, count(*) AS n_events,
-       round(CAST(sum(cents) * 100 AS DOUBLE) / count(*)) / 10000.0 AS avg_value
-FROM buckets
-GROUP BY 1, 2
-""",
-)
+@register("events_sliding_window", tags=("streaming", "window"), oracle=SLIDING_ORACLE)
 def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding windows (10 min length, 5 min slide): every event lands in
-    two windows — Spark expands them; the oracle unnests both buckets.
-
-    avg_value follows the integer-cents discipline (round 6 — the sf0.1
-    second-scale gate caught a 4dp-midpoint divergence here): values
-    quantize to exact integer cents per row, the ONLY float op is one
-    identical bigint-ratio division on both engines, and the final
-    round-to-integer's true midpoints are dyadic-exact doubles both
-    engines round away from zero — so no summation order or decimal
-    re-quantization can flip the last digit."""
-    ev = load_table(spark, sf_dir, "events").withColumn(
-        "cents", F.round(F.col("value") * 100).cast("bigint")
-    )
-    avg4 = (
-        F.round((F.sum("cents") * 100).cast("double") / F.count(F.lit(1))) / 10000.0
-    )
-    return (
-        ev.groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), avg4.alias("avg_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "avg_value")
-    )
+    two windows — Spark expands them; the oracle unnests both buckets."""
+    return sliding_cents_avg(load_table(spark, sf_dir, "events"))
 
 
 @register(
     "events_session_window",
     tags=("streaming", "window", "sessionization"),
-    oracle="""
-WITH ordered AS (
-  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value,
-         CASE WHEN CAST(ts AS TIMESTAMP) - lag(CAST(ts AS TIMESTAMP))
-                   OVER (PARTITION BY user_id ORDER BY ts, event_id) >= INTERVAL 30 MINUTE
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-), sessions AS (
-  SELECT user_id, ts, value,
-         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-  FROM ordered
-)
-SELECT user_id, min(ts) AS session_start, count(*) AS n_events, round(sum(value), 2) AS session_value
-FROM sessions
-GROUP BY user_id, session_id
-""",
+    oracle=SESSION_ORACLE,
 )
 def events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows (30-minute gap) per user via F.session_window —
     the same merge semantics streaming state uses; the oracle builds
     sessions with the classic lag/gap/cumsum rewrite. Spark's session end
     is EXCLUSIVE (a gap of exactly 30 min starts a NEW session), so the
-    oracle's gap predicate is `>=`, not `>` (ADVICE r01). Both oracle
-    windows order by (ts, event_id) so tied timestamps can't flip a
-    boundary row's session between runs (VERDICT r03 #1)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("session_value"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            "n_events",
-            "session_value",
-        )
-    )
+    oracle's gap predicate is `>=`, not `>`. Both oracle windows order by
+    (ts, event_id) so tied timestamps can't flip a boundary row's session
+    between runs."""
+    return sessions(load_table(spark, sf_dir, "events"), "30 minutes")
 
 
 @register(
@@ -200,74 +331,24 @@ FROM c JOIN p
 """,
 )
 def events_click_to_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Click→purchase attribution within 1 hour — the batch twin of a
-    stream-stream interval join (streaming/jobs.py click_purchase_join
-    runs the same predicate with watermarks bounding both join states).
-    Equi-key on user plus a time band: Spark plans the user_id exchange
-    and applies the band as a post-join filter; state at 100 TB is
+    """Click→purchase attribution within 1 hour — the batch run of the
+    stream-stream interval join `click_purchase_join`; state at 100 TB is
     bounded by watermark horizon × per-user event rate."""
-    ev = load_table(spark, sf_dir, "events")
-    c = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("click_ts"),
-    )
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("user_id"),
-        F.col("ts").alias("purchase_ts"),
-        F.round("value", 2).alias("purchase_value"),
-    )
-    return (
-        c.join(
-            p,
-            (F.col("c_user") == F.col("user_id"))
-            & (F.col("purchase_ts") > F.col("click_ts"))
-            & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-        )
-        .select("click_id", "purchase_id", "user_id", "click_ts", "purchase_ts", "purchase_value")
-    )
+    return click_purchase_join(load_table(spark, sf_dir, "events"))
 
 
 @register(
     "events_segment_enrichment",
     tags=("streaming", "join", "window"),
-    oracle="""
-SELECT time_bucket(INTERVAL '15 minutes', CAST(e.ts AS TIMESTAMP)) AS window_start,
-       c.c_mktsegment AS segment,
-       count(*) AS n_purchases,
-       round(sum(e.value), 2) AS segment_revenue
-FROM events e JOIN customer c ON e.user_id = c.c_custkey
-WHERE e.event_type = 'purchase'
-GROUP BY 1, 2
-""",
+    oracle=SEGMENT_ORACLE,
 )
 def events_segment_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of streaming/jobs.py:enriched_segment_windows — enrich
-    purchases with the customer market segment (broadcast dim join, the
-    stream-static topology) and aggregate revenue per 15-minute window.
+    """Purchase revenue per (15-minute window, market segment) — the
+    batch run of the stream-static enrichment `enriched_segment_windows`;
     tests/test_streaming.py proves the readStream form converges to this
-    exact result on a drained bounded stream.
-    """
-    ev = load_table(spark, sf_dir, "events")
-    customer = load_table(spark, sf_dir, "customer")
-    dim = customer.select(
-        F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
-    )
-    return (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(F.broadcast(dim), "user_id")
-        .groupBy(F.window("ts", "15 minutes").alias("w"), "segment")
-        .agg(
-            F.count(F.lit(1)).alias("n_purchases"),
-            F.round(F.sum("value"), 2).alias("segment_revenue"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "segment",
-            "n_purchases",
-            "segment_revenue",
-        )
+    exact result on a drained bounded stream."""
+    return enriched_segment_windows(
+        load_table(spark, sf_dir, "events"), load_table(spark, sf_dir, "customer")
     )
 
 
@@ -311,23 +392,7 @@ def events_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     max, not plain lag — a long-gap event can bridge over a short-gap
     one). Same single user_id exchange as the static form; state in the
     streaming twin stays watermark-bounded regardless of gap column."""
-    ev = load_table(spark, sf_dir, "events")
-    gap = F.when(F.col("event_type") == "purchase", F.lit("60 minutes")).otherwise(
-        F.lit("15 minutes")
-    )
-    return (
-        ev.groupBy("user_id", F.session_window("ts", gap).alias("w"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("session_value"),
-        )
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            "n_events",
-            "session_value",
-        )
-    )
+    return sessions(load_table(spark, sf_dir, "events"), purchase_gap())
 
 
 @register(
@@ -519,9 +584,9 @@ def events_conversion_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     # discrete percentile by explicit rank-pick (ceil(p*n)-th smallest):
     # percentile_disc/quantile_disc index rules differ across engines.
     # Rank-pick runs as the two-phase banded row_number over minute
-    # buckets (VERDICT r7 #4 — tie order within a lag value cannot
-    # change the picked VALUE, and the whole-frame count window is a
-    # broadcast scalar instead)
+    # buckets (tie order within a lag value cannot change the picked
+    # VALUE, and the whole-frame count window is a broadcast scalar
+    # instead)
     from ..operators.ranks import two_phase_ordered
 
     n_tot = conv.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
@@ -912,8 +977,8 @@ def events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     concatenate each session's event types in (ts, event_id) order into
     a path string, and report the {PATH_TOPN} most common paths — the
     query behind "what do users actually do" dashboards and behavioral
-    bot signatures. Tie order is pinned by event_id everywhere (the r3
-    session-window lesson).
+    bot signatures. Tie order is pinned by event_id everywhere (tied
+    timestamps must not flip a row between sessions).
 
     Scale: both windows and the path agg share ONE user_id exchange
     (same partitioning key), paths collapse to ≤ one row per session,
@@ -1010,7 +1075,8 @@ def events_session_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     exercised). The cap is what bounds per-session state for any
     downstream per-session aggregate: without it a never-idle bot
     produces one unbounded session. Windows all order by (ts,
-    event_id) — the pinned tie rule from VERDICT r03 #1 — and
+    event_id) — the pinned tie rule, so tied timestamps cannot flip
+    a boundary row between runs — and
     arithmetic is integer microseconds end to end. Three windows over
     one (user) exchange + the final hash agg."""
     ev = load_table(spark, sf_dir, "events")

@@ -1,15 +1,18 @@
-"""True Structured Streaming jobs — the streaming twins of
-`streaming.batch_windows`, driven by the same events parquet as a file
-stream with event-time watermarks.
+"""Structured Streaming over the events parquet as a file stream: the one
+events-stream reader, the one drain, the one foreachBatch directory swap,
+and the registered streaming jobs whose final state is oracle-checked.
 
-These return live streaming queries (memory sink) for tests; the driver's
-batch contract can't compare a running sink, so correctness is
-established two ways: (a) the batch twins hash-match DuckDB, and (b)
-tests/test_streaming.py runs these to completion and diffs against the
-batch results.
+A streaming query here and its batch twin share one builder per
+event-time topology (`streaming.batch_windows`): the builder carries the
+watermark, and a batch plan drops it. The registry's batch contract (a
+query returns a DataFrame) can't compare a running sink, so correctness
+is established two ways: (a) the batch twins hash-match DuckDB, and
+(b) a drained stream over the same builder must equal its batch twin
+(tests/test_streaming.py, and the oracles the registered jobs below
+share with their batch twins).
 
 Scale posture: watermarks bound state; `complete` mode is used only for
-the bounded-cardinality count demo; real deployments use append +
+bounded-cardinality results; real deployments use append +
 checkpointing to an object store, with `foreachBatch` for exactly-once
 sinks.
 """
@@ -19,28 +22,19 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
+import time
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
+from ..plans.kv_queries import CDC_APPLY_ORACLE, change_feed
 from ..registry import register
-
-# Nominal events schema (documentation/tests). The stream reader below does
-# NOT trust this: it derives the real schema from a batch read of the same
-# file and applies catalog.load_table's ts normalization, so a regenerated
-# events.parquet with nanos-long or tz-adjusted timestamps cannot silently
-# diverge batch vs streaming (ADVICE r2).
-EVENTS_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampNTZType()),  # parquet TIMESTAMP(µs)
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ]
-)
+from ..sources import load_table, normalize_events_ts
+from .batch_windows import tumbling_counts
 
 
 def events_stream_dir(sf_dir: str) -> str:
@@ -57,117 +51,128 @@ def events_stream_dir(sf_dir: str) -> str:
     return d
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet, ts normalized to a
-    session-TZ µs timestamp exactly like sources.catalog.load_table —
-    one normalization policy for batch and streaming."""
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_stream_dir(sf_dir))
-    )
-    ts_type = schema["ts"].dataType
+def _land_sentinels(
+    spark: SparkSession, landing: str, raw: DataFrame, sentinel_type: str | tuple[str, ...]
+) -> None:
+    """Add one sentinel parquet file to `landing`: event time 10 days
+    after max(ts), one row per entry of ``sentinel_type`` (a tuple when
+    several filtered branches of the same source must each see their
+    watermark advance, e.g. both sides of a stream-stream join), user -1.
+    The ts column is written in the raw file's type, because the stream
+    reads both files with the raw schema.
+
+    The sentinel's mtime is pinned AFTER the real file's so the source
+    (oldest-first listing order) lists real → sentinel; a sentinel
+    processed before the real data would instantly advance the watermark
+    and drop every real event as late, so the ordering is asserted, not
+    assumed."""
+    types = [sentinel_type] if isinstance(sentinel_type, str) else list(sentinel_type)
+    ts_type = raw.schema["ts"].dataType
+    max_ts = normalize_events_ts(raw).agg(F.max("ts")).first()[0]
+    later = F.lit(max_ts) + F.expr("INTERVAL 10 DAYS")
     if isinstance(ts_type, T.LongType):
-        # nanosAsLong path: integer div keeps µs precision
-        return stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    if not isinstance(ts_type, T.TimestampType):
-        return stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
-
-
-def tumbling_counts(events: DataFrame) -> DataFrame:
-    """5-minute tumbling windows with a 10-minute watermark — identical
-    aggregation to batch_windows.events_tumbling_window."""
-    return (
-        events.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "total_value")
+        later = F.unix_micros(later) * 1000  # back to the file's epoch-nanos
+    sent = spark.range(1).select(
+        F.posexplode(F.array(*map(F.lit, types))).alias("j", "event_type")
+    ).select(
+        (-(F.col("j") + len(types))).cast("bigint").alias("event_id"),
+        later.cast(ts_type).alias("ts"),
+        F.lit(-1).cast("bigint").alias("user_id"),
+        "event_type",
+        F.lit(0.0).alias("value"),
+        F.lit(None).cast("string").alias("props"),
     )
+    tmp = tempfile.mkdtemp(prefix="dmrs_sentinel_")
+    sent.coalesce(1).write.mode("overwrite").parquet(tmp)
+    part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
+    dst = os.path.join(landing, "zz_sentinel.parquet")
+    shutil.move(os.path.join(tmp, part), dst)
+    shutil.rmtree(tmp, ignore_errors=True)
+    real_mtime = os.stat(os.path.join(landing, "events.parquet")).st_mtime  # follows the symlink
+    mtime = max(time.time(), real_mtime + 60.0)
+    os.utime(dst, times=(mtime, mtime))
+    assert os.stat(dst).st_mtime > real_mtime, "sentinel must list after real file"
+
+
+@contextmanager
+def read_events_stream(
+    spark: SparkSession, sf_dir: str, sentinel_type: str | tuple[str, ...] | None = None
+) -> Iterator[DataFrame]:
+    """File-source stream over the events parquet, ts normalized by
+    `sources.normalize_events_ts` — one policy for the batch table and
+    the stream. The stream's schema is the file's own (one batch read of
+    the footer), so a regenerated events.parquet with nanos-long or
+    tz-adjusted timestamps cannot diverge batch vs streaming.
+
+    Without ``sentinel_type`` the source takes one file per trigger. With
+    it, the landing dir also holds a flush sentinel (`_land_sentinels`)
+    and every file lands in ONE micro-batch: the per-batch cost of the
+    stateful operators is flat in input size (state-store
+    open/scan/commit across every shuffle partition), so a batch per file
+    would be almost pure overhead. Every real row is processed with the
+    initial watermark (nothing can be dropped as late; late-filtering
+    uses the watermark fixed at batch start), the sentinel advances the
+    watermark AFTER that batch, and the engine's no-data micro-batch
+    (``noDataMicroBatches.enabled``, pinned true in
+    session._RUNTIME_CONFS) runs the final eviction pass that emits every
+    closed window/join row. Emission CONTENT is batching-independent:
+    append mode emits exactly the rows whose window the watermark passed.
+
+    Yields the stream and removes the landing dir on exit, so drain it
+    inside the ``with`` block."""
+    landing = events_stream_dir(sf_dir)
+    try:
+        raw = spark.read.parquet(os.path.join(landing, "events.parquet"))
+        reader = spark.readStream.schema(raw.schema)
+        if sentinel_type is None:
+            reader = reader.option("maxFilesPerTrigger", 1)
+        else:
+            _land_sentinels(spark, landing, raw, sentinel_type)
+        yield normalize_events_ts(reader.parquet(landing))
+    finally:
+        shutil.rmtree(landing, ignore_errors=True)
+
+
+def drain(writer: DataStreamWriter, *scratch: str) -> None:
+    """Run a bounded stream to its end — start, process everything
+    available, stop — then remove the ``scratch`` dirs (checkpoints,
+    staged input) that nothing reads afterwards."""
+    q = writer.start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+        for d in scratch:
+            shutil.rmtree(d, ignore_errors=True)
+
+
+def run_to_completion(spark: SparkSession, agg: DataFrame, name: str, mode: str = "complete") -> DataFrame:
+    """Drain `agg` through a memory sink and return the final result
+    table (it reads nothing on disk)."""
+    drain(agg.writeStream.outputMode(mode).format("memory").queryName(name))
+    return spark.table(name)
+
+
+def swap_in(df: DataFrame, path: str, batch_id: int) -> None:
+    """Replace the parquet dir at `path` with `df`, which may read `path`.
+    Never overwrite the path a batch just read in place: write the new
+    generation to a temp dir, then swap via rename. A crash between the
+    renames leaves either the old or the new complete generation, never a
+    torn one. (On object stores this step becomes a Delta/Iceberg commit;
+    rename is the local-FS equivalent.)"""
+    tmp = f"{path}.__tmp_b{batch_id}"
+    retired = f"{path}.__old_b{batch_id}"
+    df.write.mode("overwrite").parquet(tmp)
+    if os.path.isdir(path):
+        os.rename(path, retired)
+    os.rename(tmp, path)
+    shutil.rmtree(retired, ignore_errors=True)
 
 
 def streaming_dedup(events: DataFrame) -> DataFrame:
     """Watermarked dropDuplicates — one state row per (user, type, ts)."""
     return events.withWatermark("ts", "30 minutes").dropDuplicates(
         ["user_id", "event_type", "ts"]
-    )
-
-
-def run_to_completion(spark: SparkSession, agg: DataFrame, name: str, mode: str = "complete") -> DataFrame:
-    """Drive a bounded file stream to completion through a memory sink and
-    return the final result table (test harness path)."""
-    q = (
-        agg.writeStream.outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
-
-
-def click_purchase_join(events: DataFrame) -> DataFrame:
-    """Stream-stream interval join: clicks joined to same-user purchases
-    within the following hour. Both sides carry watermarks so Spark can
-    GC join state — clicks are held at most (1h band + 2h watermark);
-    purchases likewise. The batch twin (same predicate, same columns) is
-    batch_windows.events_click_to_purchase."""
-    c = (
-        events.filter(F.col("event_type") == "click")
-        .withWatermark("ts", "2 hours")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-        )
-    )
-    p = (
-        events.filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "2 hours")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("user_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.round("value", 2).alias("purchase_value"),
-        )
-    )
-    return c.join(
-        p,
-        (F.col("c_user") == F.col("user_id"))
-        & (F.col("purchase_ts") > F.col("click_ts"))
-        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-    ).select("click_id", "purchase_id", "user_id", "click_ts", "purchase_ts", "purchase_value")
-
-
-def enriched_segment_windows(events: DataFrame, customer: DataFrame) -> DataFrame:
-    """Stream-static enrichment: join the event stream against a static
-    dimension (customer keyed by user_id) and aggregate purchase value
-    per (market segment, 15-minute window).
-
-    The static side needs NO watermark — Spark broadcasts/rescans it per
-    micro-batch and the join adds no streaming state; only the windowed
-    aggregate keeps state, bounded by the 30-minute watermark. This is
-    the canonical 'enrich events with a slowly-changing dim' topology;
-    at scale the dim side is a broadcast (or a Delta/parquet snapshot
-    re-read per trigger for freshness).
-    """
-    dim = customer.select(
-        F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
-    )
-    return (
-        events.filter(F.col("event_type") == "purchase")
-        .withWatermark("ts", "30 minutes")
-        .join(F.broadcast(dim), "user_id")  # stream-static: no state added
-        .groupBy(F.window("ts", "15 minutes").alias("w"), "segment")
-        .agg(
-            F.count(F.lit(1)).alias("n_purchases"),
-            F.round(F.sum("value"), 2).alias("segment_revenue"),
-        )
-        .select(F.col("w.start").alias("window_start"), "segment", "n_purchases", "segment_revenue")
     )
 
 
@@ -193,74 +198,33 @@ def idempotent_batch_sink(path: str):
     return write
 
 
-def session_values(events: DataFrame) -> DataFrame:
-    """Streaming session windows (30-minute gap) per user with a
-    10-minute watermark — identical aggregation to
-    batch_windows.events_session_window; state is merged session ranges
-    per user, GC'd as the watermark passes each session's close."""
-    return (
-        events.withWatermark("ts", "10 minutes")
-        .groupBy("user_id", F.session_window("ts", "30 minutes").alias("w"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 2).alias("session_value"),
-        )
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            "n_events",
-            "session_value",
-        )
-    )
-
-
 def incremental_view_sink(path: str):
     """foreachBatch maintainer for a streaming materialized view: each
     micro-batch's per-user (count, cents) partial aggregate MERGES into
-    the standing parquet view — read old, union, re-aggregate, overwrite
-    — so refresh cost scales with |batch| + |view|, never with history.
+    the standing parquet view — read old, union, re-aggregate, swap in —
+    so refresh cost scales with |batch| + |view|, never with history.
     The same count/sum-monoid algebra as
     operators.joins.cdc_incremental_join_agg, driven by real streaming
-    epochs; at 100 TB the overwrite targets a keyed Delta MERGE instead
-    of a full view rewrite, with identical semantics."""
+    epochs; at 100 TB the swap targets a keyed Delta MERGE instead of a
+    full view rewrite, with identical semantics."""
 
     def write(batch_df, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        delta = (
-            batch_df.groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"),
-            )
+        view = batch_df.groupBy("user_id").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"),
         )
         # First batch only: the view doesn't exist yet. Any OTHER read
         # failure (transient IO, partial file) must propagate — a bare
         # fallback here would silently reset the view to one batch's
-        # delta and lose all accumulated history (ADVICE r03).
+        # delta and lose all accumulated history.
         if os.path.isdir(path):
-            old = spark.read.parquet(path)
-            merged = (
-                old.unionByName(delta)
+            view = (
+                batch_df.sparkSession.read.parquet(path)
+                .unionByName(view)
                 .groupBy("user_id")
-                .agg(
-                    F.sum("n_events").alias("n_events"),
-                    F.sum("cents").alias("cents"),
-                )
+                .agg(F.sum("n_events").alias("n_events"), F.sum("cents").alias("cents"))
             )
-        else:
-            merged = delta
-        # Never overwrite the path we just read in place: write the new
-        # view generation to a temp dir, then swap via rename. A crash
-        # between the renames leaves either the old or the new complete
-        # view, never a torn one. (On object stores this step becomes a
-        # Delta/Iceberg commit; rename is the local-FS equivalent.)
-        tmp = f"{path}.__tmp_b{batch_id}"
-        retired = f"{path}.__old_b{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(path):
-            os.rename(path, retired)
-        os.rename(tmp, path)
-        shutil.rmtree(retired, ignore_errors=True)
+        swap_in(view, path, batch_id)
 
     return write
 
@@ -308,10 +272,10 @@ def stream_dedup_replay_exactly_once(spark: SparkSession, sf_dir: str) -> DataFr
     The dedup emits in append mode (each event exactly once across all
     micro-batches); counts aggregate the completed memory-sink table as
     a batch, so the returned DataFrame is a stable 5-row summary."""
-    events = read_events_stream(spark, sf_dir)
-    deduped = run_to_completion(
-        spark, dedup_within_watermark(events), "dedup_replay_eo", mode="append"
-    )
+    with read_events_stream(spark, sf_dir) as events:
+        deduped = run_to_completion(
+            spark, dedup_within_watermark(events), "dedup_replay_eo", mode="append"
+        )
     delivered = F.when(F.col("event_id") % 3 == 0, 2).otherwise(1)
     return deduped.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_unique"),
@@ -341,16 +305,13 @@ def stream_incremental_view_maintenance(spark: SparkSession, sf_dir: str) -> Dat
     never history; the swap leaves old-or-new complete, never torn."""
     view_dir = tempfile.mkdtemp(prefix="dmrs_ivm_")
     view = os.path.join(view_dir, "user_totals_view")
-    stream = read_events_stream(spark, sf_dir)
-    q = (
-        stream.writeStream.foreachBatch(incremental_view_sink(view))
-        .option("checkpointLocation", os.path.join(view_dir, "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    ckpt = os.path.join(view_dir, "ckpt")
+    with read_events_stream(spark, sf_dir) as stream:
+        drain(
+            stream.writeStream.foreachBatch(incremental_view_sink(view))
+            .option("checkpointLocation", ckpt),
+            ckpt,
+        )
     return spark.read.parquet(view).select(
         "user_id",
         F.col("n_events").cast("bigint").alias("n_events"),
@@ -379,16 +340,16 @@ def stream_trigger_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
     limits). The scheduled nightly catch-up job over a file/Kafka
     backlog is exactly this form. Complete-mode tumbling counts over
     the drained stream must equal the batch group-by (the oracle)."""
-    events = read_events_stream(spark, sf_dir)
-    agg = tumbling_counts(events)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("avail_now_drain")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()  # self-terminates once the backlog is drained
+    with read_events_stream(spark, sf_dir) as events:
+        q = (
+            tumbling_counts(events)
+            .writeStream.outputMode("complete")
+            .format("memory")
+            .queryName("avail_now_drain")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()  # self-terminates once the backlog is drained
     return spark.table("avail_now_drain")
 
 
@@ -417,16 +378,14 @@ def stream_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming operator, so production puts it in the read path /
     foreachBatch, exactly as modeled here). The drained leaderboard must
     equal the batch rank over the same counts."""
-    from pyspark.sql import Window
-
-    events = read_events_stream(spark, sf_dir)
-    counts = (
-        events.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
-    )
-    drained = run_to_completion(spark, counts, "trending_counts", mode="complete")
+    with read_events_stream(spark, sf_dir) as events:
+        counts = (
+            events.withWatermark("ts", "10 minutes")
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
+            .select(F.col("w.start").alias("window_start"), "event_type", "n_events")
+        )
+        drained = run_to_completion(spark, counts, "trending_counts", mode="complete")
     w = Window.partitionBy("window_start").orderBy(
         F.col("n_events").desc(), F.col("event_type")
     )
@@ -436,98 +395,54 @@ def stream_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cdc_apply_sink(path: str):
-    """foreachBatch CDC applier: each micro-batch reduces to its latest
-    op per key, then merges into the standing state by max-seq — an
-    ORDER-INSENSITIVE merge (max is commutative/associative), so any
-    micro-batch arrival order yields the same state. Tombstones are
-    KEPT in state rather than dropped: a delete must keep shadowing
-    earlier puts that might arrive in later (replayed/out-of-order)
-    batches — dropping it would resurrect the key. The read path
-    filters them. Same atomic temp-dir swap as incremental_view_sink."""
+    """foreachBatch CDC applier: each micro-batch unions into the standing
+    state and one keep-latest window per key (max seq) reduces the union —
+    an ORDER-INSENSITIVE merge (max is commutative/associative and seq is
+    unique), so any micro-batch arrival order yields the same state.
+    Tombstones are KEPT in state rather than dropped: a delete must keep
+    shadowing earlier puts that might arrive in later
+    (replayed/out-of-order) batches — dropping it would resurrect the
+    key. The read path filters them. Same atomic directory swap as
+    incremental_view_sink."""
 
     def write(batch_df, batch_id: int) -> None:
-        from pyspark.sql import Window
-
-        spark = batch_df.sparkSession
+        ops = batch_df
+        if os.path.isdir(path):
+            ops = batch_df.sparkSession.read.parquet(path).unionByName(batch_df)
         w = Window.partitionBy("key").orderBy(F.col("seq").desc())
-        latest = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        if os.path.isdir(path):
-            old = spark.read.parquet(path)
-            merged = (
-                old.unionByName(latest)
-                .withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-        else:
-            merged = latest
-        tmp = f"{path}.__tmp_b{batch_id}"
-        retired = f"{path}.__old_b{batch_id}"
-        merged.write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(path):
-            os.rename(path, retired)
-        os.rename(tmp, path)
-        shutil.rmtree(retired, ignore_errors=True)
+        latest = ops.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
+        swap_in(latest.drop("_rn"), path, batch_id)
 
     return write
 
 
-@register(
-    "stream_cdc_apply_changes",
-    tags=("streaming", "cdc", "kv"),
-    oracle="""
-WITH ops AS (
-  SELECT CAST(user_id AS VARCHAR) AS key,
-         CASE WHEN event_type = 'error' THEN 'delete' ELSE 'put' END AS op,
-         round(value, 4) AS value,
-         row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
-  FROM events
-)
-SELECT key, value FROM ops WHERE rn = 1 AND op <> 'delete'
-""",
-)
+@register("stream_cdc_apply_changes", tags=("streaming", "cdc", "kv"), oracle=CDC_APPLY_ORACLE)
 def stream_cdc_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CDC apply — the micro-batch twin of the batch
-    `kv_cdc_tombstone_apply`: the change feed (put/delete per key,
-    seq-ordered) is staged as FOUR range files so the file source
-    genuinely delivers four epochs, `cdc_apply_sink` folds each into
-    the standing store state by commutative max-seq merge (tombstones
-    retained in-state so later batches cannot resurrect deleted keys),
-    and the final live view must hash-match the one-shot batch window.
-    Per-epoch cost is |batch| + |state| — the Delta `APPLY CHANGES` /
-    Debezium-sink shape; at 100 TB the swap becomes a keyed MERGE
-    commit with identical algebra."""
-    from ..sources import load_table
-
+    `kv_cdc_tombstone_apply`: the change feed (`change_feed`, put/delete
+    per key, seq-ordered) is staged as FOUR range files so the file
+    source genuinely delivers four epochs, `cdc_apply_sink` folds each
+    into the standing store state by commutative max-seq merge
+    (tombstones retained in-state so later batches cannot resurrect
+    deleted keys), and the final live view must hash-match the one-shot
+    batch window. Per-epoch cost is |batch| + |state| — the Delta
+    `APPLY CHANGES` / Debezium-sink shape; at 100 TB the swap becomes a
+    keyed MERGE commit with identical algebra. Only the state dir
+    outlives the call."""
     work = tempfile.mkdtemp(prefix="dmrs_cdc_")
-    landing = os.path.join(work, "landing")
-    state = os.path.join(work, "state")
-    ev = load_table(spark, sf_dir, "events")
-    ops = ev.select(
-        F.col("user_id").cast("string").alias("key"),
-        F.when(F.col("event_type") == "error", "delete").otherwise("put").alias("op"),
-        F.round("value", 4).alias("value"),
-        F.col("event_id").alias("seq"),
-    )
+    landing, state, ckpt = (os.path.join(work, d) for d in ("landing", "state", "ckpt"))
+    ops = change_feed(load_table(spark, sf_dir, "events"))
     ops.repartitionByRange(4, "seq").write.parquet(landing)
     stream = (
         spark.readStream.schema("key string, op string, value double, seq bigint")
         .option("maxFilesPerTrigger", 1)
         .parquet(landing)
     )
-    q = (
-        stream.writeStream.foreachBatch(cdc_apply_sink(state))
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .start()
+    drain(
+        stream.writeStream.foreachBatch(cdc_apply_sink(state)).option("checkpointLocation", ckpt),
+        landing,
+        ckpt,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return (
         spark.read.parquet(state)
         .filter(F.col("op") != "delete")

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..registry import register
-from .jobs import EVENTS_SCHEMA, events_stream_dir, run_to_completion
+from .jobs import read_events_stream, run_to_completion
 
 STATE_SCHEMA = "n bigint, total double"
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double"
@@ -78,10 +78,10 @@ def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(events_stream_dir(sf_dir))
-    out = run_to_completion(
-        spark, user_running_totals(stream), "stateful_user_totals", mode="update"
-    )
+    with read_events_stream(spark, sf_dir) as stream:
+        out = run_to_completion(
+            spark, user_running_totals(stream), "stateful_user_totals", mode="update"
+        )
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
     return (
         out.withColumn("_rn", F.row_number().over(w))

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
 from ..registry import register
-from .jobs import EVENTS_SCHEMA, events_stream_dir, run_to_completion
+from .jobs import read_events_stream, run_to_completion
 
 OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double"
 
@@ -115,15 +115,13 @@ def stream_stateful_v2_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev = spark.conf.get(key, None)
     spark.conf.set(key, _ROCKSDB)
     try:
-        stream = spark.readStream.schema(EVENTS_SCHEMA).parquet(
-            events_stream_dir(sf_dir)
-        )
-        out = run_to_completion(
-            spark,
-            user_running_totals_v2(stream),
-            "stateful_v2_totals",
-            mode="update",
-        )
+        with read_events_stream(spark, sf_dir) as stream:
+            out = run_to_completion(
+                spark,
+                user_running_totals_v2(stream),
+                "stateful_v2_totals",
+                mode="update",
+            )
     finally:
         if prev is None:
             spark.conf.unset(key)

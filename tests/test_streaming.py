@@ -7,19 +7,25 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from distributed_map_reduce_spark.registry import all_queries
+from distributed_map_reduce_spark.streaming.batch_windows import (
+    click_purchase_join,
+    enriched_segment_windows,
+    sessions,
+    tumbling_counts,
+)
 from distributed_map_reduce_spark.streaming.jobs import (
+    drain,
     read_events_stream,
     run_to_completion,
     streaming_dedup,
-    tumbling_counts,
 )
 
 
 def test_streaming_tumbling_matches_batch(spark, sf_dir):
-    stream = read_events_stream(spark, sf_dir)
-    result = run_to_completion(
-        spark, tumbling_counts(stream), "t_tumbling", mode="complete"
-    )
+    with read_events_stream(spark, sf_dir) as stream:
+        result = run_to_completion(
+            spark, tumbling_counts(stream), "t_tumbling", mode="complete"
+        )
     got = {
         (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
         for r in result.collect()
@@ -33,8 +39,8 @@ def test_streaming_tumbling_matches_batch(spark, sf_dir):
 
 
 def test_streaming_dedup_runs(spark, sf_dir):
-    stream = read_events_stream(spark, sf_dir)
-    result = run_to_completion(spark, streaming_dedup(stream), "t_dedup", mode="append")
+    with read_events_stream(spark, sf_dir) as stream:
+        result = run_to_completion(spark, streaming_dedup(stream), "t_dedup", mode="append")
     n = result.count()
     total = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     assert 0 < n <= total
@@ -101,12 +107,10 @@ def test_watermark_drops_late_data(spark, tmp_path):
 def test_stream_stream_join_matches_batch(spark, sf_dir):
     """True stream-stream interval join (watermarks on both sides) must
     produce exactly the batch twin's attribution pairs."""
-    from distributed_map_reduce_spark.streaming.jobs import click_purchase_join
-
-    stream = read_events_stream(spark, sf_dir)
-    result = run_to_completion(
-        spark, click_purchase_join(stream), "t_ssjoin", mode="append"
-    )
+    with read_events_stream(spark, sf_dir) as stream:
+        result = run_to_completion(
+            spark, click_purchase_join(stream), "t_ssjoin", mode="append"
+        )
     got = {(r["click_id"], r["purchase_id"]) for r in result.collect()}
     batch = all_queries()["events_click_to_purchase"].fn(spark, sf_dir)
     want = {(r["click_id"], r["purchase_id"]) for r in batch.collect()}
@@ -120,11 +124,6 @@ def test_foreachbatch_parquet_sink_matches_batch(spark, sf_dir, tmp_path):
     MERGEs, and multi-sink fanout live.)"""
     import pyspark.sql.functions as F
 
-    from distributed_map_reduce_spark.streaming.jobs import (
-        read_events_stream,
-        tumbling_counts,
-    )
-
     out = str(tmp_path / "windows_out")
 
     def write_batch(df, epoch_id):
@@ -135,17 +134,12 @@ def test_foreachbatch_parquet_sink_matches_batch(spark, sf_dir, tmp_path):
         df.withColumn("w", F.date_format("window_start", "yyyyMMddHHmm")) \
           .write.mode("overwrite").partitionBy("w").parquet(out)
 
-    stream = read_events_stream(spark, sf_dir)
-    q = (
-        tumbling_counts(stream)
-        .writeStream.outputMode("complete")
-        .foreachBatch(write_batch)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    with read_events_stream(spark, sf_dir) as stream:
+        drain(
+            tumbling_counts(stream)
+            .writeStream.outputMode("complete")
+            .foreachBatch(write_batch)
+        )
     got = {
         (r["window_start"], r["event_type"]): (r["n_events"], r["total_value"])
         for r in spark.read.parquet(out).collect()
@@ -161,35 +155,14 @@ def test_foreachbatch_parquet_sink_matches_batch(spark, sf_dir, tmp_path):
 def test_stream_static_enrichment_matches_batch(spark, sf_dir):
     """Stream-static dim join + windowed agg produces exactly the batch
     answer once the bounded stream drains."""
-    from pyspark.sql import functions as F
-
     from distributed_map_reduce_spark.sources import load_table
-    from distributed_map_reduce_spark.streaming.jobs import (
-        enriched_segment_windows,
-        read_events_stream,
-        run_to_completion,
-    )
 
     customer = load_table(spark, sf_dir, "customer")
-    stream = read_events_stream(spark, sf_dir)
-    got = run_to_completion(
-        spark, enriched_segment_windows(stream, customer), "seg_windows"
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    dim = customer.select(
-        F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
-    )
-    want = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(dim, "user_id")
-        .groupBy(F.window("ts", "15 minutes").alias("w"), "segment")
-        .agg(
-            F.count(F.lit(1)).alias("n_purchases"),
-            F.round(F.sum("value"), 2).alias("segment_revenue"),
+    with read_events_stream(spark, sf_dir) as stream:
+        got = run_to_completion(
+            spark, enriched_segment_windows(stream, customer), "seg_windows"
         )
-        .select(F.col("w.start").alias("window_start"), "segment", "n_purchases", "segment_revenue")
-    )
+    want = all_queries()["events_segment_enrichment"].fn(spark, sf_dir)
     got_set = {tuple(r) for r in got.collect()}
     want_set = {tuple(r) for r in want.collect()}
     assert got_set == want_set and len(want_set) > 0
@@ -203,22 +176,19 @@ def test_foreachbatch_sink_is_replay_idempotent(spark, sf_dir, tmp_path):
     import os
 
     from distributed_map_reduce_spark.sources import load_table
-    from distributed_map_reduce_spark.streaming.jobs import (
-        idempotent_batch_sink,
-        read_events_stream,
-    )
+    from distributed_map_reduce_spark.streaming.jobs import idempotent_batch_sink
 
     out = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
     writer = idempotent_batch_sink(out)
-    stream = read_events_stream(spark, sf_dir)
-    q = (
-        stream.writeStream.foreachBatch(writer)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+    with read_events_stream(spark, sf_dir) as stream:
+        q = (
+            stream.writeStream.foreachBatch(writer)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(300)
     n_src = load_table(spark, sf_dir, "events").count()
     first = spark.read.parquet(out)
     assert first.count() == n_src
@@ -239,12 +209,10 @@ def test_streaming_session_windows_match_batch(spark, sf_dir):
     """The streaming session_window aggregation (30-min gap, watermark)
     must converge to the batch twin — same merged sessions, counts, and
     values — on a drained bounded stream."""
-    from distributed_map_reduce_spark.streaming.jobs import session_values
-
-    stream = read_events_stream(spark, sf_dir)
-    result = run_to_completion(
-        spark, session_values(stream), "t_sessions", mode="complete"
-    )
+    with read_events_stream(spark, sf_dir) as stream:
+        result = run_to_completion(
+            spark, sessions(stream, "30 minutes"), "t_sessions", mode="complete"
+        )
     got = {
         (r["user_id"], r["session_start"]): (r["n_events"], r["session_value"])
         for r in result.collect()
@@ -264,16 +232,11 @@ def test_incremental_view_matches_full_aggregate(spark, sf_dir, tmp_path):
     from distributed_map_reduce_spark.streaming.jobs import incremental_view_sink
 
     view = str(tmp_path / "user_totals_view")
-    stream = read_events_stream(spark, sf_dir)
-    q = (
-        stream.writeStream.foreachBatch(incremental_view_sink(view))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    with read_events_stream(spark, sf_dir) as stream:
+        drain(
+            stream.writeStream.foreachBatch(incremental_view_sink(view))
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+        )
     got = {
         r["user_id"]: (r["n_events"], r["cents"])
         for r in spark.read.parquet(view).collect()
@@ -295,8 +258,8 @@ def test_events_stream_dir_symlink_is_absolute(tmp_path, monkeypatch):
     """The file-stream landing dir must symlink an ABSOLUTE target: a
     relative sf_dir would otherwise become a relative symlink target,
     which the OS resolves against the /tmp landing dir instead of the
-    caller's cwd (r7 gate catch — every streaming-flush query failed
-    under a relative --sf path)."""
+    caller's cwd (every streaming-flush query failed under a relative
+    --sf path before the target was made absolute)."""
     import os
 
     from distributed_map_reduce_spark.streaming.jobs import events_stream_dir

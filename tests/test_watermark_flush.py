@@ -92,3 +92,36 @@ def test_checkpoint_restart_resumes_exactly_once(spark, sf_dir, tmp_path):
     sink = spark.read.parquet(out)
     assert sink.count() == src.count()  # no loss, no duplicate re-append
     assert sink.select("event_id").distinct().count() == src.count()
+
+
+def test_session_flush_reads_nanos_timestamps(spark, sf_dir, tmp_path):
+    """A TIMESTAMP(NANOS) events.parquet (read as epoch-nanos longs under
+    spark.sql.legacy.parquet.nanosAsLong) must flush to the same sessions
+    as the µs file: the stream normalizes ts like the batch table, and
+    the sentinel is written in the file's raw ts type."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(f"{sf_dir}/events.parquet")
+    i = table.schema.get_field_index("ts")
+    nanos = table.set_column(i, "ts", table.column("ts").cast(pa.timestamp("ns")))
+    pq.write_table(nanos, tmp_path / "events.parquet", version="2.6")
+    raw = spark.read.parquet(str(tmp_path / "events.parquet"))
+    assert raw.schema["ts"].dataType.typeName() == "long"  # nanosAsLong
+
+    stream = all_queries()["stream_session_flush_final"].fn(spark, str(tmp_path))
+    batch = all_queries()["events_session_window"].fn(spark, sf_dir)
+    keys = ["user_id", "session_start", "n_events", "session_value"]
+    assert _rows(stream, keys) == _rows(batch, keys)
+
+
+def test_flush_removes_its_landing_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """The landing dir (events symlink + sentinel) is scratch: nothing the
+    returned memory table reads lives there, so the drain removes it."""
+    import os
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = all_queries()["stream_session_flush_final"].fn(spark, sf_dir)
+    assert out.count() > 0
+    assert not [d for d in os.listdir(tmp_path) if d.startswith("dmrs_stream_")]
