@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
+from .normalize import WORDS_SQL, words_py
 from ..sources import load_table
 
 
@@ -71,9 +72,9 @@ def udaf_grouped_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "udtf_ngrams",
     tags=("udf", "text"),
-    oracle="""
+    oracle=f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> w <> '') AS t
+  SELECT doc_id, {WORDS_SQL} AS t
   FROM documents WHERE doc_id <= 50
 ), grams AS (
   SELECT doc_id, unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS bigram
@@ -92,7 +93,7 @@ def udtf_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     @udtf(returnType="bigram string")
     class BigramGen:
         def eval(self, text: str):
-            toks = [w for w in (text or "").lower().split(" ") if w != ""]
+            toks = words_py(text) or []
             for i in range(len(toks) - 1):
                 yield (toks[i] + " " + toks[i + 1],)
 
@@ -172,9 +173,9 @@ def udtf_json_kv(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "udtf_dynamic_schema",
     tags=("udf", "polymorphic"),
-    oracle="""
+    oracle=f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> w <> '') AS t
+  SELECT doc_id, {WORDS_SQL} AS t
   FROM documents WHERE doc_id <= 100
 )
 SELECT doc_id,
@@ -207,7 +208,7 @@ def udtf_dynamic_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
             return AnalyzeResult(schema=schema)
 
         def eval(self, text: str, n: int):
-            toks = [w for w in (text or "").lower().split(" ") if w]
+            toks = words_py(text) or []
             if len(toks) >= n:
                 yield (*toks[:n], len(toks))
 

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.normalize import FINGERPRINT_SQL, WORDS_SQL, fingerprint, words
 from ..functions.vectors import as_double
 from ..registry import register
 from ..sources import load_table
@@ -91,10 +92,6 @@ def spark_partitions(df: DataFrame) -> int:
 # feed runs them over relational (doc_id, h) rows, the two linear feeds
 # over one row-local per-doc hash array.
 # ---------------------------------------------------------------------------
-def tokens_col(text: Column) -> Column:
-    return F.filter(F.split(F.lower(text), r"\s+"), lambda w: w != "")
-
-
 def _shingle_list(toks: Column, k: int = SHINGLE_K) -> Column:
     """Word k-shingles (duplicates kept) of a token array. ``toks`` MUST
     be a plain column reference in hot paths: the k element_at calls
@@ -118,8 +115,8 @@ def shingles_from_tokens(toks: Column, k: int = SHINGLE_K) -> Column:
 
 def shingles_col(text: Column, k: int = SHINGLE_K) -> Column:
     """Convenience form for small inputs/tests; hot paths project
-    tokens_col into its own column first (see :func:`_doc_tokens`)."""
-    return shingles_from_tokens(tokens_col(text), k)
+    words() into its own column first (see :func:`_doc_tokens`)."""
+    return shingles_from_tokens(words(text), k)
 
 
 def shingle_hash(s: Column) -> Column:
@@ -148,7 +145,7 @@ def _doc_tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     single small local parquet file otherwise plans as one input
     partition (a real cluster scan is already wide)."""
     return docs.repartition(spark_partitions(docs)).select(
-        F.col(id_col).alias("doc_id"), tokens_col(F.col(text_col)).alias("toks")
+        F.col(id_col).alias("doc_id"), words(text_col).alias("toks")
     )
 
 
@@ -440,7 +437,7 @@ def simhash_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
     aggregation, one exchange on doc id, no nested array expressions.
     Fingerprint bit j = sign of sum over tokens of (2·bit_j(hash) − 1)."""
     tok = docs.select(
-        F.col(id_col).alias("doc_id"), F.explode(tokens_col(F.col(text_col))).alias("w")
+        F.col(id_col).alias("doc_id"), F.explode(words(text_col)).alias("w")
     )
     h = tok.select(
         "doc_id", F.conv(F.substring(F.md5("w"), 1, 8), 16, 10).cast("long").alias("v")
@@ -485,9 +482,9 @@ def _simhash_sql(source: str = "documents", id_col: str = "doc_id", text_col: st
     "dedup_exact",
     bench=True,
     tags=("dedup",),
-    oracle="""
+    oracle=f"""
 WITH fp AS (
-  SELECT doc_id, md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fingerprint
+  SELECT doc_id, {FINGERPRINT_SQL} AS fingerprint
   FROM documents
 ), canon AS (
   SELECT fingerprint, min(doc_id) AS keep_doc, count(*) AS n_copies
@@ -500,9 +497,8 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: hash-aggregate on a normalized-text fingerprint; the
     exchange carries (hash, id) — never the text itself."""
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))
     return (
-        docs.select(F.md5(norm).alias("fingerprint"), "doc_id")
+        docs.select(fingerprint("text").alias("fingerprint"), "doc_id")
         .groupBy("fingerprint")
         .agg(F.min("doc_id").alias("keep_doc"), F.count(F.lit(1)).alias("n_copies"))
         .select("keep_doc", "n_copies")
@@ -515,7 +511,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # band_candidates), the capped form and the linear star-edge form
 # (_MINHASH_STAR_SQL), mirroring the three minhash_* feeds.
 _MINHASH_BAND_SQL = f"""toks AS (
-  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> w <> '') AS t
+  SELECT doc_id, {WORDS_SQL} AS t
   FROM documents
 ), sh AS (
   SELECT doc_id,
@@ -662,7 +658,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH {_MINHASH_CAND_SQL}, d AS (
   SELECT doc_id,
-         list_distinct(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS words
+         list_distinct({WORDS_SQL}) AS words
   FROM documents
 )
 SELECT cand.doc_a, cand.doc_b,
@@ -685,7 +681,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduces over, so they equal the string-row candidates."""
     docs = load_table(spark, sf_dir, "documents")
     cand = band_candidates(banded_keys(shingle_hash_rows(docs)))
-    d = docs.select("doc_id", F.array_distinct(tokens_col(F.col("text"))).alias("words"))
+    d = docs.select("doc_id", F.array_distinct(words("text")).alias("words"))
     jac = jaccard(F.col("w_a"), F.col("w_b"))
     return (
         cand.join(d.select(F.col("doc_id").alias("doc_a"), F.col("words").alias("w_a")), "doc_a")
@@ -784,7 +780,7 @@ def containment_candidates(sh_rows: DataFrame, maxdf: int = CONTAIN_MAXDF) -> Da
 
 
 _CONTAIN_CAND_SQL = f"""toks AS (
-  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> w <> '') AS t
+  SELECT doc_id, {WORDS_SQL} AS t
   FROM documents
 ), shr AS (
   SELECT DISTINCT doc_id, unnest(list_transform(range(1, len(t) - {SHINGLE_K - 2}),
@@ -806,7 +802,7 @@ _CONTAIN_CAND_SQL = f"""toks AS (
     oracle=f"""
 WITH {_CONTAIN_CAND_SQL}, d AS (
   SELECT doc_id,
-         list_distinct(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS words
+         list_distinct({WORDS_SQL}) AS words
   FROM documents
 )
 SELECT cand.doc_a, cand.doc_b,
@@ -831,7 +827,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     cand = containment_candidates(shingle_rows(docs))
-    d = docs.select("doc_id", F.array_distinct(tokens_col(F.col("text"))).alias("words"))
+    d = docs.select("doc_id", F.array_distinct(words("text")).alias("words"))
     # r10 (guide §1.2 per-task work): the containment expression is
     # evaluated ONCE per pair via withColumn — the old filter+select
     # form repeated the O(|A|+|B|) array_intersect in two operators and
@@ -925,10 +921,10 @@ def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_prefix_filter_join",
     tags=("dedup", "join"),
-    oracle="""
+    oracle=f"""
 WITH tok AS (
   SELECT DISTINCT doc_id,
-         unnest(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS w
+         unnest({WORDS_SQL}) AS w
   FROM documents
 ), dsets AS (
   SELECT doc_id, list_sort(list(DISTINCT w)) AS ws FROM tok GROUP BY doc_id
@@ -1122,11 +1118,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     tok = docs.select(
         "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
-            )
-        ).alias("w"),
+        F.explode(F.array_distinct(words("text"))).alias("w"),
     )
     dsets = tok.groupBy("doc_id").agg(
         F.sort_array(F.collect_set("w")).alias("ws")
@@ -1187,7 +1179,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     wdf = stok_t.agg(
         F.expr("CAST((max(tid) + 61) DIV 62 AS BIGINT)").alias("wn")
     )
-    words = stok_t.groupBy(
+    packed = stok_t.groupBy(
         "sid", F.expr("CAST((tid - 1) DIV 62 AS BIGINT)").alias("wj")
     ).agg(
         F.expr(
@@ -1195,7 +1187,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("word")
     )
     masks = (
-        words.groupBy("sid")
+        packed.groupBy("sid")
         .agg(
             F.map_from_entries(F.collect_list(F.struct("wj", "word"))).alias("m")
         )
@@ -1406,7 +1398,7 @@ SPAN_K = 8  # word n-gram width for duplicated-span measurement
     tags=("dedup", "text", "quality"),
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> w <> '') AS t
+  SELECT doc_id, {WORDS_SQL} AS t
   FROM documents
 ), grams AS (
   SELECT doc_id,
@@ -1444,8 +1436,7 @@ def dedup_duplicate_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     gram->df join that re-uses the grams exchange, one per-doc agg.
     No all-pairs structure anywhere; output is one row per document."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    t = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
-    base = docs.select("doc_id", t.alias("t")).filter(F.size("t") >= SPAN_K)
+    base = docs.select("doc_id", words("text").alias("t")).filter(F.size("t") >= SPAN_K)
     idx = F.sequence(F.lit(1), F.size("t") - (SPAN_K - 1))
     gram = F.transform(
         idx,
@@ -1856,8 +1847,7 @@ def _soundex_sql(expr: str) -> str:
     tags=("er", "dedup", "text"),
     oracle=f"""
 WITH vocab AS (
-  SELECT DISTINCT unnest(list_filter(string_split(lower(text), ' '),
-                                     w -> w <> '')) AS w
+  SELECT DISTINCT unnest({WORDS_SQL}) AS w
   FROM documents
 ), noisy AS (
   SELECT w FROM vocab
@@ -1906,8 +1896,7 @@ def er_soundex_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
     scheme here ([[dedup_edit_distance_block]]'s sorted-neighborhood
     discipline applies if blocks ever grow)."""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
-    vocab = docs.select(F.explode(t).alias("w")).distinct()
+    vocab = docs.select(F.explode(words("text")).alias("w")).distinct()
     corrupted = F.concat(
         F.substring("w", 1, 1), F.translate(F.expr("substring(w, 2)"), "eiou", "aaaa")
     )
@@ -1931,9 +1920,9 @@ def er_soundex_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "dedup_source_overlap_matrix",
     tags=("dedup", "pipeline"),
-    oracle="""
+    oracle=f"""
 WITH toks AS (
-  SELECT source, list_filter(string_split(lower(text), ' '), w -> w <> '') AS t
+  SELECT source, {WORDS_SQL} AS t
   FROM documents
 ), sh AS (
   SELECT DISTINCT source,
@@ -1979,8 +1968,7 @@ def dedup_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     (drop grams in > X% of DOCUMENTS, as [[privacy_decontamination]]
     applies) composes in front of the pair join unchanged."""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
-    toks = docs.select("source", t.alias("t")).where(F.size("t") >= 3)
+    toks = docs.select("source", words("text").alias("t")).where(F.size("t") >= 3)
     grams = toks.select(
         "source",
         F.explode(

@@ -56,6 +56,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.normalize import SPLIT_LOWER_SQL, words
 from ..registry import register
 from ..sources import load_table
 from .dedup import (
@@ -1540,10 +1541,10 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "graph_closeness_vocab",
     tags=("graph", "text", "iterative"),
-    oracle="""
+    oracle=f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split(lower(text), ' '), w -> trim(w) <> '') AS t
+         list_filter({SPLIT_LOWER_SQL}, w -> trim(w) <> '') AS t
   FROM documents
 ), vocab AS (
   SELECT w FROM (
@@ -1631,12 +1632,10 @@ def graph_closeness_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     (30 nodes, <=900 edges, 4 joins). The MATERIALIZED CTE ladder is
     the repo's iterative-op oracle discipline."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        F.filter(F.split(F.lower("text"), " "), lambda w: F.trim(w) != "").alias("t")
-    )
-    words = toks.select(F.explode("t").alias("w"))
+    toks = docs.select(words("text").alias("t"))
     vocab = (
-        words.groupBy("w")
+        toks.select(F.explode("t").alias("w"))
+        .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
         .orderBy(F.col("c").desc(), "w")
         .limit(30)

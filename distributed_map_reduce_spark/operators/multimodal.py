@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.normalize import SPLIT_LOWER_SQL, words
 from ..registry import register
 from ..sources import load_table
 
@@ -659,7 +660,7 @@ WITH pairs AS (
   SELECT doc_id,
          64 * (4 + CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS BIGINT) % 13) AS w,
          64 * (4 + CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 3, 2) AS BIGINT) % 13) AS h,
-         len(list_filter(string_split(lower(text), ' '), t -> t <> '')) AS n_tok
+         len(list_filter({SPLIT_LOWER_SQL}, t -> t <> '')) AS n_tok
   FROM documents
 ), scored AS (
   SELECT doc_id, w, h, n_tok,
@@ -693,7 +694,7 @@ def multimodal_caption_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     hh = F.md5(F.col("doc_id").cast("string"))
     w = 64 * (4 + F.conv(F.substring(hh, 1, 2), 16, 10).cast("bigint") % 13)
     h = 64 * (4 + F.conv(F.substring(hh, 3, 2), 16, 10).cast("bigint") % 13)
-    n_tok = F.size(F.filter(F.split(F.lower("text"), " "), lambda t: t != ""))
+    n_tok = F.size(words("text"))
     scored = docs.select(
         (w * h).cast("bigint").alias("area_px"),
         n_tok.alias("n_tok"),

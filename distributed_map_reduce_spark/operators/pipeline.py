@@ -16,6 +16,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.normalize import (
+    FINGERPRINT_SQL,
+    SPLIT_LOWER_SQL,
+    WORDS_SQL,
+    fingerprint,
+    split_lower,
+    words,
+)
 from ..registry import register
 from ..sources import load_table
 
@@ -24,11 +32,11 @@ from ..sources import load_table
     "pipeline_curate_corpus",
     bench=True,
     tags=("pipeline", "dedup", "text"),
-    oracle="""
+    oracle=f"""
 WITH scored AS (
   SELECT doc_id, lang, text,
          len(list_filter(string_split(text, ' '), w -> trim(w) <> '')) AS n_tokens,
-         md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fingerprint
+         {FINGERPRINT_SQL} AS fingerprint
   FROM documents
 ), filtered AS (
   SELECT * FROM scored
@@ -53,9 +61,8 @@ def pipeline_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fingerprint window, language agg); the filters run inside the scan."""
     docs = load_table(spark, sf_dir, "documents")
     n_tokens = F.size(F.filter(F.split("text", " "), lambda w: F.trim(w) != ""))
-    fingerprint = F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))
     scored = docs.select(
-        "doc_id", "lang", n_tokens.alias("n_tokens"), fingerprint.alias("fingerprint")
+        "doc_id", "lang", n_tokens.alias("n_tokens"), fingerprint("text").alias("fingerprint")
     )
     filtered = scored.filter(
         F.col("n_tokens").between(10, 1000) & F.col("lang").isin("en", "es", "fr", "de")
@@ -280,7 +287,7 @@ def pipeline_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("pipeline", "text", "quality"),
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, lang, list_filter(string_split(lower(text), ' '), w -> w <> '') AS t
+  SELECT doc_id, lang, {WORDS_SQL} AS t
   FROM documents
 ), grams AS (
   SELECT DISTINCT doc_id, lang,
@@ -312,8 +319,7 @@ def pipeline_boilerplate_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams only, text never moves twice. The C4-style 'remove pages that
     are mostly template' pass as one plan."""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
-    base = docs.select("doc_id", "lang", t.alias("t")).filter(F.size("t") >= 8)
+    base = docs.select("doc_id", "lang", words("text").alias("t")).filter(F.size("t") >= 8)
     idx = F.sequence(F.lit(1), F.size("t") - 7)
     gram = F.transform(
         idx, lambda i: F.concat_ws(" ", *[F.element_at("t", i + j) for j in range(8)])
@@ -349,7 +355,7 @@ LINE_W = 10  # words per pseudo-line (the corpus has no newlines; fixed-width
     tags=("pipeline", "dedup", "text"),
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, lang, list_filter(string_split(lower(text), ' '), w -> w <> '') AS t
+  SELECT doc_id, lang, {WORDS_SQL} AS t
   FROM documents
 ), exploded AS (
   SELECT doc_id, lang,
@@ -385,7 +391,7 @@ def pipeline_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     join if per-key skew (a viral boilerplate line) ever dominated a
     partition."""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
+    t = words("text")
     base = docs.select("doc_id", "lang", t.alias("t")).filter(F.size("t") >= LINE_W)
     idx = F.sequence(F.lit(0), F.floor(F.size("t") / LINE_W).cast("int") - 1)
     chunks = F.transform(
@@ -410,10 +416,10 @@ def pipeline_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "pipeline_incremental_dedup",
     tags=("pipeline", "dedup"),
-    oracle="""
+    oracle=f"""
 WITH tagged AS (
   SELECT doc_id, lang,
-         md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fp,
+         {FINGERPRINT_SQL} AS fp,
          substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) < 'c' AS is_existing
   FROM documents
 ), existing AS (
@@ -445,7 +451,7 @@ def pipeline_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the classic fingerprint-index anti-join, optionally fronted by a
     bloom filter; text never shuffles."""
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))
+    fp = fingerprint("text")
     tagged = docs.select(
         "doc_id",
         "lang",
@@ -743,7 +749,7 @@ WITH pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM ({_MINHASH_STAR_ORACLE})),
 fp AS (
   SELECT doc_id, source,
          row_number() OVER (
-           PARTITION BY md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))
+           PARTITION BY {FINGERPRINT_SQL}
            ORDER BY doc_id) AS rn
   FROM documents
 ),
@@ -787,8 +793,7 @@ def pipeline_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import minhash_star_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    fingerprint = F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))
-    fp = docs.select("doc_id", "source", fingerprint.alias("fingerprint"))
+    fp = docs.select("doc_id", "source", fingerprint("text").alias("fingerprint"))
     rn = F.row_number().over(
         Window.partitionBy("fingerprint").orderBy("doc_id")
     )
@@ -1040,7 +1045,7 @@ MLM_RATE_PCT = 15  # BERT masking rate, as an integer percent (coin < 15/100)
     oracle=f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split(lower(text), ' '), w -> w <> '') AS t
+         {WORDS_SQL} AS t
   FROM documents
 ), coins AS (
   SELECT doc_id, t,
@@ -1072,8 +1077,7 @@ def pipeline_mlm_masking(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential greedy span selection; iid masking is the
     order-free form that parallelizes trivially.)"""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
-    base = docs.select("doc_id", t.alias("t")).filter(F.size("t") > 0)
+    base = docs.select("doc_id", words("text").alias("t")).filter(F.size("t") > 0)
     idx = F.sequence(F.lit(1), F.size("t"))
     coin = lambda i: (
         F.conv(
@@ -1188,7 +1192,7 @@ CTX_SIZES = (512, 2048, 8192)  # context windows audited, in tokens
     oracle=f"""
 WITH toks AS (
   SELECT source,
-         len(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS n_tok
+         len({WORDS_SQL}) AS n_tok
   FROM documents
 )
 SELECT source,
@@ -1211,8 +1215,7 @@ def pipeline_context_window_report(spark: SparkSession, sf_dir: str) -> DataFram
     chosen one). One tokenize projection + one hash agg; conditional
     aggregates share the single pass."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.filter(F.split(F.lower("text"), " "), lambda w: w != ""))
-    base = docs.select("source", n_tok.alias("n_tok"))
+    base = docs.select("source", F.size(words("text")).alias("n_tok"))
     aggs = [
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("n_tok").cast("bigint").alias("total_tokens"),
@@ -1239,7 +1242,7 @@ BATCH_SIZE = 32  # sequences per training batch
     oracle=f"""
 WITH toks AS (
   SELECT doc_id,
-         len(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS n_tok
+         len({WORDS_SQL}) AS n_tok
   FROM documents
 ), by_len AS (
   SELECT doc_id, n_tok,
@@ -1280,8 +1283,7 @@ def pipeline_padding_waste_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .ranks import two_phase_ordered
 
     docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.filter(F.split(F.lower("text"), " "), lambda w: w != ""))
-    toks = docs.select("doc_id", n_tok.alias("n_tok"))
+    toks = docs.select("doc_id", F.size(words("text")).alias("n_tok"))
 
     def waste(order_cols, bucket, label):
         batched = two_phase_ordered(toks, bucket, order_cols, rn="_rn").withColumn(
@@ -1323,7 +1325,7 @@ EVAL_DROP_PCT = 20  # prediction corruption: drop tokens whose coin < 20%
     tags=("pipeline", "eval"),
     oracle=f"""
 WITH gold AS (
-  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> w <> '') AS g
+  SELECT doc_id, {WORDS_SQL} AS g
   FROM documents
 ), pred AS (
   SELECT doc_id, g,
@@ -1367,8 +1369,7 @@ def eval_em_f1_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     ids-shape again; per-doc rows join back to corpus slices for the
     aggregate report."""
     docs = load_table(spark, sf_dir, "documents")
-    g = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
-    gold = docs.select("doc_id", g.alias("g")).filter(F.size("g") > 0)
+    gold = docs.select("doc_id", words("text").alias("g")).filter(F.size("g") > 0)
     keep = lambda i: (
         F.conv(
             F.substring(
@@ -1558,10 +1559,10 @@ def pipeline_shard_mix_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "pipeline_instruction_dedup",
     tags=("pipeline", "dedup", "training"),
-    oracle="""
+    oracle=f"""
 WITH pairs AS (
   SELECT doc_id,
-         array_to_string(string_split(lower(text), ' ')[1:8], ' ') AS instruction_key,
+         array_to_string({SPLIT_LOWER_SQL}[1:8], ' ') AS instruction_key,
          greatest(len(string_split(text, ' ')) - 8, 0) AS response_tokens
   FROM documents
 ), ranked AS (
@@ -1592,7 +1593,7 @@ def pipeline_instruction_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys are short prefixes (ids + 8 tokens on the wire), the same
     keyed-survivorship shape as [[pipeline_url_canonical_dedup]]."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower("text"), " ")
+    toks = split_lower("text")
     pairs = docs.select(
         "doc_id",
         F.array_join(F.slice(toks, 1, 8), " ").alias("instruction_key"),
@@ -1618,10 +1619,10 @@ def pipeline_instruction_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "pipeline_blocklist_filter",
     tags=("pipeline", "privacy", "text"),
-    oracle="""
+    oracle=f"""
 WITH hits AS (
   SELECT doc_id, source,
-         len(list_filter(string_split(lower(text), ' '),
+         len(list_filter({SPLIT_LOWER_SQL},
              w -> w IN ('error', 'crash', 'fail', 'leak', 'exploit'))) AS n_hits,
          len(list_filter(string_split(text, ' '), w -> trim(w) <> '')) AS n_tokens
   FROM documents
@@ -1658,7 +1659,7 @@ def pipeline_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     terms = ["error", "crash", "fail", "leak", "exploit"]
     n_hits = F.size(
-        F.filter(F.split(F.lower("text"), " "), lambda w: w.isin(terms))
+        F.filter(split_lower("text"), lambda w: w.isin(terms))
     )
     n_tokens = F.size(F.filter(F.split("text", " "), lambda w: F.trim(w) != ""))
     flagged = docs.select(
@@ -1683,10 +1684,10 @@ def pipeline_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "pipeline_curriculum_order",
     tags=("pipeline", "llm"),
-    oracle="""
+    oracle=f"""
 WITH per_doc AS (
   SELECT source,
-         CAST(len(list_filter(string_split(lower(text), ' '),
+         CAST(len(list_filter({SPLIT_LOWER_SQL},
                               w -> trim(w) <> '')) AS BIGINT) AS words,
          CAST(length(replace(text, ' ', '')) AS BIGINT) AS chars
   FROM documents
@@ -1726,7 +1727,7 @@ def pipeline_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame. The schedule for a 100 TB corpus is the same ~dozens-row
     table."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), " "), lambda w: F.trim(w) != "")
+    toks = words("text")
     per_doc = docs.select(
         "source",
         F.size(toks).cast("bigint").alias("words"),
@@ -1761,10 +1762,10 @@ def pipeline_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "pipeline_span_corruption",
     tags=("pipeline", "text", "llm"),
-    oracle="""
+    oracle=f"""
 WITH docs AS (
   SELECT doc_id, source,
-         CAST(len(list_filter(string_split(lower(text), ' '), w -> w <> ''))
+         CAST(len({WORDS_SQL})
            AS BIGINT) AS n_tok
   FROM documents
 ), blocks AS (
@@ -1820,7 +1821,7 @@ def pipeline_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        F.size(F.filter(F.split(F.lower("text"), " "), lambda w: w != ""))
+        F.size(words("text"))
         .cast("bigint")
         .alias("n_tok"),
     )
@@ -1894,8 +1895,7 @@ PACK_SHARD = 250  # docs per packing shard (bounded forever: doc_id is dense)
     oracle=f"""
 WITH d AS (
   SELECT source, doc_id, doc_id // {PACK_SHARD} AS shard,
-         least(CAST(len(list_filter(string_split(lower(text), ' '),
-                                    w -> w <> '')) AS BIGINT),
+         least(CAST(len({WORDS_SQL}) AS BIGINT),
                {PACK_C}) AS t
   FROM documents
 ), folded AS (
@@ -1953,7 +1953,7 @@ def pipeline_greedy_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.floor(F.col("doc_id") / PACK_SHARD).cast("bigint").alias("shard"),
         F.least(
-            F.size(F.filter(F.split(F.lower("text"), " "), lambda w: w != "")),
+            F.size(words("text")),
             F.lit(PACK_C),
         )
         .cast("bigint")
@@ -1999,12 +1999,11 @@ def pipeline_greedy_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "pipeline_mixture_temperature",
     tags=("pipeline", "llm"),
-    oracle="""
+    oracle=f"""
 WITH lang AS (
   SELECT lang,
          CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(CAST(len(list_filter(string_split(lower(text), ' '),
-                                       w -> w <> '')) AS BIGINT)) AS BIGINT)
+         CAST(sum(CAST(len({WORDS_SQL}) AS BIGINT)) AS BIGINT)
            AS n_tokens
   FROM documents GROUP BY lang
 ), tot AS (
@@ -2045,7 +2044,7 @@ def pipeline_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant-size algebra on a |langs| x 4 lattice; the corpus is
     never rescanned per alpha."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.size(F.filter(F.split(F.lower("text"), " "), lambda w: w != ""))
+    toks = F.size(words("text"))
     lang = docs.groupBy("lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum(toks.cast("bigint")).cast("bigint").alias("n_tokens"),
@@ -2084,16 +2083,14 @@ ABLATION_CUTS = (0, 20, 40, 60, 80)  # stopword-ratio percentile-ish cuts (x1000
 @register(
     "pipeline_quality_ablation_grid",
     tags=("pipeline", "llm", "text"),
-    oracle="""
+    oracle=f"""
 WITH scored AS (
   SELECT doc_id, lang,
-         CAST(len(list_filter(string_split(lower(text), ' '),
-                              w -> w <> '')) AS BIGINT) AS n_tokens,
-         CAST(round(len(list_filter(string_split(lower(text), ' '),
+         CAST(len({WORDS_SQL}) AS BIGINT) AS n_tokens,
+         CAST(round(len(list_filter({SPLIT_LOWER_SQL},
                     w -> w IN ('the','of','and','to','a','in','is','it',
                                'was','for'))) * 1000.0
-               / greatest(len(list_filter(string_split(lower(text), ' '),
-                              w -> w <> '')), 1)) AS BIGINT) AS sw_x1000
+               / greatest(len({WORDS_SQL}), 1)) AS BIGINT) AS sw_x1000
   FROM documents
 ), tot AS (
   SELECT CAST(count(*) AS BIGINT) AS all_docs,
@@ -2135,10 +2132,10 @@ def pipeline_quality_ablation_grid(spark: SparkSession, sf_dir: str) -> DataFram
     combined. The grid form beats 5 separate filter-runs by 5x on scan
     cost — the whole point of ablation-as-a-query."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
+    toks = words("text")
     sw = F.size(
         F.filter(
-            F.split(F.lower("text"), " "),
+            split_lower("text"),
             lambda w: w.isin(
                 "the", "of", "and", "to", "a", "in", "is", "it", "was", "for"
             ),

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.normalize import WORDS_SQL, words
 from ..registry import register
 from ..sources import load_table
 
@@ -114,9 +115,9 @@ def privacy_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     "privacy_contamination_check",
     bench=True,
     tags=("privacy", "dedup"),
-    oracle="""
+    oracle=f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> w <> '') AS ws
+  SELECT doc_id, {WORDS_SQL} AS ws
   FROM documents
 ), grams AS (
   SELECT doc_id,
@@ -160,8 +161,7 @@ def privacy_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     methodology), shrunk to 3-grams for the synthetic corpus.
     """
     docs = load_table(spark, sf_dir, "documents")
-    ws = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
-    toks = docs.select("doc_id", ws.alias("ws"))
+    toks = docs.select("doc_id", words("text").alias("ws"))
     grams3 = F.when(
         F.size("ws") >= 3,
         F.transform(

@@ -24,6 +24,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.normalize import SPLIT_LOWER_SQL, WORDS_SQL, words
 from ..functions.vectors import as_double, const_vector, cosine, dot
 from ..registry import register
 from ..sources import load_table
@@ -114,12 +115,12 @@ def _adaptive_sig_sql(src: str = "e", floor: int = N_PLANES,
      )"""
 
 
-def adaptive_bucketed(e: DataFrame, floor: int = N_PLANES,
-                      target: int = BUCKET_TARGET) -> DataFrame:
-    """Attach the adaptive-plane LSH ``bucket`` column to a frame with a
-    double-array column ``v``: corpus count + dim are read in ONE job up
-    front (the statistics lookup AQE performs between stages), then the
-    bucket is pure JVM expression work."""
+def adaptive_bucket(e: DataFrame, floor: int = N_PLANES,
+                    target: int = BUCKET_TARGET) -> tuple[F.Column, int]:
+    """The adaptive-plane LSH bucket column of a frame with a double-array
+    column ``v``, and its plane count: corpus count + dim are read in ONE
+    job up front (the statistics lookup AQE performs between stages),
+    then the bucket is pure JVM expression work."""
     stats = e.agg(
         F.count(F.lit(1)).alias("n"),
         # min over non-null vectors: deterministic (F.first over an
@@ -131,7 +132,7 @@ def adaptive_bucketed(e: DataFrame, floor: int = N_PLANES,
     if stats is None or not stats["n"] or not stats["dim"]:
         # no rows, all-null vectors, or an empty (dim-0) vector: no
         # meaningful hyperplane exists — degrade to a single bucket.
-        return e.withColumn("bucket", F.lit(0).cast("bigint"))
+        return F.lit(0).cast("bigint"), floor
     dim = int(stats["dim"])
     npl = adaptive_n_planes(int(stats["n"]), floor=floor, target=target)
     bits = [
@@ -145,7 +146,13 @@ def adaptive_bucketed(e: DataFrame, floor: int = N_PLANES,
     bucket = bits[0]
     for bb in bits[1:]:
         bucket = bucket + bb
-    return e.withColumn("bucket", bucket.cast("bigint"))
+    return bucket.cast("bigint"), npl
+
+
+def adaptive_bucketed(e: DataFrame, floor: int = N_PLANES,
+                      target: int = BUCKET_TARGET) -> DataFrame:
+    """Attach :func:`adaptive_bucket` as the ``bucket`` column."""
+    return e.withColumn("bucket", adaptive_bucket(e, floor, target)[0])
 
 
 @register(
@@ -1739,35 +1746,19 @@ def ann_lsh_adaptive_planes(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic term — stays constant and total work scales ~linearly. At
     sf0.01 (500 vecs) this resolves to 4 planes, sf0.1 → 7, sf1 → 10:
     the formula is genuinely exercised at every test scale, not just in
-    the docstring. The corpus count is read once up front (the same
-    statistics lookup AQE performs between stages); the DuckDB oracle
-    derives the identical count, dim, and md5-parity planes from the
-    data, so the differential check covers the adaptivity itself.
+    the docstring. The corpus count and dim are read in one aggregate up
+    front (:func:`adaptive_bucket`, the same statistics lookup AQE
+    performs between stages); the DuckDB oracle derives the identical
+    count, dim, and md5-parity planes from the data, so the differential
+    check covers the adaptivity itself. An empty table gives zero rows.
     """
     from ..functions.vectors import norm
 
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
-    first = e.select(F.size("v").alias("dim")).first()
-    dim = int(first["dim"])
-    n = e.count()
-    import math
-
-    n_planes = max(4, math.ceil(math.log2(n / 64.0))) if n > 0 else 4
-
-    bits = [
-        F.when(dot(F.col("v"), const_vector(hyperplane(p, dim))) >= 0,
-               F.lit(1)).otherwise(F.lit(0)) * (2 ** p)
-        for p in range(n_planes)
-    ]
-    bucket = bits[0]
-    for bb in bits[1:]:
-        bucket = bucket + bb
-
-    b = e.withColumn("bucket", bucket.cast("bigint")).withColumn(
-        "nrm", norm(F.col("v"))
-    )
+    bucket, n_planes = adaptive_bucket(e, floor=4)
+    b = e.withColumn("bucket", bucket).withColumn("nrm", norm(F.col("v")))
     a = b.select(
         F.col("vec_id").alias("ia"), F.col("v").alias("v_a"),
         F.col("nrm").alias("n_a"), "bucket",
@@ -2466,10 +2457,10 @@ def eval_rank_metrics_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_bm25_topk",
     tags=("text", "similarity", "llm"),
-    oracle="""
+    oracle=f"""
 WITH d AS (
   SELECT doc_id,
-         list_filter(string_split(lower(text), ' '), w -> trim(w) <> '') AS toks
+         list_filter({SPLIT_LOWER_SQL}, w -> trim(w) <> '') AS toks
   FROM documents
 ), dl AS (
   SELECT doc_id, CAST(len(toks) AS BIGINT) AS dl FROM d
@@ -2519,12 +2510,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject, not a global sort."""
     docs = load_table(spark, sf_dir, "documents")
     terms = ["join", "vector", "stream"]
-    d = docs.select(
-        "doc_id",
-        F.filter(F.split(F.lower("text"), " "), lambda w: F.trim(w) != "").alias(
-            "toks"
-        ),
-    )
+    d = docs.select("doc_id", words("text").alias("toks"))
     dl = d.select("doc_id", F.size("toks").cast("bigint").alias("dl"))
     stats = dl.agg(
         F.avg(F.col("dl") * 1.0).alias("avgdl"),
@@ -2570,10 +2556,10 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "retrieval_hybrid_rrf",
     tags=("similarity", "llm", "eval"),
-    oracle="""
+    oracle=f"""
 WITH d AS (
   SELECT doc_id,
-         list_filter(string_split(lower(text), ' '), w -> trim(w) <> '') AS toks
+         list_filter({SPLIT_LOWER_SQL}, w -> trim(w) <> '') AS toks
   FROM documents
 ), lex AS (
   SELECT doc_id,
@@ -2630,7 +2616,7 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
     terms = ["join", "vector", "stream"]
-    toks = F.filter(F.split(F.lower("text"), " "), lambda w: F.trim(w) != "")
+    toks = words("text")
     lex = docs.select(
         "doc_id",
         F.round(
@@ -2860,10 +2846,10 @@ def similarity_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "retrieval_rocchio_prf",
     tags=("similarity", "retrieval", "text"),
-    oracle="""
+    oracle=f"""
 WITH tok AS (
   SELECT doc_id,
-         unnest(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS w
+         unnest({WORDS_SQL}) AS w
   FROM documents
 ), tf AS (
   SELECT doc_id, w, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY doc_id, w
@@ -2936,7 +2922,7 @@ def retrieval_rocchio_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_terms = ["dup", "merge", "sort"]
     tok = docs.select(
         "doc_id",
-        F.explode(F.filter(F.split(F.lower("text"), " "), lambda w: w != "")).alias("w"),
+        F.explode(words("text")).alias("w"),
     )
     tf = tok.groupBy("doc_id", "w").agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
     df = tok.groupBy("w").agg(F.countDistinct("doc_id").cast("bigint").alias("df"))

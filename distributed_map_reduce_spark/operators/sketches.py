@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.normalize import WORDS_SQL, words
 from ..registry import register
 from ..sources import load_table
 
@@ -54,13 +55,12 @@ def _md5_int60_sql(expr: str) -> str:
 
 
 def _tokens(docs: DataFrame) -> DataFrame:
-    """(token) rows, repo-standard tokenization: lower + split(' ') + drop ''."""
-    t = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
-    return docs.select(F.explode(t).alias("w"))
+    """(token) rows, repo-standard tokenization: ``functions.normalize.words``."""
+    return docs.select(F.explode(words("text")).alias("w"))
 
 
-_TOKENS_SQL = """
-  SELECT unnest(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS w
+_TOKENS_SQL = f"""
+  SELECT unnest({WORDS_SQL}) AS w
   FROM documents
 """
 
@@ -290,7 +290,7 @@ def sketch_linear_counting(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lang_hashes_sql(lang: str) -> str:
     return f"""
   SELECT DISTINCT {_md5_int60_sql('w')} AS h
-  FROM (SELECT unnest(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS w
+  FROM (SELECT unnest({WORDS_SQL}) AS w
         FROM documents WHERE lang = '{lang}')
 """
 
@@ -345,7 +345,7 @@ def sketch_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-touching the data. Portable md5 hashing makes Spark's and
     DuckDB's sketches (and therefore every derived estimate) identical."""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
+    t = words("text")
 
     def lang_hashes(lang: str) -> DataFrame:
         return (
@@ -507,7 +507,7 @@ BF_K = 3  # hash functions
     oracle=f"""
 WITH tok AS (
   SELECT DISTINCT source,
-         unnest(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS w
+         unnest({WORDS_SQL}) AS w
   FROM documents WHERE source IN ('src0', 'src1')
 ), a AS (
   SELECT DISTINCT w FROM tok WHERE source = 'src0'
@@ -567,8 +567,7 @@ def sketch_bloom_filter_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents")
         .where(F.col("source").isin("src0", "src1"))
     )
-    t = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
-    tok = docs.select("source", F.explode(t).alias("w")).distinct()
+    tok = docs.select("source", F.explode(words("text")).alias("w")).distinct()
     a = tok.where(F.col("source") == "src0").select("w").distinct()
     b = tok.where(F.col("source") == "src1").select("w").distinct()
     hs = spark.range(BF_K).select(F.col("id").alias("h"))

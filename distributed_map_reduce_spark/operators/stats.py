@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.normalize import SPLIT_LOWER_SQL, WORDS_SQL, split_lower, words
 from ..registry import register
 from ..sources import load_table
 
@@ -1138,9 +1139,9 @@ def stats_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "agg_heavy_hitters",
     tags=("agg", "stats", "text"),
-    oracle="""
+    oracle=f"""
 WITH tok AS (
-  SELECT unnest(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS w
+  SELECT unnest({WORDS_SQL}) AS w
   FROM documents
 ), tot AS (SELECT count(*) AS n_total FROM tok)
 SELECT w,
@@ -1164,11 +1165,7 @@ def agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     no key clears a meaningful support threshold — word frequency is
     the data's one genuinely heavy-tailed distribution.)"""
     docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        F.explode(
-            F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
-        ).alias("w")
-    )
+    tok = docs.select(F.explode(words("text")).alias("w"))
     total = tok.count()  # scalar action; the only driver-side value
     counts = tok.groupBy("w").agg(F.count(F.lit(1)).alias("n"))
     return (
@@ -2893,11 +2890,11 @@ def stats_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_cohens_kappa",
     tags=("stats", "eval"),
-    oracle="""
+    oracle=f"""
 WITH scored AS (
   SELECT doc_id,
          CASE WHEN n_chars > 500 THEN 1 ELSE 0 END AS rater_a,
-         CASE WHEN len(list_filter(string_split(lower(text), ' '), w -> w <> '')) > 90
+         CASE WHEN len({WORDS_SQL}) > 90
               THEN 1 ELSE 0 END AS rater_b
   FROM documents
 ), cells AS (
@@ -2931,8 +2928,7 @@ def stats_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression tree both engines, 6dp."""
     docs = load_table(spark, sf_dir, "documents")
     rater_a = F.when(F.col("n_chars") > 500, 1).otherwise(0)
-    n_tok = F.size(F.filter(F.split(F.lower("text"), " "), lambda w: w != ""))
-    rater_b = F.when(n_tok > 90, 1).otherwise(0)
+    rater_b = F.when(F.size(words("text")) > 90, 1).otherwise(0)
     scored = docs.select(rater_a.alias("a"), rater_b.alias("b"))
     cells = scored.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -3357,9 +3353,9 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_jensen_shannon",
     tags=("stats", "text", "pipeline"),
-    oracle="""
+    oracle=f"""
 WITH tok AS (
-  SELECT source, unnest(string_split(lower(text), ' ')) AS w
+  SELECT source, unnest({SPLIT_LOWER_SQL}) AS w
   FROM documents
 ), s_cnt AS (
   SELECT source, w, count(*) AS c_s FROM tok GROUP BY 1, 2
@@ -3411,7 +3407,7 @@ def stats_jensen_shannon(spark: SparkSession, sf_dir: str) -> DataFrame:
     summation-order noise."""
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
-        "source", F.explode(F.split(F.lower("text"), " ")).alias("w")
+        "source", F.explode(split_lower("text")).alias("w")
     )
     s_cnt = tok.groupBy("source", "w").agg(F.count(F.lit(1)).alias("c_s"))
     s_tot = s_cnt.groupBy("source").agg(F.sum("c_s").cast("bigint").alias("t_s"))
@@ -6943,11 +6939,11 @@ def stats_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_mcnemar_test",
     tags=("stats", "eval"),
-    oracle="""
+    oracle=f"""
 WITH scored AS (
   SELECT doc_id,
          CASE WHEN n_chars > 500 THEN 1 ELSE 0 END AS rater_a,
-         CASE WHEN len(list_filter(string_split(lower(text), ' '), w -> w <> '')) > 90
+         CASE WHEN len({WORDS_SQL}) > 90
               THEN 1 ELSE 0 END AS rater_b
   FROM documents
 ), cells AS (
@@ -6980,7 +6976,7 @@ def stats_mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one in-scan classification + one 3-number agg. Nothing
     else."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
+    toks = words("text")
     scored = docs.select(
         F.when(F.col("n_chars") > 500, 1).otherwise(0).alias("rater_a"),
         F.when(F.size(toks) > 90, 1).otherwise(0).alias("rater_b"),

@@ -13,6 +13,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.normalize import (
+    FINGERPRINT_SQL,
+    NORMALIZED_SQL,
+    SPLIT_LOWER_SQL,
+    WORDS_SQL,
+    WS,
+    fingerprint,
+    normalized,
+    split_lower,
+    words,
+)
 from ..registry import register
 from ..sources import load_table
 
@@ -34,9 +45,9 @@ _BPE_ISH_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
     "text_wordcount_topn",
     bench=True,
     tags=("text",),
-    oracle="""
+    oracle=f"""
 SELECT w AS word, count(*) AS n
-FROM (SELECT unnest(string_split(lower(text), ' ')) AS w FROM documents)
+FROM (SELECT unnest({SPLIT_LOWER_SQL}) AS w FROM documents)
 WHERE trim(w) <> ''
 GROUP BY w
 ORDER BY n DESC, w
@@ -49,7 +60,7 @@ def text_wordcount_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial aggregation + TakeOrdered instead of per-key HTTP shuffles."""
     docs = load_table(spark, sf_dir, "documents")
     return (
-        docs.select(F.explode(F.split(F.lower("text"), " ")).alias("word"))
+        docs.select(F.explode(split_lower("text")).alias("word"))
         .filter(F.trim("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -59,10 +70,8 @@ def text_wordcount_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stopword_hits_sql(lang: str) -> str:
-    words = ", ".join(f"'{w}'" for w in _LANG_LEXICON[lang])
-    return (
-        "len(list_filter(string_split(lower(text), ' '), w -> w IN (" + words + ")))"
-    )
+    lexicon = ", ".join(f"'{w}'" for w in _LANG_LEXICON[lang])
+    return f"len(list_filter({SPLIT_LOWER_SQL}, w -> w IN ({lexicon})))"
 
 
 @register(
@@ -90,7 +99,7 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language ID via stopword-hit counts per embedded lexicon; argmax
     with a fixed precedence (en>es>fr>de) so ties are deterministic."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower("text"), " ")
+    toks = split_lower("text")
     hits = {
         lang: F.size(
             F.filter(toks, lambda w: w.isin(_LANG_LEXICON[lang]))
@@ -118,7 +127,7 @@ SELECT doc_id,
        round(length(text) * 1.0 / greatest(len(list_filter(string_split(text, ' '), w -> trim(w) <> '')), 1), 4) AS avg_token_len,
        len(regexp_extract_all(text, '{_PUNCT_RE}'))                      AS n_punct,
        len(regexp_extract_all(text, '[0-9]'))                            AS n_digits,
-       round(len(list_filter(string_split(lower(text), ' '), w -> w IN ('the','of','and','to','a','in','is','it','was','for'))) * 1.0
+       round(len(list_filter({SPLIT_LOWER_SQL}, w -> w IN ('the','of','and','to','a','in','is','it','was','for'))) * 1.0
              / greatest(len(list_filter(string_split(text, ' '), w -> trim(w) <> '')), 1), 4) AS stopword_ratio,
        CASE WHEN length(text) BETWEEN 100 AND 1000
              AND len(regexp_extract_all(text, '[0-9]')) * 1.0 / greatest(length(text), 1) < 0.3
@@ -136,7 +145,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_chars = F.length("text")
     n_digits = F.size(F.regexp_extract_all("text", F.lit("[0-9]"), 0))
     stop_hits = F.size(
-        F.filter(F.split(F.lower("text"), " "), lambda w: w.isin(_LANG_LEXICON["en"]))
+        F.filter(split_lower("text"), lambda w: w.isin(_LANG_LEXICON["en"]))
     )
     return docs.select(
         "doc_id",
@@ -186,8 +195,8 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_fingerprint",
     tags=("text", "dedup"),
-    oracle="""
-SELECT md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS fingerprint,
+    oracle=f"""
+SELECT {FINGERPRINT_SQL} AS fingerprint,
        count(*)     AS n_docs,
        min(doc_id)  AS canonical_doc
 FROM documents
@@ -198,9 +207,8 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprint: md5 over whitespace-normalized lowercase text;
     groups are exact-duplicate clusters (canonical = min doc_id)."""
     docs = load_table(spark, sf_dir, "documents")
-    norm = F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))
     return (
-        docs.select(F.md5(norm).alias("fingerprint"), "doc_id")
+        docs.select(fingerprint("text").alias("fingerprint"), "doc_id")
         .groupBy("fingerprint")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("canonical_doc"))
     )
@@ -209,9 +217,9 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_tfidf_topterms",
     tags=("text",),
-    oracle="""
+    oracle=f"""
 WITH tok AS (
-  SELECT doc_id, unnest(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS w
+  SELECT doc_id, unnest({WORDS_SQL}) AS w
   FROM documents
 ), tf AS (
   SELECT doc_id, w, count(*) AS tf FROM tok GROUP BY doc_id, w
@@ -240,7 +248,7 @@ def text_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
-        F.explode(F.filter(F.split(F.lower("text"), " "), lambda w: w != "")).alias("w"),
+        F.explode(words("text")).alias("w"),
     )
     tf = tok.groupBy("doc_id", "w").agg(F.count(F.lit(1)).alias("tf"))
     df = tok.groupBy("w").agg(F.countDistinct("doc_id").alias("df"))
@@ -278,7 +286,7 @@ _SENTIMENT_LEXICON: dict[str, int] = {
 WITH lex(w, score) AS (
   VALUES {", ".join(f"('{w}', {s})" for w, s in sorted(_SENTIMENT_LEXICON.items()))}
 ), tok AS (
-  SELECT doc_id, unnest(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS w
+  SELECT doc_id, unnest({WORDS_SQL}) AS w
   FROM documents
 )
 SELECT doc_id,
@@ -299,7 +307,7 @@ def text_sentiment_lexicon(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tok = docs.select(
         "doc_id",
-        F.explode(F.filter(F.split(F.lower("text"), " "), lambda w: w != "")).alias("w"),
+        F.explode(words("text")).alias("w"),
     )
     return (
         tok.join(F.broadcast(spark_lex), "w", "left")
@@ -321,7 +329,7 @@ WINNOW_W = 16  # winnowing window (k-grams per window)
     tags=("text", "dedup"),
     oracle=f"""
 WITH t AS (
-  SELECT doc_id, lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))) AS txt
+  SELECT doc_id, {NORMALIZED_SQL} AS txt
   FROM documents WHERE doc_id <= 50
 ), hs AS (
   SELECT doc_id,
@@ -350,7 +358,7 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") <= 50)
-    txt = F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))
+    txt = normalized("text")
     t = docs.select("doc_id", txt.alias("txt")).filter(F.length("txt") >= WINNOW_K)
     grams = t.select(
         "doc_id",
@@ -383,10 +391,10 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_repetition_ratio",
     tags=("text", "quality"),
-    oracle="""
+    oracle=f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split(lower(text), ' '), w -> w <> '') AS t
+         {WORDS_SQL} AS t
   FROM documents
 ), tri AS (
   SELECT doc_id, t,
@@ -407,8 +415,7 @@ def text_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigram_rep ⇒ templated or looping text). Pure array expressions in
     one codegen'd projection; no explode, no shuffle at all."""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
-    base = docs.select("doc_id", t.alias("t")).filter(F.size("t") >= 3)
+    base = docs.select("doc_id", words("text").alias("t")).filter(F.size("t") >= 3)
     idx = F.sequence(F.lit(1), F.size("t") - 2)
     g = F.transform(
         idx,
@@ -434,7 +441,7 @@ BOILERPLATE_MIN_DOCS = 3
     tags=("text", "quality", "dedup"),
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> w <> '') AS t
+  SELECT doc_id, {WORDS_SQL} AS t
   FROM documents
 ), grams AS (
   SELECT DISTINCT doc_id,
@@ -456,8 +463,7 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     count aggregate — at 100 TB this is the same ids-only shuffle shape
     as MinHash (the output set is what the cleaning pass anti-joins)."""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
-    base = docs.select("doc_id", t.alias("t")).filter(F.size("t") >= BOILERPLATE_K)
+    base = docs.select("doc_id", words("text").alias("t")).filter(F.size("t") >= BOILERPLATE_K)
     idx = F.sequence(F.lit(1), F.size("t") - (BOILERPLATE_K - 1))
     gram = F.transform(
         idx,
@@ -478,10 +484,10 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_zipf_fit",
     tags=("text", "stats"),
-    oracle="""
+    oracle=f"""
 WITH wc AS (
   SELECT w, count(*) AS c
-  FROM (SELECT unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS w
+  FROM (SELECT unnest(list_filter({SPLIT_LOWER_SQL}, x -> x <> '')) AS w
         FROM documents)
   GROUP BY w
 ), ranked AS (
@@ -503,7 +509,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     wc = (
-        docs.select(F.explode(F.filter(F.split(F.lower("text"), " "), lambda x: x != "")).alias("w"))
+        docs.select(F.explode(words("text")).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -521,9 +527,9 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_unigram_surprisal",
     bench=True,
     tags=("text", "quality"),
-    oracle="""
+    oracle=f"""
 WITH w AS (
-  SELECT doc_id, unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS word
+  SELECT doc_id, unnest(list_filter({SPLIT_LOWER_SQL}, x -> x <> '')) AS word
   FROM documents
 ), freq AS (
   SELECT word, count(*) AS c FROM w GROUP BY word
@@ -550,7 +556,7 @@ def text_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     w = docs.select(
-        "doc_id", F.explode(F.filter(F.split(F.lower("text"), " "), lambda x: x != "")).alias("word")
+        "doc_id", F.explode(words("text")).alias("word")
     )
     freq = w.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
     tot = freq.agg(F.sum("c").alias("t"))
@@ -564,11 +570,11 @@ def text_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_inverted_index",
     tags=("text", "search"),
-    oracle="""
+    oracle=f"""
 WITH per_doc AS (
   SELECT term, doc_id, CAST(count(*) AS BIGINT) AS tf
   FROM (SELECT doc_id,
-               unnest(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS term
+               unnest({WORDS_SQL}) AS term
         FROM documents)
   GROUP BY term, doc_id
 )
@@ -592,8 +598,7 @@ def text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed by term (write-side sort gives contiguous postings); the
     sorted-head here proves the ordering contract."""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
-    toks = docs.select("doc_id", F.explode(t).alias("term"))
+    toks = docs.select("doc_id", F.explode(words("text")).alias("term"))
     per_doc = toks.groupBy("term", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
     return (
         per_doc.groupBy("term")
@@ -616,7 +621,7 @@ TRIGRAM_TOP_N = 50
     tags=("text", "lm"),
     oracle=f"""
 WITH toks AS (
-  SELECT list_filter(string_split(lower(text), ' '), w -> w <> '') AS t
+  SELECT {WORDS_SQL} AS t
   FROM documents
 ), tri AS (
   SELECT unnest(list_transform(range(1, len(t) - 1),
@@ -629,7 +634,7 @@ WITH toks AS (
   FROM tri GROUP BY 1, 2, 3
 ), v AS (
   SELECT count(DISTINCT w) AS v
-  FROM (SELECT unnest(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS w
+  FROM (SELECT unnest({WORDS_SQL}) AS w
         FROM documents)
 )
 SELECT w1, w2, w3, c3,
@@ -652,7 +657,7 @@ def text_trigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     trigrams); V is a scalar broadcast. Total order (count desc, then
     lexicographic) makes the top-N deterministic on both engines."""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
+    t = words("text")
     base = docs.select(t.alias("t")).filter(F.size("t") >= 3)
     idx = F.sequence(F.lit(1), F.size("t") - 2)
     tri = F.transform(
@@ -692,7 +697,7 @@ BPE_TOP_PAIRS = 30
     oracle=f"""
 WITH wc AS (
   SELECT w AS word, CAST(count(*) AS BIGINT) AS c
-  FROM (SELECT unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS w
+  FROM (SELECT unnest(list_filter({SPLIT_LOWER_SQL}, x -> x <> '')) AS w
         FROM documents)
   GROUP BY w
 ), pairs AS (
@@ -714,7 +719,7 @@ def text_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-run this on a re-segmented vocab (driver holds only the winning
     pair per round, kmeans-style)."""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
+    t = words("text")
     wc = (
         docs.select(F.explode(t).alias("word"))
         .groupBy("word")
@@ -792,7 +797,7 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         "|",
     )
     occurrences = docs.select(F.explode(F.split(t, r"\|")).alias("p")).select(
-        F.trim(F.regexp_replace("p", r"\s+", " ")).alias("phrase")
+        F.trim(F.regexp_replace("p", WS, " ")).alias("phrase")
     )
     cand = occurrences.filter(
         (F.col("phrase") != "")
@@ -934,12 +939,8 @@ def bpe_train_merges(docs: DataFrame, rounds: int = BPE_TRAIN_ROUNDS) -> DataFra
     stage stays distributed; only the chosen pair ever reaches the
     driver."""
     spark = docs.sparkSession
-    words = (
-        docs.select(
-            F.explode(
-                F.filter(F.split(F.lower("text"), r"\s+"), lambda w: w != "")
-            ).alias("word")
-        )
+    vocab = (
+        docs.select(F.explode(words("text")).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
         .select(F.split("word", "").alias("syms"), "freq")
@@ -951,7 +952,7 @@ def bpe_train_merges(docs: DataFrame, rounds: int = BPE_TRAIN_ROUNDS) -> DataFra
         pair_idx = F.when(
             F.size("syms") > 1, F.sequence(F.lit(1), F.size("syms") - 1)
         ).otherwise(F.array().cast("array<int>"))
-        pairs = words.select(
+        pairs = vocab.select(
             F.explode(
                 F.transform(
                     pair_idx,
@@ -981,7 +982,7 @@ def bpe_train_merges(docs: DataFrame, rounds: int = BPE_TRAIN_ROUNDS) -> DataFra
                 F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(merged)),
             ).otherwise(F.concat(acc, F.array(x))),
         )
-        words = words.select(fold.alias("syms"), "freq")
+        vocab = vocab.select(fold.alias("syms"), "freq")
     return spark.createDataFrame(
         merges, "merge_rank int, pair string, pair_count bigint"
     )
@@ -1008,7 +1009,7 @@ FH_DIM = 16  # feature-hashing target dimensionality
     tags=("text", "similarity"),
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, unnest(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS w
+  SELECT doc_id, unnest({WORDS_SQL}) AS w
   FROM documents
 )
 SELECT doc_id,
@@ -1035,8 +1036,7 @@ def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc); the exchange carries one row per nonzero cell. Exact integer
     output ⇒ bit-identical across engines, no float discipline needed."""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
-    toks = docs.select("doc_id", F.explode(t).alias("w"))
+    toks = docs.select("doc_id", F.explode(words("text")).alias("w"))
     dim = (
         F.conv(F.substring(F.md5(F.concat(F.lit("fh:"), F.col("w"))), 1, 15), 16, 10)
         .cast("bigint") % FH_DIM
@@ -1058,10 +1058,10 @@ def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_vocab_coverage",
     tags=("text", "pipeline"),
-    oracle="""
+    oracle=f"""
 WITH toks AS (
   SELECT doc_id, w FROM (
-    SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w FROM documents
+    SELECT doc_id, unnest({SPLIT_LOWER_SQL}) AS w FROM documents
   ) WHERE trim(w) <> ''
 ),
 vocab AS (
@@ -1096,7 +1096,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = (
         docs.select(
             "doc_id",
-            F.explode(F.split(F.lower(F.col("text")), " ")).alias("w"),
+            F.explode(split_lower("text")).alias("w"),
         )
         .filter(F.trim(F.col("w")) != "")
     )
@@ -1128,10 +1128,10 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_heaps_law",
     tags=("text", "profiling"),
-    oracle="""
+    oracle=f"""
 WITH toks AS (
   SELECT source,
-         unnest(list_filter(string_split(lower(text), ' '), w -> w <> '')) AS w
+         unnest({WORDS_SQL}) AS w
   FROM documents
 ), per_tok AS (
   SELECT source, w, count(*) AS c FROM toks GROUP BY 1, 2
@@ -1175,8 +1175,7 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-6 sf0.1 second-scale gate); per-source columns are exact
     integers + one exact division."""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
-    toks = docs.select("source", F.explode(t).alias("w"))
+    toks = docs.select("source", F.explode(words("text")).alias("w"))
     per_tok = toks.groupBy("source", "w").agg(F.count(F.lit(1)).alias("c"))
     per_src = per_tok.groupBy("source").agg(
         F.sum("c").alias("n_tokens"),
@@ -1207,7 +1206,7 @@ KWIC_CTX = 2  # tokens of context each side
     tags=("text", "search"),
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> w <> '') AS t
+  SELECT doc_id, {WORDS_SQL} AS t
   FROM documents
 ), hits AS (
   SELECT doc_id, t, unnest(list_filter(range(1, len(t) + 1), i -> t[i] = '{KWIC_TERM}')) AS p
@@ -1232,8 +1231,7 @@ def text_concordance_kwic(spark: SparkSession, sf_dir: str) -> DataFrame:
     corrupt (Spark sequences run DESCENDING when lo > hi). Scan-local
     at any corpus size; output is hit-cardinality."""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
-    base = docs.select("doc_id", t.alias("t"))
+    base = docs.select("doc_id", words("text").alias("t"))
     hits = base.select(
         "doc_id",
         "t",
@@ -1267,7 +1265,7 @@ PMI_MIN_COUNT = 5  # collocation support floor
     tags=("text",),
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, list_filter(string_split(lower(text), ' '), w -> w <> '') AS t
+  SELECT doc_id, {WORDS_SQL} AS t
   FROM documents
 ), uni AS (
   SELECT unnest(t) AS w FROM toks
@@ -1304,8 +1302,7 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequent-bigram-sized, not corpus-sized. PMI itself is exact
     integer ratios through one ln, rounded 4dp."""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.filter(F.split(F.lower("text"), " "), lambda w: w != "")
-    toks = docs.select(t.alias("t"))
+    toks = docs.select(words("text").alias("t"))
     uni = toks.select(F.explode("t").alias("w"))
     ucnt = uni.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     utot = ucnt.agg(F.sum("c").alias("un"))
@@ -1352,9 +1349,9 @@ def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_self_bleu_diversity",
     tags=("text", "pipeline"),
-    oracle="""
+    oracle=f"""
 WITH toks AS (
-  SELECT doc_id, source, string_split(lower(text), ' ') AS t
+  SELECT doc_id, source, {SPLIT_LOWER_SQL} AS t
   FROM documents
 ), big AS (
   SELECT DISTINCT doc_id, source,
@@ -1403,7 +1400,7 @@ def text_self_bleu_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(
             "doc_id",
             "source",
-            F.split(F.lower("text"), " ").alias("t"),
+            split_lower("text").alias("t"),
         )
         .where(F.size("t") >= 2)  # guard: sequence(1, 0) runs DESCENDING
         .select(
@@ -1439,10 +1436,10 @@ def text_self_bleu_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_term_burst",
     tags=("text", "temporal", "analytics"),
-    oracle="""
+    oracle=f"""
 WITH tok AS (
   SELECT 1 + doc_id % 28 AS day,
-         unnest(string_split(lower(text), ' ')) AS term
+         unnest({SPLIT_LOWER_SQL}) AS term
   FROM documents
 ), td AS (
   SELECT term, day, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY 1, 2
@@ -1487,7 +1484,7 @@ def text_term_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         (1 + F.col("doc_id") % 28).alias("day"),
-        F.explode(F.split(F.lower("text"), " ")).alias("term"),
+        F.explode(split_lower("text")).alias("term"),
     )
     td = tok.groupBy("term", "day").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
     dec = "decimal(28,0)"
@@ -1520,9 +1517,9 @@ def text_term_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_suffix_prefix_stitch",
     tags=("text", "dedup", "pipeline"),
-    oracle="""
+    oracle=f"""
 WITH toks AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents
+  SELECT doc_id, {SPLIT_LOWER_SQL} AS t FROM documents
 ), sized AS (
   SELECT doc_id, t, len(t) AS n, len(t) // 2 AS h
   FROM toks WHERE len(t) >= 12
@@ -1561,7 +1558,7 @@ def text_suffix_prefix_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
     themselves a dedup signal. Every in-doc split is provably
     recovered; the test pins that count."""
     docs = load_table(spark, sf_dir, "documents")
-    t = F.split(F.lower("text"), " ")
+    t = split_lower("text")
     sized = docs.select(
         "doc_id", t.alias("t"), F.size(t).alias("n"),
         F.floor(F.size(t) / 2).cast("int").alias("h"),
@@ -1604,12 +1601,12 @@ def text_suffix_prefix_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_code_detect",
     tags=("text", "pipeline"),
-    oracle="""
+    oracle=f"""
 WITH feat AS (
   SELECT doc_id, source,
          length(text) AS n_chars,
-         len(regexp_extract_all(text, '[{}()\\[\\];=<>|&]')) AS n_sym,
-         len(list_filter(string_split(lower(text), ' '),
+         len(regexp_extract_all(text, '[{{}}()\\[\\];=<>|&]')) AS n_sym,
+         len(list_filter({SPLIT_LOWER_SQL},
              w -> w IN ('def','return','import','class','if','else','for',
                         'while','function','var','const','int','void'))) AS n_kw,
          len(list_filter(string_split(text, ' '), w -> trim(w) <> '')) AS n_tok
@@ -1650,7 +1647,7 @@ def text_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     kws = ["def", "return", "import", "class", "if", "else", "for",
            "while", "function", "var", "const", "int", "void"]
     n_kw = F.size(
-        F.filter(F.split(F.lower("text"), " "), lambda w: w.isin(kws))
+        F.filter(split_lower("text"), lambda w: w.isin(kws))
     )
     n_tok = F.size(F.filter(F.split("text", " "), lambda w: F.trim(w) != ""))
     sym_pct = F.round(n_sym * 100.0 / F.greatest(n_chars, F.lit(1)), 4)
@@ -1678,9 +1675,9 @@ def text_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_bigram_perplexity",
     tags=("text", "ml", "eval"),
-    oracle="""
+    oracle=f"""
 WITH toks AS (
-  SELECT doc_id, doc_id % 2 AS split, string_split(lower(text), ' ') AS t
+  SELECT doc_id, doc_id % 2 AS split, {SPLIT_LOWER_SQL} AS t
   FROM documents
 ), train_big AS (
   SELECT t[i] AS w1, t[i + 1] AS w2
@@ -1726,7 +1723,7 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         (F.col("doc_id") % 2).alias("split"),
-        F.split(F.lower("text"), " ").alias("t"),
+        split_lower("text").alias("t"),
     )
     big = toks.select(
         "split",
@@ -1766,10 +1763,10 @@ def text_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_readability_scores",
     tags=("text", "llm"),
-    oracle="""
+    oracle=f"""
 WITH d AS (
   SELECT source,
-         list_filter(string_split(lower(text), ' '), w -> trim(w) <> '') AS toks,
+         list_filter({SPLIT_LOWER_SQL}, w -> trim(w) <> '') AS toks,
          len(regexp_extract_all(lower(text), '[aeiou]+')) AS syll
   FROM documents
 ), per_doc AS (
@@ -1815,7 +1812,7 @@ def text_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     in codegen, no explode), then one hash agg to source cardinality;
     ratios are exact-integer divisions done once per source row."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), " "), lambda w: F.trim(w) != "")
+    toks = words("text")
     per_doc = docs.select(
         "source",
         F.size(toks).cast("bigint").alias("words"),
@@ -1849,10 +1846,10 @@ def text_readability_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_token_fertility",
     tags=("text", "llm"),
-    oracle="""
+    oracle=f"""
 WITH d AS (
   SELECT lang,
-         list_filter(string_split(lower(text), ' '), w -> trim(w) <> '') AS toks,
+         list_filter({SPLIT_LOWER_SQL}, w -> trim(w) <> '') AS toks,
          length(replace(text, ' ', '')) AS chars
   FROM documents
 ), per_doc AS (
@@ -1888,7 +1885,7 @@ def text_token_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero explode, zero shuffle beyond the lang-cardinality agg);
     counts are exact BIGINTs so the engines agree bit-for-bit."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), " "), lambda w: F.trim(w) != "")
+    toks = words("text")
     per_doc = docs.select(
         "lang",
         F.size(toks).cast("bigint").alias("words"),
@@ -1915,10 +1912,10 @@ def text_token_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "text_textrank_keywords",
     tags=("text", "graph", "llm", "iterative"),
-    oracle="""
+    oracle=f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split(lower(text), ' '), w -> trim(w) <> '') AS t
+         list_filter({SPLIT_LOWER_SQL}, w -> trim(w) <> '') AS t
   FROM documents
 ), vocab AS (
   SELECT w FROM (
@@ -1994,8 +1991,7 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     size); each iteration is one tiny join-agg. The only data-sized
     exchange is the vocabulary count."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower("text"), " "), lambda w: F.trim(w) != "")
-    d = docs.select("doc_id", toks.alias("t"))
+    d = docs.select("doc_id", words("text").alias("t"))
     vocab = (
         d.select(F.explode("t").alias("w"))
         .groupBy("w")
@@ -2068,10 +2064,10 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "eval_rouge_ngram",
     tags=("text", "eval", "ml"),
-    oracle="""
+    oracle=f"""
 WITH toks AS (
   SELECT doc_id,
-         list_filter(string_split(lower(text), ' '), w -> w <> '') AS l
+         {WORDS_SQL} AS l
   FROM documents
 ), grams AS (
   SELECT doc_id, 1 AS n, unnest(l) AS gram FROM toks
@@ -2133,7 +2129,7 @@ def eval_rouge_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs, no DP."""
     toks = load_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.filter(F.split(F.lower("text"), " "), lambda w: w != "").alias("l"),
+        words("text").alias("l"),
     )
     uni = toks.select("doc_id", F.lit(1).alias("n"), F.explode("l").alias("gram"))
     bi = toks.filter(F.size("l") >= 2).select(

@@ -186,3 +186,23 @@ def test_degenerate_docs_have_no_shingles_or_pairs(spark, texts):
     star = minhash_star_pairs(docs)
     assert star.count() == 0
     assert connected_components(star, "doc_a", "doc_b").count() == 0
+
+
+def test_minhash_feeds_match_oracles_on_tab_and_double_space(spark):
+    """Both MinHash feeds tokenize like their DuckDB oracles: a tab is
+    part of a word and a double space leaves an empty token that is
+    dropped, so only the double-space copy pairs with the original."""
+    import duckdb
+    import pandas as pd
+
+    from distributed_map_reduce_spark.operators.dedup import _MINHASH_ORACLE, _MINHASH_STAR_ORACLE
+
+    base = "alpha beta gamma delta epsilon zeta"
+    texts = [(1, base), (2, base.replace(" ", "\t", 1)), (3, base.replace(" ", "  ", 1))]
+    docs = spark.createDataFrame(texts, "doc_id long, text string")
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(texts, columns=["doc_id", "text"]))
+    for feed, oracle in ((minhash_star_pairs, _MINHASH_STAR_ORACLE), (minhash_lsh_pairs, _MINHASH_ORACLE)):
+        expected = sorted(r[:2] for r in con.execute(oracle).fetchall())
+        assert expected == [(1, 3)]
+        assert sorted(tuple(r) for r in feed(docs).select("doc_a", "doc_b").collect()) == expected

@@ -178,9 +178,8 @@ def test_decile_gate_drops_bottom_30pct(spark, sf_dir):
 def test_containment_catches_subdocument(spark):
     """A short doc fully embedded in a long doc scores containment 1.0
     even when its Jaccard vs the long doc is far below threshold."""
-    from distributed_map_reduce_spark.operators.dedup import (
-        containment_candidates, shingle_rows, tokens_col,
-    )
+    from distributed_map_reduce_spark.functions.normalize import words
+    from distributed_map_reduce_spark.operators.dedup import containment_candidates, shingle_rows
     from pyspark.sql import functions as F
 
     short = "alpha beta gamma delta epsilon zeta eta theta"
@@ -190,7 +189,7 @@ def test_containment_catches_subdocument(spark):
         "doc_id int, text string",
     )
     cand = containment_candidates(shingle_rows(docs))
-    d = docs.select("doc_id", F.array_distinct(tokens_col(F.col("text"))).alias("words"))
+    d = docs.select("doc_id", F.array_distinct(words("text")).alias("words"))
     got = (
         cand.join(d.select(F.col("doc_id").alias("doc_a"), F.col("words").alias("w_a")), "doc_a")
         .join(d.select(F.col("doc_id").alias("doc_b"), F.col("words").alias("w_b")), "doc_b")

@@ -42,3 +42,15 @@ def test_hyperplanes_are_deterministic():
     assert hyperplane(0) == hyperplane(0)
     assert hyperplane(0) != hyperplane(1)
     assert all(w in (-1, 1) for w in hyperplane(3))
+
+
+def test_adaptive_planes_empty_embeddings_give_zero_rows(spark, sf_dir, tmp_path):
+    """A zero-row embeddings table has no corpus size or dim to adapt
+    to: the query returns zero rows instead of failing on the probe."""
+    import pyarrow.parquet as pq
+
+    from distributed_map_reduce_spark.registry import queries
+
+    src = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    pq.write_table(src.slice(0, 0), tmp_path / "embeddings.parquet")
+    assert queries()["ann_lsh_adaptive_planes"](spark, str(tmp_path)).count() == 0
