@@ -1,6 +1,21 @@
 """Vector math over `array<float>` embedding columns — all JVM-side
 higher-order functions (`zip_with` + `aggregate`), no Python UDFs.
 
+The kernels, each defined once:
+
+- :func:`dot` — the one fold of element products;
+- :func:`norm` — ``sqrt(dot(a, a))``;
+- :func:`sq_l2` — the one fold of squared element differences;
+- :func:`cosine` — ``dot(a, b) / (na * nb)`` from norms the caller
+  already holds.
+
+The rule (V-SMART-Join's unilateral/conjunctive split): norms are
+computed once per ROW, as a column, and a pair pays exactly one
+:func:`dot`. There is deliberately no two-argument cosine: folding both
+norms inside it would cost three folds per pair instead of one. With
+``na = norm(a)`` the expression is exactly the three-fold one, so the
+doubles are identical either way.
+
 Accumulation is double-precision left-to-right over the array, the same
 order DuckDB's `list_cosine_similarity` uses, so oracle comparison is
 bit-stable after rounding.
@@ -25,20 +40,27 @@ def const_vector(ws: Iterable[float]) -> Column:
     return F.expr("array(" + ", ".join(f"{float(w)!r}D" for w in ws) + ")")
 
 
+def _fold(a: Column, b: Column, term) -> Column:
+    return F.aggregate(F.zip_with(a, b, term), F.lit(0.0), lambda acc, x: acc + x)
+
+
 def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    return _fold(a, b, lambda x, y: x * y)
 
 
 def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+def sq_l2(a: Column, b: Column) -> Column:
+    """Squared euclidean distance; ``F.sqrt`` of it is DuckDB's
+    ``list_distance``."""
+    return _fold(a, b, lambda x, y: (x - y) * (x - y))
+
+
+def cosine(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """Cosine of ``a`` and ``b`` given their norms ``na``, ``nb``."""
+    return dot(a, b) / (na * nb)
 
 
 # Measured dead end, recorded so it isn't retried: unrolling dot() into

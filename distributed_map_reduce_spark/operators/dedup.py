@@ -16,9 +16,8 @@ Charikar'02 SimHash, the GPT-3/C4 dedup recipes):
 - **n-gram Jaccard**: the exact verifier, blocked on (lang, length
   bucket) — |A∩B|/|A∪B| ≥ τ implies a length ratio ≥ τ, so same-bucket
   blocking is near-lossless for high τ.
-- **Embedding cosine**: IVF-style blocking (here the `label` column;
-  in production the LSH bucket from operators.similarity) + exact cosine
-  within blocks.
+- **Embedding cosine**: adaptive hyperplane-LSH buckets + exact cosine
+  within buckets (`operators.similarity.cosine_pairs`).
 
 Hashes are engine-portable by construction: one md5 per shingle reduced
 to an int mod 2^31−1, then k universal-hash functions (a·h+b mod p) with
@@ -720,35 +719,15 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair work — stays ~constant as the corpus grows instead of the
     static 2^8-way bucket's linear growth. Same candidate generator the
     ANN probe path uses, so the index is built once and shared."""
-    from ..functions.vectors import dot, norm
-    from .similarity import adaptive_bucketed
+    from .similarity import adaptive_bucketed, cosine_pairs
 
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
-    # Norms once per ROW (N folds), never per pair: cosine(a,b) inline
-    # would re-fold dot(a,a)/dot(b,b) on every candidate — 3 aggregate()
-    # evaluations per pair instead of 1, measured 11.5s -> ~4s at sf1.
-    # sqrt(dot(v,v)) per row is the identical float expression, so the
-    # pair-side value is bit-unchanged.
-    b = adaptive_bucketed(e).withColumn("nrm", norm(F.col("v")))
-    a = b.select(
-        F.col("vec_id").alias("vec_a"), F.col("v").alias("v_a"),
-        F.col("nrm").alias("n_a"), "bucket",
-    )
-    bb = b.select(
-        F.col("vec_id").alias("vec_b"), F.col("v").alias("v_b"),
-        F.col("nrm").alias("n_b"), "bucket",
-    )
-    sim = F.round(
-        dot(F.col("v_a"), F.col("v_b")) / (F.col("n_a") * F.col("n_b")), 6
-    )
     return (
-        a.join(bb, "bucket")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .withColumn("cos_sim", sim)
+        cosine_pairs(adaptive_bucketed(e), "bucket")
         .filter(F.col("cos_sim") >= 0.3)
-        .select("vec_a", "vec_b", "cos_sim")
+        .select(F.col("ia").alias("vec_a"), F.col("ib").alias("vec_b"), "cos_sim")
     )
 
 

@@ -764,9 +764,7 @@ def multimodal_interleaved_assembly(spark: SparkSession, sf_dir: str) -> DataFra
     coin = lambda pos: F.conv(
         F.substring(F.md5(F.col("doc_id").cast("string")), pos, 2), 16, 10
     ).cast("bigint")
-    n_text = F.size(
-        F.filter(F.split(F.col("text"), " "), lambda w: F.trim(w) != "")
-    )
+    n_text = F.size(words("text"))
     n_images = (1 + coin(5) % 3).alias("n_images")
     w = 64 * (4 + coin(1) % 13)
     h = 64 * (4 + coin(3) % 13)

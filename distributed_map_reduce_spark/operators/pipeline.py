@@ -60,7 +60,7 @@ def pipeline_curate_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-language token budget. At 100 TB: two exchanges total
     (fingerprint window, language agg); the filters run inside the scan."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.filter(F.split("text", " "), lambda w: F.trim(w) != ""))
+    n_tokens = F.size(words("text"))
     scored = docs.select(
         "doc_id", "lang", n_tokens.alias("n_tokens"), fingerprint("text").alias("fingerprint")
     )
@@ -210,7 +210,7 @@ def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     window over the shard partitioning — reuses pipeline_shuffle_shard's
     exchange, no per-doc Python, no driver state, any corpus size."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.filter(F.split("text", " "), lambda w: F.trim(w) != ""))
+    n_tokens = F.size(words("text"))
     toks = docs.select(
         "doc_id",
         _doc_hash().alias("hh"),
@@ -263,7 +263,7 @@ def pipeline_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     One window per source partition; budgets are exact and reproducible
     run-over-run because the order is content-derived, not RNG state."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(F.filter(F.split("text", " "), lambda w: F.trim(w) != ""))
+    n_tokens = F.size(words("text"))
     toks = docs.select(
         "doc_id", "source", _doc_hash().alias("hh"), n_tokens.cast("bigint").alias("n_tokens")
     )
@@ -550,7 +550,7 @@ def pipeline_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     only so the output composes with downstream joins.
     """
     docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.filter(F.split("text", " "), lambda w: w != ""))
+    n_tok = F.size(words("text"))
     per_src = docs.groupBy("source").agg(F.sum(n_tok).cast("long").alias("n_tokens"))
     tot = per_src.agg(
         F.sum("n_tokens").alias("total"), F.count(F.lit(1)).alias("n_src")
@@ -869,7 +869,7 @@ def pipeline_mixture_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest (doc_id, copies) streams straight to the shuffle-shard
     writer (`pipeline_shuffle_shard`)."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(F.filter(F.split("text", " "), lambda w: w != ""))
+    n_tok = F.size(words("text"))
     per_src = docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum(n_tok).cast("bigint").alias("n_tokens"),
@@ -1598,7 +1598,7 @@ def pipeline_instruction_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.array_join(F.slice(toks, 1, 8), " ").alias("instruction_key"),
         F.greatest(
-            F.size(F.split("text", " ")) - 8, F.lit(0)
+            F.size(toks) - 8, F.lit(0)
         ).alias("response_tokens"),
     )
     w = Window.partitionBy("instruction_key").orderBy(
@@ -1661,7 +1661,7 @@ def pipeline_blocklist_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_hits = F.size(
         F.filter(split_lower("text"), lambda w: w.isin(terms))
     )
-    n_tokens = F.size(F.filter(F.split("text", " "), lambda w: F.trim(w) != ""))
+    n_tokens = F.size(words("text"))
     flagged = docs.select(
         "source",
         n_hits.alias("n_hits"),

@@ -1,5 +1,22 @@
 """Similarity search over embedding columns (`array<float>`, dim=64).
 
+Each vector-search stage has one implementation here (the column math
+is in `functions/vectors.py`: `dot`, `norm`, `sq_l2`, `cosine`):
+
+- :func:`cosine_pairs` — the bucket/cluster pair self-join, each
+  unordered pair once (``ia < ib``) with its rounded cosine;
+- :func:`mirrored_topk` — both directions of those pairs, then each
+  vector's top-k;
+- :func:`query_topk` — a broadcast query set's top-k by rounded cosine;
+- :func:`centroids` — per-key mean vectors (posexplode → avg → sorted
+  array);
+- :func:`_plane_bits` — the hyperplane-LSH signature bit sum.
+
+The rule: norms are computed once per row, and a pair pays one `dot`.
+Oracles whose centroid, bucketed-kNN or adaptive-plane CTEs are the
+same text splice `_CENTROIDS_SQL`, `_KNN_RANKED_SQL` and
+:func:`_adaptive_sig_sql`.
+
 Two tiers, per the standard ANN playbook:
 
 - **Brute-force top-k** (the exactness baseline): broadcast the query
@@ -20,12 +37,14 @@ DuckDB oracle reproduces them exactly from the same literals.
 from __future__ import annotations
 
 import hashlib
+from functools import reduce
+from operator import add
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..functions.normalize import SPLIT_LOWER_SQL, WORDS_SQL, words
-from ..functions.vectors import as_double, const_vector, cosine, dot
+from ..functions.vectors import as_double, const_vector, cosine, dot, norm, sq_l2
 from ..registry import register
 from ..sources import load_table
 
@@ -41,20 +60,19 @@ def hyperplane(p: int, dim: int = DIM) -> list[int]:
     ]
 
 
-def _plane_lit(p: int):
-    return const_vector(hyperplane(p))
+def _plane_bits(vec, n_planes: int, dim: int = DIM) -> F.Column:
+    """Sum over planes p of 2^p where ``vec`` lies on the plane's
+    non-negative side: the hyperplane-LSH signature."""
+    return reduce(add, [
+        F.when(dot(vec, const_vector(hyperplane(p, dim))) >= 0, F.lit(1)).otherwise(F.lit(0))
+        * (2**p)
+        for p in range(n_planes)
+    ])
 
 
 def lsh_bucket(vec) -> F.Column:
     """b-bit random-hyperplane signature of a double-array column."""
-    bits = [
-        F.when(dot(vec, _plane_lit(p)) >= 0, F.lit(1)).otherwise(F.lit(0)) * (2**p)
-        for p in range(N_PLANES)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("int")
+    return _plane_bits(vec, N_PLANES).cast("int")
 
 
 def _plane_sql(p: int) -> str:
@@ -94,7 +112,7 @@ def _adaptive_sig_sql(src: str = "e", floor: int = N_PLANES,
     DuckDB SQL, so the differential check covers the adaptivity itself.
     Splice after a CTE named ``src`` with columns (vec_id, ..., v)."""
     return f"""dims AS (SELECT min(len(v)) AS dim FROM {src}),
-     np AS (SELECT GREATEST({floor}, CAST(ceil(log2(count(*) / {target}.0)) AS INT))
+     np AS (SELECT GREATEST({floor}, CAST(ceil(log2(greatest(count(*), 1) / {target}.0)) AS INT))
               AS n_planes FROM {src}),
      planes AS (
        SELECT p,
@@ -133,26 +151,124 @@ def adaptive_bucket(e: DataFrame, floor: int = N_PLANES,
         # no rows, all-null vectors, or an empty (dim-0) vector: no
         # meaningful hyperplane exists — degrade to a single bucket.
         return F.lit(0).cast("bigint"), floor
-    dim = int(stats["dim"])
     npl = adaptive_n_planes(int(stats["n"]), floor=floor, target=target)
-    bits = [
-        F.when(
-            dot(F.col("v"), const_vector(hyperplane(p, dim))) >= 0,
-            F.lit(1),
-        ).otherwise(F.lit(0))
-        * (2**p)
-        for p in range(npl)
-    ]
-    bucket = bits[0]
-    for bb in bits[1:]:
-        bucket = bucket + bb
-    return bucket.cast("bigint"), npl
+    return _plane_bits(F.col("v"), npl, int(stats["dim"])).cast("bigint"), npl
 
 
 def adaptive_bucketed(e: DataFrame, floor: int = N_PLANES,
                       target: int = BUCKET_TARGET) -> DataFrame:
     """Attach :func:`adaptive_bucket` as the ``bucket`` column."""
     return e.withColumn("bucket", adaptive_bucket(e, floor, target)[0])
+
+
+def cosine_pairs(df: DataFrame, key: str, carry: tuple[str, ...] = ()) -> DataFrame:
+    """Every unordered pair of rows of ``df`` (vec_id, v, key, *carry)
+    that share ``key``, once (``ia < ib``), with its 6dp-rounded cosine.
+    Columns: key, ia, ib, ``<c>_a`` and ``<c>_b`` per carried ``c``,
+    cos_sim; callers rename in their final select."""
+    b = df.withColumn("nrm", norm(F.col("v")))
+
+    def side(s: str) -> DataFrame:
+        return b.select(
+            F.col("vec_id").alias(f"i{s}"),
+            F.col("v").alias(f"v_{s}"),
+            F.col("nrm").alias(f"n_{s}"),
+            key,
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+
+    return (
+        side("a").join(side("b"), key)
+        .filter(F.col("ia") < F.col("ib"))
+        .select(
+            key,
+            "ia",
+            "ib",
+            *[f"{c}_{s}" for s in "ab" for c in carry],
+            F.round(
+                cosine(F.col("v_a"), F.col("v_b"), F.col("n_a"), F.col("n_b")), 6
+            ).alias("cos_sim"),
+        )
+    )
+
+
+def mirrored_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Each vector's top-``k`` neighbours (vec_a, vec_b, cos_sim, rnk;
+    ties to the lower vec_b) from :func:`cosine_pairs` rows. Both
+    directions are restored AFTER the one fold per pair, by exploding
+    the mirrored id structs in the same branch: a two-branch union
+    would re-run the join and pay the folds twice. Exact, because
+    dot(a, b) == dot(b, a) bit for bit (per-element products commute,
+    the fold runs in element order both ways)."""
+    both = pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("ia").alias("vec_a"), F.col("ib").alias("vec_b")),
+                F.struct(F.col("ib").alias("vec_a"), F.col("ia").alias("vec_b")),
+            )
+        ).alias("p"),
+        "cos_sim",
+    ).select("p.vec_a", "p.vec_b", "cos_sim")
+    w = W.partitionBy("vec_a").orderBy(F.col("cos_sim").desc(), "vec_b")
+    return (
+        both.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("vec_a", "vec_b", "cos_sim", "rnk")
+    )
+
+
+def query_topk(corpus: DataFrame, queries: DataFrame, k: int,
+               on: F.Column | None = None) -> DataFrame:
+    """Each query's top-``k`` neighbours by 6dp-rounded cosine, itself
+    excluded, ties to the lower neighbor_id: ``queries`` (query_id, qv,
+    qnrm) is broadcast against ``corpus`` (vec_id, v, nrm), restricted
+    to the pairs where ``on`` holds when given (a shared bucket, a
+    probed list). Columns: query_id, neighbor_id, cos_sim, rn."""
+    cond = F.col("query_id") != F.col("vec_id")
+    scored = corpus.join(
+        F.broadcast(queries), cond if on is None else on & cond
+    ).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        F.round(
+            cosine(F.col("qv"), F.col("v"), F.col("qnrm"), F.col("nrm")), 6
+        ).alias("cos_sim"),
+    )
+    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
+    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
+
+
+def centroids(df: DataFrame, key: str) -> DataFrame:
+    """Per-``key`` mean vector of ``v`` as (c_label, cv): one posexplode,
+    one (key, dim) average, the dims collected back in order — the
+    k-means M-step. Its oracle twin is ``_CENTROIDS_SQL``."""
+    cvals = (
+        df.select(key, F.posexplode("v").alias("dim", "val"))
+        .groupBy(key, "dim")
+        .agg(F.avg("val").alias("c"))
+    )
+    return cvals.groupBy(F.col(key).alias("c_label")).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("dim", "c"))), lambda s: s["c"]
+        ).alias("cv")
+    )
+
+
+_CENTROIDS_SQL = """dims AS (SELECT label, unnest(range(1, len(v) + 1)) AS dim, v FROM e),
+cvals AS (SELECT label, dim, avg(v[dim]) AS c FROM dims GROUP BY label, dim),
+cent AS (SELECT label AS c_label, array_agg(c ORDER BY dim) AS cv FROM cvals GROUP BY label)"""
+
+_KNN_RANKED_SQL = """pairs AS (
+       SELECT a.vec_id AS vec_a, n.vec_id AS vec_b,
+              round(list_cosine_similarity(a.v, n.v), 6) AS cos_sim
+       FROM b a JOIN b n ON a.bucket = n.bucket AND a.vec_id <> n.vec_id
+     ),
+     ranked AS (
+       SELECT vec_a, vec_b, cos_sim,
+              row_number() OVER (PARTITION BY vec_a
+                                 ORDER BY cos_sim DESC, vec_b) AS rnk
+       FROM pairs
+     )"""
 
 
 @register(
@@ -176,14 +292,7 @@ SELECT query_id, neighbor_id, cos_sim, rn FROM (
 )
 def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-5 cosine neighbors for 8 query vectors: broadcast the
-    queries, one corpus scan, per-query top-k window.
-
-    r11 (guide §1.2; vectors.py lever (a)): norms are computed once per
-    ROW — N + |Q| folds — instead of inside the per-pair cosine (3 folds
-    per pair). dot(a,b)/(|a|·|b|) with precomputed |a|,|b| is the exact
-    expression cosine() expands to, so the doubles are bit-identical."""
-    from ..functions.vectors import norm
-
+    queries, one corpus scan, per-query top-k window."""
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     ).withColumn("nrm", norm(F.col("v")))
@@ -192,18 +301,7 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v").alias("qv"),
         F.col("nrm").alias("qnrm"),
     )
-    scored = (
-        e.join(F.broadcast(q), F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 6
-            ).alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5)
+    return query_topk(e, q, 5)
 
 
 @register(
@@ -253,12 +351,7 @@ SELECT query_id, neighbor_id, cos_sim, rn FROM (
 )
 def ann_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-5: probe only the query's LSH bucket (the scale
-    path — each query scans ~N/2^b of the corpus instead of N).
-
-    r11: per-row norm precompute (see [[ann_bruteforce_topk]]) — the
-    per-pair cosine is one dot fold instead of three."""
-    from ..functions.vectors import norm
-
+    path — each query scans ~N/2^b of the corpus instead of N)."""
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
@@ -269,21 +362,9 @@ def ann_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
         F.col("nrm").alias("qnrm"),
-        "bucket",
+        F.col("bucket").alias("q_bucket"),
     )
-    scored = (
-        b.join(F.broadcast(q), "bucket")
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 6
-            ).alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5)
+    return query_topk(b, q, 5, on=F.col("bucket") == F.col("q_bucket"))
 
 
 @register(
@@ -321,11 +402,9 @@ def ann_ivf_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ann_kmeans_assign",
     tags=("similarity", "iterative"),
-    oracle="""
+    oracle=f"""
 WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-dims AS (SELECT label, unnest(range(1, len(v) + 1)) AS dim, v FROM e),
-cvals AS (SELECT label, dim, avg(v[dim]) AS c FROM dims GROUP BY label, dim),
-cent AS (SELECT label AS c_label, array_agg(c ORDER BY dim) AS cv FROM cvals GROUP BY label),
+{_CENTROIDS_SQL},
 scored AS (
   SELECT vec_id, label, c_label, list_distance(v, cv) AS d
   FROM e CROSS JOIN cent
@@ -349,23 +428,8 @@ def ann_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", as_double(F.col("embedding")).alias("v")
     )
-    cvals = (
-        e.select("label", F.posexplode("v").alias("dim", "val"))
-        .groupBy("label", "dim")
-        .agg(F.avg("val").alias("c"))
-    )
-    cent = cvals.groupBy(F.col("label").alias("c_label")).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "c"))), lambda s: s["c"]
-        ).alias("cv")
-    )
-    d = F.sqrt(
-        F.aggregate(
-            F.zip_with("v", "cv", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
+    cent = centroids(e, "label")
+    d = F.sqrt(sq_l2(F.col("v"), F.col("cv")))
     scored = e.crossJoin(F.broadcast(cent)).withColumn("d", d)
     rn = F.row_number().over(
         W.partitionBy("vec_id").orderBy(F.col("d"), F.col("c_label"))
@@ -390,17 +454,7 @@ def ann_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
      {_adaptive_sig_sql('e', target=32)},
      b AS (SELECT e.vec_id, e.v, s.bucket FROM e JOIN sigs s USING (vec_id)),
-     pairs AS (
-       SELECT a.vec_id AS vec_a, n.vec_id AS vec_b,
-              round(list_cosine_similarity(a.v, n.v), 6) AS cos_sim
-       FROM b a JOIN b n ON a.bucket = n.bucket AND a.vec_id <> n.vec_id
-     ),
-     ranked AS (
-       SELECT vec_a, vec_b, cos_sim,
-              row_number() OVER (PARTITION BY vec_a
-                                 ORDER BY cos_sim DESC, vec_b) AS rnk
-       FROM pairs
-     )
+     {_KNN_RANKED_SQL}
 SELECT vec_a, vec_b, cos_sim, rnk FROM ranked WHERE rnk <= 3
 """,
 )
@@ -423,64 +477,10 @@ def similarity_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine fold is the measured per-pair cost floor, so halving the
     expected pair count is worth the recall margin.
     """
-    from ..functions.vectors import norm
-
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
-    # norms precomputed per vector (N rows), not per pair: the pair-side
-    # cosine is then one dot product — dot(a,b)/(|a|·|b|) is the identical
-    # floating-point expression, so results stay bit-stable vs the oracle
-    b = adaptive_bucketed(e, target=32).withColumn("nrm", norm(F.col("v")))
-    a = b.select(
-        F.col("vec_id").alias("ia"),
-        F.col("v").alias("v_a"),
-        F.col("nrm").alias("n_a"),
-        "bucket",
-    )
-    n = b.select(
-        F.col("vec_id").alias("ib"),
-        F.col("v").alias("v_b"),
-        F.col("nrm").alias("n_b"),
-        "bucket",
-    )
-    # r10 OPTIMIZATION (guide §1.2 per-task work): the symmetric
-    # self-join used to evaluate every pair's 64-element cosine fold
-    # TWICE — once per direction. One ia < ib pass computes each fold
-    # once; exploding the mirrored (vec_a, vec_b) struct pair restores
-    # both directions AFTER the fold, in the same single branch (a
-    # two-branch union would re-execute the join and pay the folds
-    # twice again). Bit-identical: zip_with multiply is commutative
-    # per element and the fold order is element order on both
-    # directions, so dot(a,b) == dot(b,a) exactly — digest-verified at
-    # sf0.1 and sf1 (−19% wall at sf1; the pair fold is the documented
-    # per-pair cost floor of this family).
-    half = (
-        a.join(n, "bucket")
-        .filter(F.col("ia") < F.col("ib"))
-        .select(
-            "ia",
-            "ib",
-            F.round(
-                dot(F.col("v_a"), F.col("v_b")) / (F.col("n_a") * F.col("n_b")), 6
-            ).alias("cos_sim"),
-        )
-    )
-    pairs = half.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("ia").alias("vec_a"), F.col("ib").alias("vec_b")),
-                F.struct(F.col("ib").alias("vec_a"), F.col("ia").alias("vec_b")),
-            )
-        ).alias("p"),
-        "cos_sim",
-    ).select("p.vec_a", "p.vec_b", "cos_sim")
-    w = W.partitionBy("vec_a").orderBy(F.col("cos_sim").desc(), "vec_b")
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("vec_a", "vec_b", "cos_sim", "rnk")
-    )
+    return mirrored_topk(cosine_pairs(adaptive_bucketed(e, target=32), "bucket"), 3)
 
 
 @register(
@@ -649,51 +649,22 @@ def similarity_matryoshka_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings (4x memory and bandwidth back) before ANN quality
     degrades. Both searches are broadcast-|Q| brute force (8 queries),
     zero corpus shuffle; ranks tie-break on (rounded cosine, vec_id) so
-    both engines produce identical neighbor sets.
+    both engines produce identical neighbor sets."""
 
-    r11: both the full and truncated vectors get per-ROW norms (and the
-    16-dim slice is materialized once per row), so each pair pays one
-    dot fold per ranking instead of three folds plus two slices — see
-    [[ann_bruteforce_topk]]; identical doubles by construction."""
-    from ..functions.vectors import norm
+    def top5(e: DataFrame) -> DataFrame:
+        e = e.withColumn("nrm", norm(F.col("v")))
+        q = e.filter(F.col("vec_id") < 8).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("v").alias("qv"),
+            F.col("nrm").alias("qnrm"),
+        )
+        return query_topk(e, q, 5)
 
-    e = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", as_double(F.col("embedding")).alias("v"))
-        .withColumn("v16", F.slice("v", 1, 16))
-        .withColumn("nrm", norm(F.col("v")))
-        .withColumn("nrm16", norm(F.col("v16")))
+    e = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double(F.col("embedding")).alias("v")
     )
-    q = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("v16").alias("qv16"),
-        F.col("nrm").alias("qnrm"),
-        F.col("nrm16").alias("qnrm16"),
-    )
-
-    def topk(sim_col):
-        pairs = q.crossJoin(e).filter(F.col("query_id") != F.col("vec_id"))
-        scored = pairs.select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), sim_col.alias("s")
-        )
-        rn = F.row_number().over(
-            W.partitionBy("query_id").orderBy(F.col("s").desc(), "neighbor_id")
-        )
-        return (
-            scored.withColumn("rn", rn)
-            .filter(F.col("rn") <= 5)
-            .select("query_id", "neighbor_id")
-        )
-
-    full = topk(
-        F.round(dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 6)
-    )
-    trunc = topk(
-        F.round(
-            dot(F.col("qv16"), F.col("v16")) / (F.col("qnrm16") * F.col("nrm16")), 6
-        )
-    )
+    full = top5(e).select("query_id", "neighbor_id")
+    trunc = top5(e.select("vec_id", F.slice("v", 1, 16).alias("v")))
     t = trunc.select(
         F.col("query_id").alias("t_q"), F.col("neighbor_id").alias("t_n")
     )
@@ -722,14 +693,7 @@ def _argmin_id(v_col, arr_col):
         F.transform(
             arr_col,
             lambda s: F.struct(
-                F.sqrt(
-                    F.aggregate(
-                        F.zip_with(v_col, s["sv"], lambda x, y: (x - y) * (x - y)),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    )
-                ).alias("d"),
-                s["id"].alias("id"),
+                F.sqrt(sq_l2(v_col, s["sv"])).alias("d"), s["id"].alias("id")
             ),
         )
     )["id"]
@@ -739,11 +703,9 @@ def _argmin_id(v_col, arr_col):
     "similarity_semdedup_prune",
     bench=True,
     tags=("similarity", "dedup", "pipeline"),
-    oracle="""
+    oracle=f"""
 WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-dims AS (SELECT label, unnest(range(1, len(v) + 1)) AS dim, v FROM e),
-cvals AS (SELECT label, dim, avg(v[dim]) AS c FROM dims GROUP BY label, dim),
-cent AS (SELECT label AS c_label, array_agg(c ORDER BY dim) AS cv FROM cvals GROUP BY label),
+{_CENTROIDS_SQL},
 assigned AS (
   SELECT vec_id, v, c_label,
          row_number() OVER (PARTITION BY vec_id ORDER BY list_distance(v, cv), c_label) AS rn
@@ -917,16 +879,7 @@ def similarity_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", as_double(F.col("embedding")).alias("v")
     )
-    cvals = (
-        e.select("label", F.posexplode("v").alias("dim", "val"))
-        .groupBy("label", "dim")
-        .agg(F.avg("val").alias("c"))
-    )
-    cent = cvals.groupBy(F.col("label").alias("c_label")).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "c"))), lambda s: s["c"]
-        ).alias("cv")
-    )
+    cent = centroids(e, "label")
     # The coarse E-step is a PROJECTION-LEVEL argmin (r9): all k
     # centroids collapse into one broadcast array row and each member
     # row computes its nearest centroid inside one expression — no
@@ -957,15 +910,6 @@ def similarity_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (~100 MB at sf10).
         .localCheckpoint(eager=True)
     )
-    # Per-vector norms are precomputed ONCE (N rows) instead of inside the
-    # per-pair cosine (N²/clusters pairs × 3 dot products). dot(a,b)/(|a|·|b|)
-    # vs DuckDB's list_cosine_similarity can differ in the last ulp
-    # (sqrt(x)*sqrt(y) vs sqrt(x*y), accumulation order); the repo's usual
-    # float discipline applies — the 6dp rounding agrees on these fixtures,
-    # not by bit-exactness guarantee. Pair cost drops 3× (bench: 4.5s → ~2s
-    # at sf0.1).
-    from ..functions.vectors import norm
-
     # NOT localCheckpointed, unlike the graph family's multi-reference
     # frames: measured at sf1, the self-join's two references already
     # share the E-step exchange (ReusedExchange), and materializing the
@@ -1155,37 +1099,22 @@ def similarity_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .alias("cluster"),
         )
-    memn = capped.withColumn("nrm", norm(F.col("v")))
-    a = memn.select(
-        "cluster",
-        F.col("vec_id").alias("keep_id"),
-        F.col("v").alias("v_a"),
-        F.col("nrm").alias("n_a"),
-    )
-    b = memn.select(
-        "cluster",
-        F.col("vec_id").alias("prune_id"),
-        F.col("v").alias("v_b"),
-        F.col("nrm").alias("n_b"),
-    )
-    pairs = (
-        a.join(b, "cluster")
-        .filter(F.col("keep_id") < F.col("prune_id"))
-        .withColumn(
-            "cos_sim",
-            F.round(
-                dot(F.col("v_a"), F.col("v_b")) / (F.col("n_a") * F.col("n_b")), 6
-            ),
-        )
-        .filter(F.col("cos_sim") >= 0.3)
-    )
+    # dot(a,b)/(|a|·|b|) vs DuckDB's list_cosine_similarity can differ
+    # in the last ulp (sqrt(x)*sqrt(y) vs sqrt(x*y)); the 6dp rounding
+    # agrees on these fixtures, not by a bit-exactness guarantee.
+    pairs = cosine_pairs(capped, "cluster").filter(F.col("cos_sim") >= 0.3)
     best = F.row_number().over(
-        W.partitionBy("prune_id").orderBy(F.col("cos_sim").desc(), "keep_id")
+        W.partitionBy("ib").orderBy(F.col("cos_sim").desc(), "ia")
     )
     return (
         pairs.withColumn("brn", best)
         .filter(F.col("brn") == 1)
-        .select("cluster", "prune_id", F.col("keep_id").alias("dup_of"), "cos_sim")
+        .select(
+            "cluster",
+            F.col("ib").alias("prune_id"),
+            F.col("ia").alias("dup_of"),
+            "cos_sim",
+        )
     )
 
 
@@ -1264,13 +1193,6 @@ def similarity_random_projection_audit(spark: SparkSession, sf_dir: str) -> Data
               for j in range(RP_DIM)]
         ).alias("p"),
     )
-    l2 = lambda a, b: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
     ea = e.filter(F.col("vec_id") < 100).select(
         F.col("vec_id").alias("id_a"), F.col("v").alias("va")
     )
@@ -1284,8 +1206,8 @@ def similarity_random_projection_audit(spark: SparkSession, sf_dir: str) -> Data
         .select(
             "id_a",
             "id_b",
-            l2(F.col("va"), F.col("vb")).alias("dist_orig"),
-            l2(F.col("pa"), F.col("pb")).alias("dist_proj"),
+            F.sqrt(sq_l2(F.col("va"), F.col("vb"))).alias("dist_orig"),
+            F.sqrt(sq_l2(F.col("pa"), F.col("pb"))).alias("dist_proj"),
         )
     )
     return (
@@ -1301,24 +1223,12 @@ def similarity_random_projection_audit(spark: SparkSession, sf_dir: str) -> Data
     )
 
 
-def _sq_l2(a, b):
-    """Squared L2 between two double-array columns — zip_with/aggregate,
-    JVM-side, left-to-right accumulation (same order DuckDB uses)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 @register(
     "ann_ivf_multiprobe",
     tags=("similarity",),
-    oracle="""
+    oracle=f"""
 WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-dims AS (SELECT label, unnest(range(1, len(v) + 1)) AS dim, v FROM e),
-cvals AS (SELECT label, dim, avg(v[dim]) AS c FROM dims GROUP BY label, dim),
-cent AS (SELECT label AS c_label, array_agg(c ORDER BY dim) AS cv FROM cvals GROUP BY label),
+{_CENTROIDS_SQL},
 q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 8),
 pr AS (
   SELECT query_id, qv, c_label FROM (
@@ -1357,24 +1267,10 @@ def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     `ann_lsh_probe`/`ann_kmeans_assign` (driver-green r1) to the probed
     IVF *search* path.
     """
-    from ..functions.vectors import norm
-
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", as_double(F.col("embedding")).alias("v")
     ).withColumn("nrm", norm(F.col("v")))
-    cvals = (
-        e.select("label", F.posexplode("v").alias("dim0", "val"))
-        .groupBy("label", "dim0")
-        .agg(F.avg("val").alias("c"))
-    )
-    cent = (
-        cvals.groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("dim0", "c"))).alias("s"))
-        .select(
-            F.col("label").alias("c_label"),
-            F.transform("s", lambda st: st["c"]).alias("cv"),
-        )
-    )
+    cent = centroids(e, "label")
     q = e.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -1383,26 +1279,12 @@ def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     crn = W.partitionBy("query_id").orderBy(F.col("cd"), F.col("c_label"))
     probes = (
         q.crossJoin(F.broadcast(cent))  # 8 queries x n_lists: tiny
-        .withColumn("cd", F.sqrt(_sq_l2(F.col("qv"), F.col("cv"))))
+        .withColumn("cd", F.sqrt(sq_l2(F.col("qv"), F.col("cv"))))
         .withColumn("crn", F.row_number().over(crn))
         .filter(F.col("crn") <= 2)
-        .select("query_id", "qv", "qnrm", F.col("c_label").alias("label"))
+        .select("query_id", "qv", "qnrm", "c_label")
     )
-    # r11: per-row norms (see [[ann_bruteforce_topk]]) — one dot fold
-    # per candidate pair instead of three; identical doubles.
-    cand = (
-        e.join(F.broadcast(probes), "label")
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round(
-                dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 6
-            ).alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("neighbor_id"))
-    return cand.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 5)
+    return query_topk(e, probes, 5, on=F.col("label") == F.col("c_label"))
 
 
 @register(
@@ -1464,9 +1346,7 @@ def similarity_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "d2",
-            _sq_l2(
-                F.expr("slice(v, m*8+1, 8)"), F.expr("slice(cv, m*8+1, 8)")
-            ),
+            sq_l2(F.expr("slice(v, m*8+1, 8)"), F.expr("slice(cv, m*8+1, 8)")),
         )
     )
     rn = W.partitionBy("vec_id", "m").orderBy(F.sqrt(F.col("d2")), F.col("code_id"))
@@ -1535,35 +1415,20 @@ def ann_kmeans_lloyd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "label", as_double(F.col("embedding")).alias("v")
     )
 
-    def m_step(df: DataFrame, label_col: str) -> DataFrame:
-        cvals = (
-            df.select(label_col, F.posexplode("v").alias("dim0", "val"))
-            .groupBy(label_col, "dim0")
-            .agg(F.avg("val").alias("c"))
-        )
-        return (
-            cvals.groupBy(label_col)
-            .agg(F.array_sort(F.collect_list(F.struct("dim0", "c"))).alias("s"))
-            .select(
-                F.col(label_col).alias("cl"),
-                F.transform("s", lambda st: st["c"]).alias("cv"),
-            )
-        )
-
     def e_step(df: DataFrame, cent: DataFrame, out_col: str) -> DataFrame:
-        rn = W.partitionBy("vec_id").orderBy(F.col("d"), F.col("cl"))
+        rn = W.partitionBy("vec_id").orderBy(F.col("d"), F.col("c_label"))
         return (
             df.crossJoin(F.broadcast(cent))  # corpus x k centroids (broadcast)
-            .withColumn("d", F.sqrt(_sq_l2(F.col("v"), F.col("cv"))))
+            .withColumn("d", F.sqrt(sq_l2(F.col("v"), F.col("cv"))))
             .withColumn("rn", F.row_number().over(rn))
             .filter(F.col("rn") == 1)
             .drop("rn", "cv")
-            .withColumnRenamed("cl", out_col)
+            .withColumnRenamed("c_label", out_col)
         )
 
-    c0 = m_step(e, "label")
+    c0 = centroids(e, "label")
     a1 = e_step(e.select("vec_id", "v"), c0, "c1")
-    c1 = m_step(a1.select(F.col("c1"), "v"), "c1")
+    c1 = centroids(a1, "c1")
     a2 = e_step(a1.select("vec_id", "c1", "v"), c1, "c2")
     return a2.select(
         "vec_id",
@@ -1695,40 +1560,11 @@ def similarity_user_trajectory(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ann_lsh_adaptive_planes",
     bench=True,
     tags=("similarity", "scale"),
-    oracle="""
+    oracle=f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-     dims AS (SELECT len(v) AS dim FROM e LIMIT 1),
-     np AS (SELECT GREATEST(4, CAST(ceil(log2(count(*) / 64.0)) AS INT)) AS n_planes
-            FROM e),
-     planes AS (
-       SELECT p,
-              list(CAST(CASE WHEN substr(md5('plane-' || p || '-' || i), 1, 1)
-                              IN ('0','2','4','6','8','a','c','e')
-                         THEN 1.0 ELSE -1.0 END AS DOUBLE) ORDER BY i) AS w
-       FROM (SELECT unnest(range(0, (SELECT n_planes FROM np))) AS p),
-            (SELECT unnest(range(0, (SELECT dim FROM dims))) AS i)
-       GROUP BY p
-     ),
-     sigs AS (
-       SELECT e.vec_id,
-              CAST(sum(CASE WHEN list_dot_product(e.v, pl.w) >= 0
-                            THEN CAST(power(2, pl.p) AS BIGINT) ELSE 0 END)
-                   AS BIGINT) AS bucket
-       FROM e CROSS JOIN planes pl
-       GROUP BY e.vec_id
-     ),
+     {_adaptive_sig_sql('e', floor=4)},
      b AS (SELECT e.vec_id, e.v, s.bucket FROM e JOIN sigs s USING (vec_id)),
-     pairs AS (
-       SELECT a.vec_id AS vec_a, n.vec_id AS vec_b,
-              round(list_cosine_similarity(a.v, n.v), 6) AS cos_sim
-       FROM b a JOIN b n ON a.bucket = n.bucket AND a.vec_id <> n.vec_id
-     ),
-     ranked AS (
-       SELECT vec_a, vec_b, cos_sim,
-              row_number() OVER (PARTITION BY vec_a
-                                 ORDER BY cos_sim DESC, vec_b) AS rnk
-       FROM pairs
-     )
+     {_KNN_RANKED_SQL}
 SELECT vec_a, vec_b, cos_sim, rnk,
        CAST((SELECT n_planes FROM np) AS INT) AS n_planes
 FROM ranked WHERE rnk <= 3
@@ -1752,51 +1588,12 @@ def ann_lsh_adaptive_planes(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, dim, and md5-parity planes from the data, so the differential
     check covers the adaptivity itself. An empty table gives zero rows.
     """
-    from ..functions.vectors import norm
-
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     )
     bucket, n_planes = adaptive_bucket(e, floor=4)
-    b = e.withColumn("bucket", bucket).withColumn("nrm", norm(F.col("v")))
-    a = b.select(
-        F.col("vec_id").alias("ia"), F.col("v").alias("v_a"),
-        F.col("nrm").alias("n_a"), "bucket",
-    )
-    nn = b.select(
-        F.col("vec_id").alias("ib"), F.col("v").alias("v_b"),
-        F.col("nrm").alias("n_b"), "bucket",
-    )
-    # r10 OPTIMIZATION: compute each pair's cosine fold once (ia < ib)
-    # and explode the mirrored direction structs afterwards — same
-    # single-branch halving as `similarity_knn_join` (see the comment
-    # there for the bit-identity argument); digest-verified sf0.1/sf1.
-    half = (
-        a.join(nn, "bucket")
-        .filter(F.col("ia") < F.col("ib"))
-        .select(
-            "ia", "ib",
-            F.round(
-                dot(F.col("v_a"), F.col("v_b")) / (F.col("n_a") * F.col("n_b")), 6
-            ).alias("cos_sim"),
-        )
-    )
-    pairs = half.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("ia").alias("vec_a"), F.col("ib").alias("vec_b")),
-                F.struct(F.col("ib").alias("vec_a"), F.col("ia").alias("vec_b")),
-            )
-        ).alias("p"),
-        "cos_sim",
-    ).select("p.vec_a", "p.vec_b", "cos_sim")
-    w = W.partitionBy("vec_a").orderBy(F.col("cos_sim").desc(), "vec_b")
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("vec_a", "vec_b", "cos_sim", "rnk")
-        .withColumn("n_planes", F.lit(n_planes).cast("int"))
-    )
+    pairs = cosine_pairs(e.withColumn("bucket", bucket), "bucket")
+    return mirrored_topk(pairs, 3).withColumn("n_planes", F.lit(n_planes).cast("int"))
 
 
 DISAGREE_COS = 0.30  # similarity floor for a pair to count as "near"
@@ -1840,28 +1637,7 @@ def pipeline_label_disagreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", as_double(F.col("embedding")).alias("v")
     )
-    from ..functions.vectors import norm
-
-    b = adaptive_bucketed(e).withColumn("nrm", norm(F.col("v")))
-    a = b.select(
-        F.col("vec_id").alias("vec_a"), F.col("label").alias("label_a"),
-        F.col("v").alias("v_a"), F.col("nrm").alias("n_a"), "bucket",
-    )
-    n = b.select(
-        F.col("vec_id").alias("vec_b"), F.col("label").alias("label_b"),
-        F.col("v").alias("v_b"), F.col("nrm").alias("n_b"), "bucket",
-    )
-    pairs = (
-        a.join(n, "bucket")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .select(
-            "label_a",
-            "label_b",
-            F.round(
-                dot(F.col("v_a"), F.col("v_b")) / (F.col("n_a") * F.col("n_b")), 6
-            ).alias("cos_sim"),
-        )
-    )
+    pairs = cosine_pairs(adaptive_bucketed(e), "bucket", carry=("label",))
     near = F.col("cos_sim") >= DISAGREE_COS
     return pairs.groupBy("label_a", "label_b").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
@@ -1916,26 +1692,8 @@ def similarity_nearest_centroid_eval(spark: SparkSession, sf_dir: str) -> DataFr
     )
     train = e.filter(F.col("vec_id") % 2 == 0)
     test = e.filter(F.col("vec_id") % 2 == 1)
-    cdims = (
-        train.select("label", F.posexplode("v").alias("dim", "val"))
-        .groupBy("label", "dim")
-        .agg(F.avg("val").alias("c"))
-    )
-    cents = cdims.groupBy(F.col("label").alias("c_label")).agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("dim", "c"))), lambda s: s["c"]
-        ).alias("cv")
-    )
-    d = F.round(
-        F.sqrt(
-            F.aggregate(
-                F.zip_with("v", "cv", lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-        ),
-        6,
-    )
+    cents = centroids(train, "label")
+    d = F.round(F.sqrt(sq_l2(F.col("v"), F.col("cv"))), 6)
     w = W.partitionBy("vec_id").orderBy(d.asc(), F.col("c_label"))
     scored = (
         test.crossJoin(F.broadcast(cents))
@@ -2140,23 +1898,30 @@ def similarity_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id) agree across engines."""
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
+    ).withColumn("nrm", norm(F.col("v")))
+    q = e.filter(F.col("vec_id") == 0).select(
+        F.col("v").alias("qv"), F.col("nrm").alias("qnrm")
     )
-    q = e.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
     scored = e.filter(F.col("vec_id") != 0).crossJoin(F.broadcast(q)).select(
-        "vec_id", "v", F.round(cosine(F.col("qv"), F.col("v")), 6).alias("simq")
+        "vec_id",
+        "v",
+        "nrm",
+        F.round(cosine(F.col("qv"), F.col("v"), F.col("qnrm"), F.col("nrm")), 6).alias("simq"),
     )
     wtop = W.orderBy(F.col("simq").desc(), F.col("vec_id"))  # frame: top-k limit (rn<=12 filter)
     c = (
         scored.withColumn("rn", F.row_number().over(wtop))
         .filter(F.col("rn") <= 12)
-        .select("vec_id", "v", "simq")
+        .select("vec_id", "v", "nrm", "simq")
         .localCheckpoint(eager=False)
     )
     a, b = c.alias("a"), c.alias("b")
     p = a.join(b, F.col("a.vec_id") != F.col("b.vec_id")).select(
         F.col("a.vec_id").alias("ia"),
         F.col("b.vec_id").alias("ib"),
-        F.round(cosine(F.col("a.v"), F.col("b.v")), 6).alias("s"),
+        F.round(
+            cosine(F.col("a.v"), F.col("b.v"), F.col("a.nrm"), F.col("b.nrm")), 6
+        ).alias("s"),
     )
     picks = []
     selected = None
@@ -2381,10 +2146,6 @@ def eval_rank_metrics_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     [[ann_bruteforce_topk]] discipline); log2/division arithmetic is
     identical e-notation doubles on both engines. Corpus-scale work is
     the broadcast-query scan; metrics aggregate 10 rows per query."""
-    from ..functions.vectors import norm
-
-    # r11: per-row norms (see [[ann_bruteforce_topk]]) — one dot fold
-    # per (query, doc) pair instead of three; identical doubles.
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", as_double(F.col("embedding")).alias("v")
     ).withColumn("nrm", norm(F.col("v")))
@@ -2401,7 +2162,7 @@ def eval_rank_metrics_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             F.when(F.col("label") == F.col("qlabel"), 1).otherwise(0).alias("rel"),
             F.round(
-                dot(F.col("qv"), F.col("v")) / (F.col("qnrm") * F.col("nrm")), 6
+                cosine(F.col("qv"), F.col("v"), F.col("qnrm"), F.col("nrm")), 6
             ).alias("cos_sim"),
         )
         .withColumn(
@@ -2614,7 +2375,7 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
-    )
+    ).withColumn("nrm", norm(F.col("v")))
     terms = ["join", "vector", "stream"]
     toks = words("text")
     lex = docs.select(
@@ -2638,11 +2399,15 @@ def retrieval_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         [F.col("density").desc(), F.col("doc_id")],
         rn="_rn",
     ).select("doc_id", F.col("_rn").cast("bigint").alias("rank_lex"))
-    q = emb.filter(F.col("vec_id") == 0).select(F.col("v").alias("qv"))
+    q = emb.filter(F.col("vec_id") == 0).select(
+        F.col("v").alias("qv"), F.col("nrm").alias("qnrm")
+    )
     vec_rank = two_phase_ordered(
         emb.crossJoin(F.broadcast(q)).select(
             F.col("vec_id").alias("doc_id"),
-            F.round(cosine(F.col("qv"), F.col("v")), 6).alias("cos_sim"),
+            F.round(
+                cosine(F.col("qv"), F.col("v"), F.col("qnrm"), F.col("nrm")), 6
+            ).alias("cos_sim"),
         ),
         -((F.col("cos_sim") * 1e6).cast("bigint") / 40000).cast("bigint"),
         [F.col("cos_sim").desc(), F.col("doc_id")],
@@ -2799,14 +2564,20 @@ def similarity_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTEs."""
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
-    )
-    c0 = e.filter(F.col("vec_id") == 0)
-    picks = [(0, c0, F.lit(0.0))]
-    d = (
-        e.crossJoin(F.broadcast(c0.select(F.col("v").alias("cv"))))
-        .select(
-            "vec_id", "v", F.round(1.0 - cosine(F.col("v"), F.col("cv")), 6).alias("d")
+    ).withColumn("nrm", norm(F.col("v")))
+
+    def to_center(df: DataFrame, center: DataFrame) -> DataFrame:
+        """``df`` with column ``nd``: each row's 6dp cosine distance to
+        the one-row ``center``."""
+        c = center.select(F.col("v").alias("cv"), F.col("nrm").alias("cn"))
+        return df.crossJoin(F.broadcast(c)).withColumn(
+            "nd", F.round(1.0 - cosine(F.col("v"), F.col("cv"), F.col("nrm"), F.col("cn")), 6)
         )
+
+    c0 = e.filter(F.col("vec_id") == 0)
+    d = (
+        to_center(e, c0)
+        .select("vec_id", "v", "nrm", F.col("nd").alias("d"))
         .localCheckpoint(eager=True)
     )
     rows = [c0.select(F.lit(0).cast("bigint").alias("selection_round"),
@@ -2825,15 +2596,8 @@ def similarity_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         d = (
-            d.crossJoin(F.broadcast(top.select(F.col("v").alias("cv"))))
-            .select(
-                "vec_id",
-                "v",
-                F.least(
-                    F.col("d"),
-                    F.round(1.0 - cosine(F.col("v"), F.col("cv")), 6),
-                ).alias("d"),
-            )
+            to_center(d, top)
+            .select("vec_id", "v", "nrm", F.least("d", "nd").alias("d"))
             .localCheckpoint(eager=True)
         )
     radius = d.agg(F.max("d").alias("coverage_radius"))
@@ -3059,12 +2823,7 @@ def similarity_mmd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = e.where(F.col("label") == 1).orderBy("vec_id").limit(MMD_N)
 
     def k(x, y):
-        d2 = F.aggregate(
-            F.zip_with(x, y, lambda p, q: (p - q) * (p - q)),
-            F.lit(0.0),
-            lambda acc, z: acc + z,
-        )
-        return F.exp(-MMD_GAMMA * d2)
+        return F.exp(-MMD_GAMMA * sq_l2(x, y))
 
     def mean_k(df1, df2, self_pairs: bool):
         x = df1.select(F.col("vec_id").alias("ia"), F.col("v").alias("va"))

@@ -140,8 +140,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     stopword ratio, and a pass/fail gate — the standard pre-training
     filter shape (C4/Gopher-style rules)."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda w: F.trim(w) != "")
-    n_tokens = F.size(toks)
+    n_tokens = F.size(words("text"))
     n_chars = F.length("text")
     n_digits = F.size(F.regexp_extract_all("text", F.lit("[0-9]"), 0))
     stop_hits = F.size(
@@ -182,7 +181,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens (letters / digits / punctuation runs) — the budget metric for
     a training-data pipeline."""
     docs = load_table(spark, sf_dir, "documents")
-    ws = F.size(F.filter(F.split("text", " "), lambda w: F.trim(w) != ""))
+    ws = F.size(words("text"))
     bpe = F.size(F.regexp_extract_all("text", F.lit(_BPE_ISH_RE), 0))
     return docs.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -1649,7 +1648,7 @@ def text_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_kw = F.size(
         F.filter(split_lower("text"), lambda w: w.isin(kws))
     )
-    n_tok = F.size(F.filter(F.split("text", " "), lambda w: F.trim(w) != ""))
+    n_tok = F.size(words("text"))
     sym_pct = F.round(n_sym * 100.0 / F.greatest(n_chars, F.lit(1)), 4)
     kw_pct = F.round(n_kw * 100.0 / F.greatest(n_tok, F.lit(1)), 4)
     is_code = F.when(

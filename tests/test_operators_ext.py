@@ -497,14 +497,20 @@ def test_semdedup_prunes_within_cluster_only(spark, sf_dir):
 def test_bpe_train_matches_python_reference(spark):
     """The distributed BPE trainer must reproduce a pure-Python BPE
     (Sennrich-style: most frequent adjacent pair, lexicographic ties,
-    left-to-right rewrite) exactly, round for round."""
+    left-to-right rewrite) over the same words (`words_py`) exactly,
+    round for round."""
     from collections import Counter
 
+    from distributed_map_reduce_spark.functions.normalize import words_py
     from distributed_map_reduce_spark.operators.text import bpe_train_merges
     from distributed_map_reduce_spark.sources import load_table
 
     sf = "/root/testdata/sf0.001"
-    docs = load_table(spark, sf, "documents")
+    # A tab is part of a word and a double space leaves an empty token:
+    # repeated often enough, the tab's pairs are the first two merges,
+    # which a str.split() tokenizer would never see.
+    tabbed = spark.createDataFrame([("  ".join(["a\tb"] * 5000),)], "text string")
+    docs = load_table(spark, sf, "documents").select("text").unionByName(tabbed)
     got = [
         (r["merge_rank"], r["pair"], r["pair_count"])
         for r in sorted(bpe_train_merges(docs).collect(), key=lambda r: r[0])
@@ -512,9 +518,8 @@ def test_bpe_train_matches_python_reference(spark):
 
     freq = Counter()
     for r in docs.select("text").collect():
-        for w in r["text"].lower().split():
-            if w:
-                freq[w] += 1
+        for w in words_py(r["text"]):
+            freq[w] += 1
     vocab = {tuple(w): n for w, n in freq.items()}
     want = []
     for rank in range(1, 6):
