@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .measures import to_cents_sql
 from ..registry import register
 from .normalize import WORDS_SQL, words_py
 from ..sources import load_table
@@ -223,11 +224,11 @@ def udtf_dynamic_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "udtf_table_argument",
     tags=("udf", "sql"),
-    oracle="""
+    oracle=f"""
 WITH seg AS (
   SELECT c_mktsegment,
          count(*) AS n,
-         CAST(round(sum(c_acctbal) * 100) AS BIGINT) AS bal_cents,
+         {to_cents_sql("sum(c_acctbal)")} AS bal_cents,
          CAST(min(c_custkey) AS BIGINT) AS first_key,
          CAST(max(c_custkey) AS BIGINT) AS last_key
   FROM customer GROUP BY c_mktsegment

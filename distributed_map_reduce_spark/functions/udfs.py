@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from .measures import to_cents_sql
 from ..registry import register
 from ..sources import register_views
 
@@ -47,11 +48,11 @@ def register_pandas_udfs(spark: SparkSession) -> None:
 @register(
     "udf_runtime_registered",
     tags=("udf", "parity"),
-    oracle="""
+    oracle=f"""
 SELECT substr(o_orderpriority, 1, 1) AS bucket_digit,
        'P' || substr(o_orderpriority, 1, 1) AS bucket,
        count(*) AS n,
-       sum(CAST(round(o_totalprice * (1 - 0.05) * 100) AS BIGINT)) / 100.0
+       sum({to_cents_sql("o_totalprice * (1 - 0.05)")}) / 100.0
          AS discounted_total
 FROM orders
 GROUP BY 1, 2
@@ -69,11 +70,11 @@ def udf_runtime_registered(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_pandas_udfs(spark)
     register_views(spark, sf_dir)
     return spark.sql(
-        """
+        f"""
         SELECT substr(o_orderpriority, 1, 1) AS bucket_digit,
                priority_bucket(o_orderpriority) AS bucket,
                count(*) AS n,
-               sum(CAST(round(disc_price(o_totalprice, 0.05D) * 100) AS BIGINT))
+               sum({to_cents_sql("disc_price(o_totalprice, 0.05D)")})
                  / 100.0D AS discounted_total
         FROM orders
         GROUP BY 1, 2

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.measures import to_cents, to_cents_sql
 from ..registry import register
 from ..sources import load_table
 
@@ -59,10 +60,10 @@ def scalar_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "scalar_array_higher_order",
     tags=("scalar", "array"),
-    oracle="""
+    oracle=f"""
 WITH per_order AS (
   SELECT l_orderkey,
-         list_sort(list(CAST(round(l_extendedprice * 100) AS BIGINT))) AS cents
+         list_sort(list({to_cents_sql("l_extendedprice")})) AS cents
   FROM lineitem GROUP BY l_orderkey HAVING l_orderkey <= 2000
 )
 SELECT l_orderkey,
@@ -86,7 +87,7 @@ def scalar_array_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.groupBy("l_orderkey")
         .agg(
             F.array_sort(
-                F.collect_list(F.round(F.col("l_extendedprice") * 100).cast("bigint"))
+                F.collect_list(to_cents("l_extendedprice"))
             ).alias("cents")
         )
         .filter(F.col("l_orderkey") <= 2000)
@@ -174,7 +175,7 @@ def string_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "agg_conditional",
     tags=("agg",),
-    oracle="""
+    oracle=f"""
 SELECT l_returnflag,
        count(*) FILTER (WHERE l_discount > 0.05)      AS n_discounted,
        bool_and(l_quantity > 0)                       AS all_positive_qty,
@@ -183,7 +184,7 @@ SELECT l_returnflag,
        -- class): at 100x the filtered sum passes 1e12 where double ULP
        -- exceeds a cent, so engines' summation orders land on different
        -- doubles and round(x, 2) splits; summing integer cents is exact
-       sum(CAST(round(l_extendedprice * 100) AS BIGINT))
+       sum({to_cents_sql("l_extendedprice")})
            FILTER (WHERE l_tax > 0.04) / 100.0        AS taxed_price
 FROM lineitem
 GROUP BY l_returnflag
@@ -203,7 +204,7 @@ def agg_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(
                 F.when(
                     F.col("l_tax") > 0.04,
-                    F.round(F.col("l_extendedprice") * 100).cast("long"),
+                    to_cents("l_extendedprice"),
                 )
             )
             / F.lit(100.0)

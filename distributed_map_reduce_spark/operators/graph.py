@@ -80,6 +80,14 @@ def undirected(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFram
     )
 
 
+def undirected_sql(rel: str) -> str:
+    """SQL twin of :func:`undirected` over a (doc_a, doc_b) relation."""
+    return (
+        f"SELECT doc_a AS a, doc_b AS b FROM {rel}"
+        f" UNION ALL SELECT doc_b AS a, doc_a AS b FROM {rel}"
+    )
+
+
 def _checkpointed_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_a, doc_b) verified MinHash-LSH pairs, localCheckpointed: the
     caller's plan references the pair frame repeatedly (wedge/degree
@@ -195,9 +203,7 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst") -
 WITH RECURSIVE pairs AS (
   SELECT doc_a, doc_b FROM ({_MINHASH_STAR_ORACLE})
 ), edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_b AS a, doc_a AS b FROM pairs
+  {undirected_sql("pairs")}
 ), nodes AS (
   SELECT DISTINCT a AS node FROM edges
 ), reach(node, label) AS (
@@ -308,9 +314,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
 WITH pairs AS (
   SELECT doc_a, doc_b FROM ({_MINHASH_ORACLE})
 ), edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_b AS a, doc_a AS b FROM pairs
+  {undirected_sql("pairs")}
 ), deg AS (
   SELECT a, count(*) AS outdeg FROM edges GROUP BY a
 ), nn AS (
@@ -356,9 +360,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH pairs AS (
   SELECT doc_a, doc_b FROM ({_MINHASH_CAPPED_ORACLE})
 ), edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_b AS a, doc_a AS b FROM pairs
+  {undirected_sql("pairs")}
 ), deg AS (
   SELECT a, count(*) AS outdeg FROM edges GROUP BY a
 ), nn AS (
@@ -443,9 +445,7 @@ def bfs_depths(edges: DataFrame, seeds: DataFrame, max_depth: int,
 WITH RECURSIVE pairs AS (
   SELECT doc_a, doc_b FROM ({_MINHASH_ORACLE})
 ), edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_b AS a, doc_a AS b FROM pairs
+  {undirected_sql("pairs")}
 ), seeds AS (
   SELECT DISTINCT a AS node FROM edges WHERE a % 10 = 0
 ), walk(node, depth) AS (
@@ -659,9 +659,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH RECURSIVE pairs AS (
   SELECT doc_a, doc_b FROM ({_MINHASH_ORACLE})
 ), edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_b AS a, doc_a AS b FROM pairs
+  {undirected_sql("pairs")}
 ), walk(node, depth) AS (
   SELECT DISTINCT a, 0 FROM edges WHERE a % 20 = 0
   UNION ALL
@@ -703,11 +701,9 @@ def graph_reachability_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     prior = spark.conf.get("spark.sql.cteRecursionRowLimit", None)
     spark.conf.set("spark.sql.cteRecursionRowLimit", "100000000")
     try:
-        return spark.sql("""
+        return spark.sql(f"""
 WITH RECURSIVE edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM _rec_pairs
-  UNION ALL
-  SELECT doc_b AS a, doc_a AS b FROM _rec_pairs
+  {undirected_sql("_rec_pairs")}
 ), walk(node, depth) AS (
   SELECT DISTINCT a, 0 FROM edges WHERE a % 20 = 0
   UNION ALL
@@ -732,9 +728,7 @@ FROM walk GROUP BY node
 WITH pairs AS (
   SELECT doc_a, doc_b FROM ({_MINHASH_ORACLE})
 ), edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_b AS a, doc_a AS b FROM pairs
+  {undirected_sql("pairs")}
 ), nodes AS (
   SELECT DISTINCT a AS node FROM edges
 ), l0 AS (
@@ -826,9 +820,7 @@ def graph_label_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH pairs AS (
   SELECT doc_a, doc_b FROM ({_MINHASH_ORACLE})
 ), edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_b AS a, doc_a AS b FROM pairs
+  {undirected_sql("pairs")}
 ), deg AS (
   SELECT a AS node, count(*) AS d FROM edges GROUP BY a
 ), common AS (
@@ -898,8 +890,7 @@ def _kcore_oracle() -> str:
         # would re-evaluate the MinHash subquery exponentially many times
         # (observed as "Too many open files" at round depth 8)
         f"WITH pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM ({_MINHASH_ORACLE})),",
-        "e0 AS MATERIALIZED (SELECT doc_a AS a, doc_b AS b FROM pairs"
-        " UNION ALL SELECT doc_b AS a, doc_a AS b FROM pairs)",
+        f"e0 AS MATERIALIZED ({undirected_sql('pairs')})",
     ]
     for i in range(1, r + 1):
         prev = f"e{i-1}"
@@ -972,9 +963,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH RECURSIVE pairs AS (
   SELECT doc_a, doc_b FROM ({_MINHASH_STAR_ORACLE})
 ), edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_b AS a, doc_a AS b FROM pairs
+  {undirected_sql("pairs")}
 ), nodes AS (
   SELECT DISTINCT a AS node FROM edges
 ), reach(node, label) AS (
@@ -1047,9 +1036,7 @@ def dedup_cluster_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH RECURSIVE pairs AS (
   SELECT doc_a, doc_b FROM ({_MINHASH_STAR_ORACLE})
 ), edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_b AS a, doc_a AS b FROM pairs
+  {undirected_sql("pairs")}
 ), nodes AS (
   SELECT DISTINCT a AS node FROM edges
 ), reach(node, label) AS (
@@ -1254,9 +1241,7 @@ def graph_random_walk_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH pairs AS (
   SELECT doc_a, doc_b FROM ({_MINHASH_ORACLE})
 ), edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_b AS a, doc_a AS b FROM pairs
+  {undirected_sql("pairs")}
 ), deg AS (
   SELECT a AS node, count(*) AS d FROM edges GROUP BY a
 ), wedge AS (
@@ -1400,9 +1385,7 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH pairs AS (
   SELECT doc_a, doc_b FROM ({_MINHASH_ORACLE})
 ), edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_b AS a, doc_a AS b FROM pairs
+  {undirected_sql("pairs")}
 ), deg AS (
   SELECT a AS node, CAST(count(*) AS BIGINT) AS d FROM edges GROUP BY a
 )
@@ -1450,9 +1433,7 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH pairs AS (
   SELECT doc_a, doc_b FROM ({_MINHASH_ORACLE})
 ), edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_b AS a, doc_a AS b FROM pairs
+  {undirected_sql("pairs")}
 ), comm AS (
   SELECT a AS node, CAST(min(least(a, b)) AS BIGINT) AS c
   FROM edges GROUP BY a

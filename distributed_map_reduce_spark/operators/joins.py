@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.measures import to_cents, to_cents_sql
 from ..registry import register
 from ..sources import load_table, register_views
 
@@ -346,10 +347,10 @@ FROM nation n, LATERAL (
     "cdc_incremental_join_agg",
     bench=True,
     tags=("join", "cdc", "incremental"),
-    oracle="""
+    oracle=f"""
 SELECT c_nationkey,
        CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents
+       CAST(sum({to_cents_sql("o_totalprice")}) AS BIGINT) AS total_cents
 FROM orders JOIN customer ON o_custkey = c_custkey
 GROUP BY c_nationkey
 """,
@@ -371,7 +372,7 @@ def cdc_incremental_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+        to_cents("o_totalprice").alias("cents"),
         (F.col("o_orderkey") % 7 == 0).alias("is_delta"),
     )
 
@@ -470,10 +471,10 @@ def join_interval_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "join_dynamic_partition_prune",
     tags=("join", "scale", "layout"),
-    oracle="""
+    oracle=f"""
 SELECT CAST(year(o_orderdate) AS BIGINT) AS o_year,
        CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS revenue_cents
+       CAST(sum({to_cents_sql("o_totalprice")}) AS BIGINT) AS revenue_cents
 FROM orders
 WHERE year(o_orderdate) % 3 = 0
 GROUP BY 1
@@ -516,7 +517,7 @@ def join_dynamic_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("o_year").cast("bigint").alias("o_year"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+            F.sum(to_cents("o_totalprice"))
             .cast("bigint")
             .alias("revenue_cents"),
         )

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.normalize import WORDS_SQL, words
+from ..functions.measures import CONVERTED_SQL, converted, to_cents, to_cents_sql
 from ..registry import register
 from ..sources import load_table
 
@@ -365,7 +366,7 @@ def privacy_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "privacy_pseudonymize_consistent",
     tags=("privacy",),
-    oracle="""
+    oracle=f"""
 WITH pc AS (
   SELECT substr(sha256('salt-v1:' || CAST(c_custkey AS VARCHAR)), 1, 16)
            AS pseudo_id,
@@ -381,7 +382,7 @@ po AS (
 SELECT pc.c_mktsegment AS segment,
        CAST(count(DISTINCT pc.pseudo_id) AS BIGINT) AS n_customers,
        CAST(count(po.o_totalprice) AS BIGINT) AS n_orders,
-       sum(CAST(round(coalesce(po.o_totalprice, 0) * 100) AS BIGINT)) / 100.0
+       sum({to_cents_sql("coalesce(po.o_totalprice, 0)")}) / 100.0
          AS total
 FROM pc LEFT JOIN po USING (pseudo_id)
 GROUP BY 1
@@ -424,7 +425,7 @@ def privacy_pseudonymize_consistent(spark: SparkSession, sf_dir: str) -> DataFra
             F.count("o_totalprice").alias("n_orders"),
             (
                 F.sum(
-                    F.round(F.coalesce("o_totalprice", F.lit(0.0)) * 100).cast("bigint")
+                    to_cents(F.coalesce("o_totalprice", F.lit(0.0)))
                 )
                 / 100.0
             ).alias("total"),
@@ -498,11 +499,11 @@ def privacy_erasure_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "privacy_contribution_capping",
     tags=("privacy", "stats"),
-    oracle="""
+    oracle=f"""
 WITH per_user AS (
   SELECT user_id, event_type,
          CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+         CAST(sum({to_cents_sql("value")}) AS BIGINT) AS cents
   FROM events
   GROUP BY 1, 2
 )
@@ -535,7 +536,7 @@ def privacy_contribution_capping(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id", "event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.round(F.col("value") * 100).cast("bigint")).cast("bigint").alias("cents"),
+        F.sum(to_cents("value")).cast("bigint").alias("cents"),
     )
     clipped = F.when((F.col("n") > 5) | (F.col("cents") > 50000), 1).otherwise(0)
     return per_user.groupBy("event_type").agg(
@@ -712,10 +713,10 @@ def privacy_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "privacy_randomized_response",
     tags=("privacy", "events"),
-    oracle="""
+    oracle=f"""
 WITH u AS (
   SELECT user_id,
-         max(CASE WHEN event_type = 'purchase' AND value >= 150 THEN 1 ELSE 0 END)
+         {CONVERTED_SQL}
            AS y
   FROM events GROUP BY user_id
 ), rr AS (
@@ -757,12 +758,7 @@ def privacy_randomized_response(spark: SparkSession, sf_dir: str) -> DataFrame:
     mechanism adds zero shuffle beyond the agg. All counts are exact
     integers; only the final rate divisions round."""
     ev = load_table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.max(
-            F.when((F.col("event_type") == "purchase") & (F.col("value") >= 150), 1)
-            .otherwise(0)
-        ).alias("y")
-    )
+    u = ev.groupBy("user_id").agg(converted().alias("y"))
 
     def coin(prefix: str):
         return (
@@ -800,10 +796,10 @@ def privacy_randomized_response(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "privacy_dp_quantile_expmech",
     tags=("privacy", "stats"),
-    oracle="""
+    oracle=f"""
 WITH spend AS (
   SELECT o_custkey,
-         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
+         CAST(sum({to_cents_sql("o_totalprice")}) AS BIGINT) AS cents
   FROM orders GROUP BY o_custkey
 ), nrow AS (
   SELECT CAST(count(*) AS BIGINT) AS n FROM spend
@@ -886,7 +882,7 @@ def privacy_dp_quantile_expmech(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+            F.sum(to_cents("o_totalprice"))
             .cast("bigint")
             .alias("cents")
         )

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.measures import to_cents, to_cents_sql
 from ..registry import register
 from ..sources import load_table
 
@@ -419,11 +420,11 @@ def profile_bot_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "repair_median_impute",
     tags=("profiling", "repair"),
-    oracle="""
+    oracle=f"""
 WITH dirty AS (
   SELECT o_orderkey, o_orderpriority,
          CASE WHEN o_orderkey % 7 = 0 THEN NULL
-              ELSE CAST(round(o_totalprice * 100) AS BIGINT) END AS cents
+              ELSE {to_cents_sql("o_totalprice")} END AS cents
   FROM orders
 ), med AS (
   SELECT o_orderpriority,
@@ -459,7 +460,7 @@ def repair_median_impute(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_orderpriority",
         F.when(F.col("o_orderkey") % 7 == 0, F.lit(None)).otherwise(
-            F.round(F.col("o_totalprice") * 100).cast("bigint")
+            to_cents("o_totalprice")
         ).alias("cents"),
     )
     med = (

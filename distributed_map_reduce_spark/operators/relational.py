@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.measures import to_cents, to_cents_sql
 from ..registry import register
 from ..sources import load_table
 
@@ -333,9 +334,9 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "agg_grouping_sets",
     tags=("agg",),
-    oracle="""
+    oracle=f"""
 SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-       sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0 AS total
+       sum({to_cents_sql("o_totalprice")}) / 100.0 AS total
 FROM orders
 GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
 """,
@@ -350,9 +351,9 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same bigint, same division, identical doubles on both engines."""
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
-        """
+        f"""
         SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-               sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0D AS total
+               sum({to_cents_sql("o_totalprice")}) / 100.0D AS total
         FROM orders
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
         """
@@ -518,12 +519,12 @@ def agg_decimal_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sql_pipe_syntax",
     tags=("sql",),
-    oracle="""
+    oracle=f"""
 SELECT o_orderpriority,
        count(*) AS n_orders,
        -- exact cents sum, one shared /100.0 (r8 sf10-stride catch: the
        -- raw double sum's drift crossed the 2dp grain at ~3M rows/group)
-       sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0 AS total
+       sum({to_cents_sql("o_totalprice")}) / 100.0 AS total
 FROM orders
 WHERE o_orderdate >= DATE '1995-01-01'
 GROUP BY o_orderpriority
@@ -540,14 +541,14 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import register_views
 
     register_views(spark, sf_dir)
-    return spark.sql("""
+    return spark.sql(f"""
 FROM orders
 |> WHERE o_orderdate >= DATE '1995-01-01'
 |> AGGREGATE count(*) AS n_orders,
              -- divisor cast: a bare 100.0 literal is DECIMAL in Spark
              -- SQL (bigint/decimal -> decimal(27,6)) but DOUBLE in the
              -- DuckDB twin; cast so both sides render as double
-             sum(CAST(round(o_totalprice * 100) AS BIGINT))
+             sum({to_cents_sql("o_totalprice")})
                / CAST(100 AS DOUBLE) AS total
    GROUP BY o_orderpriority
 |> ORDER BY o_orderpriority
@@ -557,14 +558,14 @@ FROM orders
 @register(
     "scalar_try_funcs",
     tags=("scalar", "ansi"),
-    oracle="""
+    oracle=f"""
 WITH t AS (
   SELECT o_orderstatus,
          o_totalprice / nullif(o_orderkey % 5, 0) AS safe_div,
          -- exact twelfths-of-cents units (r9 sf10 stride catch): divisors
          -- are 1..4, so cents * (12 // d) is integer and the sum is exact
          CASE WHEN o_orderkey % 5 <> 0
-              THEN CAST(round(o_totalprice * 100) AS BIGINT)
+              THEN {to_cents_sql("o_totalprice")}
                    * (12 // (o_orderkey % 5)) END AS div_units,
          TRY_CAST(CASE WHEN o_orderkey % 3 = 0 THEN '12x'
                        ELSE CAST(o_orderkey AS VARCHAR) END AS DOUBLE) AS parsed,
@@ -601,7 +602,7 @@ def scalar_try_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     1..4 so cents * (12 div d) is integer and the sum is exact, with
     one final round on an engine-identical double."""
     o = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
+    cents = to_cents("o_totalprice")
     d = F.col("o_orderkey") % 5
     t = o.select(
         "o_orderstatus",
@@ -753,7 +754,7 @@ def agg_string_concat_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "agg_aging_buckets",
     tags=("agg", "reporting"),
-    oracle="""
+    oracle=f"""
 WITH open_orders AS (
   SELECT o_orderstatus, o_orderdate, o_totalprice
   FROM orders WHERE o_orderstatus <> 'F'
@@ -771,7 +772,7 @@ SELECT o_orderstatus, age_bucket,
        CAST(count(*) AS BIGINT) AS n_orders,
        -- exact cents sum, one shared /100.0 (sf10-gate fix: the raw
        -- double sum's accumulation drift crossed the 2dp grain at 100x)
-       sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0 AS outstanding
+       sum({to_cents_sql("o_totalprice")}) / 100.0 AS outstanding
 FROM aged GROUP BY o_orderstatus, age_bucket
 """,
 )
@@ -796,7 +797,7 @@ def agg_aging_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return aged.groupBy("o_orderstatus", bucket.alias("age_bucket")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-        (F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")) / 100.0).alias(
+        (F.sum(to_cents("o_totalprice")) / 100.0).alias(
             "outstanding"
         ),
     )
@@ -886,10 +887,10 @@ def scalar_collation_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "analytics_skyline_pareto",
     tags=("analytics", "window"),
-    oracle="""
+    oracle=f"""
 WITH pts AS (
   SELECT p_partkey,
-         CAST(round(p_retailprice * 100) AS BIGINT) AS price_cents,
+         {to_cents_sql("p_retailprice")} AS price_cents,
          CAST(p_size AS BIGINT) AS size
   FROM part
 ), ranked AS (
@@ -924,7 +925,7 @@ def analytics_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = load_table(spark, sf_dir, "part").select(
         "p_partkey",
-        F.round(F.col("p_retailprice") * 100).cast("bigint").alias("price_cents"),
+        to_cents("p_retailprice").alias("price_cents"),
         F.col("p_size").cast("bigint").alias("size"),
     )
     ranked = two_phase_ordered(
@@ -942,7 +943,7 @@ def analytics_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "hierarchy_subtree_rollup",
     tags=("sql", "recursive", "analytics"),
-    oracle="""
+    oracle=f"""
 WITH RECURSIVE walk(root, node) AS (
   SELECT c_custkey, c_custkey FROM customer WHERE c_custkey < 3
   UNION ALL
@@ -952,7 +953,7 @@ WITH RECURSIVE walk(root, node) AS (
 )
 SELECT w.root,
        CAST(count(*) - 1 AS BIGINT) AS n_descendants,
-       CAST(sum(CAST(round(c.c_acctbal * 100) AS BIGINT)) AS BIGINT)
+       CAST(sum({to_cents_sql("c.c_acctbal")}) AS BIGINT)
            AS subtree_cents
 FROM walk w JOIN customer c ON c.c_custkey = w.node
 GROUP BY w.root
@@ -993,7 +994,7 @@ def hierarchy_subtree_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "spark.sql.cteRecursionRowLimit", str(max(floor_limit, 2 * n_cust))
     )
     try:
-        return spark.sql("""
+        return spark.sql(f"""
 WITH RECURSIVE walk(root, node) AS (
   SELECT c_custkey, c_custkey FROM _hier_customer WHERE c_custkey < 3
   UNION ALL
@@ -1003,7 +1004,7 @@ WITH RECURSIVE walk(root, node) AS (
 )
 SELECT w.root,
        CAST(count(*) - 1 AS BIGINT) AS n_descendants,
-       CAST(sum(CAST(round(c.c_acctbal * 100) AS BIGINT)) AS BIGINT)
+       CAST(sum({to_cents_sql("c.c_acctbal")}) AS BIGINT)
            AS subtree_cents
 FROM walk w JOIN _hier_customer c ON c.c_custkey = w.node
 GROUP BY w.root
@@ -1018,9 +1019,9 @@ GROUP BY w.root
 @register(
     "snapshot_diff_audit",
     tags=("analytics", "cdc"),
-    oracle="""
+    oracle=f"""
 WITH v1 AS (
-  SELECT o_orderkey AS k, CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+  SELECT o_orderkey AS k, {to_cents_sql("o_totalprice")} AS cents
   FROM orders
 ), v2 AS (
   SELECT k,
@@ -1057,7 +1058,7 @@ def snapshot_diff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization beyond the join itself."""
     v1 = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+        to_cents("o_totalprice").alias("cents"),
     )
     v2 = (
         v1.filter(F.col("k") % 97 != 0)
@@ -1101,10 +1102,10 @@ def snapshot_diff_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "audit_merkle_ranges",
     tags=("analytics", "kv", "integrity"),
-    oracle="""
+    oracle=f"""
 WITH rows_ AS (
   SELECT o_orderkey AS k,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+         {to_cents_sql("o_totalprice")} AS cents
   FROM orders
 ), digests AS (
   SELECT k // 1000 AS bucket,
@@ -1136,7 +1137,7 @@ def audit_merkle_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     order — one pass, one bucket-cardinality aggregate at any scale."""
     rows_ = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+        to_cents("o_totalprice").alias("cents"),
     )
     digests = rows_.select(
         F.expr("k div 1000").alias("bucket"),
@@ -1168,7 +1169,7 @@ def audit_merkle_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sql_scripting_compound",
     tags=("sql", "scripting"),
-    oracle="""
+    oracle=f"""
 WITH RECURSIVE th(k, thr) AS (
   SELECT 0, CAST(5000000 AS BIGINT)
   UNION ALL
@@ -1176,7 +1177,7 @@ WITH RECURSIVE th(k, thr) AS (
 ), counts AS (
   SELECT k, thr,
          (SELECT count(*) FROM orders
-          WHERE CAST(round(o_totalprice * 100) AS BIGINT) >= th.thr) AS n
+          WHERE {to_cents_sql("o_totalprice")} >= th.thr) AS n
   FROM th
 ), sel AS (
   SELECT thr FROM counts WHERE n >= 1000 ORDER BY k LIMIT 1
@@ -1185,7 +1186,7 @@ SELECT o_orderpriority,
        CAST(count(*) AS BIGINT) AS n_orders,
        (SELECT thr FROM sel) AS threshold_cents
 FROM orders
-WHERE CAST(round(o_totalprice * 100) AS BIGINT) >= (SELECT thr FROM sel)
+WHERE {to_cents_sql("o_totalprice")} >= (SELECT thr FROM sel)
 GROUP BY o_orderpriority
 """,
 )
@@ -1204,22 +1205,22 @@ def sql_scripting_compound(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer halving."""
     spark.conf.set("spark.sql.scripting.enabled", "true")
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("_script_orders")
-    return spark.sql("""
+    return spark.sql(f"""
 BEGIN
   DECLARE thr BIGINT DEFAULT 5000000;
   DECLARE n BIGINT DEFAULT 0;
   SET n = (SELECT count(*) FROM _script_orders
-           WHERE CAST(round(o_totalprice * 100) AS BIGINT) >= thr);
+           WHERE {to_cents_sql("o_totalprice")} >= thr);
   WHILE n < 1000 DO
     SET thr = thr DIV 2;
     SET n = (SELECT count(*) FROM _script_orders
-             WHERE CAST(round(o_totalprice * 100) AS BIGINT) >= thr);
+             WHERE {to_cents_sql("o_totalprice")} >= thr);
   END WHILE;
   SELECT o_orderpriority,
          CAST(count(*) AS BIGINT) AS n_orders,
          thr AS threshold_cents
   FROM _script_orders
-  WHERE CAST(round(o_totalprice * 100) AS BIGINT) >= thr
+  WHERE {to_cents_sql("o_totalprice")} >= thr
   GROUP BY o_orderpriority;
 END
 """)
@@ -1283,10 +1284,10 @@ GROUP BY o_orderpriority, dmrs_size_class(o_totalprice)
 @register(
     "merge_into_upsert",
     tags=("relational", "cdc"),
-    oracle="""
+    oracle=f"""
 WITH t AS (
   SELECT o_orderkey AS k,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+         {to_cents_sql("o_totalprice")} AS cents
   FROM orders
 ),
 s AS (
@@ -1339,7 +1340,7 @@ def merge_into_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     t = o.select(
         F.col("o_orderkey").alias("k"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+        to_cents("o_totalprice").alias("cents"),
     )
     s = o.filter(F.col("o_orderkey") % 7 == 0).select(
         F.when(F.col("o_orderkey") % 3 == 2, F.col("o_orderkey") + 30000000)
@@ -1448,7 +1449,7 @@ def agg_listagg_within_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sql_transpose_frame",
     tags=("sql", "reporting"),
-    oracle="""
+    oracle=f"""
 WITH s AS (
   SELECT l_returnflag,
          -- qty is integral: its double sum is exact at every scale.
@@ -1456,7 +1457,7 @@ WITH s AS (
          -- round(sum(double)) class: at 100x the sum passes 1e12 where
          -- double ULP exceeds a cent and engines' round(x, 2) splits)
          round(sum(l_quantity), 2) AS sum_qty,
-         sum(CAST(round(l_extendedprice * 100) AS BIGINT)) / 100.0 AS sum_price
+         sum({to_cents_sql("l_extendedprice")}) / 100.0 AS sum_price
   FROM lineitem GROUP BY l_returnflag
 )
 SELECT 'sum_qty' AS key,
@@ -1488,7 +1489,7 @@ def sql_transpose_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exact-cents price sum (r10 sf10 stride catch; rule-(a) re-row):
         # see the oracle comment
         (
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long"))
+            F.sum(to_cents("l_extendedprice"))
             / F.lit(100.0)
         ).alias("sum_price"),
     )
@@ -1498,10 +1499,10 @@ def sql_transpose_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sql_lateral_column_alias",
     tags=("sql",),
-    oracle="""
+    oracle=f"""
 WITH s AS (
   SELECT o_orderpriority,
-         sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents,
+         sum({to_cents_sql("o_totalprice")}) AS cents,
          count(*) AS n
   FROM orders GROUP BY o_orderpriority
 )
@@ -1533,9 +1534,9 @@ def sql_lateral_column_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register_views(spark, sf_dir)
     return spark.sql(
-        """SELECT o_orderpriority, total, fee, fee_per_order FROM (
+        f"""SELECT o_orderpriority, total, fee, fee_per_order FROM (
              SELECT o_orderpriority,
-                    sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents,
+                    sum({to_cents_sql("o_totalprice")}) AS cents,
                     count(*) AS n,
                     -- 100.0D: double literals — Spark's bare 100.0 is a
                     -- DECIMAL literal and bigint/decimal division emits
@@ -1617,11 +1618,11 @@ def agg_ordered_set_aggs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "analytics_mrr_movements",
     tags=("analytics", "reporting"),
-    oracle="""
+    oracle=f"""
 WITH monthly AS (
   SELECT o_custkey AS cust,
          CAST(year(o_orderdate) * 12 + (month(o_orderdate) - 1) AS BIGINT) AS m,
-         CAST(round(sum(o_totalprice) * 100) AS BIGINT) AS cents
+         {to_cents_sql("sum(o_totalprice)")} AS cents
   FROM orders GROUP BY 1, 2
 ), months AS (
   SELECT DISTINCT m FROM monthly
@@ -1667,7 +1668,7 @@ def analytics_mrr_movements(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.year("o_orderdate") * 12 + (F.month("o_orderdate") - 1))
         .cast("bigint")
         .alias("m"),
-    ).agg(F.round(F.sum("o_totalprice") * 100).cast("bigint").alias("cents"))
+    ).agg(to_cents(F.sum("o_totalprice")).alias("cents"))
     months = monthly.select("m").distinct()
     custs = monthly.select("cust").distinct()
     grid = (
@@ -1697,12 +1698,12 @@ def analytics_mrr_movements(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "agg_grouping_id",
     tags=("agg", "sql"),
-    oracle="""
+    oracle=f"""
 SELECT coalesce(o_orderstatus, 'ALL') AS status,
        coalesce(o_orderpriority, 'ALL') AS priority,
        CAST(grouping(o_orderstatus) * 2 + grouping(o_orderpriority) AS BIGINT) AS gid,
        CAST(count(*) AS BIGINT) AS n,
-       sum(CAST(round(o_totalprice * 100) AS BIGINT)) / 100.0 AS total
+       sum({to_cents_sql("o_totalprice")}) / 100.0 AS total
 FROM orders
 GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
 """,
@@ -1726,7 +1727,7 @@ def agg_grouping_id(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("gid"),
             F.count(F.lit(1)).cast("bigint").alias("n"),
             (
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")) / 100.0
+                F.sum(to_cents("o_totalprice")) / 100.0
             ).alias("total"),
         )
         .select(
@@ -1779,9 +1780,9 @@ def sql_row_level_security(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "relational_skyline_frontier",
     tags=("relational", "analytics"),
-    oracle="""
+    oracle=f"""
 WITH pts AS (
-  SELECT p_partkey, CAST(round(p_retailprice * 100) AS BIGINT) AS price_cents,
+  SELECT p_partkey, {to_cents_sql("p_retailprice")} AS price_cents,
          CAST(p_size AS BIGINT) AS p_size
   FROM part
 ), grp AS (
@@ -1823,7 +1824,7 @@ def relational_skyline_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pts = load_table(spark, sf_dir, "part").select(
         "p_partkey",
-        F.round(F.col("p_retailprice") * 100).cast("bigint").alias("price_cents"),
+        to_cents("p_retailprice").alias("price_cents"),
         F.col("p_size").cast("bigint").alias("p_size"),
     )
     grp = pts.groupBy("price_cents").agg(F.max("p_size").alias("gmax"))

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.measures import to_cents, to_cents_sql
 from ..registry import register
 from ..sources import load_table
 
@@ -298,12 +299,12 @@ def sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sample_importance_reweight",
     tags=("sampling", "stats", "eval"),
-    oracle="""
+    oracle=f"""
 WITH s AS (
   SELECT event_type,
          CAST(dayofweek(CAST(ts AS DATE)) AS BIGINT) AS dow,
          CAST(count(*) AS BIGINT) AS n_s,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sx
+         CAST(sum({to_cents_sql("value")}) AS BIGINT) AS sx
   FROM events GROUP BY 1, 2
 ), tot AS (
   SELECT CAST(count(*) AS BIGINT) AS k,
@@ -342,7 +343,7 @@ def sample_importance_reweight(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.dayofweek(F.col("ts").cast("date")).cast("bigint").alias("dow"),
     ).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_s"),
-        F.sum(F.round(F.col("value") * 100).cast("bigint")).cast("bigint").alias("sx"),
+        F.sum(to_cents("value")).cast("bigint").alias("sx"),
     )
     tot = s.agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
@@ -371,10 +372,10 @@ HOEFF_FRACS = (1, 10, 100)  # per-mille sampling rates: 0.1%, 1%, 10%
 @register(
     "sample_hoeffding_certificate",
     tags=("sample", "stats"),
-    oracle="""
+    oracle=f"""
 WITH base AS (
   SELECT o_orderkey,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+         {to_cents_sql("o_totalprice")} AS cents,
          CAST('0x' || substr(md5('hc-' || o_orderkey), 1, 8) AS BIGINT) % 1000
            AS coin
   FROM orders
@@ -430,7 +431,7 @@ def sample_hoeffding_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes every engine and every rerun pick the identical sample."""
     base = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+        to_cents("o_totalprice").alias("cents"),
         (
             F.conv(
                 F.substring(

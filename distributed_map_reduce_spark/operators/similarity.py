@@ -238,6 +238,18 @@ def query_topk(corpus: DataFrame, queries: DataFrame, k: int,
     return scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
 
 
+def probe_queries(e: DataFrame, *extra: F.Column) -> DataFrame:
+    """The probe set every top-k query evaluates: the rows with
+    ``vec_id < 8`` of ``e`` (vec_id, v, nrm) as the ``queries`` frame of
+    :func:`query_topk` (query_id, qv, qnrm), then ``extra``."""
+    return e.filter(F.col("vec_id") < 8).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.col("nrm").alias("qnrm"),
+        *extra,
+    )
+
+
 def centroids(df: DataFrame, key: str) -> DataFrame:
     """Per-``key`` mean vector of ``v`` as (c_label, cv): one posexplode,
     one (key, dim) average, the dims collected back in order — the
@@ -296,12 +308,7 @@ def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
     ).withColumn("nrm", norm(F.col("v")))
-    q = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
-    return query_topk(e, q, 5)
+    return query_topk(e, probe_queries(e), 5)
 
 
 @register(
@@ -358,12 +365,7 @@ def ann_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = e.withColumn("bucket", lsh_bucket(F.col("v"))).withColumn(
         "nrm", norm(F.col("v"))
     )
-    q = b.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-        F.col("bucket").alias("q_bucket"),
-    )
+    q = probe_queries(b, F.col("bucket").alias("q_bucket"))
     return query_topk(b, q, 5, on=F.col("bucket") == F.col("q_bucket"))
 
 
@@ -653,12 +655,7 @@ def similarity_matryoshka_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def top5(e: DataFrame) -> DataFrame:
         e = e.withColumn("nrm", norm(F.col("v")))
-        q = e.filter(F.col("vec_id") < 8).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("v").alias("qv"),
-            F.col("nrm").alias("qnrm"),
-        )
-        return query_topk(e, q, 5)
+        return query_topk(e, probe_queries(e), 5)
 
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("v")
@@ -1271,11 +1268,7 @@ def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "label", as_double(F.col("embedding")).alias("v")
     ).withColumn("nrm", norm(F.col("v")))
     cent = centroids(e, "label")
-    q = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
+    q = probe_queries(e)
     crn = W.partitionBy("query_id").orderBy(F.col("cd"), F.col("c_label"))
     probes = (
         q.crossJoin(F.broadcast(cent))  # 8 queries x n_lists: tiny
@@ -2149,12 +2142,7 @@ def eval_rank_metrics_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", as_double(F.col("embedding")).alias("v")
     ).withColumn("nrm", norm(F.col("v")))
-    q = e.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("qlabel"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qnrm"),
-    )
+    q = probe_queries(e, F.col("label").alias("qlabel"))
     ranked = (
         e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
         .select(

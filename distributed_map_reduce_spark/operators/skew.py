@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.measures import to_cents, to_cents_sql
 from ..registry import register
 from ..sources import load_table
 
@@ -52,12 +53,12 @@ def salted_agg(
 @register(
     "agg_salted_skew",
     tags=("agg", "skew"),
-    oracle="""
+    oracle=f"""
 SELECT l_returnflag,
        -- exact cents sum, one shared /100.0 (r8 sf10-stride catch: the
        -- raw double sum's accumulation drift crossed the 2dp grain at
        -- ~20M rows/group, the same class as agg_aging_buckets at r7)
-       sum(CAST(round(l_extendedprice * 100) AS BIGINT)) / 100.0 AS total_price,
+       sum({to_cents_sql("l_extendedprice")}) / 100.0 AS total_price,
        count(*) AS n,
        round(max(l_quantity), 2) AS max_qty
 FROM lineitem
@@ -70,7 +71,7 @@ def agg_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = (
         load_table(spark, sf_dir, "lineitem")
         .withColumn(
-            "_price_cents", F.round(F.col("l_extendedprice") * 100).cast("bigint")
+            "_price_cents", to_cents("l_extendedprice")
         )
         # count(*) parity: count a literal, not a value column — Spark's
         # count skips nulls, so counting _price_cents would diverge from
@@ -99,11 +100,11 @@ def agg_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "join_salted_skew",
     tags=("join", "skew"),
-    oracle="""
+    oracle=f"""
 SELECT o_orderpriority,
        count(*) AS n_lines,
        -- exact cents sum (same r8 sf10 drift class as agg_salted_skew)
-       sum(CAST(round(l_extendedprice * 100) AS BIGINT)) / 100.0 AS total_price
+       sum({to_cents_sql("l_extendedprice")}) / 100.0 AS total_price
 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
 GROUP BY o_orderpriority
 """,
@@ -123,7 +124,7 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
             (
-                F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint"))
+                F.sum(to_cents("l_extendedprice"))
                 / 100.0
             ).alias("total_price"),
         )
@@ -133,14 +134,14 @@ def join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "join_hot_cold_split",
     tags=("join", "skew"),
-    oracle="""
+    oracle=f"""
 WITH hot AS (
   SELECT o_custkey FROM orders GROUP BY o_custkey HAVING count(*) > 20
 )
 SELECT o.o_custkey,
        CASE WHEN h.o_custkey IS NOT NULL THEN 1 ELSE 0 END AS is_hot,
        CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
+       CAST(sum({to_cents_sql("o.o_totalprice")}) AS BIGINT)
          AS total_cents,
        max(c.c_mktsegment) AS segment
 FROM orders o
@@ -180,7 +181,7 @@ def join_hot_cold_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     both = hot_join.unionByName(cold_join)
     return both.groupBy("o_custkey", "is_hot").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+        F.sum(to_cents("o_totalprice"))
         .cast("bigint")
         .alias("total_cents"),
         F.max("c_mktsegment").alias("segment"),

@@ -1,19 +1,45 @@
-"""Distribution statistics: exact percentiles, histograms, and the
-approximate tier for 100 TB (approx_percentile — one pass, mergeable
-sketches, no global sort).
+"""The statistics, experiment and evaluation tier (122 queries).
 
-The exact `percentile` is the oracle-checkable tier (linear
-interpolation, identical to DuckDB's quantile_cont); the approximate
-twin is registered rows-only because sketch estimates are
-engine-specific by construction.
+- Distributions: exact percentiles (``percentile``, linear
+  interpolation — DuckDB's quantile_cont), weighted medians,
+  histograms, moments, heavy hitters, the approximate sketch tier
+  (registered rows-only: sketch estimates are engine-specific).
+- Hypothesis tests and estimators: parametric and rank tests (Welch,
+  ANOVA, Mann-Whitney, Kruskal-Wallis, Wilcoxon, ...), correlation and
+  regression, concentration and divergence indices, changepoint and
+  time-series tests, survival (Kaplan-Meier, Nelson-Aalen, log-rank
+  over one repurchase-subjects frame).
+- A/B experiments: z-test, SRM guardrail, power, CUPED, SPRT,
+  permutation, Bayesian, TOST, delta method, uplift, group-sequential —
+  on the user_id-parity arm and, for binary outcomes, the per-user
+  conversion unit of `functions/measures.py`.
+- Evaluation metrics: calibration, AUC, Youden, pass@k, Bradley-Terry.
+
+Money is summed as exact BIGINT cents (`measures.to_cents`), and every
+float statistic is spelled as the same expression tree on both engines,
+so each oracle compares at a fixed rounding.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.normalize import SPLIT_LOWER_SQL, WORDS_SQL, split_lower, words
+from ..functions.measures import (
+    ARM_SQL,
+    CONVERTED_SQL,
+    arm,
+    arm_pivot,
+    arm_pivot_sql,
+    converted,
+    normal_tail,
+    normal_tail_sql,
+    sum_dollars_half_up,
+    sum_dollars_half_up_sql,
+    to_cents,
+    to_cents_sql,
+)
 from ..registry import register
 from ..sources import load_table
 
@@ -564,11 +590,11 @@ def stats_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "agg_argminmax",
     tags=("agg",),
-    oracle="""
+    oracle=f"""
 SELECT c_nationkey,
-       arg_max(c_name, CAST(round(c_acctbal * 100) AS BIGINT) * 10000000 + c_custkey)
+       arg_max(c_name, {to_cents_sql("c_acctbal")} * 10000000 + c_custkey)
            AS richest_name,
-       arg_min(c_name, CAST(round(c_acctbal * 100) AS BIGINT) * 10000000 + c_custkey)
+       arg_min(c_name, {to_cents_sql("c_acctbal")} * 10000000 + c_custkey)
            AS poorest_name,
        CAST(count_if(c_acctbal < 0) AS BIGINT) AS n_negative,
        round(max(c_acctbal), 2) AS max_bal,
@@ -582,7 +608,7 @@ def agg_argminmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     so ties are impossible — max_by on a tied key is engine-defined,
     which a cross-engine contract must never rely on."""
     c = load_table(spark, sf_dir, "customer")
-    key = F.round(F.col("c_acctbal") * 100).cast("long") * 10000000 + F.col("c_custkey")
+    key = to_cents("c_acctbal") * 10000000 + F.col("c_custkey")
     return c.groupBy("c_nationkey").agg(
         F.max_by("c_name", key).alias("richest_name"),
         F.min_by("c_name", key).alias("poorest_name"),
@@ -1278,10 +1304,10 @@ def stats_rate_anomaly_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_cusum_changepoint",
     tags=("stats", "temporal", "anomaly"),
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT CAST(o_orderdate AS DATE) AS day,
-         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS day_cents
+         CAST(sum({to_cents_sql("o_totalprice")}) AS BIGINT) AS day_cents
   FROM orders GROUP BY 1
 ), t AS (
   SELECT day, day_cents,
@@ -1328,7 +1354,7 @@ def stats_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+            F.sum(to_cents("o_totalprice"))
             .cast("bigint")
             .alias("day_cents")
         )
@@ -1384,7 +1410,7 @@ def _poisson_weight_col(m):
     tags=("stats", "resampling"),
     oracle=f"""
 WITH h AS (
-  SELECT g, CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+  SELECT g, {to_cents_sql("o_totalprice")} AS cents,
          md5('boot:' || CAST(g AS VARCHAR) || ':' || CAST(o_orderkey AS VARCHAR)) AS hex
   FROM orders CROSS JOIN (SELECT unnest(range(0, 25)) AS g)
 ),
@@ -1402,7 +1428,7 @@ ranked AS (
   FROM rmeans
 )
 SELECT CAST(100 AS BIGINT) AS n_reps,
-       (SELECT round(sum(CAST(round(o_totalprice * 100) AS BIGINT)) / (100.0 * count(*)), 4)
+       (SELECT round(sum({to_cents_sql("o_totalprice")}) / (100.0 * count(*)), 4)
         FROM orders) AS mean_est,
        round((SELECT rmean FROM ranked WHERE rn = 5), 4) AS ci_lo,
        round((SELECT rmean FROM ranked WHERE rn = 96), 4) AS ci_hi
@@ -1436,7 +1462,7 @@ def stats_bootstrap_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents")
+        "o_orderkey", to_cents("o_totalprice").alias("cents")
     )
     # The coin derivation is CPU-dense (~25 md5 + 100 conv/CASE per
     # row), so it wants CORE-count parallelism, not IO-split
@@ -1511,8 +1537,8 @@ def stats_bootstrap_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "agg_exact_median_scalable",
     tags=("stats", "agg", "scale"),
-    oracle="""
-WITH c AS (SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS cents FROM lineitem),
+    oracle=f"""
+WITH c AS (SELECT {to_cents_sql("l_extendedprice")} AS cents FROM lineitem),
 t AS (SELECT CAST(count(*) AS BIGINT) AS n FROM c),
 ks AS (SELECT unnest([(n + 1) // 2, (n + 2) // 2]) AS k FROM t),
 bands AS (SELECT cents // 10000 AS band, CAST(count(*) AS BIGINT) AS cnt FROM c GROUP BY 1),
@@ -1558,7 +1584,7 @@ def agg_exact_median_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     li = load_table(spark, sf_dir, "lineitem").select(
-        F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents")
+        to_cents("l_extendedprice").alias("cents")
     )
     t = li.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     ks = t.select(
@@ -1608,10 +1634,10 @@ def agg_exact_median_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_theil_sen_trend",
     tags=("stats", "temporal", "robust"),
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT CAST(CAST(o_orderdate AS DATE) - DATE '1970-01-01' AS BIGINT) AS d,
-         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
+         CAST(sum({to_cents_sql("o_totalprice")}) AS BIGINT) AS cents
   FROM orders GROUP BY 1
 ), slopes AS (
   SELECT CAST(floor(1000000.0 * (b.cents - a.cents) / (b.d - a.d)) AS BIGINT)
@@ -1645,7 +1671,7 @@ def stats_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_date(F.col("o_orderdate").cast("date")).cast("bigint").alias("d")
         )
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+            F.sum(to_cents("o_totalprice"))
             .cast("bigint")
             .alias("cents")
         )
@@ -1823,10 +1849,10 @@ def agg_bitmap_hierarchical_rollup(spark: SparkSession, sf_dir: str) -> DataFram
 @register(
     "stats_mann_whitney_u",
     tags=("stats", "testing"),
-    oracle="""
+    oracle=f"""
 WITH s AS (
   SELECT CASE WHEN o_orderkey % 2 = 0 THEN 'A' ELSE 'B' END AS arm,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+         {to_cents_sql("o_totalprice")} AS cents
   FROM orders
 ), ranked AS (
   SELECT arm, cents,
@@ -1865,7 +1891,7 @@ def stats_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     s = load_table(spark, sf_dir, "orders").select(
         F.when(F.col("o_orderkey") % 2 == 0, "A").otherwise("B").alias("arm"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+        to_cents("o_totalprice").alias("cents"),
     )
     hist = s.groupBy("arm", "cents").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_ac")
@@ -1903,10 +1929,10 @@ def stats_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_runs_test",
     tags=("stats", "testing"),
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT CAST(o_orderdate AS DATE) AS day,
-         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
+         CAST(sum({to_cents_sql("o_totalprice")}) AS BIGINT) AS cents
   FROM orders GROUP BY 1
 ), med AS (
   SELECT CAST(floor(median(cents)) AS BIGINT) AS m FROM daily
@@ -1948,7 +1974,7 @@ def stats_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+            F.sum(to_cents("o_totalprice"))
             .cast("bigint")
             .alias("cents")
         )
@@ -2145,18 +2171,15 @@ def stats_shannon_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_two_proportion_ztest",
     tags=("stats", "experiment"),
-    oracle="""
+    oracle=f"""
 WITH u AS (
-  SELECT user_id, user_id % 2 AS arm,
-         max(CASE WHEN event_type = 'purchase' AND value >= 150 THEN 1 ELSE 0 END) AS conv
+  SELECT user_id, {ARM_SQL} AS arm,
+         {CONVERTED_SQL} AS conv
   FROM events GROUP BY user_id
 ), arms AS (
   SELECT arm, count(*) AS n, CAST(sum(conv) AS BIGINT) AS c FROM u GROUP BY arm
 ), w AS (
-  SELECT max(CASE WHEN arm = 0 THEN n END) AS n_a,
-         max(CASE WHEN arm = 0 THEN c END) AS c_a,
-         max(CASE WHEN arm = 1 THEN n END) AS n_b,
-         max(CASE WHEN arm = 1 THEN c END) AS c_b
+  SELECT {arm_pivot_sql()}
   FROM arms
 )
 SELECT CAST(n_a AS BIGINT) AS n_a, CAST(c_a AS BIGINT) AS conv_a,
@@ -2192,21 +2215,11 @@ def stats_two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers, one sqrt), so z agrees bitwise; the 1.96 significance
     cut inherits that determinism."""
     ev = load_table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.max(
-            F.when((F.col("event_type") == "purchase") & (F.col("value") >= 150), 1)
-            .otherwise(0)
-        ).alias("conv")
-    ).withColumn("arm", F.col("user_id") % 2)
+    u = ev.groupBy("user_id").agg(converted().alias("conv")).withColumn("arm", arm())
     arms = u.groupBy("arm").agg(
         F.count(F.lit(1)).alias("n"), F.sum("conv").alias("c")
     )
-    w = arms.agg(
-        F.max(F.when(F.col("arm") == 0, F.col("n"))).alias("n_a"),
-        F.max(F.when(F.col("arm") == 0, F.col("c"))).alias("c_a"),
-        F.max(F.when(F.col("arm") == 1, F.col("n"))).alias("n_b"),
-        F.max(F.when(F.col("arm") == 1, F.col("c"))).alias("c_b"),
-    )
+    w = arms.agg(*arm_pivot())
     p_a = F.col("c_a") * 1.0 / F.col("n_a")
     p_b = F.col("c_b") * 1.0 / F.col("n_b")
     c_tot = F.col("c_a") + F.col("c_b")
@@ -2275,10 +2288,10 @@ def stats_correlation_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "agg_weighted_percentile",
     tags=("agg", "stats"),
-    oracle="""
+    oracle=f"""
 WITH base AS (
   SELECT l_returnflag AS flag,
-         CAST(round(l_extendedprice * 100) AS BIGINT) AS cents,
+         {to_cents_sql("l_extendedprice")} AS cents,
          CAST(l_quantity AS BIGINT) AS wt
   FROM lineitem
 ), agg AS (
@@ -2314,7 +2327,7 @@ def agg_weighted_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     base = li.select(
         F.col("l_returnflag").alias("flag"),
-        F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
+        to_cents("l_extendedprice").alias("cents"),
         F.col("l_quantity").cast("bigint").alias("wt"),
     )
     agg = base.groupBy("flag", "cents").agg(F.sum("wt").alias("w"))
@@ -2345,14 +2358,13 @@ def agg_weighted_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_srm_guardrail",
     tags=("stats", "experiment"),
-    oracle="""
+    oracle=f"""
 WITH u AS (
-  SELECT DISTINCT user_id, user_id % 2 AS arm FROM events
+  SELECT DISTINCT user_id, {ARM_SQL} AS arm FROM events
 ), arms AS (
   SELECT arm, count(*) AS n FROM u GROUP BY arm
 ), w AS (
-  SELECT CAST(coalesce(max(CASE WHEN arm = 0 THEN n END), 0) AS BIGINT) AS n_a,
-         CAST(coalesce(max(CASE WHEN arm = 1 THEN n END), 0) AS BIGINT) AS n_b
+  SELECT {arm_pivot_sql(("n",), "CAST(coalesce({}, 0) AS BIGINT)")}
   FROM arms
 )
 SELECT n_a, n_b,
@@ -2378,17 +2390,12 @@ def stats_srm_guardrail(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row projection of exact-integer-derived doubles, identical ops on
     both engines."""
     ev = load_table(spark, sf_dir, "events")
-    u = ev.select("user_id").distinct().withColumn("arm", F.col("user_id") % 2)
+    u = ev.select("user_id").distinct().withColumn("arm", arm())
     arms = u.groupBy("arm").agg(F.count(F.lit(1)).alias("n"))
     # a missing arm is counted as n=0 (the worst possible mismatch), not
     # NULL-propagated — chi2 then equals n_total and SRM fires, instead of
     # the statistic silently going NULL (same latent class as the z-test)
-    w = arms.agg(
-        F.coalesce(F.max(F.when(F.col("arm") == 0, F.col("n"))), F.lit(0))
-        .cast("bigint").alias("n_a"),
-        F.coalesce(F.max(F.when(F.col("arm") == 1, F.col("n"))), F.lit(0))
-        .cast("bigint").alias("n_b"),
-    )
+    w = arms.agg(*arm_pivot(("n",), lambda c: F.coalesce(c, F.lit(0)).cast("bigint")))
     exp = (F.col("n_a") + F.col("n_b")) / 2.0
     chi2 = (F.col("n_a") - exp) * (F.col("n_a") - exp) / exp + (
         F.col("n_b") - exp
@@ -2405,18 +2412,15 @@ def stats_srm_guardrail(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_experiment_power",
     tags=("stats", "experiment"),
-    oracle="""
+    oracle=f"""
 WITH u AS (
-  SELECT user_id, user_id % 2 AS arm,
-         max(CASE WHEN event_type = 'purchase' AND value >= 150 THEN 1 ELSE 0 END) AS conv
+  SELECT user_id, {ARM_SQL} AS arm,
+         {CONVERTED_SQL} AS conv
   FROM events GROUP BY user_id
 ), arms AS (
   SELECT arm, count(*) AS n, CAST(sum(conv) AS BIGINT) AS c FROM u GROUP BY arm
 ), w AS (
-  SELECT CAST(max(CASE WHEN arm = 0 THEN n END) AS BIGINT) AS n_a,
-         CAST(max(CASE WHEN arm = 0 THEN c END) AS BIGINT) AS c_a,
-         CAST(max(CASE WHEN arm = 1 THEN n END) AS BIGINT) AS n_b,
-         CAST(max(CASE WHEN arm = 1 THEN c END) AS BIGINT) AS c_b
+  SELECT {arm_pivot_sql(wrap="CAST({} AS BIGINT)")}
   FROM arms
 )
 SELECT n_a, n_b,
@@ -2444,19 +2448,9 @@ def stats_experiment_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     the power math is a 1-row projection of exact-integer-derived
     doubles — identical expression tree on both engines."""
     ev = load_table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.max(
-            F.when((F.col("event_type") == "purchase") & (F.col("value") >= 150), 1)
-            .otherwise(0)
-        ).alias("conv")
-    ).withColumn("arm", F.col("user_id") % 2)
+    u = ev.groupBy("user_id").agg(converted().alias("conv")).withColumn("arm", arm())
     arms = u.groupBy("arm").agg(F.count(F.lit(1)).alias("n"), F.sum("conv").alias("c"))
-    w = arms.agg(
-        F.max(F.when(F.col("arm") == 0, F.col("n"))).cast("bigint").alias("n_a"),
-        F.max(F.when(F.col("arm") == 0, F.col("c"))).cast("bigint").alias("c_a"),
-        F.max(F.when(F.col("arm") == 1, F.col("n"))).cast("bigint").alias("n_b"),
-        F.max(F.when(F.col("arm") == 1, F.col("c"))).cast("bigint").alias("c_b"),
-    )
+    w = arms.agg(*arm_pivot(wrap=lambda c: c.cast("bigint")))
     p_pool = (F.col("c_a") + F.col("c_b")) * 1.0 / (F.col("n_a") + F.col("n_b"))
     mde = 2.8 * F.sqrt(
         2.0 * p_pool * (1.0 - p_pool) / F.least(F.col("n_a"), F.col("n_b"))
@@ -2485,7 +2479,7 @@ CUPED_SPLIT = "2024-01-16"  # pre-period: days before; post-period: from here on
     tags=("stats", "experiment"),
     oracle=f"""
 WITH per_user AS (
-  SELECT user_id, user_id % 2 AS arm,
+  SELECT user_id, {ARM_SQL} AS arm,
          sum(CASE WHEN ts <  CAST('{CUPED_SPLIT}' AS TIMESTAMP) THEN value ELSE 0 END) AS x,
          sum(CASE WHEN ts >= CAST('{CUPED_SPLIT}' AS TIMESTAMP) THEN value ELSE 0 END) AS y
   FROM events GROUP BY user_id
@@ -2525,7 +2519,7 @@ def stats_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_user = ev.groupBy("user_id").agg(
         F.sum(F.when(F.col("ts") < split, F.col("value")).otherwise(0.0)).alias("x"),
         F.sum(F.when(F.col("ts") >= split, F.col("value")).otherwise(0.0)).alias("y"),
-    ).withColumn("arm", F.col("user_id") % 2)
+    ).withColumn("arm", arm())
     theta = per_user.agg(
         # a constant covariate has zero variance: CUPED degrades to the
         # unadjusted metric (theta 0) instead of an ANSI divide-by-zero
@@ -2562,7 +2556,7 @@ SPRT_P1 = 0.50
     oracle=f"""
 WITH u AS (
   SELECT user_id,
-         max(CASE WHEN event_type = 'purchase' AND value >= 150 THEN 1 ELSE 0 END) AS conv
+         {CONVERTED_SQL} AS conv
   FROM events GROUP BY user_id
 ), seq AS (
   SELECT user_id, conv,
@@ -2603,12 +2597,7 @@ def stats_sprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .ranks import two_phase_ordered
 
     ev = load_table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.max(
-            F.when((F.col("event_type") == "purchase") & (F.col("value") >= 150), 1)
-            .otherwise(0)
-        ).alias("conv")
-    )
+    u = ev.groupBy("user_id").agg(converted().alias("conv"))
     mo = u.withColumn("_ord", F.md5(F.col("user_id").cast("string")))
     seq = two_phase_ordered(
         mo, F.substring("_ord", 1, 2), ["_ord"], rn="t", cum_sums={"conv": "c"}
@@ -2635,10 +2624,10 @@ def stats_sprt_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_mann_kendall",
     tags=("stats", "temporal"),
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT CAST(ts AS DATE) AS day,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
+         {to_cents_sql("sum(value)")} AS cents
   FROM events WHERE event_type = 'purchase' GROUP BY 1
 ), pairs AS (
   SELECT CASE WHEN b.cents > a.cents THEN 1
@@ -2674,7 +2663,7 @@ def stats_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         ev.filter(F.col("event_type") == "purchase")
         .groupBy(F.col("ts").cast("date").alias("day"))
-        .agg(F.round(F.sum("value") * 100).cast("bigint").alias("cents"))
+        .agg(to_cents(F.sum("value")).alias("cents"))
     )
     a = daily.select(F.col("day").alias("da"), F.col("cents").alias("ca"))
     b = daily.select(F.col("day").alias("db"), F.col("cents").alias("cb"))
@@ -2780,25 +2769,60 @@ def stats_rfm_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "stats_kaplan_meier",
-    tags=("stats", "temporal"),
-    oracle="""
-WITH purchases AS (
-  SELECT user_id, CAST(ts AS DATE) AS day, ts, event_id
+def _repurchase_subjects(ev: DataFrame, **carry: Column) -> DataFrame:
+    """One subject per purchase, ending at the user's next purchase
+    (t days, censored 0) or, for the last one, at the horizon = the
+    latest purchase day (censored 1); ``carry`` adds per-purchase
+    columns by name. Shared by the survival queries; its oracle twin is
+    :func:`_repurchase_subjects_sql`."""
+    from pyspark.sql import Window
+
+    purchases = ev.filter(F.col("event_type") == "purchase").select(
+        "user_id",
+        *(c.alias(n) for n, c in carry.items()),
+        F.col("ts").cast("date").alias("day"),
+        "ts",
+        "event_id",
+    )
+    wseq = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    seq = purchases.withColumn("nxt", F.lead("day").over(wseq))
+    horizon = purchases.agg(F.max("day").alias("h"))
+    return seq.crossJoin(F.broadcast(horizon)).select(
+        *carry,
+        F.when(F.col("nxt").isNotNull(), F.datediff("nxt", "day") + 1)
+        .otherwise(F.datediff("h", "day") + 1)
+        .alias("t"),
+        F.when(F.col("nxt").isNotNull(), 0).otherwise(1).alias("censored"),
+    )
+
+
+def _repurchase_subjects_sql(**carry: str) -> str:
+    """The CTEs purchases, seq, horizon and subjects (t, censored) of
+    :func:`_repurchase_subjects`; ``carry`` maps a name to its SQL."""
+    sel = "".join(f"{e} AS {n}, " for n, e in carry.items())
+    keep = "".join(f"{n}, " for n in carry)
+    return f"""purchases AS (
+  SELECT user_id, {sel}CAST(ts AS DATE) AS day, ts, event_id
   FROM events WHERE event_type = 'purchase'
 ), seq AS (
-  SELECT user_id, day,
+  SELECT user_id, {keep}day,
          lead(day) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS nxt
   FROM purchases
 ), horizon AS (
   SELECT max(day) AS h FROM purchases
 ), subjects AS (
-  SELECT CASE WHEN nxt IS NOT NULL THEN date_diff('day', day, nxt) + 1
+  SELECT {keep}CASE WHEN nxt IS NOT NULL THEN date_diff('day', day, nxt) + 1
               ELSE date_diff('day', day, (SELECT h FROM horizon)) + 1 END AS t,
          CASE WHEN nxt IS NOT NULL THEN 0 ELSE 1 END AS censored
   FROM seq
-), at_t AS (
+)"""
+
+
+@register(
+    "stats_kaplan_meier",
+    tags=("stats", "temporal"),
+    oracle=f"""
+WITH {_repurchase_subjects_sql()}, at_t AS (
   SELECT t,
          CAST(count(*) AS BIGINT) AS n_ending,
          CAST(sum(1 - censored) AS BIGINT) AS d
@@ -2839,19 +2863,7 @@ def stats_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     DURATION-cardinality rows — days, not events."""
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts").cast("date").alias("day"), "ts", "event_id"
-    )
-    wseq = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = purchases.withColumn("nxt", F.lead("day").over(wseq))
-    horizon = purchases.agg(F.max("day").alias("h"))
-    subjects = seq.crossJoin(F.broadcast(horizon)).select(
-        F.when(
-            F.col("nxt").isNotNull(), F.datediff("nxt", "day") + 1
-        ).otherwise(F.datediff("h", "day") + 1).alias("t"),
-        F.when(F.col("nxt").isNotNull(), 0).otherwise(1).alias("censored"),
-    )
+    subjects = _repurchase_subjects(load_table(spark, sf_dir, "events"))
     at_t = subjects.groupBy("t").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_ending"),
         F.sum(1 - F.col("censored")).cast("bigint").alias("d"),
@@ -2955,10 +2967,10 @@ def stats_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_wilson_interval",
     tags=("stats", "experiment"),
-    oracle="""
+    oracle=f"""
 WITH u AS (
   SELECT user_id,
-         max(CASE WHEN event_type = 'purchase' AND value >= 150 THEN 1 ELSE 0 END) AS conv
+         {CONVERTED_SQL} AS conv
   FROM events GROUP BY user_id
 ), c AS (
   SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(conv) AS BIGINT) AS k FROM u
@@ -2985,12 +2997,7 @@ def stats_wilson_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup agg then a 1-row closed-form projection of exact-integer
     ratios — same determinism class as the z-test."""
     ev = load_table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.max(
-            F.when((F.col("event_type") == "purchase") & (F.col("value") >= 150), 1)
-            .otherwise(0)
-        ).alias("conv")
-    )
+    u = ev.groupBy("user_id").agg(converted().alias("conv"))
     c = u.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("conv").cast("bigint").alias("k"),
@@ -3011,13 +3018,13 @@ def stats_wilson_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_anova_oneway",
     tags=("stats", "experiment"),
-    oracle="""
+    oracle=f"""
 WITH g AS (
   SELECT o_orderpriority AS grp,
          count(*) AS n_g,
-         sum(CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS HUGEINT)) AS s_g,
-         sum(CAST(CAST(round(o_totalprice * 100) AS BIGINT) AS HUGEINT)
-             * CAST(round(o_totalprice * 100) AS BIGINT)) AS ss_g
+         sum(CAST({to_cents_sql("o_totalprice")} AS HUGEINT)) AS s_g,
+         sum(CAST({to_cents_sql("o_totalprice")} AS HUGEINT)
+             * {to_cents_sql("o_totalprice")}) AS ss_g
   FROM orders GROUP BY 1
 ), tot AS (
   SELECT CAST(count(*) AS BIGINT) AS k,
@@ -3057,7 +3064,7 @@ def stats_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan -> 5-row partial agg -> 1-row projection; the
     partial aggregation tree does all the work at 100 TB."""
     o = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
+    cents = to_cents("o_totalprice")
     g = o.groupBy(F.col("o_orderpriority").alias("grp")).agg(
         F.count(F.lit(1)).alias("n_g"),
         F.sum(cents.cast("decimal(18,0)")).alias("s_g"),
@@ -3092,7 +3099,7 @@ def stats_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_benjamini_hochberg",
     tags=("stats", "experiment"),
-    oracle="""
+    oracle=f"""
 WITH nat AS (
   SELECT n.n_name AS nation,
          count(*) AS n_orders,
@@ -3114,12 +3121,7 @@ WITH nat AS (
   FROM nat, g_tot
 ), p AS (
   SELECT nation, n_orders, n_urgent, zv,
-         2.0 * (exp(-zv * zv / 2.0) / sqrt(2.0 * pi()))
-             * (0.319381530 * (1.0 / (1.0 + 0.2316419 * abs(zv)))
-                - 0.356563782 * pow(1.0 / (1.0 + 0.2316419 * abs(zv)), 2)
-                + 1.781477937 * pow(1.0 / (1.0 + 0.2316419 * abs(zv)), 3)
-                - 1.821255978 * pow(1.0 / (1.0 + 0.2316419 * abs(zv)), 4)
-                + 1.330274429 * pow(1.0 / (1.0 + 0.2316419 * abs(zv)), 5)) AS pv
+         {normal_tail_sql("zv", two_sided=True)} AS pv
   FROM z
 ), ranked AS (
   SELECT nation, n_orders, n_urgent, zv, pv,
@@ -3190,16 +3192,7 @@ def stats_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ),
     )
-    t = 1.0 / (1.0 + 0.2316419 * F.abs(F.col("zv")))
-    phi = F.exp(-F.col("zv") * F.col("zv") / 2.0) / F.sqrt(F.lit(2.0) * 3.141592653589793)
-    pv = 2.0 * phi * (
-        0.319381530 * t
-        - 0.356563782 * F.pow(t, 2)
-        + 1.781477937 * F.pow(t, 3)
-        - 1.821255978 * F.pow(t, 4)
-        + 1.330274429 * F.pow(t, 5)
-    )
-    p = z.withColumn("pv", pv)
+    p = z.withColumn("pv", normal_tail(F.col("zv"), two_sided=True))
     from pyspark.sql import Window
 
     wr = Window.orderBy("pv", "nation")  # frame: bounded (nation-grain, 25 rows)
@@ -3228,16 +3221,16 @@ def stats_benjamini_hochberg(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_permutation_test",
     tags=("stats", "experiment"),
-    oracle="""
+    oracle=f"""
 WITH u AS (
   SELECT user_id,
-         max(CASE WHEN event_type = 'purchase' AND value >= 150 THEN 1 ELSE 0 END) AS conv
+         {CONVERTED_SQL} AS conv
   FROM events GROUP BY user_id
 ), obs AS (
-  SELECT sum(CASE WHEN user_id % 2 = 1 THEN conv ELSE 0 END) * 1.0
-           / sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END)
-         - sum(CASE WHEN user_id % 2 = 0 THEN conv ELSE 0 END) * 1.0
-           / sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS diff_obs,
+  SELECT sum(CASE WHEN {ARM_SQL} = 1 THEN conv ELSE 0 END) * 1.0
+           / sum(CASE WHEN {ARM_SQL} = 1 THEN 1 ELSE 0 END)
+         - sum(CASE WHEN {ARM_SQL} = 0 THEN conv ELSE 0 END) * 1.0
+           / sum(CASE WHEN {ARM_SQL} = 0 THEN 1 ELSE 0 END) AS diff_obs,
          CAST(count(*) AS BIGINT) AS n_users
   FROM u
 ), reps AS (
@@ -3286,18 +3279,13 @@ def stats_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     — at real cardinalities the hash makes that a non-event, but the
     guard keeps ANSI division defined (missing-arm class, ADVICE r4)."""
     ev = load_table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.max(
-            F.when((F.col("event_type") == "purchase") & (F.col("value") >= 150), 1)
-            .otherwise(0)
-        ).alias("conv")
-    )
+    u = ev.groupBy("user_id").agg(converted().alias("conv"))
     obs = u.agg(
         (
-            F.sum(F.when(F.col("user_id") % 2 == 1, F.col("conv")).otherwise(0)) * 1.0
-            / F.sum(F.when(F.col("user_id") % 2 == 1, 1).otherwise(0))
-            - F.sum(F.when(F.col("user_id") % 2 == 0, F.col("conv")).otherwise(0)) * 1.0
-            / F.sum(F.when(F.col("user_id") % 2 == 0, 1).otherwise(0))
+            F.sum(F.when(arm() == 1, F.col("conv")).otherwise(0)) * 1.0
+            / F.sum(F.when(arm() == 1, 1).otherwise(0))
+            - F.sum(F.when(arm() == 0, F.col("conv")).otherwise(0)) * 1.0
+            / F.sum(F.when(arm() == 0, 1).otherwise(0))
         ).alias("diff_obs"),
         F.count(F.lit(1)).cast("bigint").alias("n_users"),
     )
@@ -3442,12 +3430,12 @@ def stats_jensen_shannon(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_ols_two_feature",
     tags=("stats", "ml"),
-    oracle="""
+    oracle=f"""
 WITH li AS (
   SELECT l_returnflag AS flag,
          CAST(l_quantity AS BIGINT) AS x1,
          CAST(round(l_discount * 100) AS BIGINT) AS x2,
-         CAST(round(l_extendedprice * 100) AS BIGINT) AS y
+         {to_cents_sql("l_extendedprice")} AS y
   FROM lineitem
 ), m AS (
   SELECT flag,
@@ -3506,7 +3494,7 @@ def stats_ols_two_feature(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     x1 = F.col("l_quantity").cast("bigint")
     x2 = F.round(F.col("l_discount") * 100).cast("bigint")
-    y = F.round(F.col("l_extendedprice") * 100).cast("bigint")
+    y = to_cents("l_extendedprice")
     dec = "decimal(28,0)"
     m = li.select(
         F.col("l_returnflag").alias("flag"),
@@ -3651,10 +3639,10 @@ def stats_retention_decay_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_extreme_value_gumbel",
     tags=("stats", "analytics"),
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT CAST(ts AS DATE) AS day,
-         max(CAST(round(value * 100) AS BIGINT)) AS mx
+         max({to_cents_sql("value")}) AS mx
   FROM events GROUP BY 1
 ), m AS (
   SELECT CAST(count(*) AS BIGINT) AS n,
@@ -3698,7 +3686,7 @@ def stats_extreme_value_gumbel(spark: SparkSession, sf_dir: str) -> DataFrame:
     moments over integer cents, then a 1-row closed-form projection
     — the same determinism discipline as [[stats_anova_oneway]]."""
     ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("bigint")
+    cents = to_cents("value")
     daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.max(cents).alias("mx")
     )
@@ -3736,18 +3724,15 @@ def stats_extreme_value_gumbel(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_bayes_ab_normal_approx",
     tags=("stats", "experiment"),
-    oracle="""
+    oracle=f"""
 WITH u AS (
-  SELECT user_id, user_id % 2 AS arm,
-         max(CASE WHEN event_type = 'purchase' AND value >= 150 THEN 1 ELSE 0 END) AS conv
+  SELECT user_id, {ARM_SQL} AS arm,
+         {CONVERTED_SQL} AS conv
   FROM events GROUP BY user_id
 ), arms AS (
   SELECT arm, count(*) AS n, CAST(sum(conv) AS BIGINT) AS c FROM u GROUP BY arm
 ), w AS (
-  SELECT max(CASE WHEN arm = 0 THEN n END) AS n_a,
-         max(CASE WHEN arm = 0 THEN c END) AS c_a,
-         max(CASE WHEN arm = 1 THEN n END) AS n_b,
-         max(CASE WHEN arm = 1 THEN c END) AS c_b
+  SELECT {arm_pivot_sql()}
   FROM arms
 ), post AS (
   SELECT n_a, c_a, n_b, c_b,
@@ -3764,12 +3749,7 @@ WITH u AS (
   FROM post
 ), q AS (
   SELECT n_a, c_a, n_b, c_b, m_a, m_b, t,
-         (exp(-t * t / 2.0) / sqrt(2.0 * pi()))
-           * (0.319381530 * (1.0 / (1.0 + 0.2316419 * abs(t)))
-              - 0.356563782 * pow(1.0 / (1.0 + 0.2316419 * abs(t)), 2)
-              + 1.781477937 * pow(1.0 / (1.0 + 0.2316419 * abs(t)), 3)
-              - 1.821255978 * pow(1.0 / (1.0 + 0.2316419 * abs(t)), 4)
-              + 1.330274429 * pow(1.0 / (1.0 + 0.2316419 * abs(t)), 5)) AS tail
+         {normal_tail_sql("t")} AS tail
   FROM z
 )
 SELECT CAST(coalesce(n_a, 0) AS BIGINT) AS n_a,
@@ -3799,33 +3779,16 @@ def stats_bayes_ab_normal_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits the prior-indifference 0.5 (ADVICE r4 class). Same per-user
     hash agg as the z-test; everything after is a 1-row projection."""
     ev = load_table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.max(
-            F.when((F.col("event_type") == "purchase") & (F.col("value") >= 150), 1)
-            .otherwise(0)
-        ).alias("conv")
-    ).withColumn("arm", F.col("user_id") % 2)
+    u = ev.groupBy("user_id").agg(converted().alias("conv")).withColumn("arm", arm())
     arms = u.groupBy("arm").agg(F.count(F.lit(1)).alias("n"), F.sum("conv").alias("c"))
-    w = arms.agg(
-        F.max(F.when(F.col("arm") == 0, F.col("n"))).alias("n_a"),
-        F.max(F.when(F.col("arm") == 0, F.col("c"))).alias("c_a"),
-        F.max(F.when(F.col("arm") == 1, F.col("n"))).alias("n_b"),
-        F.max(F.when(F.col("arm") == 1, F.col("c"))).alias("c_b"),
-    )
+    w = arms.agg(*arm_pivot())
     missing = F.col("n_a").isNull() | F.col("n_b").isNull()
     m_a = (F.col("c_a") + 1.0) / (F.col("n_a") + 2.0)
     m_b = (F.col("c_b") + 1.0) / (F.col("n_b") + 2.0)
     v_a = m_a * (1.0 - m_a) / (F.col("n_a") + 3.0)
     v_b = m_b * (1.0 - m_b) / (F.col("n_b") + 3.0)
     t = (m_b - m_a) / F.sqrt(v_a + v_b)
-    uu = 1.0 / (1.0 + 0.2316419 * F.abs(t))
-    tail = (F.exp(-t * t / 2.0) / F.sqrt(F.lit(2.0) * 3.141592653589793)) * (
-        0.319381530 * uu
-        - 0.356563782 * F.pow(uu, 2)
-        + 1.781477937 * F.pow(uu, 3)
-        - 1.821255978 * F.pow(uu, 4)
-        + 1.330274429 * F.pow(uu, 5)
-    )
+    tail = normal_tail(t)
     return w.select(
         F.coalesce(F.col("n_a"), F.lit(0)).cast("bigint").alias("n_a"),
         F.coalesce(F.col("c_a"), F.lit(0)).cast("bigint").alias("conv_a"),
@@ -3843,11 +3806,11 @@ def stats_bayes_ab_normal_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_experiment_duration",
     tags=("stats", "experiment"),
-    oracle="""
+    oracle=f"""
 WITH u AS (
   SELECT user_id,
          min(CAST(ts AS DATE)) AS first_day,
-         max(CASE WHEN event_type = 'purchase' AND value >= 150 THEN 1 ELSE 0 END) AS conv
+         {CONVERTED_SQL} AS conv
   FROM events GROUP BY user_id
 ), rate AS (
   SELECT CAST(count(*) AS BIGINT) AS n_users,
@@ -3883,10 +3846,7 @@ def stats_experiment_duration(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     u = ev.groupBy("user_id").agg(
         F.min(F.col("ts").cast("date")).alias("first_day"),
-        F.max(
-            F.when((F.col("event_type") == "purchase") & (F.col("value") >= 150), 1)
-            .otherwise(0)
-        ).alias("conv"),
+        converted().alias("conv"),
     )
     rate = u.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_users"),
@@ -4208,10 +4168,10 @@ def stats_markov_absorption(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "eval_calibration_brier",
     tags=("stats", "eval", "ml"),
-    oracle="""
+    oracle=f"""
 WITH u AS (
   SELECT user_id,
-         max(CASE WHEN event_type = 'purchase' AND value >= 150 THEN 1 ELSE 0 END)
+         {CONVERTED_SQL}
            AS y
   FROM events GROUP BY user_id
 ), scored AS (
@@ -4255,12 +4215,7 @@ def eval_calibration_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB types as DOUBLE, making both expression trees IEEE-identical
     before the floor."""
     ev = load_table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.max(
-            F.when((F.col("event_type") == "purchase") & (F.col("value") >= 150), 1)
-            .otherwise(0)
-        ).alias("y")
-    )
+    u = ev.groupBy("user_id").agg(converted().alias("y"))
     coin = (
         F.conv(
             F.substring(F.md5(F.concat(F.lit("cal-"), F.col("user_id").cast("string"))), 1, 2),
@@ -4349,12 +4304,12 @@ def stats_negbinom_overdispersion(spark: SparkSession, sf_dir: str) -> DataFrame
 @register(
     "stats_diff_in_diff",
     tags=("stats", "experiment"),
-    oracle="""
+    oracle=f"""
 WITH cell AS (
-  SELECT user_id % 2 AS treated,
+  SELECT {ARM_SQL} AS treated,
          CASE WHEN CAST(ts AS DATE) >= CAST('2024-01-16' AS DATE)
               THEN 1 ELSE 0 END AS post,
-         CAST(round(value * 100) AS BIGINT) AS cents
+         {to_cents_sql("value")} AS cents
   FROM events
 ), m AS (
   SELECT treated, post,
@@ -4396,9 +4351,9 @@ def stats_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     split = F.lit("2024-01-16").cast("date")
     cell = ev.select(
-        (F.col("user_id") % 2).alias("treated"),
+        arm().alias("treated"),
         F.when(F.col("ts").cast("date") >= split, 1).otherwise(0).alias("post"),
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+        to_cents("value").alias("cents"),
     )
     m = cell.groupBy("treated", "post").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -4429,18 +4384,15 @@ def stats_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_tost_equivalence",
     tags=("stats", "experiment"),
-    oracle="""
+    oracle=f"""
 WITH u AS (
-  SELECT user_id, user_id % 2 AS arm,
-         max(CASE WHEN event_type = 'purchase' AND value >= 150 THEN 1 ELSE 0 END) AS conv
+  SELECT user_id, {ARM_SQL} AS arm,
+         {CONVERTED_SQL} AS conv
   FROM events GROUP BY user_id
 ), arms AS (
   SELECT arm, count(*) AS n, CAST(sum(conv) AS BIGINT) AS c FROM u GROUP BY arm
 ), w AS (
-  SELECT coalesce(max(CASE WHEN arm = 0 THEN n END), 0) AS n_a,
-         coalesce(max(CASE WHEN arm = 0 THEN c END), 0) AS c_a,
-         coalesce(max(CASE WHEN arm = 1 THEN n END), 0) AS n_b,
-         coalesce(max(CASE WHEN arm = 1 THEN c END), 0) AS c_b
+  SELECT {arm_pivot_sql(wrap="coalesce({}, 0)")}
   FROM arms
 ), s AS (
   SELECT n_a, n_b,
@@ -4477,19 +4429,11 @@ def stats_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     experiment ladder; 1-row projection of exact-integer ratios with
     e-notation literals on the oracle side (decimal-literal hazard)."""
     ev = load_table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.max(
-            F.when((F.col("event_type") == "purchase") & (F.col("value") >= 150), 1)
-            .otherwise(0)
-        ).alias("conv")
-    ).withColumn("arm", F.col("user_id") % 2)
+    u = ev.groupBy("user_id").agg(converted().alias("conv")).withColumn("arm", arm())
     arms = u.groupBy("arm").agg(F.count(F.lit(1)).alias("n"), F.sum("conv").alias("c"))
-    w = arms.agg(
-        F.coalesce(F.max(F.when(F.col("arm") == 0, F.col("n"))), F.lit(0)).alias("n_a"),
-        F.coalesce(F.max(F.when(F.col("arm") == 0, F.col("c"))), F.lit(0)).alias("c_a"),
-        F.coalesce(F.max(F.when(F.col("arm") == 1, F.col("n"))), F.lit(0)).alias("n_b"),
-        F.coalesce(F.max(F.when(F.col("arm") == 1, F.col("c"))), F.lit(0)).alias("c_b"),
-    ).filter((F.col("n_a") > 0) & (F.col("n_b") > 0))
+    w = arms.agg(*arm_pivot(wrap=lambda c: F.coalesce(c, F.lit(0)))).filter(
+        (F.col("n_a") > 0) & (F.col("n_b") > 0)
+    )
     p_a = F.col("c_a") * 1.0 / F.col("n_a")
     p_b = F.col("c_b") * 1.0 / F.col("n_b")
     se = F.sqrt(p_a * (1.0 - p_a) / F.col("n_a") + p_b * (1.0 - p_b) / F.col("n_b"))
@@ -4511,10 +4455,10 @@ def stats_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_ratio_delta_method",
     tags=("stats", "experiment"),
-    oracle="""
+    oracle=f"""
 WITH per_user AS (
-  SELECT user_id, user_id % 2 AS arm,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS x_cents,
+  SELECT user_id, {ARM_SQL} AS arm,
+         CAST(sum({to_cents_sql("value")}) AS BIGINT) AS x_cents,
          CAST(count(*) AS BIGINT) AS y_events
   FROM events GROUP BY user_id
 ), m AS (
@@ -4556,9 +4500,9 @@ def stats_ratio_delta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerate all-identical-users corner on both engines."""
     ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id").agg(
-        F.sum(F.round(F.col("value") * 100).cast("bigint")).cast("bigint").alias("x_cents"),
+        F.sum(to_cents("value")).cast("bigint").alias("x_cents"),
         F.count(F.lit(1)).cast("bigint").alias("y_events"),
-    ).withColumn("arm", F.col("user_id") % 2)
+    ).withColumn("arm", arm())
     dec = "decimal(28,0)"
     m = per_user.groupBy("arm").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -4586,10 +4530,10 @@ def stats_ratio_delta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_qini_uplift_deciles",
     tags=("stats", "experiment", "ml"),
-    oracle="""
+    oracle=f"""
 WITH u AS (
-  SELECT user_id, user_id % 2 AS treated,
-         max(CASE WHEN event_type = 'purchase' AND value >= 150 THEN 1 ELSE 0 END) AS conv,
+  SELECT user_id, {ARM_SQL} AS treated,
+         {CONVERTED_SQL} AS conv,
          CAST('0x' || substr(md5('uplift-' || user_id), 1, 4) AS BIGINT) % 10000 AS score
   FROM events GROUP BY user_id
 ), decile AS (
@@ -4637,14 +4581,9 @@ def stats_qini_uplift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             16, 10,
         ).cast("bigint") % 10000
     )
-    u = ev.groupBy("user_id").agg(
-        F.max(
-            F.when((F.col("event_type") == "purchase") & (F.col("value") >= 150), 1)
-            .otherwise(0)
-        ).alias("conv")
-    ).select(
+    u = ev.groupBy("user_id").agg(converted().alias("conv")).select(
         "user_id",
-        (F.col("user_id") % 2).alias("treated"),
+        arm().alias("treated"),
         "conv",
         score.alias("score"),
     )
@@ -5126,7 +5065,7 @@ def stats_pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     exp() rounds at 6dp."""
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.round(F.sum("value") * 100.0).cast("bigint").alias("cents")
+        to_cents(F.sum("value")).alias("cents")
     )
     a, b = daily.alias("a"), daily.alias("b")
     pairs = a.join(b, F.col("a.day") < F.col("b.day")).select(
@@ -5214,7 +5153,7 @@ def stats_ewma_control_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.round(F.sum("value") * 100.0).cast("bigint").cast("double").alias("x")
+        to_cents(F.sum("value")).cast("double").alias("x")
     ).withColumn("t", F.row_number().over(Window.orderBy("day")))  # frame: bounded (day-grain)
     base = daily.agg(
         F.avg("x").alias("mu0"),
@@ -5319,7 +5258,7 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     v = o.select(
         F.col("o_orderpriority").alias("grp"),
-        F.round(F.col("o_totalprice") * 100.0).cast("bigint").alias("cents"),
+        to_cents("o_totalprice").alias("cents"),
     )
     hist = v.groupBy("grp", "cents").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_gc")
@@ -5368,11 +5307,11 @@ def stats_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_obf_group_sequential",
     tags=("stats", "experiment"),
-    oracle="""
+    oracle=f"""
 WITH u AS (
-  SELECT user_id, user_id % 2 AS arm,
+  SELECT user_id, {ARM_SQL} AS arm,
          min(CAST(ts AS DATE)) AS first_day,
-         max(CASE WHEN event_type = 'purchase' AND value >= 150 THEN 1 ELSE 0 END) AS conv
+         {CONVERTED_SQL} AS conv
   FROM events GROUP BY user_id
 ), bounds AS (
   SELECT min(first_day) AS d0, max(first_day) AS d1 FROM u
@@ -5426,11 +5365,8 @@ def stats_obf_group_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     u = ev.groupBy("user_id").agg(
         F.min(F.col("ts").cast("date")).alias("first_day"),
-        F.max(
-            F.when((F.col("event_type") == "purchase") & (F.col("value") >= 150), 1)
-            .otherwise(0)
-        ).alias("conv"),
-    ).withColumn("arm", F.col("user_id") % 2)
+        converted().alias("conv"),
+    ).withColumn("arm", arm())
     bounds = u.agg(F.min("first_day").alias("d0"), F.max("first_day").alias("d1"))
     looks = (
         bounds.select(
@@ -5986,7 +5922,7 @@ def stats_levene_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     v = o.select(
         F.col("o_orderpriority").alias("grp"),
-        F.round(F.col("o_totalprice") * 100.0).cast("bigint").alias("x"),
+        to_cents("o_totalprice").alias("x"),
     )
     gm = v.groupBy("grp").agg(
         (F.sum("x") * 1.0 / F.count(F.lit(1))).alias("xbar")
@@ -6034,12 +5970,12 @@ def stats_levene_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_mantel_haenszel",
     tags=("stats", "experiment"),
-    oracle="""
+    oracle=f"""
 WITH u AS (
   SELECT user_id,
-         CAST(user_id % 2 AS BIGINT) AS exposed,
+         CAST({ARM_SQL} AS BIGINT) AS exposed,
          CAST((user_id // 2) % 3 AS BIGINT) AS stratum,
-         max(CASE WHEN event_type = 'purchase' AND value >= 150 THEN 1 ELSE 0 END)
+         {CONVERTED_SQL}
            AS outcome
   FROM events GROUP BY user_id
 ), cells AS (
@@ -6081,14 +6017,8 @@ def stats_mantel_haenszel(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-sized exchange), then to stratum-cardinality 2x2 cells; the
     pooled sum is a broadcast cross join of two tiny frames."""
     ev = load_table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.max(
-            F.when(
-                (F.col("event_type") == "purchase") & (F.col("value") >= 150), 1
-            ).otherwise(0)
-        ).alias("outcome")
-    ).select(
-        (F.col("user_id") % 2).cast("bigint").alias("exposed"),
+    u = ev.groupBy("user_id").agg(converted().alias("outcome")).select(
+        arm().cast("bigint").alias("exposed"),
         ((F.col("user_id") / 2).cast("bigint") % 3).cast("bigint").alias("stratum"),
         "outcome",
     )
@@ -6123,22 +6053,8 @@ def stats_mantel_haenszel(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_nelson_aalen",
     tags=("stats", "temporal"),
-    oracle="""
-WITH purchases AS (
-  SELECT user_id, CAST(ts AS DATE) AS day, ts, event_id
-  FROM events WHERE event_type = 'purchase'
-), seq AS (
-  SELECT user_id, day,
-         lead(day) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS nxt
-  FROM purchases
-), horizon AS (
-  SELECT max(day) AS h FROM purchases
-), subjects AS (
-  SELECT CASE WHEN nxt IS NOT NULL THEN date_diff('day', day, nxt) + 1
-              ELSE date_diff('day', day, (SELECT h FROM horizon)) + 1 END AS t,
-         CASE WHEN nxt IS NOT NULL THEN 0 ELSE 1 END AS censored
-  FROM seq
-), at_t AS (
+    oracle=f"""
+WITH {_repurchase_subjects_sql()}, at_t AS (
   SELECT t,
          CAST(count(*) AS BIGINT) AS n_ending,
          CAST(sum(1 - censored) AS BIGINT) AS d
@@ -6180,19 +6096,7 @@ def stats_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality agg, cumulative windows over day-count rows."""
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts").cast("date").alias("day"), "ts", "event_id"
-    )
-    wseq = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = purchases.withColumn("nxt", F.lead("day").over(wseq))
-    horizon = purchases.agg(F.max("day").alias("h"))
-    subjects = seq.crossJoin(F.broadcast(horizon)).select(
-        F.when(F.col("nxt").isNotNull(), F.datediff("nxt", "day") + 1)
-        .otherwise(F.datediff("h", "day") + 1)
-        .alias("t"),
-        F.when(F.col("nxt").isNotNull(), 0).otherwise(1).alias("censored"),
-    )
+    subjects = _repurchase_subjects(load_table(spark, sf_dir, "events"))
     at_t = subjects.groupBy("t").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_ending"),
         F.sum(1 - F.col("censored")).cast("bigint").alias("d"),
@@ -6344,7 +6248,7 @@ def stats_herfindahl_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), n.n_nationkey == c.c_nationkey)
         .groupBy("n_name")
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100.0).cast("bigint"))
+            F.sum(to_cents("o_totalprice"))
             .cast("bigint")
             .alias("cents")
         )
@@ -6494,7 +6398,7 @@ def stats_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.join(c, c.c_custkey == o.o_custkey)
         .groupBy("c_custkey", F.col("c_nationkey").alias("nk"))
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100.0).cast("bigint"))
+            F.sum(to_cents("o_totalprice"))
             .cast("bigint")
             .alias("cents")
         )
@@ -6551,24 +6455,8 @@ def stats_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_logrank_test",
     tags=("stats", "experiment", "temporal"),
-    oracle="""
-WITH purchases AS (
-  SELECT user_id, CAST(user_id % 2 AS BIGINT) AS arm,
-         CAST(ts AS DATE) AS day, ts, event_id
-  FROM events WHERE event_type = 'purchase'
-), seq AS (
-  SELECT user_id, arm, day,
-         lead(day) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS nxt
-  FROM purchases
-), horizon AS (
-  SELECT max(day) AS h FROM purchases
-), subjects AS (
-  SELECT arm,
-         CASE WHEN nxt IS NOT NULL THEN date_diff('day', day, nxt) + 1
-              ELSE date_diff('day', day, (SELECT h FROM horizon)) + 1 END AS t,
-         CASE WHEN nxt IS NOT NULL THEN 0 ELSE 1 END AS censored
-  FROM seq
-), arm_tot AS (
+    oracle=f"""
+WITH {_repurchase_subjects_sql(arm=f"CAST({ARM_SQL} AS BIGINT)")}, arm_tot AS (
   SELECT arm, CAST(count(*) AS BIGINT) AS n_arm FROM subjects GROUP BY arm
 ), at_t AS (
   SELECT arm, t,
@@ -6634,23 +6522,8 @@ def stats_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned by arm."""
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id",
-        (F.col("user_id") % 2).cast("bigint").alias("arm"),
-        F.col("ts").cast("date").alias("day"),
-        "ts",
-        "event_id",
-    )
-    wseq = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = purchases.withColumn("nxt", F.lead("day").over(wseq))
-    horizon = purchases.agg(F.max("day").alias("h"))
-    subjects = seq.crossJoin(F.broadcast(horizon)).select(
-        "arm",
-        F.when(F.col("nxt").isNotNull(), F.datediff("nxt", "day") + 1)
-        .otherwise(F.datediff("h", "day") + 1)
-        .alias("t"),
-        F.when(F.col("nxt").isNotNull(), 0).otherwise(1).alias("censored"),
+    subjects = _repurchase_subjects(
+        load_table(spark, sf_dir, "events"), arm=arm().cast("bigint")
     )
     arm_tot = subjects.groupBy("arm").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_arm")
@@ -6770,7 +6643,7 @@ def stats_lorenz_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load_table(spark, sf_dir, "orders")
     cust = o.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("o_totalprice") * 100.0).cast("bigint"))
+        F.sum(to_cents("o_totalprice"))
         .cast("bigint")
         .alias("cents")
     )
@@ -6871,7 +6744,7 @@ def stats_dunn_posthoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     v = o.select(
         F.col("o_orderpriority").alias("grp"),
-        F.round(F.col("o_totalprice") * 100.0).cast("bigint").alias("cents"),
+        to_cents("o_totalprice").alias("cents"),
     )
     hist = v.groupBy("grp", "cents").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_gc")
@@ -7062,7 +6935,7 @@ def stats_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_trunc("month", "o_orderdate").cast("date").alias("block"),
         F.col("o_orderpriority").alias("trt"),
     ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100.0).cast("bigint"))
+        F.sum(to_cents("o_totalprice"))
         .cast("bigint")
         .alias("cents")
     )
@@ -7249,10 +7122,10 @@ def stats_granger_causality(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_cochran_armitage",
     tags=("stats", "experiment"),
-    oracle="""
+    oracle=f"""
 WITH u AS (
   SELECT user_id, CAST(user_id % 4 AS BIGINT) AS dose,
-         max(CASE WHEN event_type = 'purchase' AND value >= 150 THEN 1 ELSE 0 END)
+         {CONVERTED_SQL}
            AS conv
   FROM events GROUP BY user_id
 ), g AS (
@@ -7296,13 +7169,9 @@ def stats_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one per-user agg (the only data-sized exchange), then
     4-row algebra from exact integer dose moments."""
     ev = load_table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.max(
-            F.when(
-                (F.col("event_type") == "purchase") & (F.col("value") >= 150), 1
-            ).otherwise(0)
-        ).alias("conv")
-    ).select((F.col("user_id") % 4).cast("bigint").alias("dose"), "conv")
+    u = ev.groupBy("user_id").agg(converted().alias("conv")).select(
+        (F.col("user_id") % 4).cast("bigint").alias("dose"), "conv"
+    )
     g = u.groupBy("dose").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_i"),
         F.sum("conv").cast("bigint").alias("a_i"),
@@ -7472,13 +7341,13 @@ def stats_simpsons_reversal(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_kendall_tau",
     tags=("stats", "temporal"),
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   -- exact cents + integer half-up to dollars (sf1-gate fix class, see
   -- temporal_holt_smoothing): round(sum(double)) ties on .5 midpoints
   SELECT CAST(o_orderdate AS DATE) AS d,
          CAST(count(*) AS BIGINT) AS x,
-         (sum(CAST(round(o_totalprice * 100) AS BIGINT)) + 50) // 100 AS y
+         {sum_dollars_half_up_sql("o_totalprice")} AS y
   FROM orders
   WHERE CAST(o_orderdate AS DATE) >= DATE '1996-01-01'
     AND CAST(o_orderdate AS DATE) < DATE '1997-01-01'
@@ -7525,9 +7394,7 @@ def stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
         F.count(F.lit(1)).cast("bigint").alias("x"),
-        F.expr("(sum(cast(round(o_totalprice * 100) as bigint)) + 50) div 100")
-        .cast("bigint")
-        .alias("y"),
+        sum_dollars_half_up("o_totalprice").cast("bigint").alias("y"),
     )
     a, b = daily.alias("a"), daily.alias("b")
     prod = (F.col("a.x") - F.col("b.x")) * (F.col("a.y") - F.col("b.y"))
@@ -7636,11 +7503,11 @@ def stats_partial_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_chow_test",
     tags=("stats", "temporal"),
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   -- exact cents + integer half-up to dollars (sf1-gate fix class)
   SELECT CAST(o_orderdate AS DATE) AS d,
-         (sum(CAST(round(o_totalprice * 100) AS BIGINT)) + 50) // 100 AS y
+         {sum_dollars_half_up_sql("o_totalprice")} AS y
   FROM orders GROUP BY 1
 ), idx AS (
   SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS x, y,
@@ -7707,9 +7574,7 @@ def stats_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load_table(spark, sf_dir, "orders")
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
-        F.expr("(sum(cast(round(o_totalprice * 100) as bigint)) + 50) div 100")
-        .cast("bigint")
-        .alias("y")
+        sum_dollars_half_up("o_totalprice").cast("bigint").alias("y")
     )
     w = Window.orderBy("d")  # frame: bounded (day-grain)
     idx = daily.select(
@@ -7795,10 +7660,10 @@ def stats_chow_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "eval_auc_roc",
     tags=("stats", "eval", "ml"),
-    oracle="""
+    oracle=f"""
 WITH u AS (
   SELECT user_id,
-         max(CASE WHEN event_type = 'purchase' AND value >= 150 THEN 1 ELSE 0 END)
+         {CONVERTED_SQL}
            AS y
   FROM events GROUP BY user_id
 ), scored AS (
@@ -7855,12 +7720,7 @@ def eval_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     than (model, p_hat, y) flows. Reference discipline: differential
     oracle per /root/reference/test/mr.test.js:78-96."""
     ev = load_table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.max(
-            F.when((F.col("event_type") == "purchase") & (F.col("value") >= 150), 1)
-            .otherwise(0)
-        ).alias("y")
-    )
+    u = ev.groupBy("user_id").agg(converted().alias("y"))
 
     def coin(prefix: str):
         return (
@@ -8171,14 +8031,14 @@ def eval_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_ols_residual_diagnostics",
     tags=("stats", "temporal"),
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   -- exact cents + integer half-up to dollars (sf1-gate fix class, see
   -- temporal_holt_smoothing): round(sum(double)) ties on .5 midpoints
   -- where the engines' accumulation orders drift
   SELECT CAST(o_orderdate AS DATE) AS d,
          CAST(count(*) AS BIGINT) AS x,
-         (sum(CAST(round(o_totalprice * 100) AS BIGINT)) + 50) // 100 AS y
+         {sum_dollars_half_up_sql("o_totalprice")} AS y
   FROM orders
   WHERE CAST(o_orderdate AS DATE) >= DATE '1996-01-01'
     AND CAST(o_orderdate AS DATE) < DATE '1997-01-01'
@@ -8250,9 +8110,7 @@ def stats_ols_residual_diagnostics(spark: SparkSession, sf_dir: str) -> DataFram
     )
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
         F.count(F.lit(1)).cast("bigint").alias("x"),
-        F.expr("(sum(cast(round(o_totalprice * 100) as bigint)) + 50) div 100")
-        .cast("bigint")
-        .alias("y"),
+        sum_dollars_half_up("o_totalprice").cast("bigint").alias("y"),
     )
     dec = lambda c: F.col(c).cast("decimal(38,0)")
     fit = daily.agg(
@@ -8620,10 +8478,10 @@ def stats_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "eval_youden_threshold",
     tags=("stats", "eval", "ml"),
-    oracle="""
+    oracle=f"""
 WITH u AS (
   SELECT user_id,
-         max(CASE WHEN event_type = 'purchase' AND value >= 150 THEN 1 ELSE 0 END)
+         {CONVERTED_SQL}
            AS y
   FROM events GROUP BY user_id
 ), scored AS (
@@ -8674,12 +8532,7 @@ def eval_youden_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     a constant-factor map over the user frame — no sort, no
     quantiles."""
     ev = load_table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.max(
-            F.when((F.col("event_type") == "purchase") & (F.col("value") >= 150), 1)
-            .otherwise(0)
-        ).alias("y")
-    )
+    u = ev.groupBy("user_id").agg(converted().alias("y"))
     scored = u.select(
         "y",
         (
@@ -8811,7 +8664,7 @@ def stats_bland_altman(spark: SparkSession, sf_dir: str) -> DataFrame:
             - 1000
         )
 
-    t = F.round(F.col("o_totalprice") * 100.0).cast("bigint")
+    t = to_cents("o_totalprice")
     paired = o.select(
         (t + coin("ba-a-") * 12000).alias("x"),
         (t + 5000000 + coin("ba-b-") * 12000).alias("y"),
@@ -8923,7 +8776,7 @@ def stats_deming_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
             - 1000
         )
 
-    t = F.round(F.col("o_totalprice") * 100.0).cast("bigint")
+    t = to_cents("o_totalprice")
     paired = o.select(
         (t + coin("ba-a-") * 12000).alias("x"),
         (t + 5000000 + coin("ba-b-") * 12000).alias("y"),
@@ -8969,10 +8822,10 @@ def stats_deming_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_isotonic_calibration",
     tags=("stats", "eval", "ml"),
-    oracle="""
+    oracle=f"""
 WITH u AS (
   SELECT user_id,
-         max(CASE WHEN event_type = 'purchase' AND value >= 150 THEN 1 ELSE 0 END)
+         {CONVERTED_SQL}
            AS y
   FROM events GROUP BY user_id
 ), scored AS (
@@ -9029,12 +8882,7 @@ def stats_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     algebra. PAV's O(n) stack would matter only if the BIN grain grew
     with data — it never does."""
     ev = load_table(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.max(
-            F.when((F.col("event_type") == "purchase") & (F.col("value") >= 150), 1)
-            .otherwise(0)
-        ).alias("y")
-    )
+    u = ev.groupBy("user_id").agg(converted().alias("y"))
     coin = (
         F.conv(
             F.substring(F.md5(F.concat(F.lit("cal-"), F.col("user_id").cast("string"))), 1, 2),
@@ -9093,10 +8941,10 @@ def stats_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_wilcoxon_signed_rank",
     tags=("stats", "testing"),
-    oracle="""
+    oracle=f"""
 WITH cy AS (
   SELECT o_custkey, CAST(year(o_orderdate) AS BIGINT) AS yr,
-         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS cents
+         CAST(sum({to_cents_sql("o_totalprice")}) AS BIGINT) AS cents
   FROM orders WHERE year(o_orderdate) IN (1995, 1996)
   GROUP BY 1, 2
 ), pairs AS (
@@ -9163,7 +9011,7 @@ def stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_custkey", F.year("o_orderdate").cast("bigint").alias("yr")
         )
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+            F.sum(to_cents("o_totalprice"))
             .cast("bigint")
             .alias("cents")
         )
@@ -9238,10 +9086,10 @@ def stats_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_wasserstein_1d",
     tags=("stats", "distribution"),
-    oracle="""
+    oracle=f"""
 WITH s AS (
   SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+         {to_cents_sql("o_totalprice")} AS cents
   FROM orders WHERE year(o_orderdate) IN (1995, 1996)
 ), n AS (
   SELECT CAST(count(*) FILTER (WHERE yr = 1995) AS BIGINT) AS n_a,
@@ -9298,7 +9146,7 @@ def stats_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.year("o_orderdate").isin(1995, 1996))
         .select(
             F.year("o_orderdate").cast("bigint").alias("yr"),
-            F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+            to_cents("o_totalprice").alias("cents"),
         )
     )
     n = s.agg(
@@ -9357,10 +9205,10 @@ def stats_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_cohens_d_effect",
     tags=("stats", "experiment"),
-    oracle="""
+    oracle=f"""
 WITH s AS (
   SELECT CASE WHEN o_orderkey % 2 = 0 THEN 'A' ELSE 'B' END AS arm,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+         {to_cents_sql("o_totalprice")} AS cents
   FROM orders
 ), m AS (
   SELECT CAST(count(*) FILTER (WHERE arm = 'A') AS BIGINT) AS n_a,
@@ -9410,7 +9258,7 @@ def stats_cohens_d_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     is."""
     s = load_table(spark, sf_dir, "orders").select(
         F.when(F.col("o_orderkey") % 2 == 0, "A").otherwise("B").alias("arm"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+        to_cents("o_totalprice").alias("cents"),
     )
     dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
     m = s.agg(
@@ -9681,19 +9529,19 @@ def stats_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_cronbach_alpha",
     tags=("stats", "measurement"),
-    oracle="""
+    oracle=f"""
 WITH items AS (
   SELECT c_custkey,
-         CAST(round(c_acctbal * 100) AS BIGINT)
+         {to_cents_sql("c_acctbal")}
            + (CAST('0x' || substr(md5('cb1-' || c_custkey), 1, 8) AS BIGINT)
               % 20001) - 10000 AS i1,
-         CAST(round(c_acctbal * 100) AS BIGINT)
+         {to_cents_sql("c_acctbal")}
            + (CAST('0x' || substr(md5('cb2-' || c_custkey), 1, 8) AS BIGINT)
               % 20001) - 10000 AS i2,
-         CAST(round(c_acctbal * 100) AS BIGINT)
+         {to_cents_sql("c_acctbal")}
            + (CAST('0x' || substr(md5('cb3-' || c_custkey), 1, 8) AS BIGINT)
               % 20001) - 10000 AS i3,
-         CAST(round(c_acctbal * 100) AS BIGINT)
+         {to_cents_sql("c_acctbal")}
            + (CAST('0x' || substr(md5('cb4-' || c_custkey), 1, 8) AS BIGINT)
               % 20001) - 10000 AS i4
   FROM customer
@@ -9744,7 +9592,7 @@ def stats_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one scan, one 11-number moment agg with map-side combine,
     constant algebra after."""
-    truth = F.round(F.col("c_acctbal") * 100).cast("bigint")
+    truth = to_cents("c_acctbal")
 
     def item(j: int):
         coin = (
@@ -10603,7 +10451,7 @@ ES_EVENT_MONTH = "1997-01"  # policy month for the synthetic cohort split
     oracle=f"""
 WITH base AS (
   SELECT (year(o_orderdate) - 1997) * 12 + month(o_orderdate) - 1 AS rel_m,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+         {to_cents_sql("o_totalprice")} AS cents
   FROM orders
   WHERE o_orderdate >= DATE '1996-07-01' AND o_orderdate < DATE '1997-07-01'
 ), boosted AS (
@@ -10665,7 +10513,7 @@ def stats_event_study_leads_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.year("o_orderdate") - 1997) * 12 + F.month("o_orderdate") - 1).alias(
             "rel_m"
         ),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+        to_cents("o_totalprice").alias("cents"),
     ).select(
         F.explode(F.array(F.lit(True), F.lit(False))).alias("treated"),
         "rel_m",

@@ -19,6 +19,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.measures import (
+    sum_dollars_half_up,
+    sum_dollars_half_up_sql,
+    to_cents,
+    to_cents_sql,
+)
 from ..registry import register
 from ..sources import load_table
 
@@ -111,11 +117,11 @@ def asof_purchase_to_click(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "rollup_hourly_daily",
     tags=("temporal", "rollup"),
-    oracle="""
+    oracle=f"""
 WITH hourly AS (
   SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS bucket_start,
          event_type, count(*) AS n,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_cents
+         CAST(sum({to_cents_sql("value")}) AS BIGINT) AS total_cents
   FROM events GROUP BY 1, 2
 )
 SELECT 'hour' AS grain, bucket_start, event_type, n, total_cents FROM hourly
@@ -133,7 +139,7 @@ def rollup_hourly_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     BIGINT because DuckDB promotes summed BIGINT to HUGEINT, which pandas
     renders float64 and the dtype-sensitive driver hash rejects."""
     ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("bigint")
+    cents = to_cents("value")
     hourly = (
         ev.groupBy(
             F.date_trunc("hour", "ts").alias("bucket_start"),
@@ -198,11 +204,11 @@ def temporal_ohlc_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "temporal_gap_fill",
     tags=("temporal", "window"),
-    oracle="""
+    oracle=f"""
 WITH hourly AS (
   SELECT event_type, time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP)) AS bucket,
          count(*) AS n_events,
-         round(CAST(sum(CAST(round(value * 100) AS BIGINT)) * 100 AS DOUBLE)
+         round(CAST(sum({to_cents_sql("value")}) * 100 AS DOUBLE)
                / count(*)) / 10000.0 AS avg_value
   FROM events GROUP BY 1, 2
 ), bounds AS (
@@ -232,7 +238,7 @@ def temporal_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical bigint-ratio division, integer-level round whose true
     midpoints are dyadic-exact on both engines."""
     ev = load_table(spark, sf_dir, "events").withColumn(
-        "cents", F.round(F.col("value") * 100).cast("bigint")
+        "cents", to_cents("value")
     )
     avg4 = (
         F.round((F.sum("cents") * 100).cast("double") / F.count(F.lit(1))) / 10000.0
@@ -945,10 +951,10 @@ def temporal_weekend_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     "temporal_pit_feature_join",
     bench=True,
     tags=("temporal", "window", "pipeline"),
-    oracle="""
+    oracle=f"""
 WITH o AS (
   SELECT o_orderkey, o_custkey, o_orderdate,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS cents
+         {to_cents_sql("o_totalprice")} AS cents
   FROM orders
 ), feat AS (
   SELECT o_orderkey, o_custkey,
@@ -978,7 +984,7 @@ def temporal_pit_feature_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_custkey",
         "o_orderdate",
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+        to_cents("o_totalprice").alias("cents"),
     )
     w = (
         Window.partitionBy("o_custkey")
@@ -1073,10 +1079,10 @@ def temporal_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "events_user_ltv_cohort",
     tags=("temporal", "events"),
-    oracle="""
+    oracle=f"""
 WITH ev AS (
   SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_type,
-         CAST(round(value * 100) AS BIGINT) AS cents
+         {to_cents_sql("value")} AS cents
   FROM events
 ), firsts AS (
   SELECT user_id, CAST(date_trunc('week', min(ts)) AS DATE) AS cohort_week
@@ -1116,7 +1122,7 @@ def events_user_ltv_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the WEEK-cardinality frame (tiny by construction). Money is
     integer cents until the final per-user division."""
     ev = load_table(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("bigint")
+    cents = to_cents("value")
     firsts = ev.groupBy("user_id").agg(
         F.date_trunc("week", F.min("ts")).cast("date").alias("cohort_week")
     )
@@ -1159,10 +1165,10 @@ def events_user_ltv_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "temporal_m4_downsample",
     tags=("temporal", "downsample"),
-    oracle="""
+    oracle=f"""
 WITH e AS (
   SELECT event_type, CAST(ts AS TIMESTAMP) AS ts, event_id,
-         CAST(round(value * 100) AS BIGINT) AS cents,
+         {to_cents_sql("value")} AS cents,
          time_bucket(INTERVAL '1 hour', CAST(ts AS TIMESTAMP)) AS bucket
   FROM events
 ), o AS (
@@ -1194,7 +1200,7 @@ def temporal_m4_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "ts",
         "event_id",
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
+        to_cents("value").alias("cents"),
         F.date_trunc("hour", F.col("ts")).alias("bucket"),
     )
     w_a = Window.partitionBy("event_type", "bucket").orderBy("ts", "event_id")
@@ -1386,10 +1392,10 @@ def asof_nearest_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "temporal_seasonal_decompose",
     tags=("temporal", "stats"),
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT CAST(o_orderdate AS DATE) AS d,
-         sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS cents
+         sum({to_cents_sql("o_totalprice")}) AS cents
   FROM orders GROUP BY 1
 ),
 tr AS (
@@ -1445,7 +1451,7 @@ def temporal_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     o = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
+    cents = to_cents("o_totalprice")
     daily = o.groupBy(F.to_date("o_orderdate").alias("d")).agg(
         F.sum(cents).alias("cents")
     )
@@ -1648,7 +1654,7 @@ WITH versions AS (
   FROM orders
   UNION ALL
   SELECT o_orderkey, o_orderstatus,
-         ((CAST(round(o_totalprice * 100) AS BIGINT) * 9) // 10) / 100.0,
+         (({to_cents_sql("o_totalprice")} * 9) // 10) / 100.0,
          CAST('1998-06-15' AS DATE), 1
   FROM orders WHERE o_orderkey % {BT_CORR_MOD} = 0
 ), known_k1 AS (
@@ -1664,9 +1670,9 @@ WITH versions AS (
 )
 SELECT k2.o_orderstatus,
        CAST(count(*) AS BIGINT) AS n_orders_k2,
-       round(CAST(sum(CAST(round(k2.o_totalprice * 100) AS BIGINT)) AS BIGINT) / 100.0, 2)
+       round(CAST(sum({to_cents_sql("k2.o_totalprice")}) AS BIGINT) / 100.0, 2)
            AS total_as_known_k2,
-       round(CAST(sum(CAST(round(coalesce(k1.o_totalprice, 0) * 100) AS BIGINT)) AS BIGINT) / 100.0, 2)
+       round(CAST(sum({to_cents_sql("coalesce(k1.o_totalprice, 0)")}) AS BIGINT) / 100.0, 2)
            AS total_as_known_k1,
        CAST(count(*) FILTER (WHERE k1.o_totalprice IS NOT NULL
                                AND k1.o_totalprice <> k2.o_totalprice) AS BIGINT)
@@ -1708,7 +1714,7 @@ def temporal_bitemporal_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderkey",
             "o_orderstatus",
             (
-                F.floor(F.round(F.col("o_totalprice") * 100).cast("bigint") * 9 / 10)
+                F.floor(to_cents("o_totalprice") * 9 / 10)
                 .cast("bigint")
                 / 100.0
             ).alias("o_totalprice"),
@@ -1736,13 +1742,13 @@ def temporal_bitemporal_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_orders_k2"),
         F.round(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).cast("bigint")
+            F.sum(to_cents("o_totalprice")).cast("bigint")
             / 100.0,
             2,
         ).alias("total_as_known_k2"),
         F.round(
             F.sum(
-                F.round(F.coalesce(F.col("k1_total"), F.lit(0)) * 100).cast("bigint")
+                to_cents(F.coalesce(F.col("k1_total"), F.lit(0)))
             ).cast("bigint")
             / 100.0,
             2,
@@ -1829,10 +1835,10 @@ def temporal_accumulating_snapshot(spark: SparkSession, sf_dir: str) -> DataFram
 @register(
     "temporal_calendar_proration",
     tags=("temporal", "analytics"),
-    oracle="""
+    oracle=f"""
 WITH li AS (
   SELECT l_orderkey, l_linenumber, l_shipdate,
-         CAST(round(l_extendedprice * 100) AS BIGINT) AS cents,
+         {to_cents_sql("l_extendedprice")} AS cents,
          CAST(10 + l_partkey % 50 AS BIGINT) AS span_days
   FROM lineitem
 ), days AS (
@@ -1884,7 +1890,7 @@ def temporal_calendar_proration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey",
         "l_linenumber",
         "l_shipdate",
-        F.round(F.col("l_extendedprice") * 100).cast("bigint").alias("cents"),
+        to_cents("l_extendedprice").alias("cents"),
         (10 + F.col("l_partkey") % 50).cast("bigint").alias("span_days"),
     )
     ship = F.col("l_shipdate").cast("date")
@@ -2156,7 +2162,7 @@ def temporal_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     monthly = o.groupBy(
         F.date_trunc("month", "o_orderdate").cast("date").alias("month")
     ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100.0).cast("bigint"))
+        F.sum(to_cents("o_totalprice"))
         .cast("bigint")
         .alias("cents"),
         F.count(F.lit(1)).cast("bigint").alias("n_orders"),
@@ -2188,14 +2194,14 @@ def temporal_mom_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "temporal_holt_smoothing",
     tags=("temporal", "forecast", "iterative"),
-    oracle="""
+    oracle=f"""
 WITH RECURSIVE monthly AS MATERIALIZED (
   -- exact cents sum + integer half-up to dollars: round(sum(double))
   -- diverged cross-engine at sf1 (fourth-scale gate), because the
   -- double accumulation drift crosses .5 dollar boundaries
   SELECT CAST(row_number() OVER (ORDER BY m) AS BIGINT) AS rn, y FROM (
     SELECT date_trunc('month', CAST(o_orderdate AS DATE)) AS m,
-           (sum(CAST(round(o_totalprice * 100) AS BIGINT)) + 50) // 100 AS y
+           {sum_dollars_half_up_sql("o_totalprice")} AS y
     FROM orders GROUP BY 1)
 ), steps AS (
   SELECT rn AS t, y * 1e0 AS l, 0e0 AS b, 0e0 AS e FROM monthly WHERE rn = 1
@@ -2244,11 +2250,7 @@ def temporal_holt_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     monthly = o.groupBy(
         F.date_trunc("month", F.col("o_orderdate").cast("date")).alias("m")
-    ).agg(
-        F.expr(
-            "(sum(cast(round(o_totalprice * 100) as bigint)) + 50) div 100"
-        ).alias("y")
-    )
+    ).agg(sum_dollars_half_up("o_totalprice").alias("y"))
     arr = monthly.agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("m", "y"))), lambda s: s["y"]
@@ -2287,12 +2289,12 @@ def temporal_holt_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "temporal_kalman_local_level",
     tags=("temporal", "forecast", "iterative"),
-    oracle="""
+    oracle=f"""
 WITH RECURSIVE daily AS MATERIALIZED (
   -- exact cents + integer half-up (sf1-gate fix, see temporal_holt_smoothing)
   SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS rn, y FROM (
     SELECT CAST(o_orderdate AS DATE) AS d,
-           (sum(CAST(round(o_totalprice * 100) AS BIGINT)) + 50) // 100 AS y
+           {sum_dollars_half_up_sql("o_totalprice")} AS y
     FROM orders
     WHERE CAST(o_orderdate AS DATE) >= DATE '1996-01-01'
       AND CAST(o_orderdate AS DATE) < DATE '1997-01-01'
@@ -2340,9 +2342,7 @@ def temporal_kalman_local_level(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate").cast("date") < F.lit("1997-01-01").cast("date"))
     )
     daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
-        F.expr(
-            "(sum(cast(round(o_totalprice * 100) as bigint)) + 50) div 100"
-        ).alias("y")
+        sum_dollars_half_up("o_totalprice").alias("y")
     )
     arr = daily.agg(
         F.transform(
@@ -2381,10 +2381,10 @@ def temporal_kalman_local_level(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "temporal_sax_symbols",
     tags=("temporal", "text"),
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT CAST(o_orderdate AS DATE) AS day,
-         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS HUGEINT) AS cents
+         CAST(sum({to_cents_sql("o_totalprice")}) AS HUGEINT) AS cents
   FROM orders GROUP BY 1
 ), base AS (
   SELECT CAST(count(*) AS BIGINT) AS n,
@@ -2438,7 +2438,7 @@ def temporal_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+            F.sum(to_cents("o_totalprice"))
             .cast("decimal(38,0)")
             .alias("cents")
         )
@@ -2628,7 +2628,7 @@ WITH daily AS (
               AS HUGEINT) AS t,
          CAST(greatest(date_diff('day', DATE '{PW_KNOT}',
                                  CAST(o_orderdate AS DATE)), 0) AS HUGEINT) AS h,
-         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS HUGEINT) AS y
+         CAST(sum({to_cents_sql("o_totalprice")}) AS HUGEINT) AS y
   FROM orders GROUP BY o_orderdate
 ), m AS (
   SELECT CAST(count(*) AS BIGINT) AS n,
@@ -2694,7 +2694,7 @@ def temporal_piecewise_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "orders")
         .groupBy("o_orderdate")
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint"))
+            F.sum(to_cents("o_totalprice"))
             .cast("decimal(38,0)")
             .alias("y")
         )

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.measures import to_cents, to_cents_sql
 from ..registry import register
 from ..sources import load_table
 
@@ -158,12 +159,12 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q9_product_profit",
     tags=("tpch", "join", "agg"),
-    oracle="""
+    oracle=f"""
 WITH t AS (
   SELECT n_name AS nation, year(o_orderdate) AS o_year,
-         CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)
+         CAST(sum({to_cents_sql("l_extendedprice")}
                     * (100 - CAST(round(l_discount * 100) AS BIGINT))
-                  - CAST(round(p_retailprice * 100) AS BIGINT)
+                  - {to_cents_sql("p_retailprice")}
                     * CAST(round(l_quantity) AS BIGINT) * 50) AS BIGINT) AS s4
   FROM lineitem
   JOIN part     ON p_partkey = l_partkey AND p_name LIKE '%red%'
@@ -194,9 +195,9 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = load_table(spark, sf_dir, "nation")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     profit_1e4 = (
-        F.round(F.col("l_extendedprice") * 100).cast("bigint")
+        to_cents("l_extendedprice")
         * (100 - F.round(F.col("l_discount") * 100).cast("bigint"))
-        - F.round(F.col("p_retailprice") * 100).cast("bigint")
+        - to_cents("p_retailprice")
         * F.round(F.col("l_quantity")).cast("bigint")
         * 50
     )

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.measures import to_cents, to_cents_sql
 from ..registry import register
 from ..sources import load_table
 
@@ -332,10 +333,10 @@ def window_streak_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "window_cumsum_scalable",
     tags=("window", "scale"),
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT CAST(o_orderdate AS DATE) AS day,
-         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS day_cents
+         CAST(sum({to_cents_sql("o_totalprice")}) AS BIGINT) AS day_cents
   FROM orders GROUP BY 1
 )
 SELECT day, day_cents,
@@ -377,7 +378,7 @@ def window_cumsum_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
         .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias(
+            F.sum(to_cents("o_totalprice")).alias(
                 "day_cents"
             )
         )
@@ -412,11 +413,11 @@ def window_cumsum_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "window_time_range_frame",
     tags=("window", "temporal"),
-    oracle="""
+    oracle=f"""
 WITH ev AS (
   SELECT event_id, event_type, CAST(ts AS TIMESTAMP) AS ts,
          CAST(floor(date_part('epoch', CAST(ts AS TIMESTAMP))) AS BIGINT) AS sec,
-         CAST(round(value * 100) AS BIGINT) AS cents
+         {to_cents_sql("value")} AS cents
   FROM events
 )
 SELECT event_id, event_type, ts,
@@ -445,7 +446,7 @@ def window_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.unix_seconds(F.col("ts")))
         .rangeBetween(-3600, 0)
     )
-    cents = F.round(F.col("value") * 100).cast("bigint")
+    cents = to_cents("value")
     return ev.select(
         "event_id",
         "event_type",
@@ -458,10 +459,10 @@ def window_time_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "topk_incremental_maintenance",
     tags=("window", "ivm", "topk"),
-    oracle="""
+    oracle=f"""
 WITH ranked AS (
   SELECT o_orderpriority, o_orderkey,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
+         {to_cents_sql("o_totalprice")} AS cents,
          row_number() OVER (PARTITION BY o_orderpriority
                             ORDER BY round(o_totalprice * 100) DESC, o_orderkey) AS rn
   FROM orders
@@ -488,7 +489,7 @@ def topk_incremental_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderpriority",
         "o_orderkey",
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+        to_cents("o_totalprice").alias("cents"),
     )
     history = o.filter(F.col("o_orderkey") % 10 != 0)
     delta = o.filter(F.col("o_orderkey") % 10 == 0)
@@ -616,11 +617,11 @@ def window_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "window_rolling_regression",
     tags=("window", "stats", "temporal"),
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT CAST(ts AS DATE) AS day,
          CAST(epoch(CAST(ts AS DATE)) AS BIGINT) // 86400 AS x,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
+         {to_cents_sql("sum(value)")} AS cents
   FROM events GROUP BY 1, 2
 )
 SELECT day,
@@ -646,7 +647,7 @@ def window_rolling_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     series id, which is the `window_cumsum_scalable` rewrite)."""
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.round(F.sum("value") * 100).cast("bigint").alias("cents")
+        to_cents(F.sum("value")).alias("cents")
     ).withColumn("x", F.unix_date(F.col("day")).cast("bigint"))
     w = W.orderBy("day").rowsBetween(-6, W.currentRow)  # frame: bounded (day-grain)
     return daily.select(
@@ -661,10 +662,10 @@ def window_rolling_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "window_bollinger_bands",
     tags=("window", "temporal", "stats"),
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT CAST(ts AS DATE) AS day,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
+         {to_cents_sql("sum(value)")} AS cents
   FROM events GROUP BY 1
 )
 SELECT day, cents,
@@ -692,7 +693,7 @@ def window_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     monitoring systems use for cold starts."""
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.round(F.sum("value") * 100).cast("bigint").alias("cents")
+        to_cents(F.sum("value")).alias("cents")
     )
     w = W.orderBy("day").rowsBetween(-6, W.currentRow)  # frame: bounded (day-grain)
     sd = F.coalesce(F.stddev_samp("cents").over(w), F.lit(0.0))
@@ -715,10 +716,10 @@ def window_bollinger_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "window_max_drawdown",
     tags=("window", "temporal", "analytics"),
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT CAST(ts AS DATE) AS day,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
+         {to_cents_sql("sum(value)")} AS cents
   FROM events GROUP BY 1
 ), cum AS (
   SELECT day, cents,
@@ -749,7 +750,7 @@ def window_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 100 TB path if the series ever outgrows one partition."""
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.round(F.sum("value") * 100).cast("bigint").alias("cents")
+        to_cents(F.sum("value")).alias("cents")
     )
     wc = W.orderBy("day").rowsBetween(W.unboundedPreceding, W.currentRow)  # frame: bounded (day-grain)
     cum = daily.withColumn("equity", F.sum("cents").over(wc).cast("bigint"))
@@ -774,10 +775,10 @@ def window_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "window_local_maxima",
     tags=("window", "temporal", "analytics"),
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT CAST(ts AS DATE) AS day,
-         CAST(round(sum(value) * 100) AS BIGINT) AS cents
+         {to_cents_sql("sum(value)")} AS cents
   FROM events GROUP BY 1
 ), framed AS (
   SELECT day, cents,
@@ -813,7 +814,7 @@ def window_local_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
     day-cardinality sort, no self-joins); integer cents throughout."""
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.round(F.sum("value") * 100).cast("bigint").alias("cents")
+        to_cents(F.sum("value")).alias("cents")
     )
     wd = W.orderBy("day")  # frame: bounded (day-grain)
     left = wd.rowsBetween(-3, -1)

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.measures import to_cents, to_cents_sql
 from ..registry import register
 from ..sources import load_table
 from .kv import KVTable
@@ -323,10 +324,10 @@ def mr_secondary_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "mr_reduce_side_join",
     tags=("mapreduce", "pattern", "join"),
-    oracle="""
+    oracle=f"""
 SELECT c.c_custkey AS custkey, c.c_mktsegment AS segment,
        CAST(count(o.o_orderkey) AS BIGINT) AS n_orders,
-       CAST(coalesce(sum(CAST(round(o.o_totalprice * 100) AS BIGINT)), 0) AS BIGINT)
+       CAST(coalesce(sum({to_cents_sql("o.o_totalprice")}), 0) AS BIGINT)
            AS total_cents
 FROM customer c LEFT JOIN orders o ON o.o_custkey = c.c_custkey
 GROUP BY c.c_custkey, c.c_mktsegment
@@ -354,7 +355,7 @@ def mr_reduce_side_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("custkey"),
         F.lit(None).cast("string").alias("seg"),
-        F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
+        to_cents("o_totalprice").alias("cents"),
     )
     return (
         cust.unionByName(fact)

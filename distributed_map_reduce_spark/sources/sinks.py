@@ -19,6 +19,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.measures import to_cents, to_cents_sql
 from ..registry import register
 from ..sources import load_table
 
@@ -421,9 +422,9 @@ def source_permissive_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "source_xml_roundtrip",
     tags=("sink", "source"),
-    oracle="""
+    oracle=f"""
 SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS total_cents
+       CAST(sum({to_cents_sql("o_totalprice")}) AS BIGINT) AS total_cents
 FROM orders
 WHERE o_orderkey <= 2000
 GROUP BY o_orderpriority
@@ -454,7 +455,7 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             back.groupBy("o_orderpriority")
             .agg(
                 F.count(F.lit(1)).alias("n_orders"),
-                F.sum(F.round(F.col("o_totalprice") * 100).cast("bigint")).alias(
+                F.sum(to_cents("o_totalprice")).alias(
                     "total_cents"
                 ),
             )
@@ -648,11 +649,11 @@ def layout_zonemap_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "source_fixedwidth_parse",
     tags=("source",),
-    oracle="""
+    oracle=f"""
 WITH formatted AS (
   SELECT printf('%08d', c_custkey)
          || substr(c_mktsegment || '          ', 1, 10)
-         || printf('%012d', CAST(round(c_acctbal * 100) AS BIGINT) + 100000000)
+         || printf('%012d', {to_cents_sql("c_acctbal")} + 100000000)
            AS line
   FROM customer
 ), parsed AS (
@@ -688,7 +689,7 @@ def source_fixedwidth_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lpad(F.col("c_custkey").cast("string"), 8, "0"),
         F.rpad(F.col("c_mktsegment"), 10, " "),
         F.lpad(
-            (F.round(F.col("c_acctbal") * 100).cast("bigint") + 100000000)
+            (to_cents("c_acctbal") + 100000000)
             .cast("string"),
             12,
             "0",

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.measures import to_cents, to_cents_sql
 from ..registry import register
 from ..sources import load_table
 
@@ -55,7 +56,7 @@ def sliding_cents_avg(events: DataFrame) -> DataFrame:
         F.round((F.sum("cents") * 100).cast("double") / F.count(F.lit(1))) / 10000.0
     )
     return (
-        events.withColumn("cents", F.round(F.col("value") * 100).cast("bigint"))
+        events.withColumn("cents", to_cents("value"))
         .withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"), avg4.alias("avg_value"))
@@ -176,11 +177,11 @@ def enriched_segment_windows(events: DataFrame, customer: DataFrame) -> DataFram
 
 
 # Oracles each batch twin shares with its streaming twin.
-SLIDING_ORACLE = """
+SLIDING_ORACLE = f"""
 WITH buckets AS (
   SELECT unnest([time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP)),
                  time_bucket(INTERVAL '5 minutes', CAST(ts AS TIMESTAMP)) - INTERVAL 5 MINUTE]) AS window_start,
-         event_type, CAST(round(value * 100) AS BIGINT) AS cents
+         event_type, {to_cents_sql("value")} AS cents
   FROM events
 )
 SELECT window_start, event_type, count(*) AS n_events,

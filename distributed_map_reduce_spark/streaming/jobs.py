@@ -32,6 +32,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import DataStreamWriter
 
 from ..plans.kv_queries import CDC_APPLY_ORACLE, change_feed
+from ..functions.measures import to_cents, to_cents_sql
 from ..registry import register
 from ..sources import load_table, normalize_events_ts
 from .batch_windows import tumbling_counts
@@ -211,7 +212,7 @@ def incremental_view_sink(path: str):
     def write(batch_df, batch_id: int) -> None:
         view = batch_df.groupBy("user_id").agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("bigint")).alias("cents"),
+            F.sum(to_cents("value")).alias("cents"),
         )
         # First batch only: the view doesn't exist yet. Any OTHER read
         # failure (transient IO, partial file) must propagate — a bare
@@ -286,10 +287,10 @@ def stream_dedup_replay_exactly_once(spark: SparkSession, sf_dir: str) -> DataFr
 @register(
     "stream_incremental_view_maintenance",
     tags=("streaming", "ivm", "sink"),
-    oracle="""
+    oracle=f"""
 SELECT user_id,
        CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
+       CAST(sum({to_cents_sql("value")}) AS BIGINT) AS cents
 FROM events
 GROUP BY user_id
 """,
