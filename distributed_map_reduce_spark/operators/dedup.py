@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int, md5_int_sql
 from ..functions.normalize import FINGERPRINT_SQL, WORDS_SQL, fingerprint, words
 from ..functions.vectors import as_double
 from ..registry import register
@@ -118,14 +119,6 @@ def shingles_col(text: Column, k: int = SHINGLE_K) -> Column:
     return shingles_from_tokens(words(text), k)
 
 
-def shingle_hash(s: Column) -> Column:
-    """60-bit md5 prefix of a string: one md5 per shingle gives the base
-    integer of every MinHash function and the verify join key (the span
-    and group-pattern keys below use the same hash). DuckDB twin:
-    CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)."""
-    return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint")
-
-
 # Universal-hash MinHash: ONE md5 per shingle gives a base integer; the
 # k hash functions are (a_s * base + b_s) mod P — integer ops, not k md5
 # passes. P = 2^31-1 keeps a*base inside int64 on every engine. The
@@ -161,10 +154,10 @@ def shingle_rows(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
     return _exploded_shingles(docs, id_col, text_col).dropDuplicates(["doc_id", "s"])
 
 
-def shingle_hash_rows(
+def hashed_shingle_rows(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """Distinct (doc_id, h) rows, one :func:`shingle_hash` per distinct
+    """Distinct (doc_id, h) rows, one 60-bit :func:`md5_int` per distinct
     word shingle. MinHash banding needs only h % P and the exact-Jaccard
     verify intersects these SAME 60-bit prefixes, so banding, both
     verify joins and the size aggregate all reuse ONE integer-keyed
@@ -173,7 +166,7 @@ def shingle_hash_rows(
     signatures, count for sizes, equi-join for intersections)."""
     return (
         _exploded_shingles(docs, id_col, text_col)
-        .select("doc_id", shingle_hash(F.col("s")).alias("h"))
+        .select("doc_id", md5_int(F.col("s")).alias("h"))
         .dropDuplicates(["doc_id", "h"])
     )
 
@@ -211,7 +204,7 @@ def _bands(sig: DataFrame, *carry: str) -> DataFrame:
 
 def banded_keys(sh_rows: DataFrame) -> DataFrame:
     """(doc_id, band_id, band_key) rows from distinct (doc_id, h) hash
-    rows (:func:`shingle_hash_rows`): one hash-aggregate with k
+    rows (:func:`hashed_shingle_rows`): one hash-aggregate with k
     vectorized ``min`` columns, then the band explode."""
     base = sh_rows.select("doc_id", (F.col("h") % MINHASH_P).alias("b"))
     return _bands(base.groupBy("doc_id").agg(*_signature(F.col("b"))))
@@ -247,7 +240,7 @@ LSH_BUCKET_CAP = 16  # minhash_lsh_pairs_capped: drop buckets larger than this
 
 def _per_doc_minhash(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc_id, hs, h0..h{k-1}) per document: ``hs`` is the distinct
-    :func:`shingle_hash` array of its word shingles and h{s} the
+    :func:`md5_int` array of its word shingles and h{s} the
     signature min of :func:`_minhash` over it. Row-local — no aggregate,
     no key exchange — so each consumer reads the one scan → tokenize →
     md5 pipeline once. Documents shorter than one shingle are dropped
@@ -258,7 +251,7 @@ def _per_doc_minhash(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     on ``hs`` is pushed below the repartition and inlines the token
     split into the shingle lambda (see :func:`_shingle_list`)."""
     toks = _doc_tokens(docs, id_col, text_col).filter(F.size("toks") >= SHINGLE_K)
-    hs = F.array_distinct(F.transform(_shingle_list(F.col("toks")), shingle_hash))
+    hs = F.array_distinct(F.transform(_shingle_list(F.col("toks")), lambda s: md5_int(s)))
     per_doc = toks.select("doc_id", hs.alias("hs"))
     return per_doc.select(
         "doc_id",
@@ -335,7 +328,7 @@ def minhash_lsh_pairs(
 
     Fully relational shape — no wide array columns anywhere:
 
-    1. :func:`shingle_hash_rows` explodes to distinct (doc_id, h) rows,
+    1. :func:`hashed_shingle_rows` explodes to distinct (doc_id, h) rows,
     2. :func:`banded_keys` signs + bands them and :func:`band_candidates`
        self-joins the buckets; candidates are ids-only,
     3. :func:`verify_jaccard` = join-count: |A∩B| from an equi-join on
@@ -350,17 +343,17 @@ def minhash_lsh_pairs(
     # the dropDuplicates exchange, which Spark dedupes to one physical
     # computation (ReusedExchange) — and unlike persist/localCheckpoint,
     # nothing accumulates driver-side across calls.
-    sh_h = shingle_hash_rows(docs, id_col, text_col)
+    sh_h = hashed_shingle_rows(docs, id_col, text_col)
     return verify_jaccard(band_candidates(banded_keys(sh_h)), sh_h, tau)
 
 
 def verify_jaccard(cand: DataFrame, sh_h: DataFrame, tau: float) -> DataFrame:
     """Exact-Jaccard verification of an ids-only candidate set against
-    distinct (doc_id, h) rows (:func:`shingle_hash_rows`): |A∩B| from an
+    distinct (doc_id, h) rows (:func:`hashed_shingle_rows`): |A∩B| from an
     equi-join on h, |A∪B| = |A|+|B|−|A∩B| — never materializes a pair of
     arrays.
 
-    The join runs on the 60-bit :func:`shingle_hash` instead of the
+    The join runs on the 60-bit :func:`md5_int` instead of the
     ~50-byte shingle string (hashed keys cut the hottest shuffle ~4×).
     The DuckDB twin (_verified_sql) intersects the SAME md5-prefix
     lists, so a 60-bit collision changes both engines identically and
@@ -438,9 +431,7 @@ def simhash_df(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") 
     tok = docs.select(
         F.col(id_col).alias("doc_id"), F.explode(words(text_col)).alias("w")
     )
-    h = tok.select(
-        "doc_id", F.conv(F.substring(F.md5("w"), 1, 8), 16, 10).cast("long").alias("v")
-    )
+    h = tok.select("doc_id", md5_int("w", 8).alias("v"))
     votes = h.groupBy("doc_id").agg(
         *[
             F.sum((F.shiftright(F.col("v"), j).bitwiseAND(F.lit(1))) * 2 - 1).alias(f"v{j}")
@@ -469,7 +460,7 @@ def _simhash_sql(source: str = "documents", id_col: str = "doc_id", text_col: st
   tok AS (SELECT {id_col} AS doc_id,
                  unnest(list_filter(string_split(lower({text_col}), ' '), w -> w <> '')) AS w
           FROM {source}),
-  h AS (SELECT doc_id, CAST('0x' || substr(md5(w), 1, 8) AS BIGINT) AS v FROM tok),
+  h AS (SELECT doc_id, {md5_int_sql("w", 8)} AS v FROM tok),
   votes AS (SELECT doc_id, {vote_cols} FROM h GROUP BY doc_id),
   s AS (SELECT doc_id, ({bit_sum}) AS simhash FROM votes)"""
 
@@ -520,7 +511,7 @@ _MINHASH_BAND_SQL = f"""toks AS (
 ), ints AS (
   SELECT doc_id, shingles,
          list_transform(shingles,
-                        x -> CAST('0x' || substr(md5(x), 1, 15) AS BIGINT) % {MINHASH_P}) AS b
+                        x -> {md5_int_sql("x")} % {MINHASH_P}) AS b
   FROM sh
 ), sig AS (
   SELECT doc_id, shingles,
@@ -576,7 +567,7 @@ def _verified_sql(cand_sql: str, tau: float = MINHASH_TAU) -> str:
 WITH {cand_sql}, shh AS (
   SELECT doc_id,
          list_distinct(list_transform(shingles,
-             x -> CAST('0x' || substr(md5(x), 1, 15) AS BIGINT))) AS hs
+             x -> {md5_int_sql("x")})) AS hs
   FROM sh
 ), verified AS (
   SELECT doc_a, doc_b,
@@ -679,7 +670,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle rows: the per-doc distinct-hash set is what the signature
     reduces over, so they equal the string-row candidates."""
     docs = load_table(spark, sf_dir, "documents")
-    cand = band_candidates(banded_keys(shingle_hash_rows(docs)))
+    cand = band_candidates(banded_keys(hashed_shingle_rows(docs)))
     d = docs.select("doc_id", F.array_distinct(words("text")).alias("words"))
     jac = jaccard(F.col("w_a"), F.col("w_b"))
     return (
@@ -864,7 +855,7 @@ def dedup_minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents")
     base = shingle_rows(docs).select(
-        "doc_id", "s", (shingle_hash(F.col("s")) % MINHASH_P).alias("b")
+        "doc_id", "s", (md5_int(F.col("s")) % MINHASH_P).alias("b")
     )
     sig = base.groupBy("doc_id").agg(
         F.collect_set("s").alias("shingles"), *_signature(F.col("b"))
@@ -1191,7 +1182,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         stok_t.crossJoin(F.broadcast(kdf))
         .groupBy("sid", (F.col("tid") % (F.col("k") + 1)).alias("gid"))
         .agg(
-            shingle_hash(F.concat_ws(",", F.sort_array(F.collect_list("tid")))).alias("g60")
+            md5_int(F.concat_ws(",", F.sort_array(F.collect_list("tid")))).alias("g60")
         )
     )
     grid = (
@@ -1382,7 +1373,7 @@ WITH toks AS (
 ), grams AS (
   SELECT doc_id,
          unnest(list_transform(range(1, len(t) - {SPAN_K - 2}),
-                i -> CAST('0x' || substr(md5(array_to_string(t[i:i+{SPAN_K - 1}], ' ')), 1, 15) AS BIGINT))) AS g
+                i -> {md5_int_sql(f"array_to_string(t[i:i+{SPAN_K - 1}], ' ')")})) AS g
   FROM toks WHERE len(t) >= {SPAN_K}
 ), df AS (
   SELECT g, count(DISTINCT doc_id) AS n_docs FROM grams GROUP BY g
@@ -1419,7 +1410,7 @@ def dedup_duplicate_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = F.sequence(F.lit(1), F.size("t") - (SPAN_K - 1))
     gram = F.transform(
         idx,
-        lambda i: shingle_hash(
+        lambda i: md5_int(
             F.concat_ws(" ", *[F.element_at("t", i + j) for j in range(SPAN_K)])
         ),
     )

@@ -56,6 +56,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int, md5_int_sql
 from ..functions.normalize import SPLIT_LOWER_SQL, words
 from ..registry import register
 from ..sources import load_table
@@ -1135,7 +1136,8 @@ WITH hi AS (
   SELECT p.seed, n.nxt AS cur
   FROM s{s-1} p JOIN nbr n
     ON n.node = p.cur
-   AND n.rnk = 1 + CAST('0x' || substr(md5('rw:' || CAST(p.cur AS VARCHAR) || ':' || CAST({s} AS VARCHAR)), 1, 8) AS BIGINT) % n.deg
+   AND n.rnk = 1 + {md5_int_sql(f"'rw:' || CAST(p.cur AS VARCHAR) || ':' || CAST({s} AS VARCHAR)", 8)}
+                   % n.deg
 )"""
         )
     hops = ", ".join(
@@ -1202,25 +1204,8 @@ def graph_random_walk_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hops = []
     for s in range(1, RW_STEPS + 1):
-        coin = (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("rw:"),
-                            F.col("cur").cast("string"),
-                            F.lit(":"),
-                            F.lit(s).cast("string"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % F.col("deg")
-        )
+        hop = F.concat(F.lit("rw:"), F.col("cur").cast("string"), F.lit(":"), F.lit(s).cast("string"))
+        coin = md5_int(hop, 8) % F.col("deg")
         step = (
             state.join(nbr, nbr.node == state.cur)
             .filter(F.col("rnk") == 1 + coin)

@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import hex_int, md5_int, md5_int_sql
 from ..functions.normalize import SPLIT_LOWER_SQL, words
 from ..registry import register
 from ..sources import load_table
@@ -505,8 +506,8 @@ _BUCKET_VALUES = ", ".join(f"({i}, {w}, {h})" for i, w, h in ASPECT_BUCKETS)
     oracle=f"""
 WITH dims AS (
   SELECT doc_id,
-         64 * (4 + CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS BIGINT) % 13) AS w,
-         64 * (4 + CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 3, 2) AS BIGINT) % 13) AS h
+         64 * (4 + {md5_int_sql("CAST(doc_id AS VARCHAR)", 2)} % 13) AS w,
+         64 * (4 + {md5_int_sql("CAST(doc_id AS VARCHAR)", 2, start=3)} % 13) AS h
   FROM documents
 ), buckets(bucket_id, bucket_w, bucket_h) AS (
   VALUES {_BUCKET_VALUES}
@@ -551,8 +552,8 @@ def multimodal_aspect_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     hh = F.md5(F.col("doc_id").cast("string"))
     dims = docs.select(
         "doc_id",
-        (64 * (4 + F.conv(F.substring(hh, 1, 2), 16, 10).cast("bigint") % 13)).alias("w"),
-        (64 * (4 + F.conv(F.substring(hh, 3, 2), 16, 10).cast("bigint") % 13)).alias("h"),
+        (64 * (4 + hex_int(hh, 2) % 13)).alias("w"),
+        (64 * (4 + hex_int(hh, 2, start=3) % 13)).alias("h"),
     )
     r = F.col("w") * 1.0 / F.col("h")
     candidates = F.array(
@@ -598,9 +599,9 @@ MODALITY_SHARDS = 8
     oracle=f"""
 WITH assigned AS (
   SELECT doc_id,
-         CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 5, 6) AS BIGINT) % {MODALITY_SHARDS} AS shard,
-         CASE WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 11, 2) AS BIGINT) % 10 < 6 THEN 'image'
-              WHEN CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 11, 2) AS BIGINT) % 10 < 9 THEN 'audio'
+         {md5_int_sql("CAST(doc_id AS VARCHAR)", 6, start=5)} % {MODALITY_SHARDS} AS shard,
+         CASE WHEN {md5_int_sql("CAST(doc_id AS VARCHAR)", 2, start=11)} % 10 < 6 THEN 'image'
+              WHEN {md5_int_sql("CAST(doc_id AS VARCHAR)", 2, start=11)} % 10 < 9 THEN 'audio'
               ELSE 'video' END AS modality
   FROM documents
 )
@@ -627,8 +628,8 @@ def multimodal_modality_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan, payloads untouched."""
     docs = load_table(spark, sf_dir, "documents")
     hh = F.md5(F.col("doc_id").cast("string"))
-    shard = F.conv(F.substring(hh, 5, 6), 16, 10).cast("bigint") % MODALITY_SHARDS
-    mcoin = F.conv(F.substring(hh, 11, 2), 16, 10).cast("bigint") % 10
+    shard = hex_int(hh, 6, start=5) % MODALITY_SHARDS
+    mcoin = hex_int(hh, 2, start=11) % 10
     modality = (
         F.when(mcoin < 6, "image").when(mcoin < 9, "audio").otherwise("video")
     )
@@ -658,8 +659,8 @@ CAPTION_MAX_TOK = 4096
     oracle=f"""
 WITH pairs AS (
   SELECT doc_id,
-         64 * (4 + CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS BIGINT) % 13) AS w,
-         64 * (4 + CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 3, 2) AS BIGINT) % 13) AS h,
+         64 * (4 + {md5_int_sql("CAST(doc_id AS VARCHAR)", 2)} % 13) AS w,
+         64 * (4 + {md5_int_sql("CAST(doc_id AS VARCHAR)", 2, start=3)} % 13) AS h,
          len(list_filter({SPLIT_LOWER_SQL}, t -> t <> '')) AS n_tok
   FROM documents
 ), scored AS (
@@ -692,8 +693,8 @@ def multimodal_caption_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     inspectable before committing the filter corpus-wide."""
     docs = load_table(spark, sf_dir, "documents")
     hh = F.md5(F.col("doc_id").cast("string"))
-    w = 64 * (4 + F.conv(F.substring(hh, 1, 2), 16, 10).cast("bigint") % 13)
-    h = 64 * (4 + F.conv(F.substring(hh, 3, 2), 16, 10).cast("bigint") % 13)
+    w = 64 * (4 + hex_int(hh, 2) % 13)
+    h = 64 * (4 + hex_int(hh, 2, start=3) % 13)
     n_tok = F.size(words("text"))
     scored = docs.select(
         (w * h).cast("bigint").alias("area_px"),
@@ -719,14 +720,14 @@ def multimodal_caption_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "multimodal_interleaved_assembly",
     tags=("multimodal", "pipeline"),
-    oracle="""
+    oracle=f"""
 WITH dims AS (
   SELECT doc_id, source,
          len(list_filter(string_split(text, ' '), w -> trim(w) <> '')) AS n_text,
-         1 + CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 5, 2) AS BIGINT) % 3
+         1 + {md5_int_sql("CAST(doc_id AS VARCHAR)", 2, start=5)} % 3
            AS n_images,
-         64 * (4 + CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) AS BIGINT) % 13) AS w,
-         64 * (4 + CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 3, 2) AS BIGINT) % 13) AS h
+         64 * (4 + {md5_int_sql("CAST(doc_id AS VARCHAR)", 2)} % 13) AS w,
+         64 * (4 + {md5_int_sql("CAST(doc_id AS VARCHAR)", 2, start=3)} % 13) AS h
   FROM documents
 ), budget AS (
   SELECT doc_id, source, n_text, n_images,
@@ -761,20 +762,18 @@ def multimodal_interleaved_assembly(spark: SparkSession, sf_dir: str) -> DataFra
     Pure integer arithmetic per row -> source-keyed hash agg; no
     shuffle wider than the 20-row report at any scale."""
     docs = load_table(spark, sf_dir, "documents")
-    coin = lambda pos: F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), pos, 2), 16, 10
-    ).cast("bigint")
+    key = F.col("doc_id").cast("string")
     n_text = F.size(words("text"))
-    n_images = (1 + coin(5) % 3).alias("n_images")
-    w = 64 * (4 + coin(1) % 13)
-    h = 64 * (4 + coin(3) % 13)
+    n_images = 1 + md5_int(key, 2, start=5) % 3
+    w = 64 * (4 + md5_int(key, 2) % 13)
+    h = 64 * (4 + md5_int(key, 2, start=3) % 13)
     tiles = (F.ceil(w / 448.0) * F.ceil(h / 448.0)).cast("bigint")
     budget = docs.select(
         "source",
         n_text.alias("n_text"),
-        n_images,
+        n_images.alias("n_images"),
         tiles.alias("tiles"),
-        (n_text + (1 + coin(5) % 3) * (256 * tiles + 2)).alias("total_tokens"),
+        (n_text + n_images * (256 * tiles + 2)).alias("total_tokens"),
     )
     return budget.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -797,11 +796,10 @@ def multimodal_interleaved_assembly(spark: SparkSession, sf_dir: str) -> DataFra
 @register(
     "multimodal_audio_framing",
     tags=("multimodal", "pipeline"),
-    oracle="""
+    oracle=f"""
 WITH clips AS (
   SELECT doc_id, source,
-         500 + CAST('0x' || substr(md5('audio-' || CAST(doc_id AS VARCHAR)), 1, 4)
-                    AS BIGINT) % 60000 AS dur_ms
+         500 + {md5_int_sql("'audio-' || CAST(doc_id AS VARCHAR)", 4)} % 60000 AS dur_ms
   FROM documents
 ), framed AS (
   SELECT doc_id, source, dur_ms,
@@ -836,17 +834,7 @@ def multimodal_audio_framing(spark: SparkSession, sf_dir: str) -> DataFrame:
     All integer arithmetic in-scan, one source-keyed hash agg — the
     audio sibling of [[multimodal_interleaved_assembly]]."""
     docs = load_table(spark, sf_dir, "documents")
-    dur = (
-        500
-        + F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("audio-"), F.col("doc_id").cast("string"))), 1, 4
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 60000
-    )
+    dur = 500 + md5_int(F.concat(F.lit("audio-"), F.col("doc_id").cast("string")), 4) % 60000
     n_frames = 1 + F.floor((dur - 25) / 10).cast("bigint")
     audio_tokens = F.ceil(n_frames / 8.0).cast("bigint")
     framed = docs.select(
@@ -882,10 +870,8 @@ VIT_MAX_TOKENS = 1024  # per-image visual-token budget
     oracle=f"""
 WITH dims AS (
   SELECT doc_id,
-         64 * (4 + CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 2)
-                   AS BIGINT) % 13) AS w,
-         64 * (4 + CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 3, 2)
-                   AS BIGINT) % 13) AS h
+         64 * (4 + {md5_int_sql("CAST(doc_id AS VARCHAR)", 2)} % 13) AS w,
+         64 * (4 + {md5_int_sql("CAST(doc_id AS VARCHAR)", 2, start=3)} % 13) AS h
   FROM documents
 ), toks AS (
   SELECT doc_id, w, h,
@@ -936,28 +922,11 @@ def multimodal_patch_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one scan reduced to a 3-row orientation grid with map-side
     combine; the per-asset arithmetic is codegen'd integer math."""
+    key = F.col("doc_id").cast("string")
     dims = load_table(spark, sf_dir, "documents").select(
         "doc_id",
-        (
-            64
-            * (
-                4
-                + F.conv(
-                    F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2), 16, 10
-                ).cast("bigint")
-                % 13
-            )
-        ).alias("w"),
-        (
-            64
-            * (
-                4
-                + F.conv(
-                    F.substring(F.md5(F.col("doc_id").cast("string")), 3, 2), 16, 10
-                ).cast("bigint")
-                % 13
-            )
-        ).alias("h"),
+        (64 * (4 + md5_int(key, 2) % 13)).alias("w"),
+        (64 * (4 + md5_int(key, 2, start=3) % 13)).alias("h"),
     )
     native = (
         F.floor((F.col("w") + PATCH - 1) / PATCH)

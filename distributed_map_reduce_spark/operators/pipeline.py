@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import hex_int, md5_int, md5_int_sql
 from ..functions.normalize import (
     FINGERPRINT_SQL,
     SPLIT_LOWER_SQL,
@@ -170,7 +171,7 @@ def pipeline_shuffle_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort, no driver involvement, reshard = change N."""
     docs = load_table(spark, sf_dir, "documents")
     h = docs.select("doc_id", _doc_hash().alias("hh"))
-    shard = (F.conv(F.substring("hh", 1, 6), 16, 10).cast("bigint") % N_SHARDS).cast("int")
+    shard = (hex_int("hh", 6) % N_SHARDS).cast("int")
     w = Window.partitionBy("shard").orderBy("hh")
     return (
         h.withColumn("shard", shard)
@@ -185,7 +186,7 @@ def pipeline_shuffle_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 WITH toks AS (
   SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS hh,
-         CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 6) AS BIGINT) % {N_SHARDS} AS shard,
+         {md5_int_sql("CAST(doc_id AS VARCHAR)", 6)} % {N_SHARDS} AS shard,
          len(list_filter(string_split(text, ' '), w -> trim(w) <> '')) AS n_tokens
   FROM documents
 ), packed AS (
@@ -215,9 +216,7 @@ def pipeline_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         _doc_hash().alias("hh"),
         n_tokens.cast("bigint").alias("n_tokens"),
-    ).withColumn(
-        "shard", F.conv(F.substring("hh", 1, 6), 16, 10).cast("bigint") % N_SHARDS
-    )
+    ).withColumn("shard", hex_int("hh", 6) % N_SHARDS)
     w = (
         Window.partitionBy("shard")
         .orderBy("hh")
@@ -697,13 +696,11 @@ def pipeline_feature_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "pipeline_train_val_split",
     tags=("pipeline", "training"),
-    oracle="""
+    oracle=f"""
 WITH assigned AS (
   SELECT source,
-         CASE WHEN CAST('0x' || substr(md5('split-' || CAST(doc_id AS VARCHAR)), 1, 8)
-                   AS BIGINT) % 100 < 98 THEN 'train'
-              WHEN CAST('0x' || substr(md5('split-' || CAST(doc_id AS VARCHAR)), 1, 8)
-                   AS BIGINT) % 100 < 99 THEN 'val'
+         CASE WHEN {md5_int_sql("'split-' || CAST(doc_id AS VARCHAR)", 8)} % 100 < 98 THEN 'train'
+              WHEN {md5_int_sql("'split-' || CAST(doc_id AS VARCHAR)", 8)} % 100 < 99 THEN 'val'
               ELSE 'test' END AS split,
          n_chars
   FROM documents
@@ -722,14 +719,7 @@ def pipeline_train_val_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     uncontaminated across pipeline re-runs. Pure map + one small agg;
     the same predicate IS the split filter at materialization time."""
     docs = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("split-"), F.col("doc_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-    )
+    bucket = md5_int(F.concat(F.lit("split-"), F.col("doc_id").cast("string")), 8) % 100
     assigned = docs.select(
         "source",
         F.when(bucket < 98, "train").when(bucket < 99, "val").otherwise("test").alias("split"),
@@ -820,7 +810,7 @@ def pipeline_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "pipeline_mixture_materialize",
     tags=("pipeline", "sampling"),
-    oracle="""
+    oracle=f"""
 WITH per_src AS (
   SELECT source,
          CAST(count(*) AS BIGINT) AS n_docs,
@@ -838,8 +828,7 @@ WITH per_src AS (
 ), perdoc AS (
   SELECT d.doc_id, d.source,
          CAST(floor(r.rep) AS BIGINT)
-         + CASE WHEN CAST('0x' || substr(md5('mix:' || CAST(d.doc_id AS VARCHAR)), 1, 8)
-                     AS BIGINT) % 1000000
+         + CASE WHEN {md5_int_sql("'mix:' || CAST(d.doc_id AS VARCHAR)", 8)} % 1000000
                      < CAST(floor((r.rep - floor(r.rep)) * 1000000) AS BIGINT)
                 THEN 1 ELSE 0 END AS copies
   FROM documents d JOIN r ON r.source = d.source
@@ -885,16 +874,7 @@ def pipeline_mixture_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
             (1.0 / F.col("n_src")) / (F.col("n_tokens") * 1.0 / F.col("total")), 0.5
         ).alias("rep"),
     )
-    coin = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("mix:"), F.col("doc_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 1000000
-    )
+    coin = md5_int(F.concat(F.lit("mix:"), F.col("doc_id").cast("string")), 8) % 1000000
     thresh = F.floor((F.col("rep") - F.floor("rep")) * 1000000).cast("bigint")
     perdoc = (
         docs.select("doc_id", "source")
@@ -917,7 +897,7 @@ def pipeline_mixture_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "pipeline_quality_rejection_sample",
     tags=("pipeline", "sampling"),
-    oracle="""
+    oracle=f"""
 WITH scored AS (
   SELECT doc_id, source,
          least(CAST(n_chars AS BIGINT), 900) + CASE WHEN lang = 'en' THEN 100 ELSE 0 END
@@ -925,8 +905,8 @@ WITH scored AS (
   FROM documents
 ), drawn AS (
   SELECT source, quality_millis,
-         CASE WHEN CAST('0x' || substr(md5('accept:' || CAST(doc_id AS VARCHAR)), 1, 8)
-                   AS BIGINT) % 1000 < quality_millis THEN 1 ELSE 0 END AS accepted
+         CASE WHEN {md5_int_sql("'accept:' || CAST(doc_id AS VARCHAR)", 8)} % 1000
+                   < quality_millis THEN 1 ELSE 0 END AS accepted
   FROM scored
 )
 SELECT source,
@@ -957,16 +937,7 @@ def pipeline_quality_rejection_sample(spark: SparkSession, sf_dir: str) -> DataF
         F.least(F.col("n_chars").cast("bigint"), F.lit(900))
         + F.when(F.col("lang") == "en", 100).otherwise(0)
     ).alias("quality_millis")
-    coin = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("accept:"), F.col("doc_id").cast("string"))), 1, 8
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 1000
-    )
+    coin = md5_int(F.concat(F.lit("accept:"), F.col("doc_id").cast("string")), 8) % 1000
     drawn = docs.select(
         "source",
         quality,
@@ -1050,7 +1021,7 @@ WITH toks AS (
 ), coins AS (
   SELECT doc_id, t,
          list_transform(range(1, len(t) + 1),
-           i -> CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)), 1, 4) AS BIGINT) % 100
+           i -> {md5_int_sql("CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)", 4)} % 100
                 < {MLM_RATE_PCT}) AS m
   FROM toks
 )
@@ -1080,15 +1051,7 @@ def pipeline_mlm_masking(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select("doc_id", words("text").alias("t")).filter(F.size("t") > 0)
     idx = F.sequence(F.lit(1), F.size("t"))
     coin = lambda i: (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":"), i.cast("string"))),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        md5_int(F.concat(F.col("doc_id").cast("string"), F.lit(":"), i.cast("string")), 4)
         % 100
         < MLM_RATE_PCT
     )
@@ -1331,8 +1294,8 @@ WITH gold AS (
   SELECT doc_id, g,
          list_transform(
            list_filter(range(1, len(g) + 1),
-             i -> CAST('0x' || substr(md5('ev:' || CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)), 1, 4) AS BIGINT) % 100
-                  >= {EVAL_DROP_PCT}),
+             i -> {md5_int_sql("'ev:' || CAST(doc_id AS VARCHAR) || ':' || CAST(i AS VARCHAR)", 4)}
+                  % 100 >= {EVAL_DROP_PCT}),
            i -> g[i]) AS p
   FROM gold
 ), gtok AS (
@@ -1370,25 +1333,9 @@ def eval_em_f1_scoring(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate report."""
     docs = load_table(spark, sf_dir, "documents")
     gold = docs.select("doc_id", words("text").alias("g")).filter(F.size("g") > 0)
+    doc = F.col("doc_id").cast("string")
     keep = lambda i: (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("ev:"),
-                        F.col("doc_id").cast("string"),
-                        F.lit(":"),
-                        i.cast("string"),
-                    )
-                ),
-                1,
-                4,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-        >= EVAL_DROP_PCT
+        md5_int(F.concat(F.lit("ev:"), doc, F.lit(":"), i.cast("string")), 4) % 100 >= EVAL_DROP_PCT
     )
     pred = gold.withColumn(
         "p",
@@ -1485,7 +1432,7 @@ def pipeline_conversation_assembly(spark: SparkSession, sf_dir: str) -> DataFram
     oracle=f"""
 WITH assign AS (
   SELECT d.source,
-         CAST(CAST('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 6) AS BIGINT)
+         CAST({md5_int_sql("CAST(d.doc_id AS VARCHAR)", 6)}
               % {N_SHARDS} AS INT) AS shard
   FROM documents d
 ), cell AS (
@@ -1526,9 +1473,7 @@ def pipeline_shard_mix_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (zero-filled, bounded by N_SHARDS * |sources| — metadata-sized);
     exact integer counts, e-notation literals, 4dp on the quadratic."""
     docs = load_table(spark, sf_dir, "documents")
-    shard = (
-        F.conv(F.substring(_doc_hash(), 1, 6), 16, 10).cast("bigint") % N_SHARDS
-    ).cast("int")
+    shard = (hex_int(_doc_hash(), 6) % N_SHARDS).cast("int")
     assign = docs.select("source", shard.alias("shard"))
     cell = assign.groupBy("shard", "source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
@@ -1771,8 +1716,7 @@ WITH docs AS (
 ), blocks AS (
   SELECT doc_id, source, n_tok, b.b,
          CAST(least(20, n_tok - 20 * b.b) AS BIGINT) AS blocklen,
-         CAST(CAST('0x' || substr(md5('span-' || doc_id || '-' || b.b), 1, 2)
-                AS BIGINT) % 18 AS BIGINT) AS h
+         CAST({md5_int_sql("'span-' || doc_id || '-' || b.b", 2)} % 18 AS BIGINT) AS h
   FROM docs,
        unnest(generate_series(0, CAST(ceil(n_tok / 20e0) AS BIGINT) - 1))
          AS b(b)
@@ -1840,22 +1784,12 @@ def pipeline_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
             "blocklen"
         ),
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("span-"),
-                            F.col("doc_id").cast("string"),
-                            F.lit("-"),
-                            F.col("b").cast("string"),
-                        )
-                    ),
-                    1,
-                    2,
+            md5_int(
+                F.concat(
+                    F.lit("span-"), F.col("doc_id").cast("string"), F.lit("-"), F.col("b").cast("string")
                 ),
-                16,
-                10,
-            ).cast("bigint")
+                2,
+            )
             % 18
         ).alias("h"),
     )

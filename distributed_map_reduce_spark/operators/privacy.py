@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int, md5_int_sql
 from ..functions.normalize import WORDS_SQL, words
 from ..functions.measures import CONVERTED_SQL, converted, to_cents, to_cents_sql
 from ..registry import register
@@ -211,12 +212,12 @@ def privacy_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "privacy_dp_noisy_counts",
     tags=("privacy", "agg"),
-    oracle="""
+    oracle=f"""
 WITH g AS (
   SELECT event_type, count(*) AS n_exact FROM events GROUP BY 1
 ), u AS (
   SELECT event_type, n_exact,
-         CAST('0x' || substr(md5('dp-seed-' || event_type), 1, 8) AS BIGINT)
+         {md5_int_sql("'dp-seed-' || event_type", 8)}
            / 4294967296.0 - 0.5 AS x
   FROM g
 )
@@ -240,12 +241,7 @@ def privacy_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     so cost is independent of fact-table size."""
     ev = load_table(spark, sf_dir, "events")
     g = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n_exact"))
-    u = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("dp-seed-"), F.col("event_type"))), 1, 8), 16, 10)
-        .cast("bigint")
-        / F.lit(4294967296.0)
-        - 0.5
-    )
+    u = md5_int(F.concat(F.lit("dp-seed-"), F.col("event_type")), 8) / F.lit(4294967296.0) - 0.5
     x = F.col("x")
     noise = -2.0 * F.signum(x) * F.log(1.0 - 2.0 * F.abs(x))
     return (
@@ -721,11 +717,9 @@ WITH u AS (
   FROM events GROUP BY user_id
 ), rr AS (
   SELECT user_id, y,
-         CASE WHEN (CAST('0x' || substr(md5('rr1-' || user_id), 1, 2)
-                      AS BIGINT) % 256) < 128
+         CASE WHEN ({md5_int_sql("'rr1-' || user_id", 2)} % 256) < 128
               THEN y
-              ELSE CASE WHEN (CAST('0x' || substr(md5('rr2-' || user_id), 1, 2)
-                               AS BIGINT) % 256) < 128
+              ELSE CASE WHEN ({md5_int_sql("'rr2-' || user_id", 2)} % 256) < 128
                         THEN 1 ELSE 0 END
          END AS reported
   FROM u
@@ -759,25 +753,13 @@ def privacy_randomized_response(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers; only the final rate divisions round."""
     ev = load_table(spark, sf_dir, "events")
     u = ev.groupBy("user_id").agg(converted().alias("y"))
-
-    def coin(prefix: str):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(prefix), F.col("user_id").cast("string"))),
-                    1,
-                    2,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 256
-        )
-
+    uid = F.col("user_id").cast("string")
+    rr1 = md5_int(F.concat(F.lit("rr1-"), uid), 2) % 256
+    rr2 = md5_int(F.concat(F.lit("rr2-"), uid), 2) % 256
     rr = u.select(
         "y",
-        F.when(coin("rr1-") < 128, F.col("y"))
-        .otherwise(F.when(coin("rr2-") < 128, 1).otherwise(0))
+        F.when(rr1 < 128, F.col("y"))
+        .otherwise(F.when(rr2 < 128, 1).otherwise(0))
         .alias("reported"),
     )
     p_rep = F.sum("reported") * 1.0 / F.count(F.lit(1))
@@ -826,7 +808,7 @@ WITH spend AS (
          sum(w) OVER () AS total_w
   FROM wt
 ), coin AS (
-  SELECT CAST(CAST('0x' || substr(md5('dpq-2026-seed'), 1, 15) AS BIGINT)
+  SELECT CAST({md5_int_sql("'dpq-2026-seed'")}
               AS HUGEINT)
          % (SELECT max(total_w) FROM pre) AS r
 ), pick AS (
@@ -986,9 +968,7 @@ def privacy_dp_quantile_expmech(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_w",
         )
     )
-    coin = F.conv(F.substring(F.md5(F.lit("dpq-2026-seed")), 1, 15), 16, 10).cast(
-        "decimal(38,0)"
-    )
+    coin = md5_int(F.lit("dpq-2026-seed")).cast("decimal(38,0)")
     pick = pre.where(
         (F.col("before_w") <= coin % F.col("total_w"))
         & (coin % F.col("total_w") < F.col("before_w") + F.col("wgt"))
@@ -1010,7 +990,7 @@ def privacy_dp_quantile_expmech(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "privacy_synthetic_marginals",
     tags=("privacy", "pipeline"),
-    oracle="""
+    oracle=f"""
 WITH orig AS (
   SELECT c_mktsegment AS seg, CAST(count(*) AS BIGINT) AS c
   FROM customer GROUP BY 1
@@ -1025,7 +1005,7 @@ WITH orig AS (
   FROM orig
 ), coins AS (
   SELECT c_custkey AS i,
-         CAST('0x' || substr(md5('syn-' || c_custkey), 1, 15) AS BIGINT)
+         {md5_int_sql("'syn-' || c_custkey")}
            % (SELECT n FROM n) AS u
   FROM customer
 ), synth AS (
@@ -1081,18 +1061,9 @@ def privacy_synthetic_marginals(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     coins = cust.crossJoin(F.broadcast(n)).select(
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("syn-"), F.col("c_custkey").cast("string"))),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % F.col("n")
-        ).alias("u")
+        (md5_int(F.concat(F.lit("syn-"), F.col("c_custkey").cast("string"))) % F.col("n")).alias(
+            "u"
+        )
     )
     synth = (
         coins.join(

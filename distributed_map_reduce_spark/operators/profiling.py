@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int, md5_int_sql
 from ..functions.measures import to_cents, to_cents_sql
 from ..registry import register
 from ..sources import load_table
@@ -697,12 +698,12 @@ def profile_join_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "profile_clock_skew_audit",
     tags=("profiling", "ops", "temporal"),
-    oracle="""
+    oracle=f"""
 WITH ingest AS (
   -- simulated arrival order: md5 jitter shifts each event a few slots
   -- (buffered producers interleave), so the audit has real inversions
   SELECT user_id, ts, event_id,
-         event_id * 8 + CAST('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 2) AS BIGINT) % 40
+         event_id * 8 + {md5_int_sql("CAST(event_id AS VARCHAR)", 2)} % 40
            AS ingest_seq
   FROM events
 ), seq AS (
@@ -738,10 +739,7 @@ def profile_clock_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     ev = load_table(spark, sf_dir, "events")
-    jitter = (
-        F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 2), 16, 10)
-        .cast("bigint") % 40
-    )
+    jitter = md5_int(F.col("event_id").cast("string"), 2) % 40
     ingest = ev.withColumn("ingest_seq", F.col("event_id") * 8 + jitter)
     w = Window.partitionBy("user_id").orderBy("ingest_seq", "event_id")
     seq = ingest.withColumn("prev_ts", F.lag("ts").over(w))

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int, md5_int_sql
 from ..functions.measures import to_cents, to_cents_sql
 from ..registry import register
 from ..sources import load_table
@@ -1109,8 +1110,7 @@ WITH rows_ AS (
   FROM orders
 ), digests AS (
   SELECT k // 1000 AS bucket,
-         CAST('0x' || substr(md5(CAST(k AS VARCHAR) || ':' || CAST(cents AS VARCHAR)), 1, 12)
-              AS BIGINT) AS digest
+         {md5_int_sql("CAST(k AS VARCHAR) || ':' || CAST(cents AS VARCHAR)", 12)} AS digest
   FROM rows_
 )
 SELECT bucket,
@@ -1141,24 +1141,10 @@ def audit_merkle_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     digests = rows_.select(
         F.expr("k div 1000").alias("bucket"),
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "",
-                        F.col("k").cast("string"),
-                        F.lit(":"),
-                        F.col("cents").cast("string"),
-                    )
-                ),
-                1,
-                12,
-            ),
-            16,
-            10,
-        )
-        .cast("bigint")
-        .alias("digest"),
+        md5_int(
+            F.concat_ws("", F.col("k").cast("string"), F.lit(":"), F.col("cents").cast("string")),
+            12,
+        ).alias("digest"),
     )
     return digests.groupBy("bucket").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),

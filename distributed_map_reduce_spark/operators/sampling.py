@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int, md5_int_sql
 from ..functions.measures import to_cents, to_cents_sql
 from ..registry import register
 from ..sources import load_table
@@ -25,10 +26,10 @@ from ..sources import load_table
 @register(
     "sample_hash_deterministic",
     tags=("sampling",),
-    oracle="""
+    oracle=f"""
 SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS total
 FROM orders
-WHERE CAST('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8) AS BIGINT) % 100 < 10
+WHERE {md5_int_sql("CAST(o_orderkey AS VARCHAR)", 8)} % 100 < 10
 """,
 )
 def sample_hash_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -36,10 +37,7 @@ def sample_hash_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines, runs, and cluster sizes — the reproducible-experiment
     sampler (same md5-prefix trick as the portable MinHash)."""
     o = load_table(spark, sf_dir, "orders")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8), 16, 10)
-        .cast("bigint") % 100
-    )
+    bucket = md5_int(F.col("o_orderkey").cast("string"), 8) % 100
     return o.filter(bucket < 10).select(
         "o_orderkey", "o_custkey", F.round("o_totalprice", 2).alias("total")
     )
@@ -48,11 +46,10 @@ def sample_hash_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sample_bernoulli",
     tags=("sampling",),
-    oracle="""
+    oracle=f"""
 SELECT o_orderkey, round(o_totalprice, 2) AS total
 FROM orders
-WHERE CAST('0x' || substr(md5('bern:' || CAST(o_orderkey AS VARCHAR)), 1, 8)
-      AS BIGINT) % 100 < 10
+WHERE {md5_int_sql("'bern:' || CAST(o_orderkey AS VARCHAR)", 8)} % 100 < 10
 """,
 )
 def sample_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -63,18 +60,7 @@ def sample_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     `no_oracle` row, VERDICT r2 item 6). A salt distinct from
     sample_hash_deterministic's keeps the two samples independent."""
     o = load_table(spark, sf_dir, "orders")
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("bern:"), F.col("o_orderkey").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-    )
+    bucket = md5_int(F.concat(F.lit("bern:"), F.col("o_orderkey").cast("string")), 8) % 100
     return o.filter(bucket < 10).select(
         "o_orderkey", F.round("o_totalprice", 2).alias("total")
     )
@@ -83,11 +69,10 @@ def sample_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sample_stratified",
     tags=("sampling",),
-    oracle="""
+    oracle=f"""
 SELECT o_orderkey, o_orderstatus
 FROM orders
-WHERE CAST('0x' || substr(md5('strat:' || CAST(o_orderkey AS VARCHAR)), 1, 8)
-      AS BIGINT) % 100
+WHERE {md5_int_sql("'strat:' || CAST(o_orderkey AS VARCHAR)", 8)} % 100
       < CASE o_orderstatus WHEN 'O' THEN 5 WHEN 'F' THEN 50 ELSE 100 END
 """,
 )
@@ -98,18 +83,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sample is reproducible and oracle-checkable. Narrow plan: scan +
     filter, no shuffle, same as sampleBy."""
     o = load_table(spark, sf_dir, "orders")
-    bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("strat:"), F.col("o_orderkey").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 100
-    )
+    bucket = md5_int(F.concat(F.lit("strat:"), F.col("o_orderkey").cast("string")), 8) % 100
     threshold = (
         F.when(F.col("o_orderstatus") == "O", 5)
         .when(F.col("o_orderstatus") == "F", 50)
@@ -242,7 +216,7 @@ SELECT rn AS pick, doc_id, n_chars
 FROM (
   SELECT doc_id, n_chars,
          row_number() OVER (
-           ORDER BY CAST('0x' || substr(md5('pri:' || CAST(doc_id AS VARCHAR)), 1, 15) AS BIGINT) * 1.0
+           ORDER BY {md5_int_sql("'pri:' || CAST(doc_id AS VARCHAR)")} * 1.0
                     / n_chars,
                     doc_id
          ) AS rn
@@ -274,13 +248,7 @@ def sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     local k best priorities; no global sort, no RNG state, and the
     sample is reproducible across reruns, engines, and cluster sizes."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    u = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("pri:"), F.col("doc_id").cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    u = md5_int(F.concat(F.lit("pri:"), F.col("doc_id").cast("string")))
     pri = u.cast("double") / F.col("n_chars")
     # bottom-k FIRST (TakeOrderedAndProject — k rows/partition forwarded),
     # then rank the k survivors; a global row_number window over the full
@@ -376,7 +344,7 @@ HOEFF_FRACS = (1, 10, 100)  # per-mille sampling rates: 0.1%, 1%, 10%
 WITH base AS (
   SELECT o_orderkey,
          {to_cents_sql("o_totalprice")} AS cents,
-         CAST('0x' || substr(md5('hc-' || o_orderkey), 1, 8) AS BIGINT) % 1000
+         {md5_int_sql("'hc-' || o_orderkey", 8)} % 1000
            AS coin
   FROM orders
 ), truth AS (
@@ -432,18 +400,9 @@ def sample_hoeffding_certificate(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         to_cents("o_totalprice").alias("cents"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("hc-"), F.col("o_orderkey").cast("string"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 1000
-        ).alias("coin"),
+        (md5_int(F.concat(F.lit("hc-"), F.col("o_orderkey").cast("string")), 8) % 1000).alias(
+            "coin"
+        ),
     )
     truth = base.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_all"),

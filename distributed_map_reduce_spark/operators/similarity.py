@@ -36,13 +36,13 @@ DuckDB oracle reproduces them exactly from the same literals.
 
 from __future__ import annotations
 
-import hashlib
 from functools import reduce
 from operator import add
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int_py
 from ..functions.normalize import SPLIT_LOWER_SQL, WORDS_SQL, words
 from ..functions.vectors import as_double, const_vector, cosine, dot, norm, sq_l2
 from ..registry import register
@@ -55,7 +55,7 @@ N_PLANES = 8
 def hyperplane(p: int, dim: int = DIM) -> list[int]:
     """Deterministic ±1 hyperplane p: component i flips on md5 parity."""
     return [
-        1 if int(hashlib.md5(f"plane-{p}-{i}".encode()).hexdigest()[0], 16) % 2 == 0 else -1
+        1 if md5_int_py(f"plane-{p}-{i}", 1) % 2 == 0 else -1
         for i in range(dim)
     ]
 
@@ -1122,7 +1122,7 @@ def _rp_plane(j: int, dim: int = DIM) -> list[int]:
     """Deterministic ±1 projection row j (salt distinct from the LSH
     hyperplanes so the two operators stay independent)."""
     return [
-        1 if int(hashlib.md5(f"rp-{j}-{i}".encode()).hexdigest()[0], 16) % 2 == 0 else -1
+        1 if md5_int_py(f"rp-{j}-{i}", 1) % 2 == 0 else -1
         for i in range(dim)
     ]
 
@@ -1698,10 +1698,7 @@ def similarity_nearest_centroid_eval(spark: SparkSession, sf_dir: str) -> DataFr
     ).agg(F.count(F.lit(1)).cast("bigint").alias("n"))
 
 
-@register(
-    "similarity_gram_matrix",
-    tags=("similarity", "stats"),
-    oracle="""
+GRAM_ORACLE = """
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
      cells AS (
        SELECT i.dim AS dim_i, j.dim AS dim_j, sum(v[i.dim] * v[j.dim]) AS g
@@ -1714,7 +1711,13 @@ WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
 SELECT CAST(dim_i AS INT) AS dim_i, CAST(dim_j AS INT) AS dim_j,
        round(g, 4) AS gram
 FROM cells
-""",
+"""
+
+
+@register(
+    "similarity_gram_matrix",
+    tags=("similarity", "stats"),
+    oracle=GRAM_ORACLE,
 )
 def similarity_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gram matrix XᵀX over the embedding corpus (upper triangle,
@@ -1779,20 +1782,7 @@ def _gram_partials(batches):
 @register(
     "similarity_gram_matrix_arrow",
     tags=("similarity", "stats", "udf"),
-    oracle="""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-     cells AS (
-       SELECT i.dim AS dim_i, j.dim AS dim_j, sum(v[i.dim] * v[j.dim]) AS g
-       FROM e,
-            unnest(range(1, len(v) + 1)) AS i(dim),
-            unnest(range(1, len(v) + 1)) AS j(dim)
-       WHERE i.dim <= j.dim
-       GROUP BY i.dim, j.dim
-)
-SELECT CAST(dim_i AS INT) AS dim_i, CAST(dim_j AS INT) AS dim_j,
-       round(g, 4) AS gram
-FROM cells
-""",
+    oracle=GRAM_ORACLE,
 )
 def similarity_gram_matrix_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Arrow/numpy twin of `similarity_gram_matrix`: each executor

@@ -31,27 +31,16 @@ pins the error envelope (CMS estimate >= true count, always).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int, md5_int_sql
 from ..functions.normalize import WORDS_SQL, words
 from ..registry import register
 from ..sources import load_table
 
-# 60-bit integer from the first 15 hex chars of md5 — same reduction the
-# MinHash family uses (dedup.py); DuckDB twin: CAST('0x'||substr(md5(x),1,15) AS BIGINT)
-HASH_BITS = 60
+HASH_BITS = 60  # functions.hashing.md5_int's default 15 hex digits
 HASH_SPACE = float(1 << HASH_BITS)
-
-
-def md5_int60(col: Column) -> Column:
-    """Portable 60-bit hash of a string column (Spark side)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-
-
-def _md5_int60_sql(expr: str) -> str:
-    """DuckDB twin of :func:`md5_int60`."""
-    return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
 
 
 def _tokens(docs: DataFrame) -> DataFrame:
@@ -73,7 +62,7 @@ KMV_K = 256
     tags=("sketch", "agg"),
     oracle=f"""
 WITH hashes AS (
-  SELECT DISTINCT {_md5_int60_sql('w')} AS h
+  SELECT DISTINCT {md5_int_sql('w')} AS h
   FROM ({_TOKENS_SQL})
 ), bottomk AS (
   SELECT h FROM hashes ORDER BY h LIMIT {KMV_K}
@@ -110,7 +99,7 @@ def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sketch holds ALL of them, so the estimate is the exact seen
     count, not the order-statistic formula (which is undefined there)."""
     docs = load_table(spark, sf_dir, "documents")
-    hashes = _tokens(docs).select(md5_int60(F.col("w")).alias("h")).distinct()
+    hashes = _tokens(docs).select(md5_int(F.col("w")).alias("h")).distinct()
     bottomk = hashes.orderBy("h").limit(KMV_K)
     kth = bottomk.agg(
         F.max("h").alias("hk"), F.count("*").cast("bigint").alias("k_seen")
@@ -141,7 +130,7 @@ CMS_TOPN = 20  # report the true top-N tokens with their CMS estimates
 WITH toks AS ({_TOKENS_SQL}),
 rows_ AS (SELECT unnest(range({CMS_D})) AS j),
 cells AS (
-  SELECT j, {_md5_int60_sql("j || ':' || w")} % {CMS_W} AS bucket,
+  SELECT j, {md5_int_sql("j || ':' || w")} % {CMS_W} AS bucket,
          CAST(count(*) AS BIGINT) AS c
   FROM toks, rows_
   GROUP BY j, bucket
@@ -156,7 +145,7 @@ est AS (
   FROM truth t
   JOIN rows_ r ON TRUE
   JOIN cells c
-    ON c.j = r.j AND c.bucket = {_md5_int60_sql("r.j || ':' || t.w")} % {CMS_W}
+    ON c.j = r.j AND c.bucket = {md5_int_sql("r.j || ':' || t.w")} % {CMS_W}
   GROUP BY t.w, t.true_count
 )
 SELECT w AS token, true_count, cms_estimate,
@@ -195,7 +184,7 @@ def sketch_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame
     keyed = wc.select("w", "true_count", j).select(
         "j",
         (
-            md5_int60(F.concat(F.col("j").cast("string"), F.lit(":"), F.col("w")))
+            md5_int(F.concat(F.col("j").cast("string"), F.lit(":"), F.col("w")))
             % CMS_W
         ).alias("bucket"),
         "true_count",
@@ -214,7 +203,7 @@ def sketch_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame
         "true_count",
         "j",
         (
-            md5_int60(F.concat(F.col("j").cast("string"), F.lit(":"), F.col("w")))
+            md5_int(F.concat(F.col("j").cast("string"), F.lit(":"), F.col("w")))
             % CMS_W
         ).alias("bucket"),
     )
@@ -241,7 +230,7 @@ LC_M = 4096  # linear-counting bitmap width
     oracle=f"""
 WITH toks AS ({_TOKENS_SQL}),
 occupied AS (
-  SELECT CAST(count(DISTINCT {_md5_int60_sql('w')} % {LC_M}) AS BIGINT) AS filled
+  SELECT CAST(count(DISTINCT {md5_int_sql('w')} % {LC_M}) AS BIGINT) AS filled
   FROM toks
 ),
 truth AS (
@@ -271,7 +260,7 @@ def sketch_linear_counting(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     toks = _tokens(docs)
     occupied = toks.agg(
-        F.countDistinct(md5_int60(F.col("w")) % LC_M).cast("bigint").alias("filled")
+        F.countDistinct(md5_int(F.col("w")) % LC_M).cast("bigint").alias("filled")
     )
     truth = toks.agg(
         F.countDistinct("w").cast("bigint").alias("true_distinct")
@@ -289,7 +278,7 @@ def sketch_linear_counting(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lang_hashes_sql(lang: str) -> str:
     return f"""
-  SELECT DISTINCT {_md5_int60_sql('w')} AS h
+  SELECT DISTINCT {md5_int_sql('w')} AS h
   FROM (SELECT unnest({WORDS_SQL}) AS w
         FROM documents WHERE lang = '{lang}')
 """
@@ -351,7 +340,7 @@ def sketch_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             docs.filter(F.col("lang") == lang)
             .select(F.explode(t).alias("w"))
-            .select(md5_int60(F.col("w")).alias("h"))
+            .select(md5_int(F.col("w")).alias("h"))
             .distinct()
         )
 
@@ -397,7 +386,7 @@ def sketch_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "sketch_ams_f2",
     tags=("sketch", "events"),
-    oracle="""
+    oracle=f"""
 WITH freq AS (
   SELECT user_id, CAST(count(*) AS BIGINT) AS f
   FROM events GROUP BY user_id
@@ -408,8 +397,8 @@ WITH freq AS (
   FROM freq
 ), signs AS (
   SELECT freq.user_id, freq.f, j.j,
-         CAST((CAST('0x' || substr(md5('ams' || j.j || '-' || freq.user_id), 1, 1)
-                 AS BIGINT) % 2) * 2 - 1 AS BIGINT) AS sgn
+         CAST(({md5_int_sql("'ams' || j.j || '-' || freq.user_id", 1)} % 2) * 2 - 1
+              AS BIGINT) AS sgn
   FROM freq CROSS JOIN (SELECT unnest(generate_series(0, 31)) AS j) j
 ), est AS (
   SELECT j, CAST(sum(sgn * f) AS BIGINT) AS x
@@ -457,25 +446,13 @@ def sketch_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "f",
         "j",
         (
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat(
-                                F.lit("ams"),
-                                F.col("j").cast("string"),
-                                F.lit("-"),
-                                F.col("user_id").cast("string"),
-                            )
-                        ),
-                        1,
-                        1,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint")
-                % 2
+            md5_int(
+                F.concat(
+                    F.lit("ams"), F.col("j").cast("string"), F.lit("-"), F.col("user_id").cast("string")
+                ),
+                1,
             )
+            % 2
             * 2
             - 1
         )
@@ -514,7 +491,7 @@ WITH tok AS (
 ), b AS (
   SELECT DISTINCT w FROM tok WHERE source = 'src1'
 ), bits AS (
-  SELECT DISTINCT {_md5_int60_sql("'bf' || h || '-' || w")} % {BF_M} AS bit
+  SELECT DISTINCT {md5_int_sql("'bf' || h || '-' || w")} % {BF_M} AS bit
   FROM a, (SELECT unnest(range({BF_K})) AS h)
 ), probe AS (
   SELECT b.w,
@@ -523,7 +500,7 @@ WITH tok AS (
   FROM b
   CROSS JOIN (SELECT unnest(range({BF_K})) AS h) hs
   LEFT JOIN bits
-    ON bits.bit = {_md5_int60_sql("'bf' || hs.h || '-' || b.w")} % {BF_M}
+    ON bits.bit = {md5_int_sql("'bf' || hs.h || '-' || b.w")} % {BF_M}
   LEFT JOIN a ON a.w = b.w
   GROUP BY b.w
 ), card AS (
@@ -574,11 +551,11 @@ def sketch_bloom_filter_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     salted = F.concat(F.lit("bf"), F.col("h").cast("string"), F.lit("-"), F.col("w"))
     bits = (
         a.crossJoin(F.broadcast(hs))
-        .select((md5_int60(salted) % BF_M).alias("bit"))
+        .select((md5_int(salted) % BF_M).alias("bit"))
         .distinct()
     )
     probes = b.crossJoin(F.broadcast(hs)).select(
-        "w", (md5_int60(salted) % BF_M).alias("bit")
+        "w", (md5_int(salted) % BF_M).alias("bit")
     )
     probe = (
         probes.join(F.broadcast(bits.withColumn("present", F.lit(1))), "bit", "left")
@@ -627,7 +604,7 @@ HLL_W = 54  # hash bits left after the register index
     oracle=f"""
 WITH toks AS ({_TOKENS_SQL}),
 h AS (
-  SELECT DISTINCT w, {_md5_int60_sql('w')} AS hv FROM toks
+  SELECT DISTINCT w, {md5_int_sql('w')} AS hv FROM toks
 ), reg AS (
   SELECT hv % {HLL_M} AS j,
          CAST(hv // {HLL_M} AS BIGINT) AS wbits
@@ -692,7 +669,7 @@ def sketch_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     does set algebra the same way). One distinct-token exchange
     (map-side combined) then a 64-group agg."""
     docs = load_table(spark, sf_dir, "documents")
-    h = _tokens(docs).distinct().select(md5_int60(F.col("w")).alias("hv"))
+    h = _tokens(docs).distinct().select(md5_int(F.col("w")).alias("hv"))
     reg = h.select(
         (F.col("hv") % HLL_M).alias("j"),
         F.floor(F.col("hv") / HLL_M).cast("bigint").alias("wbits"),

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import hex_int, md5_int, md5_int_sql
 from ..functions.normalize import SPLIT_LOWER_SQL, WORDS_SQL, split_lower, words
 from ..functions.measures import (
     ARM_SQL,
@@ -42,6 +43,7 @@ from ..functions.measures import (
 )
 from ..registry import register
 from ..sources import load_table
+from .temporal import orders_1996_by_day, orders_1996_by_day_sql
 
 
 @register(
@@ -1493,9 +1495,7 @@ def stats_bootstrap_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cents",
         *[
             _poisson_weight_col(
-                F.conv(
-                    F.substring(F.col(f"hex_{rep // 4}"), 1 + 8 * (rep % 4), 8), 16, 10
-                ).cast("bigint")
+                hex_int(F.col(f"hex_{rep // 4}"), 8, start=1 + 8 * (rep % 4))
                 % 1000000
             ).alias(f"wt_{rep}")
             for rep in range(100)
@@ -3940,18 +3940,15 @@ def stats_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_krippendorff_alpha",
     tags=("stats", "pipeline", "eval"),
-    oracle="""
+    oracle=f"""
 WITH ratings AS (
   SELECT d.doc_id, a.j,
-         CASE WHEN CAST('0x' || substr(md5('lbl-' || d.doc_id || '-' || a.j), 1, 2)
-                   AS BIGINT) % 10 < 7
+         CASE WHEN {md5_int_sql("'lbl-' || d.doc_id || '-' || a.j", 2)} % 10 < 7
               THEN CAST(d.doc_id % 3 AS BIGINT)
-              ELSE CAST('0x' || substr(md5('alt-' || d.doc_id || '-' || a.j), 1, 2)
-                   AS BIGINT) % 3 END AS cat
+              ELSE {md5_int_sql("'alt-' || d.doc_id || '-' || a.j", 2)} % 3 END AS cat
   FROM documents d
   CROSS JOIN (SELECT unnest(generate_series(1, 3)) AS j) a
-  WHERE CAST('0x' || substr(md5('skip-' || d.doc_id || '-' || a.j), 1, 2)
-             AS BIGINT) % 5 <> 0
+  WHERE {md5_int_sql("'skip-' || d.doc_id || '-' || a.j", 2)} % 5 <> 0
 ), unit_cat AS (
   SELECT doc_id, cat, CAST(count(*) AS BIGINT) AS n_uc
   FROM ratings GROUP BY 1, 2
@@ -3996,22 +3993,17 @@ def stats_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann = docs.select(
         "doc_id", F.explode(F.sequence(F.lit(1), F.lit(3))).alias("j")
     )
-    coin = lambda tag: F.conv(
-        F.substring(
-            F.md5(
-                F.concat(F.lit(tag + "-"), F.col("doc_id").cast("string"),
-                         F.lit("-"), F.col("j").cast("string"))
-            ),
-            1, 2,
-        ), 16, 10,
-    ).cast("bigint")
+    doc, j = F.col("doc_id").cast("string"), F.col("j").cast("string")
+    skip = md5_int(F.concat(F.lit("skip-"), doc, F.lit("-"), j), 2)
+    lbl = md5_int(F.concat(F.lit("lbl-"), doc, F.lit("-"), j), 2)
+    alt = md5_int(F.concat(F.lit("alt-"), doc, F.lit("-"), j), 2)
     ratings = (
-        ann.filter(coin("skip") % 5 != 0)
+        ann.filter(skip % 5 != 0)
         .select(
             "doc_id",
             "j",
-            F.when(coin("lbl") % 10 < 7, (F.col("doc_id") % 3).cast("bigint"))
-            .otherwise(coin("alt") % 3)
+            F.when(lbl % 10 < 7, (F.col("doc_id") % 3).cast("bigint"))
+            .otherwise(alt % 3)
             .alias("cat"),
         )
     )
@@ -4178,8 +4170,7 @@ WITH u AS (
   SELECT user_id, y,
          least(9.5e-1, greatest(5e-2,
            1.5e-1 + 5.5e-1 * y
-                + 2.5e-1 * (CAST('0x' || substr(md5('cal-' || user_id), 1, 2)
-                               AS BIGINT) % 256) / 255e0)) AS p_hat
+                + 2.5e-1 * ({md5_int_sql("'cal-' || user_id", 2)} % 256) / 255e0)) AS p_hat
   FROM u
 ), binned AS (
   SELECT CAST(least(floor(p_hat * 1e1), 9) AS BIGINT) AS bin, y, p_hat
@@ -4216,12 +4207,7 @@ def eval_calibration_brier(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the floor."""
     ev = load_table(spark, sf_dir, "events")
     u = ev.groupBy("user_id").agg(converted().alias("y"))
-    coin = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("cal-"), F.col("user_id").cast("string"))), 1, 2),
-            16, 10,
-        ).cast("bigint") % 256
-    )
+    coin = md5_int(F.concat(F.lit("cal-"), F.col("user_id").cast("string")), 2) % 256
     p_hat = F.least(
         F.lit(0.95),
         F.greatest(F.lit(0.05), 0.15 + 0.55 * F.col("y") + 0.25 * coin / 255.0),
@@ -4534,7 +4520,7 @@ def stats_ratio_delta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH u AS (
   SELECT user_id, {ARM_SQL} AS treated,
          {CONVERTED_SQL} AS conv,
-         CAST('0x' || substr(md5('uplift-' || user_id), 1, 4) AS BIGINT) % 10000 AS score
+         {md5_int_sql("'uplift-' || user_id", 4)} % 10000 AS score
   FROM events GROUP BY user_id
 ), decile AS (
   SELECT treated, conv,
@@ -4575,12 +4561,7 @@ def stats_qini_uplift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg, one decile window, 10-row output; e-notation literals, the
     missing-cell guard emits the defined degenerate."""
     ev = load_table(spark, sf_dir, "events")
-    score = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("uplift-"), F.col("user_id").cast("string"))), 1, 4),
-            16, 10,
-        ).cast("bigint") % 10000
-    )
+    score = md5_int(F.concat(F.lit("uplift-"), F.col("user_id").cast("string")), 4) % 10000
     u = ev.groupBy("user_id").agg(converted().alias("conv")).select(
         "user_id",
         arm().alias("treated"),
@@ -4658,7 +4639,7 @@ def _em_oracle(k_steps: int = 6) -> str:
         prev = f"p{k}"
     return f"""
 WITH daily AS MATERIALIZED (
-  SELECT CAST(CAST(round(sum(value * 1e2)) AS BIGINT) AS DOUBLE) AS x
+  SELECT CAST(sum({to_cents_sql("value")}) AS DOUBLE) AS x
   FROM events GROUP BY CAST(ts AS DATE)
 ), init AS MATERIALIZED (
   SELECT min(x) AS lo, max(x) AS hi,
@@ -4705,7 +4686,7 @@ def stats_mixture_em_gaussian(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.groupBy(F.col("ts").cast("date").alias("day"))
-        .agg(F.round(F.sum(F.col("value") * 100.0)).cast("bigint").alias("xi"))
+        .agg(F.sum(to_cents("value")).alias("xi"))
         .select(F.col("xi").cast("double").alias("x"))
         .localCheckpoint(eager=True)
     )
@@ -4822,10 +4803,10 @@ def stats_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_hurst_rs",
     tags=("stats", "temporal"),
-    oracle="""
+    oracle=f"""
 WITH daily AS (
   SELECT CAST(ts AS DATE) AS day,
-         CAST(CAST(round(sum(value * 1e2)) AS BIGINT) AS DOUBLE) AS x
+         CAST(sum({to_cents_sql("value")}) AS DOUBLE) AS x
   FROM events GROUP BY 1
 ), idx AS (
   SELECT day, x, row_number() OVER (ORDER BY day) - 1 AS rn,
@@ -4880,7 +4861,7 @@ def stats_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.round(F.sum(F.col("value") * 100.0)).cast("bigint").cast("double").alias("x")
+        F.sum(to_cents("value")).cast("double").alias("x")
     )
     idx = daily.select(
         "day",
@@ -7345,13 +7326,9 @@ def stats_simpsons_reversal(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH daily AS (
   -- exact cents + integer half-up to dollars (sf1-gate fix class, see
   -- temporal_holt_smoothing): round(sum(double)) ties on .5 midpoints
-  SELECT CAST(o_orderdate AS DATE) AS d,
-         CAST(count(*) AS BIGINT) AS x,
-         {sum_dollars_half_up_sql("o_totalprice")} AS y
-  FROM orders
-  WHERE CAST(o_orderdate AS DATE) >= DATE '1996-01-01'
-    AND CAST(o_orderdate AS DATE) < DATE '1997-01-01'
-  GROUP BY 1
+  {orders_1996_by_day_sql(
+      "CAST(count(*) AS BIGINT) AS x", f'{sum_dollars_half_up_sql("o_totalprice")} AS y'
+  )}
 ), pairs AS (
   SELECT CAST(count(*) AS BIGINT) AS n_pairs,
          CAST(sum(CASE WHEN (a.x - b.x) * (a.y - b.y) > 0 THEN 1 ELSE 0 END) AS BIGINT) AS concordant,
@@ -7388,11 +7365,9 @@ def stats_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is one map-side stage and the tally is one 5-counter reduce.
     At any SF the day grain is capped, so the pair cost never grows
     with raw rows."""
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate").cast("date") >= F.lit("1996-01-01").cast("date"))
-        & (F.col("o_orderdate").cast("date") < F.lit("1997-01-01").cast("date"))
-    )
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
+    daily = orders_1996_by_day(
+        spark,
+        sf_dir,
         F.count(F.lit(1)).cast("bigint").alias("x"),
         sum_dollars_half_up("o_totalprice").cast("bigint").alias("y"),
     )
@@ -7670,12 +7645,11 @@ WITH u AS (
   SELECT 'informed' AS model, y,
          least(9.5e-1, greatest(5e-2,
            1.5e-1 + 5.5e-1 * y
-                + 2.5e-1 * (CAST('0x' || substr(md5('auc-' || user_id), 1, 2)
-                               AS BIGINT) % 256) / 255e0)) AS p_hat
+                + 2.5e-1 * ({md5_int_sql("'auc-' || user_id", 2)} % 256) / 255e0)) AS p_hat
   FROM u
   UNION ALL
   SELECT 'random' AS model, y,
-         (CAST('0x' || substr(md5('rnd-' || user_id), 1, 2) AS BIGINT) % 256)
+         ({md5_int_sql("'rnd-' || user_id", 2)} % 256)
            / 255e0 AS p_hat
   FROM u
 ), ranked AS (
@@ -7721,32 +7695,18 @@ def eval_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle per /root/reference/test/mr.test.js:78-96."""
     ev = load_table(spark, sf_dir, "events")
     u = ev.groupBy("user_id").agg(converted().alias("y"))
-
-    def coin(prefix: str):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(prefix), F.col("user_id").cast("string"))),
-                    1,
-                    2,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 256
-        )
-
+    uid = F.col("user_id").cast("string")
+    auc = md5_int(F.concat(F.lit("auc-"), uid), 2) % 256
+    rnd = md5_int(F.concat(F.lit("rnd-"), uid), 2) % 256
     informed = u.select(
         F.lit("informed").alias("model"),
         "y",
         F.least(
             F.lit(0.95),
-            F.greatest(F.lit(0.05), 0.15 + 0.55 * F.col("y") + 0.25 * coin("auc-") / 255.0),
+            F.greatest(F.lit(0.05), 0.15 + 0.55 * F.col("y") + 0.25 * auc / 255.0),
         ).alias("p_hat"),
     )
-    random_ = u.select(
-        F.lit("random").alias("model"), "y", (coin("rnd-") / 255.0).alias("p_hat")
-    )
+    random_ = u.select(F.lit("random").alias("model"), "y", (rnd / 255.0).alias("p_hat"))
     from pyspark.sql import Window
 
     scored = informed.unionByName(random_)
@@ -7782,11 +7742,10 @@ def eval_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "eval_pass_at_k",
     tags=("stats", "eval", "ml"),
-    oracle="""
+    oracle=f"""
 WITH samples AS (
   SELECT doc_id % 25 AS problem_id,
-         CASE WHEN (CAST('0x' || substr(md5('pass-' || doc_id), 1, 2)
-                      AS BIGINT) % 256)
+         CASE WHEN ({md5_int_sql("'pass-' || doc_id", 2)} % 256)
               < 30 + 40 * (doc_id % 25 % 5) THEN 1 ELSE 0 END AS correct
   FROM documents
 ), per_problem AS (
@@ -7833,18 +7792,7 @@ def eval_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     samples = docs.select(
         (F.col("doc_id") % 25).alias("problem_id"),
         F.when(
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit("pass-"), F.col("doc_id").cast("string"))),
-                        1,
-                        2,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint")
-                % 256
-            )
+            md5_int(F.concat(F.lit("pass-"), F.col("doc_id").cast("string")), 2) % 256
             < 30 + 40 * (F.col("doc_id") % 25 % 5),
             1,
         )
@@ -7887,11 +7835,10 @@ def _bt_oracle() -> str:
     """Build the unrolled 8-iteration MM oracle (AS MATERIALIZED per the
     iterative-CTE discipline — DuckDB inlines plain CTEs and the chain
     would blow up 2^k)."""
-    head = """
+    head = f"""
 WITH matches AS MATERIALIZED (
   SELECT doc_id % 8 AS a, (doc_id // 8) % 8 AS b,
-         CASE WHEN (CAST('0x' || substr(md5('bt-' || doc_id), 1, 3)
-                      AS BIGINT) % 1000)
+         CASE WHEN ({md5_int_sql("'bt-' || doc_id", 3)} % 1000)
                    * ((doc_id % 8) + ((doc_id // 8) % 8) + 2)
               < 1000 * ((doc_id % 8) + 1) THEN 1 ELSE 0 END AS a_wins
   FROM documents WHERE doc_id % 8 <> (doc_id // 8) % 8
@@ -7955,14 +7902,7 @@ def eval_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     a = (F.col("doc_id") % 8).alias("a")
     b = F.expr("(doc_id DIV 8) % 8").alias("b")
-    coin = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("bt-"), F.col("doc_id").cast("string"))), 1, 3),
-            16,
-            10,
-        ).cast("bigint")
-        % 1000
-    )
+    coin = md5_int(F.concat(F.lit("bt-"), F.col("doc_id").cast("string")), 3) % 1000
     matches = (
         docs.select(
             a,
@@ -8036,13 +7976,9 @@ WITH daily AS (
   -- exact cents + integer half-up to dollars (sf1-gate fix class, see
   -- temporal_holt_smoothing): round(sum(double)) ties on .5 midpoints
   -- where the engines' accumulation orders drift
-  SELECT CAST(o_orderdate AS DATE) AS d,
-         CAST(count(*) AS BIGINT) AS x,
-         {sum_dollars_half_up_sql("o_totalprice")} AS y
-  FROM orders
-  WHERE CAST(o_orderdate AS DATE) >= DATE '1996-01-01'
-    AND CAST(o_orderdate AS DATE) < DATE '1997-01-01'
-  GROUP BY 1
+  {orders_1996_by_day_sql(
+      "CAST(count(*) AS BIGINT) AS x", f'{sum_dollars_half_up_sql("o_totalprice")} AS y'
+  )}
 ), fit AS (
   SELECT CAST(count(*) AS BIGINT) AS n,
          CAST(sum(CAST(x AS HUGEINT)) AS DOUBLE) AS sx,
@@ -8104,11 +8040,9 @@ def stats_ols_residual_diagnostics(spark: SparkSession, sf_dir: str) -> DataFram
     Scale: one day-grain hash agg is the only data-scale work; the fit
     broadcasts (one row), residuals stay on the bounded day frame, the
     lag window sorts <=366 rows."""
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate").cast("date") >= F.lit("1996-01-01").cast("date"))
-        & (F.col("o_orderdate").cast("date") < F.lit("1997-01-01").cast("date"))
-    )
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
+    daily = orders_1996_by_day(
+        spark,
+        sf_dir,
         F.count(F.lit(1)).cast("bigint").alias("x"),
         sum_dollars_half_up("o_totalprice").cast("bigint").alias("y"),
     )
@@ -8290,10 +8224,10 @@ def stats_engle_granger_coint(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "eval_best_of_n_scaling",
     tags=("stats", "eval", "ml"),
-    oracle="""
+    oracle=f"""
 WITH s AS (
   SELECT doc_id % 40 AS prompt_id, doc_id,
-         (CAST('0x' || substr(md5('bon-' || doc_id), 1, 3) AS BIGINT) % 1000)
+         ({md5_int_sql("'bon-' || doc_id", 3)} % 1000)
            / 999e0 AS r
   FROM documents
 ), ranked AS (
@@ -8340,21 +8274,9 @@ def eval_best_of_n_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = docs.select(
         (F.col("doc_id") % 40).alias("prompt_id"),
         "doc_id",
-        (
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(F.concat(F.lit("bon-"), F.col("doc_id").cast("string"))),
-                        1,
-                        3,
-                    ),
-                    16,
-                    10,
-                ).cast("bigint")
-                % 1000
-            )
-            / 999.0
-        ).alias("r"),
+        (md5_int(F.concat(F.lit("bon-"), F.col("doc_id").cast("string")), 3) % 1000 / 999.0).alias(
+            "r"
+        ),
     )
     from pyspark.sql import Window
 
@@ -8404,13 +8326,9 @@ def eval_best_of_n_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_hodges_lehmann",
     tags=("stats", "temporal"),
-    oracle="""
+    oracle=f"""
 WITH daily AS (
-  SELECT CAST(o_orderdate AS DATE) AS d, CAST(count(*) AS BIGINT) AS x
-  FROM orders
-  WHERE CAST(o_orderdate AS DATE) >= DATE '1996-01-01'
-    AND CAST(o_orderdate AS DATE) < DATE '1997-01-01'
-  GROUP BY 1
+  {orders_1996_by_day_sql("CAST(count(*) AS BIGINT) AS x")}
 ), walsh AS (
   SELECT a.x + b.x AS s
   FROM daily a JOIN daily b ON a.d <= b.d
@@ -8445,13 +8363,7 @@ def stats_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     year's day grain (<=366 rows, <=67k pairs, broadcast join); the
     median runs on one small sorted frame. Day-grain agg is the only
     data-scale work."""
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate").cast("date") >= F.lit("1996-01-01").cast("date"))
-        & (F.col("o_orderdate").cast("date") < F.lit("1997-01-01").cast("date"))
-    )
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("x")
-    )
+    daily = orders_1996_by_day(spark, sf_dir, F.count(F.lit(1)).cast("bigint").alias("x"))
     a, b = daily.alias("a"), daily.alias("b")
     walsh = a.join(F.broadcast(b), F.col("a.d") <= F.col("b.d")).select(
         (F.col("a.x") + F.col("b.x")).alias("s")
@@ -8486,7 +8398,7 @@ WITH u AS (
   FROM events GROUP BY user_id
 ), scored AS (
   SELECT y,
-         CAST('0x' || substr(md5('auc-' || user_id), 1, 2) AS BIGINT) % 256
+         {md5_int_sql("'auc-' || user_id", 2)} % 256
            AS score
   FROM u
 ), totals AS (
@@ -8535,16 +8447,7 @@ def eval_youden_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     u = ev.groupBy("user_id").agg(converted().alias("y"))
     scored = u.select(
         "y",
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("auc-"), F.col("user_id").cast("string"))), 1, 2
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 256
-        ).alias("score"),
+        (md5_int(F.concat(F.lit("auc-"), F.col("user_id").cast("string")), 2) % 256).alias("score"),
     )
     totals = scored.agg(
         F.sum("y").cast("bigint").alias("pos"),
@@ -8596,15 +8499,13 @@ def eval_youden_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_bland_altman",
     tags=("stats", "quality"),
-    oracle="""
+    oracle=f"""
 WITH inst AS (
   SELECT o_orderkey,
          CAST(round(o_totalprice * 1e2) AS BIGINT)
-           + (CAST('0x' || substr(md5('ba-a-' || o_orderkey), 1, 4)
-                AS BIGINT) % 2001 - 1000) * 12000 AS x,
+           + ({md5_int_sql("'ba-a-' || o_orderkey", 4)} % 2001 - 1000) * 12000 AS x,
          CAST(round(o_totalprice * 1e2) AS BIGINT) + 5000000
-           + (CAST('0x' || substr(md5('ba-b-' || o_orderkey), 1, 4)
-                AS BIGINT) % 2001 - 1000) * 12000 AS y
+           + ({md5_int_sql("'ba-b-' || o_orderkey", 4)} % 2001 - 1000) * 12000 AS y
   FROM orders
 ), paired AS (
   SELECT x, y, y - x AS d FROM inst
@@ -8648,27 +8549,13 @@ def stats_bland_altman(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row broadcast of the limits back over the pair frame — two
     passes, no join, no sort."""
     o = load_table(spark, sf_dir, "orders")
-
-    def coin(prefix: str):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(prefix), F.col("o_orderkey").cast("string"))),
-                    1,
-                    4,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 2001
-            - 1000
-        )
-
+    key = F.col("o_orderkey").cast("string")
+    ja = md5_int(F.concat(F.lit("ba-a-"), key), 4) % 2001 - 1000
+    jb = md5_int(F.concat(F.lit("ba-b-"), key), 4) % 2001 - 1000
     t = to_cents("o_totalprice")
-    paired = o.select(
-        (t + coin("ba-a-") * 12000).alias("x"),
-        (t + 5000000 + coin("ba-b-") * 12000).alias("y"),
-    ).select("x", "y", (F.col("y") - F.col("x")).alias("d"))
+    paired = o.select((t + ja * 12000).alias("x"), (t + 5000000 + jb * 12000).alias("y")).select(
+        "x", "y", (F.col("y") - F.col("x")).alias("d")
+    )
     m = paired.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.col("d").cast("decimal(38,0)")).cast("double").alias("sd1"),
@@ -8707,14 +8594,12 @@ def stats_bland_altman(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_deming_regression",
     tags=("stats", "quality"),
-    oracle="""
+    oracle=f"""
 WITH inst AS (
   SELECT CAST(round(o_totalprice * 1e2) AS BIGINT)
-           + (CAST('0x' || substr(md5('ba-a-' || o_orderkey), 1, 4)
-                AS BIGINT) % 2001 - 1000) * 12000 AS x,
+           + ({md5_int_sql("'ba-a-' || o_orderkey", 4)} % 2001 - 1000) * 12000 AS x,
          CAST(round(o_totalprice * 1e2) AS BIGINT) + 5000000
-           + (CAST('0x' || substr(md5('ba-b-' || o_orderkey), 1, 4)
-                AS BIGINT) % 2001 - 1000) * 12000 AS y
+           + ({md5_int_sql("'ba-b-' || o_orderkey", 4)} % 2001 - 1000) * 12000 AS y
   FROM orders
 ), m AS (
   SELECT CAST(count(*) AS BIGINT) AS n,
@@ -8760,27 +8645,11 @@ def stats_deming_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan + one 5-sum moment reduce — the cheapest possible
     shape; only co-moments leave the executors."""
     o = load_table(spark, sf_dir, "orders")
-
-    def coin(prefix: str):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(prefix), F.col("o_orderkey").cast("string"))),
-                    1,
-                    4,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 2001
-            - 1000
-        )
-
+    key = F.col("o_orderkey").cast("string")
+    ja = md5_int(F.concat(F.lit("ba-a-"), key), 4) % 2001 - 1000
+    jb = md5_int(F.concat(F.lit("ba-b-"), key), 4) % 2001 - 1000
     t = to_cents("o_totalprice")
-    paired = o.select(
-        (t + coin("ba-a-") * 12000).alias("x"),
-        (t + 5000000 + coin("ba-b-") * 12000).alias("y"),
-    )
+    paired = o.select((t + ja * 12000).alias("x"), (t + 5000000 + jb * 12000).alias("y"))
     dec = lambda c: F.col(c).cast("decimal(38,0)")
     m = paired.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -8832,8 +8701,7 @@ WITH u AS (
   SELECT user_id, y,
          least(9.5e-1, greatest(5e-2,
            1.5e-1 + 5.5e-1 * y
-                + 2.5e-1 * (CAST('0x' || substr(md5('cal-' || user_id), 1, 2)
-                               AS BIGINT) % 256) / 255e0)) AS p_hat
+                + 2.5e-1 * ({md5_int_sql("'cal-' || user_id", 2)} % 256) / 255e0)) AS p_hat
   FROM u
 ), bins AS (
   SELECT CAST(least(floor(p_hat * 1e1), 9) AS BIGINT) AS bin,
@@ -8883,14 +8751,7 @@ def stats_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     with data — it never does."""
     ev = load_table(spark, sf_dir, "events")
     u = ev.groupBy("user_id").agg(converted().alias("y"))
-    coin = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("cal-"), F.col("user_id").cast("string"))), 1, 2),
-            16,
-            10,
-        ).cast("bigint")
-        % 256
-    )
+    coin = md5_int(F.concat(F.lit("cal-"), F.col("user_id").cast("string")), 2) % 256
     p_hat = F.least(
         F.lit(0.95),
         F.greatest(F.lit(0.05), 0.15 + 0.55 * F.col("y") + 0.25 * coin / 255.0),
@@ -9533,16 +9394,16 @@ def stats_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH items AS (
   SELECT c_custkey,
          {to_cents_sql("c_acctbal")}
-           + (CAST('0x' || substr(md5('cb1-' || c_custkey), 1, 8) AS BIGINT)
+           + ({md5_int_sql("'cb1-' || c_custkey", 8)}
               % 20001) - 10000 AS i1,
          {to_cents_sql("c_acctbal")}
-           + (CAST('0x' || substr(md5('cb2-' || c_custkey), 1, 8) AS BIGINT)
+           + ({md5_int_sql("'cb2-' || c_custkey", 8)}
               % 20001) - 10000 AS i2,
          {to_cents_sql("c_acctbal")}
-           + (CAST('0x' || substr(md5('cb3-' || c_custkey), 1, 8) AS BIGINT)
+           + ({md5_int_sql("'cb3-' || c_custkey", 8)}
               % 20001) - 10000 AS i3,
          {to_cents_sql("c_acctbal")}
-           + (CAST('0x' || substr(md5('cb4-' || c_custkey), 1, 8) AS BIGINT)
+           + ({md5_int_sql("'cb4-' || c_custkey", 8)}
               % 20001) - 10000 AS i4
   FROM customer
 ), m AS (
@@ -9595,18 +9456,8 @@ def stats_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = to_cents("c_acctbal")
 
     def item(j: int):
-        coin = (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(f"cb{j}-"), F.col("c_custkey").cast("string"))),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 20001
-        ) - 10000
+        key = F.concat(F.lit(f"cb{j}-"), F.col("c_custkey").cast("string"))
+        coin = md5_int(key, 8) % 20001 - 10000
         return (truth + coin).alias(f"i{j}")
 
     items = load_table(spark, sf_dir, "customer").select(
@@ -9746,14 +9597,14 @@ def stats_erlang_c_staffing(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "stats_fleiss_kappa",
     tags=("stats", "measurement"),
-    oracle="""
+    oracle=f"""
 WITH ratings AS (
   SELECT d.doc_id, r.rater,
-         CASE WHEN (CAST('0x' || substr(md5('fk' || r.rater || '-' || d.doc_id),
-                                        1, 8) AS BIGINT) % 10) < 7
+         CASE WHEN ({md5_int_sql("'fk' || r.rater || '-' || d.doc_id", 8)} % 10) < 7
               THEN d.source
-              ELSE 'src' || CAST(CAST('0x' || substr(md5('fk' || r.rater || '-'
-                                   || d.doc_id), 9, 8) AS BIGINT) % 4 AS VARCHAR)
+              ELSE 'src'
+                   || CAST({md5_int_sql("'fk' || r.rater || '-' || d.doc_id", 8, start=9)} % 4
+                           AS VARCHAR)
          END AS cat
   FROM documents d
   CROSS JOIN (SELECT unnest(range(5)) AS rater) r
@@ -9806,15 +9657,8 @@ def stats_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("fk"), F.col("rater").cast("string"), F.lit("-"),
         F.col("doc_id").cast("string"),
     )
-    faithful = (
-        F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("bigint") % 10
-    ) < 7
-    noise_cat = F.concat(
-        F.lit("src"),
-        (F.conv(F.substring(F.md5(key), 9, 8), 16, 10).cast("bigint") % 4).cast(
-            "string"
-        ),
-    )
+    faithful = md5_int(key, 8) % 10 < 7
+    noise_cat = F.concat(F.lit("src"), (md5_int(key, 8, start=9) % 4).cast("string"))
     ratings = docs.crossJoin(F.broadcast(raters)).select(
         "doc_id",
         "rater",

@@ -16,7 +16,7 @@ by pre-aggregating the reference side to one row per (key, ts).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.measures import (
@@ -64,10 +64,7 @@ def asof_join(
     return carried.filter(F.col("_src") == 1).drop("_src", *right_cols)
 
 
-@register(
-    "asof_purchase_to_click",
-    tags=("temporal", "asof", "join"),
-    oracle="""
+ASOF_CLICK_ORACLE = """
 WITH c AS (
   SELECT user_id, CAST(ts AS TIMESTAMP) AS click_ts, max(value) AS click_value
   FROM events WHERE event_type = 'click' GROUP BY 1, 2
@@ -81,7 +78,13 @@ SELECT p.event_id, p.user_id, p.purchase_ts,
        CASE WHEN c.click_ts IS NULL THEN NULL
             ELSE date_diff('second', c.click_ts, p.purchase_ts) END AS lag_seconds
 FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.purchase_ts >= c.click_ts
-""",
+"""
+
+
+@register(
+    "asof_purchase_to_click",
+    tags=("temporal", "asof", "join"),
+    oracle=ASOF_CLICK_ORACLE,
 )
 def asof_purchase_to_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: each purchase matched to the user's latest click at or
@@ -1936,21 +1939,7 @@ def temporal_calendar_proration(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "asof_arrow_grouped",
     tags=("temporal", "asof", "join", "udf"),
-    oracle="""
-WITH c AS (
-  SELECT user_id, CAST(ts AS TIMESTAMP) AS click_ts, max(value) AS click_value
-  FROM events WHERE event_type = 'click' GROUP BY 1, 2
-), p AS (
-  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS purchase_ts, value
-  FROM events WHERE event_type = 'purchase'
-)
-SELECT p.event_id, p.user_id, p.purchase_ts,
-       c.click_ts AS asof_click_ts,
-       c.click_value AS asof_click_value,
-       CASE WHEN c.click_ts IS NULL THEN NULL
-            ELSE date_diff('second', c.click_ts, p.purchase_ts) END AS lag_seconds
-FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.purchase_ts >= c.click_ts
-""",
+    oracle=ASOF_CLICK_ORACLE,
 )
 def asof_arrow_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME as-of attribution as [[asof_purchase_to_click]], executed
@@ -2286,6 +2275,24 @@ def temporal_holt_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def orders_1996_by_day(spark: SparkSession, sf_dir: str, *aggs: Column) -> DataFrame:
+    """The 1996 orders grouped by order day ``d``, with the caller's
+    aggregates; :func:`orders_1996_by_day_sql` is its DuckDB twin."""
+    o = load_table(spark, sf_dir, "orders").filter(
+        (F.col("o_orderdate").cast("date") >= F.lit("1996-01-01").cast("date"))
+        & (F.col("o_orderdate").cast("date") < F.lit("1997-01-01").cast("date"))
+    )
+    return o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(*aggs)
+
+
+def orders_1996_by_day_sql(*aggs: str) -> str:
+    return f"""SELECT CAST(o_orderdate AS DATE) AS d, {", ".join(aggs)}
+  FROM orders
+  WHERE CAST(o_orderdate AS DATE) >= DATE '1996-01-01'
+    AND CAST(o_orderdate AS DATE) < DATE '1997-01-01'
+  GROUP BY 1"""
+
+
 @register(
     "temporal_kalman_local_level",
     tags=("temporal", "forecast", "iterative"),
@@ -2293,12 +2300,7 @@ def temporal_holt_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
 WITH RECURSIVE daily AS MATERIALIZED (
   -- exact cents + integer half-up (sf1-gate fix, see temporal_holt_smoothing)
   SELECT CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS rn, y FROM (
-    SELECT CAST(o_orderdate AS DATE) AS d,
-           {sum_dollars_half_up_sql("o_totalprice")} AS y
-    FROM orders
-    WHERE CAST(o_orderdate AS DATE) >= DATE '1996-01-01'
-      AND CAST(o_orderdate AS DATE) < DATE '1997-01-01'
-    GROUP BY 1)
+    {orders_1996_by_day_sql(f'{sum_dollars_half_up_sql("o_totalprice")} AS y')})
 ), steps AS (
   SELECT rn AS t, y * 1e0 AS x, 1e12 AS p, 0e0 AS e FROM daily WHERE rn = 1
   UNION ALL
@@ -2337,13 +2339,7 @@ def temporal_kalman_local_level(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: fold length is the bounded DAY GRAIN; the one day hash agg
     is the only data-scale work."""
-    o = load_table(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate").cast("date") >= F.lit("1996-01-01").cast("date"))
-        & (F.col("o_orderdate").cast("date") < F.lit("1997-01-01").cast("date"))
-    )
-    daily = o.groupBy(F.col("o_orderdate").cast("date").alias("d")).agg(
-        sum_dollars_half_up("o_totalprice").alias("y")
-    )
+    daily = orders_1996_by_day(spark, sf_dir, sum_dollars_half_up("o_totalprice").alias("y"))
     arr = daily.agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("d", "y"))), lambda s: s["y"]

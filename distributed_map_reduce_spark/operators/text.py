@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int, md5_int_sql
 from ..functions.normalize import (
     FINGERPRINT_SQL,
     NORMALIZED_SQL,
@@ -333,7 +334,7 @@ WITH t AS (
 ), hs AS (
   SELECT doc_id,
          list_transform(range(1, length(txt) - {WINNOW_K - 2}),
-                        i -> CAST('0x' || substr(md5(substr(txt, i, {WINNOW_K})), 1, 15) AS BIGINT)) AS h
+                        i -> {md5_int_sql(f"substr(txt, i, {WINNOW_K})")}) AS h
   FROM t WHERE length(txt) >= {WINNOW_K}
 ), wins AS (
   SELECT doc_id,
@@ -366,11 +367,7 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "doc_id",
         "i",
-        F.conv(
-            F.substring(F.md5(F.col("txt").substr(F.col("i"), F.lit(WINNOW_K))), 1, 15),
-            16,
-            10,
-        ).cast("bigint").alias("h"),
+        md5_int(F.col("txt").substr(F.col("i"), F.lit(WINNOW_K))).alias("h"),
     )
     roll = W.partitionBy("doc_id").orderBy("i").rowsBetween(W.currentRow, WINNOW_W - 1)
     full = W.partitionBy("doc_id")
@@ -1012,12 +1009,12 @@ WITH toks AS (
   FROM documents
 )
 SELECT doc_id,
-       CAST(CAST('0x' || substr(md5('fh:' || w), 1, 15) AS BIGINT) % {FH_DIM} AS BIGINT) AS dim,
-       CAST(sum(CASE WHEN CAST('0x' || substr(md5('fhs:' || w), 1, 15) AS BIGINT) % 2 = 0
+       CAST({md5_int_sql("'fh:' || w")} % {FH_DIM} AS BIGINT) AS dim,
+       CAST(sum(CASE WHEN {md5_int_sql("'fhs:' || w")} % 2 = 0
                      THEN 1 ELSE -1 END) AS BIGINT) AS weight
 FROM toks
 GROUP BY doc_id, dim
-HAVING sum(CASE WHEN CAST('0x' || substr(md5('fhs:' || w), 1, 15) AS BIGINT) % 2 = 0
+HAVING sum(CASE WHEN {md5_int_sql("'fhs:' || w")} % 2 = 0
                 THEN 1 ELSE -1 END) <> 0
 """,
 )
@@ -1036,16 +1033,8 @@ def text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     output ⇒ bit-identical across engines, no float discipline needed."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(words("text")).alias("w"))
-    dim = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("fh:"), F.col("w"))), 1, 15), 16, 10)
-        .cast("bigint") % FH_DIM
-    ).cast("bigint")
-    sign = F.when(
-        F.conv(F.substring(F.md5(F.concat(F.lit("fhs:"), F.col("w"))), 1, 15), 16, 10)
-        .cast("bigint") % 2
-        == 0,
-        1,
-    ).otherwise(-1)
+    dim = (md5_int(F.concat(F.lit("fh:"), F.col("w"))) % FH_DIM).cast("bigint")
+    sign = F.when(md5_int(F.concat(F.lit("fhs:"), F.col("w"))) % 2 == 0, 1).otherwise(-1)
     return (
         toks.select("doc_id", dim.alias("dim"), sign.alias("s"))
         .groupBy("doc_id", "dim")

@@ -11,6 +11,7 @@ import datetime
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int, md5_int_sql
 from ..registry import register
 from ..sources import load_table
 from .kv import KVTable, canonical_json, content_address, json_field
@@ -328,12 +329,11 @@ def kv_cdc_tombstone_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "kv_bloom_membership",
     tags=("kv", "sketch"),
-    oracle="""
+    oracle=f"""
 WITH members AS (
   SELECT s_suppkey AS k FROM supplier
 ), positions AS (
-  SELECT CAST('0x' || substr(md5('bf' || CAST(u.j AS VARCHAR) || '-' || CAST(k AS VARCHAR)), 1, 8)
-              AS BIGINT) % 1024 AS pos
+  SELECT {md5_int_sql("'bf' || CAST(u.j AS VARCHAR) || '-' || CAST(k AS VARCHAR)", 8)} % 1024 AS pos
   FROM members, (SELECT unnest([0, 1, 2]) AS j) u
 ), words AS (
   SELECT CAST(pos // 32 AS BIGINT) AS word,
@@ -343,8 +343,7 @@ WITH members AS (
   SELECT c_custkey AS p FROM customer
 ), probe_pos AS (
   SELECT p, u.j,
-         CAST('0x' || substr(md5('bf' || CAST(u.j AS VARCHAR) || '-' || CAST(p AS VARCHAR)), 1, 8)
-              AS BIGINT) % 1024 AS pos
+         {md5_int_sql("'bf' || CAST(u.j AS VARCHAR) || '-' || CAST(p AS VARCHAR)", 8)} % 1024 AS pos
   FROM probes, (SELECT unnest([0, 1, 2]) AS j) u
 ), checked AS (
   SELECT pp.p,
@@ -388,10 +387,8 @@ def kv_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     js = F.explode(F.array(F.lit(0), F.lit(1), F.lit(2))).alias("j")
 
     def pos(key_col):
-        h = F.md5(
-            F.concat(F.lit("bf"), F.col("j").cast("string"), F.lit("-"), key_col.cast("string"))
-        )
-        return F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % 1024
+        h = F.concat(F.lit("bf"), F.col("j").cast("string"), F.lit("-"), key_col.cast("string"))
+        return md5_int(h, 8) % 1024
 
     positions = sup.select("k", js).select(pos(F.col("k")).alias("pos"))
     words = positions.groupBy((F.col("pos") / 32).cast("bigint").alias("word")).agg(

@@ -37,6 +37,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.hashing import md5_int_py
+
 
 MapFn = Callable[[Any, Any], Any]  # (key, value) -> {k: v} | [{k: v}]
 ReduceFn = Callable[[Any, list], Any]  # (key, values) -> result
@@ -60,15 +62,10 @@ def consistent_hash_partitioner(num_partitions: int) -> Callable[[Any], int]:
     partitions stand in for nodes, positioned by the same portable md5
     ints as plans/placement.py, so the RDD shuffle routes each key to
     exactly the partition the column-expression placement names."""
-    import hashlib
-
-    ring = sorted(
-        (int(hashlib.md5(f"part-{p}".encode()).hexdigest()[:15], 16), p)
-        for p in range(num_partitions)
-    )
+    ring = sorted((md5_int_py(f"part-{p}"), p) for p in range(num_partitions))
 
     def owner(key: Any) -> int:
-        kpos = int(hashlib.md5(str(key).encode()).hexdigest()[:15], 16)
+        kpos = md5_int_py(str(key))
         for pos, p in ring:
             if kpos <= pos:
                 return p

@@ -3,13 +3,12 @@ rendezvous key→node hashing (`/root/reference/distribution/util/id.js:
 107-148`, exercised by `test/all.test.js:852-878`) re-expressed as
 portable column expressions.
 
-Round 1 collapsed placement into Spark's hash partitioner (results
-parity never needs the reference's placement), leaving this as a
-documented gap (VERDICT r01 "What's missing" #3). Here the three
-schemes are real, selectable, and oracle-checkable: owners are computed
-from the same md5-derived integers on both engines (a re-expression of
-the reference's sha256-based idToNum — same scheme properties, portable
-constants), so DuckDB replays every assignment bit-for-bit.
+The three schemes are selectable and oracle-checkable: every key and
+node position is the portable 60-bit hash of ``functions.hashing``
+(:func:`md5_int`, its DuckDB and Python twins — a re-expression of the
+reference's sha256-based idToNum with the same scheme properties), so
+DuckDB replays every assignment bit-for-bit. Consistent-hash ring
+positions are Python constants folded into one CASE.
 
 The property that motivates consistent/rendezvous — adding a node moves
 only ~1/(n+1) of keys, vs ~n/(n+1) for naive mod — is pinned by
@@ -23,45 +22,31 @@ overwrite on owner=changed)."""
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Portable key→int: first 15 md5 hex chars as a bigint (same recipe as
-# the MinHash constants — fits int64, replays in DuckDB as
-# CAST('0x' || substr(md5(x), 1, 15) AS BIGINT)).
-def _hash_int(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
-
-
-def _hash_int_py(s: str) -> int:
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-
-def _hash_int_sql(expr: str) -> str:
-    return f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)"
+from ..functions.hashing import md5_int, md5_int_py, md5_int_sql
 
 
 def naive_owner(key: Column, nodes: list[str]) -> Column:
     """nodes[H(key) % n] over the sorted node list (`id.js:107-114`)."""
     ns = sorted(nodes)
     arr = F.array(*[F.lit(n) for n in ns])
-    return F.element_at(arr, (_hash_int(key) % len(ns) + 1).cast("int"))
+    return F.element_at(arr, (md5_int(key) % len(ns) + 1).cast("int"))
 
 
 def naive_owner_sql(key_expr: str, nodes: list[str]) -> str:
     ns = sorted(nodes)
     arr = "[" + ", ".join(f"'{n}'" for n in ns) + "]"
-    return f"({arr})[CAST({_hash_int_sql(key_expr)} % {len(ns)} + 1 AS INT)]"
+    return f"({arr})[CAST({md5_int_sql(key_expr)} % {len(ns)} + 1 AS INT)]"
 
 
 def consistent_owner(key: Column, nodes: list[str]) -> Column:
     """Hash-ring successor: first node whose position ≥ the key's,
     wrapping to the ring's first node (`id.js:115-126`). Node positions
     are compile-time constants, so the ring walk folds into one CASE."""
-    ring = sorted((_hash_int_py(n), n) for n in nodes)
-    kpos = _hash_int(key)
+    ring = sorted((md5_int_py(n), n) for n in nodes)
+    kpos = md5_int(key)
     out = F.lit(ring[0][1])  # wrap default
     for pos, node in reversed(ring):
         out = F.when(kpos <= pos, F.lit(node)).otherwise(out)
@@ -69,8 +54,8 @@ def consistent_owner(key: Column, nodes: list[str]) -> Column:
 
 
 def consistent_owner_sql(key_expr: str, nodes: list[str]) -> str:
-    ring = sorted((_hash_int_py(n), n) for n in nodes)
-    kpos = _hash_int_sql(key_expr)
+    ring = sorted((md5_int_py(n), n) for n in nodes)
+    kpos = md5_int_sql(key_expr)
     whens = " ".join(f"WHEN {kpos} <= {pos} THEN '{node}'" for pos, node in ring)
     return f"(CASE {whens} ELSE '{ring[0][1]}' END)"
 
@@ -80,7 +65,7 @@ def rendezvous_owner(key: Column, nodes: list[str]) -> Column:
     (`id.js:127-148`); ties break to the first node in sorted order —
     deterministic and engine-identical."""
     ns = sorted(nodes)
-    scores = [_hash_int(F.concat(key, F.lit("|" + n))) for n in ns]
+    scores = [md5_int(F.concat(key, F.lit("|" + n))) for n in ns]
     out = F.lit(ns[-1])
     for i in range(len(ns) - 2, -1, -1):
         cond = scores[i] >= scores[i + 1]
@@ -92,7 +77,7 @@ def rendezvous_owner(key: Column, nodes: list[str]) -> Column:
 
 def rendezvous_owner_sql(key_expr: str, nodes: list[str]) -> str:
     ns = sorted(nodes)
-    scores = [_hash_int_sql(f"{key_expr} || '|{n}'") for n in ns]
+    scores = [md5_int_sql(f"{key_expr} || '|{n}'") for n in ns]
     whens = []
     for i in range(len(ns) - 1):
         cond = " AND ".join(f"{scores[i]} >= {scores[j]}" for j in range(i + 1, len(ns)))

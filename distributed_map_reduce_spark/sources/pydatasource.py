@@ -19,8 +19,6 @@ stream per-partition with zero driver materialization.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import (
@@ -31,9 +29,16 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from ..functions.hashing import md5_int_py, md5_int_sql
 from ..registry import register
 
 _U32 = 4294967296.0  # 2^32: md5-prefix → exact uniform in [0, 1)
+
+
+def _hash_row(i: int) -> tuple[int, int, int]:
+    """(id, bucket, score_raw): md5 digits 9-10 mod 16 and digits 1-8 of
+    the id, the twins of the oracles' ``md5_int_sql`` columns."""
+    return (i, md5_int_py(str(i), 2, start=9) % 16, md5_int_py(str(i), 8))
 
 
 class _HashRangePartition(InputPartition):
@@ -60,8 +65,7 @@ class HashRangeReader(DataSourceReader):
         # Runs ON EXECUTORS, one call per partition; rows stream back via
         # Arrow batches — the driver never sees the data.
         for i in range(partition.start, partition.end):
-            h = hashlib.md5(str(i).encode()).hexdigest()
-            yield (i, int(h[8:10], 16) % 16, int(h[:8], 16))
+            yield _hash_row(i)
 
 
 class HashRangeDataSource(DataSource):
@@ -86,9 +90,9 @@ def register_datasource(spark: SparkSession) -> None:
     oracle=f"""
 WITH src AS (
   SELECT i AS id,
-         CAST(CAST('0x' || substr(md5(CAST(i AS VARCHAR)), 9, 2) AS BIGINT) % 16
+         CAST({md5_int_sql("CAST(i AS VARCHAR)", 2, start=9)} % 16
               AS INTEGER) AS bucket,
-         CAST('0x' || substr(md5(CAST(i AS VARCHAR)), 1, 8) AS BIGINT) AS score_raw
+         {md5_int_sql("CAST(i AS VARCHAR)", 8)} AS score_raw
   FROM generate_series(0, 9999) AS t(i)
 )
 SELECT bucket,
@@ -153,11 +157,7 @@ class HashRangeStreamReader(SimpleDataSourceStreamReader):
         # A list iterator, not a generator: Spark's simple-reader
         # prefetch cache both next()s and copy.copy()s what read()
         # returns, and generators are not copyable.
-        return [
-            (i, int(h[8:10], 16) % 16, int(h[:8], 16))
-            for i in range(lo, hi)
-            for h in (hashlib.md5(str(i).encode()).hexdigest(),)
-        ]
+        return [_hash_row(i) for i in range(lo, hi)]
 
 
 class HashRangeStreamSource(DataSource):
@@ -178,9 +178,9 @@ class HashRangeStreamSource(DataSource):
     oracle=f"""
 WITH src AS (
   SELECT i AS id,
-         CAST(CAST('0x' || substr(md5(CAST(i AS VARCHAR)), 9, 2) AS BIGINT) % 16
+         CAST({md5_int_sql("CAST(i AS VARCHAR)", 2, start=9)} % 16
               AS INTEGER) AS bucket,
-         CAST('0x' || substr(md5(CAST(i AS VARCHAR)), 1, 8) AS BIGINT) AS score_raw
+         {md5_int_sql("CAST(i AS VARCHAR)", 8)} AS score_raw
   FROM generate_series(0, 999) AS t(i)
 )
 SELECT bucket,

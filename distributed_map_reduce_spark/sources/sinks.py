@@ -19,6 +19,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.hashing import md5_int, md5_int_sql
 from ..functions.measures import to_cents, to_cents_sql
 from ..registry import register
 from ..sources import load_table
@@ -236,10 +237,10 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "source_text_roundtrip",
     tags=("sink", "source"),
-    oracle="""
+    oracle=f"""
 SELECT CAST(count(*) AS BIGINT) AS n_docs,
        CAST(sum(len(text)) AS BIGINT) AS total_chars,
-       CAST(sum(CAST('0x' || substr(md5(text), 1, 6) AS BIGINT)) AS BIGINT)
+       CAST(sum({md5_int_sql("text", 6)}) AS BIGINT)
            AS content_checksum
 """ + "FROM documents",
 )
@@ -266,9 +267,7 @@ def source_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         return parsed.agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum(F.length("text")).alias("total_chars"),
-            F.sum(
-                F.conv(F.substring(F.md5("text"), 1, 6), 16, 10).cast("bigint")
-            ).alias("content_checksum"),
+            F.sum(md5_int("text", 6)).alias("content_checksum"),
         ).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(os.path.dirname(out), ignore_errors=True)

@@ -10,12 +10,12 @@ import math
 
 from pyspark.sql import functions as F
 
+from distributed_map_reduce_spark.functions.hashing import md5_int
 from distributed_map_reduce_spark.operators.sketches import (
     CMS_D,
     CMS_W,
     HASH_SPACE,
     KMV_K,
-    md5_int60,
 )
 from distributed_map_reduce_spark.operators.similarity import (
     DIM,
@@ -30,7 +30,7 @@ def _py_md5_int60(s: str) -> int:
 
 def test_md5_int60_matches_python(spark):
     df = spark.createDataFrame([("alpha",), ("beta",), ("",)], "w string")
-    got = {r["w"]: r["h"] for r in df.select("w", md5_int60(F.col("w")).alias("h")).collect()}
+    got = {r["w"]: r["h"] for r in df.select("w", md5_int(F.col("w")).alias("h")).collect()}
     for w in ("alpha", "beta", ""):
         assert got[w] == _py_md5_int60(w)
 
@@ -88,7 +88,7 @@ def test_cms_bucket_is_uniformish(spark):
     stays sane (no bucket grabs >5% of the mass)."""
     toks = spark.createDataFrame([(f"tok{i}",) for i in range(1000)], "w string")
     buckets = toks.select(
-        (md5_int60(F.concat(F.lit("0:"), F.col("w"))) % CMS_W).alias("b")
+        (md5_int(F.concat(F.lit("0:"), F.col("w"))) % CMS_W).alias("b")
     )
     top = buckets.groupBy("b").count().agg(F.max("count")).collect()[0][0]
     assert top <= 50  # 5% of 1000; uniform expectation ~1

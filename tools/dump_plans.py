@@ -21,10 +21,6 @@ from distributed_map_reduce_spark import registry  # noqa: E402
 from distributed_map_reduce_spark.session import get_spark  # noqa: E402
 
 EXTRA = [
-    # round-9 additions (VERDICT r8 #4): the r8/r9 two-phase banded-rank
-    # rewrites (operators/ranks.py consumers) + this round's star-edge
-    # migrations and the de-fixtured SemDeDup — the plans a 100x audit
-    # most wants pinned.
     "analytics_skyline_pareto",
     "pipeline_padding_waste_audit",
     "retrieval_hybrid_rrf",
@@ -40,7 +36,6 @@ EXTRA = [
     "events_conversion_latency",
     "dedup_cc_clusters",
     "dedup_cluster_keeper",
-    # earlier rounds
     "events_markov_removal_attribution",
     "pipeline_quality_ablation_grid",
     "stats_weibull_fit",
@@ -78,7 +73,6 @@ EXTRA = [
     "temporal_scd2_history",
     "events_funnel_conversion",
     "pipeline_quality_decile_gate",
-    # round-4 additions
     "sketch_kmv_distinct",
     "sketch_kmv_set_ops",
     "sketch_countmin_heavy_hitters",
@@ -87,12 +81,10 @@ EXTRA = [
     "similarity_random_projection_audit",
     "sample_weighted_priority",
     "sample_reservoir_per_group",
-    # late-round-4 additions
     "ann_ivf_multiprobe",
     "similarity_pq_adc",
     "ann_kmeans_lloyd2",
     "multimodal_signature_neardup",
-    "dedup_cluster_keeper",
     "agg_exact_median_scalable",
     "stats_cusum_changepoint",
     "stats_bootstrap_poisson",
@@ -101,16 +93,13 @@ EXTRA = [
     "pipeline_mixture_materialize",
     "mr_reduce_side_join",
     "join_dynamic_partition_prune",
-    "analytics_skyline_pareto",
     "geo_grid_knn_join",
     "er_record_linkage",
     "repair_median_impute",
     "audit_merkle_ranges",
     "snapshot_diff_audit",
-    # round-5 session-3 additions
     "dedup_edit_distance_block",
     "eval_rouge_ngram",
-    "retrieval_rocchio_prf",
     "eval_bradley_terry",
     "sketch_ams_f2",
     "window_hampel_filter",
@@ -128,11 +117,8 @@ EXTRA = [
     "window_pattern_regex_funnel",
     "stats_mann_whitney_u",
     "privacy_l_diversity",
-    "privacy_k_anonymity",
-    # round-2 additions
     "agg_higher_moments",
     "temporal_ewma_decay",
-    "sample_reservoir_per_group",
     "similarity_quantize_int8",
     "variant_nested_extract",
     "source_python_datasource",
@@ -154,7 +140,6 @@ EXTRA = [
     "graph_jaccard_neighbors",
     "sample_variance_quota",
     "temporal_seasonal_backtest",
-    # round-3 additions
     "window_cumsum_scalable",
     "dedup_prefix_filter_join",
     "temporal_time_weighted_avg",
@@ -163,7 +148,6 @@ EXTRA = [
     "profile_expectations",
     "events_user_ltv_cohort",
     "kv_secondary_index",
-    # round-4 session-2 additions
     "graph_clustering_coefficient",
     "graph_random_walk_sampling",
     "text_heaps_law",
@@ -188,9 +172,7 @@ EXTRA = [
     "udtf_table_argument",
     "eval_em_f1_scoring",
     "stats_cuped_adjustment",
-    "stats_sprt_sequential",
     "pipeline_rlhf_pair_construction",
-    "pipeline_padding_waste_audit",
     "text_pmi_collocations",
     "temporal_allen_relations",
     "events_session_capped",
@@ -210,7 +192,6 @@ EXTRA = [
     "stats_erlang_c_staffing",
     "similarity_nearest_centroid_eval",
     "pipeline_conversation_assembly",
-    "stats_rfm_migration",
     "pipeline_url_canonical_dedup",
     "graph_hits_bipartite",
     "stats_kaplan_meier",
@@ -221,7 +202,6 @@ EXTRA = [
     "similarity_gram_matrix",
     "profile_clock_skew_audit",
     "window_max_drawdown",
-    # round-5 additions
     "stats_anova_oneway",
     "stats_benjamini_hochberg",
     "stats_permutation_test",
@@ -254,7 +234,6 @@ EXTRA = [
     "profile_key_discovery",
     "stats_ratio_delta_method",
     "eval_rank_metrics_ndcg",
-    "stats_qini_uplift_deciles",
     "stats_mixture_em_gaussian",
     "graph_modularity_score",
     "text_bigram_perplexity",
@@ -264,7 +243,6 @@ EXTRA = [
     "stats_price_elasticity",
     "stats_hurst_rs",
     "pipeline_blocklist_filter",
-    "similarity_mmr_rerank",
     "privacy_t_closeness",
     "graph_degree_assortativity",
     "events_self_excitation",
