@@ -15,7 +15,8 @@ non-negative integer below ``16 ** width``. A null input gives null.
   10)`` cast to bigint; :func:`hex_int` is the same read on an md5 hex
   column a query has already computed.
 - :func:`md5_int_sql`: DuckDB, ``CAST('0x' || substr(md5(s), start,
-  width) AS BIGINT)``.
+  width) AS BIGINT)``; :func:`hex_int_sql` is the same read on an md5
+  hex expression, and its ``start`` may be SQL text (a per-row lane).
 - :func:`md5_int_py`: Python, ``int(md5(s).hexdigest()[start-1:
   start-1+width], 16)`` over the UTF-8 bytes (what both engines hash).
 """
@@ -36,8 +37,12 @@ def md5_int(s: Column | str, width: int = 15, start: int = 1) -> Column:
     return hex_int(F.md5(s), width, start)
 
 
+def hex_int_sql(hex_expr: str, width: int = 15, start: int | str = 1) -> str:
+    return f"CAST('0x' || substr({hex_expr}, {start}, {width}) AS BIGINT)"
+
+
 def md5_int_sql(expr: str, width: int = 15, start: int = 1) -> str:
-    return f"CAST('0x' || substr(md5({expr}), {start}, {width}) AS BIGINT)"
+    return hex_int_sql(f"md5({expr})", width, start)
 
 
 def md5_int_py(s: str | None, width: int = 15, start: int = 1) -> int | None:

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from ..functions.measures import to_cents, to_cents_sql
 from ..registry import register
 from ..sources import load_table, register_views
+from ..sources.scratch import scratch_dir
 
 
 @register(
@@ -496,10 +497,9 @@ def join_dynamic_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived from the raw table (years + a non-foldable predicate) so
     the prune really is dynamic, not constant-folded static pruning."""
     import os
-    import tempfile
 
     orders = load_table(spark, sf_dir, "orders")
-    staged = os.path.join(tempfile.mkdtemp(prefix="dmrs_dpp_"), "orders_by_year")
+    staged = os.path.join(scratch_dir("dpp"), "orders_by_year")
     (
         orders.withColumn("o_year", F.year("o_orderdate").cast("bigint"))
         .write.partitionBy("o_year")

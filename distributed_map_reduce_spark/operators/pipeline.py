@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.hashing import hex_int, md5_int, md5_int_sql
+from ..functions.hashing import hex_int, hex_int_sql, md5_int, md5_int_sql
 from ..functions.normalize import (
     FINGERPRINT_SQL,
     SPLIT_LOWER_SQL,
@@ -156,8 +156,8 @@ WITH h AS (
   SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS hh FROM documents
 )
 SELECT doc_id,
-       CAST(CAST('0x' || substr(hh, 1, 6) AS BIGINT) % {N_SHARDS} AS INT) AS shard,
-       CAST(row_number() OVER (PARTITION BY CAST('0x' || substr(hh, 1, 6) AS BIGINT) % {N_SHARDS}
+       CAST({hex_int_sql("hh", 6)} % {N_SHARDS} AS INT) AS shard,
+       CAST(row_number() OVER (PARTITION BY {hex_int_sql("hh", 6)} % {N_SHARDS}
                                ORDER BY hh) AS BIGINT) AS pos
 FROM h
 """,

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.hashing import hex_int, md5_int, md5_int_sql
+from ..functions.hashing import hex_int, hex_int_sql, md5_int, md5_int_sql
 from ..functions.normalize import SPLIT_LOWER_SQL, WORDS_SQL, split_lower, words
 from ..functions.measures import (
     ARM_SQL,
@@ -1418,7 +1418,7 @@ WITH h AS (
 ),
 w AS (
   SELECT 4 * g + lane AS rep, cents,
-         {_poisson_weight_sql("CAST('0x' || substr(hex, 1 + 8 * lane, 8) AS BIGINT) % 1000000")} AS wt
+         {_poisson_weight_sql(hex_int_sql("hex", 8, "1 + 8 * lane") + " % 1000000")} AS wt
   FROM h CROSS JOIN (SELECT unnest(range(0, 4)) AS lane)
 ),
 rmeans AS (

@@ -13,14 +13,12 @@ scan-side property paid once at write time.
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
 from . import load_table
+from .scratch import scratch_dir
 
 N_BUCKETS = 8
 
@@ -52,7 +50,7 @@ def bucketed_join_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write lineitem and orders bucketed on orderkey, then join the
     bucketed tables: same results as the direct join, but the join-side
     Exchanges vanish (asserted in tests/test_bucketing.py)."""
-    wh = tempfile.mkdtemp(prefix="dmrs_warehouse_")
+    wh = scratch_dir("warehouse")
     spark.sql("CREATE DATABASE IF NOT EXISTS dmrs_buckets LOCATION '" + wh + "'")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"

@@ -344,19 +344,17 @@ def sink_python_datasource_writer(spark: SparkSession, sf_dir: str) -> DataFrame
     tolerance is needed. The write path parallelism = input partitions;
     the driver handles only commit messages (paths + counts), never
     rows — the same protocol shape FileFormatWriter uses."""
-    import shutil
-    import tempfile
-
     from ..sources import load_table
+    from .scratch import scratch_dir
 
     spark.dataSource.register(JsonlSinkDataSource)
-    out = os.path.join(tempfile.gettempdir(), "dmrs_jsonl_sink")
-    shutil.rmtree(out, ignore_errors=True)
+    out = scratch_dir("jsonl_sink")
     c = load_table(spark, sf_dir, "customer").select(
         F.col("c_mktsegment").alias("key"), F.col("c_acctbal").alias("value")
     )
     c.write.format("jsonl_sink").option("path", out).mode("append").save()
-    back = spark.read.json(os.path.join(out, "part-*.jsonl"))
+    # the "_" prefix hides _SUCCESS and any _staged-* file from the reader
+    back = spark.read.json(out)
     return back.groupBy(F.col("key").alias("c_mktsegment")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.round(F.sum("value"), 2).alias("total_bal"),

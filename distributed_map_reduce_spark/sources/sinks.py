@@ -1,8 +1,13 @@
-"""Sinks: partitioned parquet / CSV / JSON writers with read-back.
+"""Sinks: write-then-read-back round trips through Spark's file formats.
 
 The reference's only sink is its KV file store (one file per pair,
 `/root/reference/distribution/local/store.js:117-133`); Spark's
 planned, partitioned, columnar writes are the scale-out replacement.
+
+Every staged write lands in a dir from `sources.scratch.scratch_dir`,
+which lives until the process exits, so a query returns its lazy
+read-back frame: the write runs at construction, the read-back when the
+frame does, and nothing is checkpointed only to outlive its dir.
 
 Scale posture: writes are partitioned by a low-cardinality column
 (partition pruning on read), never coalesced to one file, and the
@@ -13,8 +18,6 @@ boundary — the property a 100 TB pipeline stage hand-off depends on.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -23,18 +26,11 @@ from ..functions.hashing import md5_int, md5_int_sql
 from ..functions.measures import to_cents, to_cents_sql
 from ..registry import register
 from ..sources import load_table
+from .scratch import scratch_dir
 
 
 def write_partitioned_parquet(df: DataFrame, path: str, partition_by: list[str]) -> None:
     df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-
-
-def write_csv(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").option("header", "true").csv(path)
-
-
-def write_json(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").json(path)
 
 
 @register(
@@ -54,22 +50,16 @@ def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp")
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="dmrs_sink_"), "lineitem_staged")
-    try:
-        write_partitioned_parquet(
-            li.select("l_orderkey", "l_quantity", "l_returnflag", "l_linestatus"),
-            out,
-            ["l_returnflag"],
-        )
-        back = spark.read.parquet(out)
-        return (
-            back.groupBy("l_returnflag", "l_linestatus")
-            .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("l_quantity"), 2).alias("qty"))
-            # materialize before the temp dir can be cleaned up
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(os.path.dirname(out), ignore_errors=True)
+    out = os.path.join(scratch_dir("sink"), "lineitem_staged")
+    write_partitioned_parquet(
+        li.select("l_orderkey", "l_quantity", "l_returnflag", "l_linestatus"),
+        out,
+        ["l_returnflag"],
+    )
+    back = spark.read.parquet(out)
+    return back.groupBy("l_returnflag", "l_linestatus").agg(
+        F.count(F.lit(1)).alias("n"), F.round(F.sum("l_quantity"), 2).alias("qty")
+    )
 
 
 @register(
@@ -86,21 +76,17 @@ def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast join — the interchange-format path (logs, API dumps)."""
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey", "c_acctbal")
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    out = os.path.join(tempfile.mkdtemp(prefix="dmrs_json_"), "customer_staged")
-    try:
-        write_json(c, out)
-        back = spark.read.json(out)
-        return (
-            back.join(F.broadcast(n), back.c_nationkey == n.n_nationkey)
-            .groupBy("n_name")
-            .agg(
-                F.count(F.lit(1)).alias("n_cust"),
-                F.round(F.sum("c_acctbal"), 2).alias("total_bal"),
-            )
-            .localCheckpoint(eager=True)
+    out = os.path.join(scratch_dir("json"), "customer_staged")
+    c.write.mode("overwrite").json(out)
+    back = spark.read.json(out)
+    return (
+        back.join(F.broadcast(n), back.c_nationkey == n.n_nationkey)
+        .groupBy("n_name")
+        .agg(
+            F.count(F.lit(1)).alias("n_cust"),
+            F.round(F.sum("c_acctbal"), 2).alias("total_bal"),
         )
-    finally:
-        shutil.rmtree(os.path.dirname(out), ignore_errors=True)
+    )
 
 
 @register(
@@ -117,20 +103,16 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     infer in production — one malformed row flips column types)."""
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
     r = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
-    out = os.path.join(tempfile.mkdtemp(prefix="dmrs_csv_"), "nation_staged")
-    try:
-        write_csv(n, out)
-        back = spark.read.option("header", "true").schema(
-            "n_nationkey bigint, n_name string, n_regionkey bigint"
-        ).csv(out)
-        return (
-            back.join(F.broadcast(r), back.n_regionkey == r.r_regionkey)
-            .groupBy("r_name")
-            .agg(F.count(F.lit(1)).alias("n_nations"))
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(os.path.dirname(out), ignore_errors=True)
+    out = os.path.join(scratch_dir("csv"), "nation_staged")
+    n.write.mode("overwrite").option("header", "true").csv(out)
+    back = spark.read.option("header", "true").schema(
+        "n_nationkey bigint, n_name string, n_regionkey bigint"
+    ).csv(out)
+    return (
+        back.join(F.broadcast(r), back.n_regionkey == r.r_regionkey)
+        .groupBy("r_name")
+        .agg(F.count(F.lit(1)).alias("n_nations"))
+    )
 
 
 @register(
@@ -152,20 +134,13 @@ def sink_partition_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="dmrs_prune_"), "docs_staged")
-    try:
-        write_partitioned_parquet(docs, out, ["lang"])
-        back = spark.read.parquet(out).filter(F.col("lang") == "en")
-        return (
-            back.groupBy("source")
-            .agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("n_chars").alias("total_chars"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(os.path.dirname(out), ignore_errors=True)
+    out = os.path.join(scratch_dir("prune"), "docs_staged")
+    write_partitioned_parquet(docs, out, ["lang"])
+    back = spark.read.parquet(out).filter(F.col("lang") == "en")
+    return back.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_chars").alias("total_chars"),
+    )
 
 
 @register(
@@ -181,20 +156,13 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC sink → ORC source: the second columnar interchange format
     (predicate pushdown + column pruning work the same as parquet)."""
     s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey", "s_acctbal")
-    out = os.path.join(tempfile.mkdtemp(prefix="dmrs_orc_"), "supplier_staged")
-    try:
-        s.write.mode("overwrite").orc(out)
-        back = spark.read.orc(out)
-        return (
-            back.groupBy("s_nationkey")
-            .agg(
-                F.count(F.lit(1)).alias("n_supp"),
-                F.round(F.sum("s_acctbal"), 2).alias("total_bal"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(os.path.dirname(out), ignore_errors=True)
+    out = os.path.join(scratch_dir("orc"), "supplier_staged")
+    s.write.mode("overwrite").orc(out)
+    back = spark.read.orc(out)
+    return back.groupBy("s_nationkey").agg(
+        F.count(F.lit(1)).alias("n_supp"),
+        F.round(F.sum("s_acctbal"), 2).alias("total_bal"),
+    )
 
 
 @register(
@@ -216,22 +184,15 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL names. The lake reality at 100 TB: columns appear over time,
     and the reader, not a rewrite, reconciles them."""
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_acctbal")
-    out = os.path.join(tempfile.mkdtemp(prefix="dmrs_evo_"), "customers_staged")
-    try:
-        c.filter(F.col("c_custkey") < 750).drop("c_name").write.mode("overwrite").parquet(out)
-        c.filter(F.col("c_custkey") >= 750).write.mode("append").parquet(out)
-        back = spark.read.option("mergeSchema", "true").parquet(out)
-        return (
-            back.groupBy((F.col("c_custkey") >= 750).alias("has_name_col"))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.count("c_name").alias("n_names"),
-                F.round(F.sum("c_acctbal"), 2).alias("total_bal"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(os.path.dirname(out), ignore_errors=True)
+    out = os.path.join(scratch_dir("evo"), "customers_staged")
+    c.filter(F.col("c_custkey") < 750).drop("c_name").write.mode("overwrite").parquet(out)
+    c.filter(F.col("c_custkey") >= 750).write.mode("append").parquet(out)
+    back = spark.read.option("mergeSchema", "true").parquet(out)
+    return back.groupBy((F.col("c_custkey") >= 750).alias("has_name_col")).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.count("c_name").alias("n_names"),
+        F.round(F.sum("c_acctbal"), 2).alias("total_bal"),
+    )
 
 
 @register(
@@ -258,19 +219,16 @@ def source_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines = docs.select(
         F.concat_ws("\t", F.col("doc_id").cast("string"), F.col("text")).alias("value")
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="dmrs_text_"), "docs_text")
-    try:
-        lines.write.mode("overwrite").text(out)
-        back = spark.read.text(out)
-        parts = F.split("value", "\t", 2)
-        parsed = back.select(parts.getItem(1).alias("text"))
-        return parsed.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.length("text")).alias("total_chars"),
-            F.sum(md5_int("text", 6)).alias("content_checksum"),
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(os.path.dirname(out), ignore_errors=True)
+    out = os.path.join(scratch_dir("text"), "docs_text")
+    lines.write.mode("overwrite").text(out)
+    back = spark.read.text(out)
+    parts = F.split("value", "\t", 2)
+    parsed = back.select(parts.getItem(1).alias("text"))
+    return parsed.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(F.length("text")).alias("total_chars"),
+        F.sum(md5_int("text", 6)).alias("content_checksum"),
+    )
 
 
 # every term fully parenthesized: << vs | precedence differs across engines
@@ -373,49 +331,41 @@ def source_permissive_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("source"),
         ),
     ).otherwise(F.to_json(F.struct("doc_id", "source", "n_chars")))
-    out = os.path.join(tempfile.mkdtemp(prefix="dmrs_corrupt_"), "landing")
-    try:
-        docs.select(line.alias("value")).write.mode("overwrite").text(out)
-        back = (
-            spark.read.schema(
-                "doc_id long, source string, n_chars long, _corrupt_record string"
-            )
-            .option("mode", "PERMISSIVE")
-            .option("columnNameOfCorruptRecord", "_corrupt_record")
-            .json(out)
-            # Spark refuses plans that project ONLY the internal corrupt
-            # column from a raw scan; materializing severs that lineage
-            # (and the landing dir is deleted below anyway)
-            .localCheckpoint(eager=True)
+    out = os.path.join(scratch_dir("corrupt"), "landing")
+    docs.select(line.alias("value")).write.mode("overwrite").text(out)
+    back = (
+        spark.read.schema(
+            "doc_id long, source string, n_chars long, _corrupt_record string"
         )
-        good = back.filter(F.col("_corrupt_record").isNull()).groupBy("source").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_good"),
-            F.sum("n_chars").cast("bigint").alias("good_chars"),
+        .option("mode", "PERMISSIVE")
+        .option("columnNameOfCorruptRecord", "_corrupt_record")
+        .json(out)
+        # Spark refuses plans that project ONLY the internal corrupt
+        # column from a raw scan; materializing severs that lineage
+        .localCheckpoint(eager=True)
+    )
+    good = back.filter(F.col("_corrupt_record").isNull()).groupBy("source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_good"),
+        F.sum("n_chars").cast("bigint").alias("good_chars"),
+    )
+    # corrupt rows lose their parsed columns; recover the source tag
+    # from the raw line to keep per-source accounting
+    bad = (
+        back.filter(F.col("_corrupt_record").isNotNull())
+        .select(
+            F.regexp_extract(
+                "_corrupt_record", r'"source": "([a-z0-9_]+)', 1
+            ).alias("source")
         )
-        # corrupt rows lose their parsed columns; recover the source tag
-        # from the raw line to keep per-source accounting
-        bad = (
-            back.filter(F.col("_corrupt_record").isNotNull())
-            .select(
-                F.regexp_extract(
-                    "_corrupt_record", r'"source": "([a-z0-9_]+)', 1
-                ).alias("source")
-            )
-            .groupBy("source")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_corrupt"))
-        )
-        return (
-            good.join(bad, "source", "full_outer")
-            .select(
-                "source",
-                F.coalesce("n_good", F.lit(0)).alias("n_good"),
-                F.coalesce("n_corrupt", F.lit(0)).alias("n_corrupt"),
-                F.coalesce("good_chars", F.lit(0)).alias("good_chars"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(os.path.dirname(out), ignore_errors=True)
+        .groupBy("source")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_corrupt"))
+    )
+    return good.join(bad, "source", "full_outer").select(
+        "source",
+        F.coalesce("n_good", F.lit(0)).alias("n_good"),
+        F.coalesce("n_corrupt", F.lit(0)).alias("n_corrupt"),
+        F.coalesce("good_chars", F.lit(0)).alias("good_chars"),
+    )
 
 
 @register(
@@ -439,29 +389,20 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("o_orderkey") <= 2000)
         .select("o_orderkey", "o_orderpriority", "o_totalprice")
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="dmrs_xml_"), "orders_staged")
-    try:
-        o.write.format("xml").option("rootTag", "orders").option(
-            "rowTag", "order"
-        ).save(out)
-        back = (
-            spark.read.format("xml")
-            .option("rowTag", "order")
-            .schema("o_orderkey bigint, o_orderpriority string, o_totalprice double")
-            .load(out)
-        )
-        return (
-            back.groupBy("o_orderpriority")
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum(to_cents("o_totalprice")).alias(
-                    "total_cents"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(os.path.dirname(out), ignore_errors=True)
+    out = os.path.join(scratch_dir("xml"), "orders_staged")
+    o.write.format("xml").option("rootTag", "orders").option(
+        "rowTag", "order"
+    ).save(out)
+    back = (
+        spark.read.format("xml")
+        .option("rowTag", "order")
+        .schema("o_orderkey bigint, o_orderpriority string, o_totalprice double")
+        .load(out)
+    )
+    return back.groupBy("o_orderpriority").agg(
+        F.count(F.lit(1)).alias("n_orders"),
+        F.sum(to_cents("o_totalprice")).alias("total_cents"),
+    )
 
 
 @register(
@@ -503,7 +444,7 @@ def source_binaryfile_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .where(F.col("doc_id") < 1000)
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="dmrs_binassets_"), "assets")
+    out = os.path.join(scratch_dir("binassets"), "assets")
     # r10 (guide §2.5 input skew): the filtered slab comes out of the
     # parquet scan as ONE partition, so a bare write created all 1000
     # per-asset files from a single task — 34s of serial file creation
@@ -694,25 +635,22 @@ def source_fixedwidth_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
             "0",
         ),
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="dmrs_fw_"), "fixed_width")
-    try:
-        cust.select(line.alias("value")).write.mode("overwrite").text(out)
-        back = spark.read.text(out)
-        parsed = back.select(
-            F.substring("value", 1, 8).cast("bigint").alias("custkey"),
-            F.trim(F.substring("value", 9, 10)).alias("segment"),
-            (F.substring("value", 19, 12).cast("bigint") - 100000000).alias(
-                "bal_cents"
-            ),
-        )
-        return parsed.groupBy("segment").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum("bal_cents").cast("bigint").alias("total_cents"),
-            F.min("custkey").cast("bigint").alias("min_key"),
-            F.max("custkey").cast("bigint").alias("max_key"),
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(os.path.dirname(out), ignore_errors=True)
+    out = os.path.join(scratch_dir("fw"), "fixed_width")
+    cust.select(line.alias("value")).write.mode("overwrite").text(out)
+    back = spark.read.text(out)
+    parsed = back.select(
+        F.substring("value", 1, 8).cast("bigint").alias("custkey"),
+        F.trim(F.substring("value", 9, 10)).alias("segment"),
+        (F.substring("value", 19, 12).cast("bigint") - 100000000).alias(
+            "bal_cents"
+        ),
+    )
+    return parsed.groupBy("segment").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
+        F.sum("bal_cents").cast("bigint").alias("total_cents"),
+        F.min("custkey").cast("bigint").alias("min_key"),
+        F.max("custkey").cast("bigint").alias("max_key"),
+    )
 
 
 @register(

@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 import time
 from collections.abc import Iterator
 from contextlib import contextmanager
@@ -35,6 +34,7 @@ from ..plans.kv_queries import CDC_APPLY_ORACLE, change_feed
 from ..functions.measures import to_cents, to_cents_sql
 from ..registry import register
 from ..sources import load_table, normalize_events_ts
+from ..sources.scratch import scratch_dir
 from .batch_windows import tumbling_counts
 
 
@@ -42,7 +42,7 @@ def events_stream_dir(sf_dir: str) -> str:
     """The file-stream source monitors a *directory*; expose the single
     events parquet through a temp-dir symlink (at scale this is the
     landing directory new files arrive into)."""
-    d = tempfile.mkdtemp(prefix="dmrs_stream_")
+    d = scratch_dir("stream")
     # abspath: a relative sf_dir would otherwise become a relative symlink
     # TARGET, which resolves against the /tmp dir, not the caller's cwd
     os.symlink(
@@ -83,7 +83,7 @@ def _land_sentinels(
         F.lit(0.0).alias("value"),
         F.lit(None).cast("string").alias("props"),
     )
-    tmp = tempfile.mkdtemp(prefix="dmrs_sentinel_")
+    tmp = scratch_dir("sentinel")
     sent.coalesce(1).write.mode("overwrite").parquet(tmp)
     part = next(p for p in os.listdir(tmp) if p.endswith(".parquet"))
     dst = os.path.join(landing, "zz_sentinel.parquet")
@@ -304,7 +304,7 @@ def stream_incremental_view_maintenance(spark: SparkSession, sf_dir: str) -> Dat
     (count/sum-monoid union + re-aggregate) loses nothing across
     micro-batch boundaries. Refresh cost per epoch is |batch| + |view|,
     never history; the swap leaves old-or-new complete, never torn."""
-    view_dir = tempfile.mkdtemp(prefix="dmrs_ivm_")
+    view_dir = scratch_dir("ivm")
     view = os.path.join(view_dir, "user_totals_view")
     ckpt = os.path.join(view_dir, "ckpt")
     with read_events_stream(spark, sf_dir) as stream:
@@ -430,7 +430,7 @@ def stream_cdc_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     `APPLY CHANGES` / Debezium-sink shape; at 100 TB the swap becomes a
     keyed MERGE commit with identical algebra. Only the state dir
     outlives the call."""
-    work = tempfile.mkdtemp(prefix="dmrs_cdc_")
+    work = scratch_dir("cdc")
     landing, state, ckpt = (os.path.join(work, d) for d in ("landing", "state", "ckpt"))
     ops = change_feed(load_table(spark, sf_dir, "events"))
     ops.repartitionByRange(4, "seq").write.parquet(landing)

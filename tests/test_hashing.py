@@ -1,5 +1,6 @@
 """Twin parity for functions/hashing.py: the Spark md5-prefix integer,
-its DuckDB twin and its Python twin agree at every width and start the
+its DuckDB twins (on the key, and on its md5 hex with a SQL-text start)
+and its Python twin agree at every width and start the
 package uses, on empty, non-ASCII and salted keys, with null on both
 engines, and a 15-digit prefix with its top bit set still fits BIGINT."""
 
@@ -24,11 +25,11 @@ def _spark(spark, fn) -> list[tuple]:
     return [tuple(r) for r in df.select("i", *cols).orderBy("i").collect()]
 
 
-def _duck() -> list[tuple]:
+def _duck(fn=lambda w, st: hs.md5_int_sql("s", w, start=st)) -> list[tuple]:
     con = duckdb.connect()
     con.execute("CREATE TABLE t (i INTEGER, s VARCHAR)")
     con.executemany("INSERT INTO t VALUES (?, ?)", list(enumerate(KEYS)))
-    cols = ", ".join(f"{hs.md5_int_sql('s', w, start=st)} AS h_{w}_{st}" for w, st in CASES)
+    cols = ", ".join(f"{fn(w, st)} AS h_{w}_{st}" for w, st in CASES)
     return con.execute(f"SELECT i, {cols} FROM t ORDER BY i").fetchall()
 
 
@@ -40,6 +41,7 @@ def test_spark_duckdb_python_agree(spark):
     want = _py()
     assert _spark(spark, lambda w, st: hs.md5_int("s", w, start=st)) == want
     assert _duck() == want
+    assert _duck(lambda w, st: hs.hex_int_sql("md5(s)", w, start=f"{st - 1} + 1")) == want
 
 
 def test_hex_int_reads_a_computed_digest(spark):

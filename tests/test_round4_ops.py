@@ -935,10 +935,11 @@ def test_python_writer_two_phase_commit_artifacts(spark, sf_dir):
     _staged leftovers), and _SUCCESS carries the exact row count."""
     import glob
     import os
-    import tempfile
+    from urllib.parse import urlparse
 
-    out_dir = os.path.join(tempfile.gettempdir(), "dmrs_jsonl_sink")
-    res = all_queries()["sink_python_datasource_writer"].fn(spark, sf_dir).collect()
+    df = all_queries()["sink_python_datasource_writer"].fn(spark, sf_dir)
+    (out_dir,) = {os.path.dirname(urlparse(f).path) for f in df.inputFiles()}
+    res = df.collect()
     assert res
     assert not glob.glob(os.path.join(out_dir, "_staged-*"))
     parts = glob.glob(os.path.join(out_dir, "part-*.jsonl"))
