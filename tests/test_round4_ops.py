@@ -932,13 +932,17 @@ def test_cuped_preserves_means_reduces_variance(spark, sf_dir):
 
 def test_python_writer_two_phase_commit_artifacts(spark, sf_dir):
     """After the sink runs: only part-* files and _SUCCESS exist (no
-    _staged leftovers), and _SUCCESS carries the exact row count."""
+    _staged leftovers), and _SUCCESS carries the exact row count. Each
+    build writes to and reads back its own dir."""
     import glob
     import os
     from urllib.parse import urlparse
 
-    df = all_queries()["sink_python_datasource_writer"].fn(spark, sf_dir)
+    build = all_queries()["sink_python_datasource_writer"].fn
+    df = build(spark, sf_dir)
     (out_dir,) = {os.path.dirname(urlparse(f).path) for f in df.inputFiles()}
+    again = {os.path.dirname(urlparse(f).path) for f in build(spark, sf_dir).inputFiles()}
+    assert again and out_dir not in again
     res = df.collect()
     assert res
     assert not glob.glob(os.path.join(out_dir, "_staged-*"))

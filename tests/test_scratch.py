@@ -9,7 +9,6 @@ import os
 import subprocess
 import sys
 import tempfile
-from urllib.parse import urlparse
 
 from distributed_map_reduce_spark.registry import all_queries
 from distributed_map_reduce_spark.sources.scratch import scratch_dir
@@ -27,10 +26,6 @@ STAGED = (
 
 def _dmrs_entries() -> set[str]:
     return {e for e in os.listdir(tempfile.gettempdir()) if e.startswith("dmrs_")}
-
-
-def _read_dirs(df) -> set[str]:
-    return {os.path.dirname(urlparse(f).path) for f in df.inputFiles()}
 
 
 def test_one_root_per_process_removed_at_exit(tmp_path):
@@ -59,9 +54,3 @@ def test_staged_queries_leave_only_the_root(spark, sf_dir):
     root = os.path.basename(os.path.dirname(scratch_dir("probe")))
     assert _dmrs_entries() - before <= {root}
 
-
-def test_python_sink_builds_read_different_dirs(spark, sf_dir):
-    build = all_queries()["sink_python_datasource_writer"].fn
-    first, second = _read_dirs(build(spark, sf_dir)), _read_dirs(build(spark, sf_dir))
-    assert first and second
-    assert first.isdisjoint(second)

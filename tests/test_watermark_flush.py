@@ -5,6 +5,7 @@ final answer by the flush sentinels must equal their batch twins
 from __future__ import annotations
 
 from distributed_map_reduce_spark.registry import all_queries
+from distributed_map_reduce_spark.sources.scratch import scratch_dir
 
 
 def _rows(df, keys):
@@ -115,13 +116,22 @@ def test_session_flush_reads_nanos_timestamps(spark, sf_dir, tmp_path):
     assert _rows(stream, keys) == _rows(batch, keys)
 
 
-def test_flush_removes_its_landing_dir(spark, sf_dir, tmp_path, monkeypatch):
-    """The landing dir (events symlink + sentinel) is scratch: nothing the
-    returned memory table reads lives there, so the drain removes it."""
+def test_flush_removes_its_landing_dir(spark, sf_dir, monkeypatch):
+    """The landing dir (events symlink + sentinel) and the sentinel's
+    staging dir are scratch: nothing the returned memory table reads
+    lives there, so the drain removes both."""
     import os
-    import tempfile
 
-    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    from distributed_map_reduce_spark.streaming import jobs
+
+    made = []
+
+    def recorded(name):
+        made.append(scratch_dir(name))
+        return made[-1]
+
+    monkeypatch.setattr(jobs, "scratch_dir", recorded)
     out = all_queries()["stream_session_flush_final"].fn(spark, sf_dir)
     assert out.count() > 0
-    assert not [d for d in os.listdir(tmp_path) if d.startswith("dmrs_stream_")]
+    assert [d for d in made if os.path.basename(d).startswith("stream_")]
+    assert not [d for d in made if os.path.exists(d)]
