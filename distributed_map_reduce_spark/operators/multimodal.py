@@ -2,11 +2,10 @@
 the Arrow-batched decode/feature-extract plumbing.
 
 The container has no image/audio codecs, so the *decode* step is a
-clearly-marked stub (`decode_image_stub` raises NotImplementedError; the
-deterministic fake used by the pipeline is `fake_features`), but the
-Spark-side plumbing is real and tested: binary column construction,
-typed metadata struct, `mapInPandas` batch iteration with an explicit
-output schema, and partition-count preservation.
+deterministic fake (`fake_features`), but the Spark-side plumbing is
+real and tested: binary column construction, typed metadata struct,
+`mapInPandas` batch iteration with an explicit output schema, and
+partition-count preservation.
 
 Scale posture: payloads stay opaque bytes end-to-end (no JVM↔Python
 round-trip except inside the Arrow batches that need decoding); metadata
@@ -28,14 +27,6 @@ from ..functions.hashing import hex_int, md5_int, md5_int_sql
 from ..functions.normalize import SPLIT_LOWER_SQL, words
 from ..registry import register
 from ..sources import load_table
-
-
-def decode_image_stub(payload: bytes) -> object:
-    """Real decode (PIL/libvips) — not available in this container."""
-    raise NotImplementedError(
-        "image/audio codecs are not installed; production wires PIL/ffmpeg "
-        "here — the pipeline below uses deterministic fake_features instead"
-    )
 
 
 def fake_features(payload: bytes) -> tuple[int, int, int]:
@@ -117,14 +108,6 @@ def sample_frames(payload: bytes, stride: int) -> list[tuple[int, int]]:
     shape (one row in → N frame rows out, explicit schema, Arrow
     batches) is exactly what production uses."""
     return [(i // stride, payload[i]) for i in range(0, len(payload), stride)]
-
-
-def resize_stub(payload: bytes, width: int, height: int) -> bytes:
-    """Real resize (PIL/libvips) — not available in this container."""
-    raise NotImplementedError(
-        "image codecs are not installed; production wires PIL.Image.resize "
-        "here — frame plumbing is exercised via sample_frames instead"
-    )
 
 
 FRAME_STRIDE = 64

@@ -90,7 +90,7 @@ def _load_all() -> None:
     from .functions import grouped, udfs  # noqa: F401
     from .plans import kv_queries, mr_queries  # noqa: F401
     from .sources import bucketing, pydatasource, sinks  # noqa: F401
-    from .streaming import batch_windows, stateful, stateful_v2, watermark_flush  # noqa: F401
+    from .streaming import batch_windows, stateful, watermark_flush  # noqa: F401
 
 
 # The driver's CORRECTNESS gate oracle-checks only the FIRST 50 queries in

@@ -25,9 +25,12 @@ N_BUCKETS = 8
 
 def write_bucketed(df: DataFrame, name: str, key: str, n_buckets: int = N_BUCKETS) -> None:
     """Persist a table bucketed+sorted on the join key (saveAsTable —
-    bucket metadata lives in the session catalog)."""
+    bucket metadata lives in the session catalog). Each write goes to its
+    own scratch dir, so replacing the table leaves a frame over the
+    previous write readable."""
     (
         df.write.mode("overwrite")
+        .option("path", scratch_dir("bucketed"))
         .bucketBy(n_buckets, key)
         .sortBy(key)
         .format("parquet")
@@ -50,8 +53,9 @@ def bucketed_join_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Write lineitem and orders bucketed on orderkey, then join the
     bucketed tables: same results as the direct join, but the join-side
     Exchanges vanish (asserted in tests/test_bucketing.py)."""
-    wh = scratch_dir("warehouse")
-    spark.sql("CREATE DATABASE IF NOT EXISTS dmrs_buckets LOCATION '" + wh + "'")
+    if not spark.catalog.databaseExists("dmrs_buckets"):
+        wh = scratch_dir("warehouse")
+        spark.sql("CREATE DATABASE IF NOT EXISTS dmrs_buckets LOCATION '" + wh + "'")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )

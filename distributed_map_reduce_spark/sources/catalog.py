@@ -33,8 +33,6 @@ TABLES: tuple[str, ...] = (
     "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def normalize_events_ts(events: DataFrame) -> DataFrame:
     """Normalize events.ts to a session-TZ (UTC) µs timestamp whatever the

@@ -1,5 +1,6 @@
 """Bucketed co-located join: values match the direct join AND the
-physical plan has no shuffle on the join path (the 100 TB property)."""
+physical plan has no shuffle on the join path (the 100 TB property), and
+rebuilding the query leaves an earlier build's frame readable."""
 
 from __future__ import annotations
 
@@ -12,8 +13,16 @@ from distributed_map_reduce_spark.registry import all_queries
 
 
 def test_bucketed_join_no_exchange(spark, sf_dir):
-    df = all_queries()["bucketed_join_colocated"].fn(spark, sf_dir)
-    got = {r["o_orderpriority"]: (r["n_lines"], r["revenue"]) for r in df.collect()}
+    build = all_queries()["bucketed_join_colocated"].fn
+    first = build(spark, sf_dir)
+    df = build(spark, sf_dir)
+
+    def by_priority(frame):
+        return {
+            r["o_orderpriority"]: (r["n_lines"], r["revenue"]) for r in frame.collect()
+        }
+
+    got = by_priority(df)
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -28,6 +37,9 @@ def test_bucketed_join_no_exchange(spark, sf_dir):
         .collect()
     }
     assert got == want
+    # the second build rewrote both tables; the first frame still reads
+    # the files it was planned over
+    assert by_priority(first) == want
 
     # the join itself must read co-located buckets: the only Exchange in
     # the plan belongs to the final aggregation, never between the scans

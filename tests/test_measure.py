@@ -1,8 +1,10 @@
 """tools/measure.py: its records carry bench.py's digest, its ledger makes a
-sweep resumable, and an unknown query name is an error."""
+sweep resumable, an unknown query name is an error, and --explain writes
+formatted plans and fails when a build raises."""
 
 from __future__ import annotations
 
+import dataclasses
 import importlib.util
 import json
 import os
@@ -10,6 +12,7 @@ import os
 import pytest
 
 from bench import digest
+from distributed_map_reduce_spark import registry
 from distributed_map_reduce_spark.registry import all_queries
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -49,3 +52,17 @@ def test_ledger_digest_resume_and_unknown(spark, sf_dir, tmp_path, monkeypatch):
     with pytest.raises(SystemExit) as exc:
         measure.main(["no_such_query", "--sf-dir", sf_dir])
     assert exc.value.code != 0
+
+    plans = tmp_path / "plans"
+    argv = [NAMES[0], "--sf-dir", sf_dir, "--explain", str(plans), "--suffix", "after"]
+    assert measure.main(argv) == 0
+    assert "== Physical Plan ==" in (plans / f"{NAMES[0]}_after.txt").read_text()
+
+    def broken(spark, sf_dir):
+        raise RuntimeError("build failed")
+
+    q = qs[NAMES[1]]
+    monkeypatch.setitem(registry._REGISTRY, q.name, dataclasses.replace(q, fn=broken))
+    argv = [*NAMES, "--sf-dir", sf_dir, "--explain", str(plans), "--suffix", "before"]
+    assert measure.main(argv) == 1
+    assert (plans / f"{q.name}_before.txt").read_text().startswith("EXPLAIN FAILED")

@@ -22,6 +22,9 @@ Usage:
 
 Prints one JSON record per query on stdout: {"name", "rows", "digest",
 "wall_s"}, or {"name", "error", "wall_s"}. Exits 1 if any query failed.
+With --explain it times nothing: it writes each query's formatted plan
+to DIR/<name>_<suffix>.txt ("EXPLAIN FAILED: ..." when the build raises)
+and exits 1 if any plan failed.
 """
 
 from __future__ import annotations
@@ -82,11 +85,13 @@ def isolated(names: list[str], sf_dir: str, passes: int):
             yield {"name": name, "error": f"child exited {out.returncode}"}
 
 
-def explain(names: list[str], sf_dir: str, out_dir: str, suffix: str) -> None:
-    """Write each query's formatted plan to OUT_DIR/<name>_<suffix>.txt."""
+def explain(names: list[str], sf_dir: str, out_dir: str, suffix: str) -> bool:
+    """Write each query's formatted plan to OUT_DIR/<name>_<suffix>.txt;
+    return whether every plan was written."""
     spark = get_spark("measure")
     qs = registry.all_queries()
     os.makedirs(out_dir, exist_ok=True)
+    ok = True
     for name in names:
         try:
             df = qs[name].fn(spark, sf_dir)
@@ -94,11 +99,12 @@ def explain(names: list[str], sf_dir: str, out_dir: str, suffix: str) -> None:
                 df._jdf.queryExecution(), "formatted"
             )
         except Exception as e:
-            plan = f"EXPLAIN FAILED: {e}"
+            plan, ok = f"EXPLAIN FAILED: {e}", False
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)
         print(f"wrote {path} ({len(plan)} chars)", file=sys.stderr)
+    return ok
 
 
 def _ledger_names(path: str) -> set[str]:
@@ -134,8 +140,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.explain:
         if not args.suffix:
             ap.error("--explain needs --suffix before|after")
-        explain(names, args.sf_dir, args.explain, args.suffix)
-        return 0
+        return 0 if explain(names, args.sf_dir, args.explain, args.suffix) else 1
 
     done = _ledger_names(args.ledger) if args.ledger else ()
     todo = [n for n in names if n not in done]
